@@ -1,7 +1,10 @@
+import contextlib
 import os
+from unittest import mock
 
 import pytest
 
+from vivace_graph_v3_spark import util
 from vivace_graph_v3_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -22,6 +25,7 @@ SLOW_TESTS = {
     "test_entry_contract.py::test_contract_values_partitioning_invariant",
     "test_entry_contract.py::test_every_oracle_sql_parses_in_duckdb",
     "test_entry_contract.py::test_every_query_compiles",
+    "test_graph_algorithms.py::test_pagerank_bcast_matches_shuffle_join",
     "test_entry_contract.py::test_measured_pin_constants_complete",
     "test_entry_contract.py::test_oracle_pandas_render_classes_match",
     "test_integrity.py::test_retract_goal_requires_write_and_mutates",
@@ -84,6 +88,16 @@ def pytest_collection_modifyitems(config, items):
         nodeid = item.nodeid.split("tests/")[-1]
         if nodeid in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+
+
+@contextlib.contextmanager
+def distributed_regime():
+    """Force every bounded-vs-distributed choice onto its distributed
+    path (local finishes off, no state/relation broadcasts) through the
+    one driver bound — the seam the local-vs-distributed differential
+    tests pin both regimes against."""
+    with mock.patch.object(util, "DRIVER_ROWS", 0):
+        yield
 
 
 @pytest.fixture(scope="session")

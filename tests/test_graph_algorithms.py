@@ -11,6 +11,8 @@ from vivace_graph_v3_spark.operators.graph_algorithms import (
 )
 from vivace_graph_v3_spark.schema import SchemaRegistry
 
+from tests.conftest import distributed_regime
+
 
 def _graph(spark, vertices, edges):
     reg = SchemaRegistry()
@@ -103,7 +105,7 @@ def test_shortest_paths_weighted_vs_hops(spark):
 
 
 def test_kcore_sssp_stress_local_matches_distributed(spark):
-    """The local_guard driver-local finishes of k_core, shortest_paths
+    """The driver-local finishes of k_core, shortest_paths
     and landmark_stress must reproduce the distributed loops row for row
     (including budget-truncated runs) on a random graph."""
     import random
@@ -119,25 +121,26 @@ def test_kcore_sssp_stress_local_matches_distributed(spark):
     for kw in ({"max_iter": 50}, {"max_iter": 2}):
         loc = {r["id"]: r["degree"]
                for r in k_core(g, 3, **kw).collect()}
-        dist = {r["id"]: r["degree"]
-                for r in k_core(g, 3, local_guard=0, **kw).collect()}
+        with distributed_regime():
+            dist = {r["id"]: r["degree"]
+                    for r in k_core(g, 3, **kw).collect()}
         assert loc == dist
     for kw in ({"weighted": False}, {"weighted": True},
                {"weighted": True, "max_iter": 2}):
         loc = {r["id"]: r["dist"]
                for r in shortest_paths(g, ["0", "7"], **kw).collect()}
-        dist = {r["id"]: r["dist"]
-                for r in shortest_paths(g, ["0", "7"], local_guard=0,
-                                        **kw).collect()}
+        with distributed_regime():
+            dist = {r["id"]: r["dist"]
+                    for r in shortest_paths(g, ["0", "7"], **kw).collect()}
         assert loc == dist
     lms = ["0", "3", "5"]
     loc = {(r.lm, r.dist): (r.n_vertices, r.sum_sigma, r.sum_stress,
                             r.max_stress)
            for r in landmark_stress(g, lms, max_depth=4).collect()}
-    dist = {(r.lm, r.dist): (r.n_vertices, r.sum_sigma, r.sum_stress,
-                             r.max_stress)
-            for r in landmark_stress(g, lms, max_depth=4,
-                                     local_guard=0).collect()}
+    with distributed_regime():
+        dist = {(r.lm, r.dist): (r.n_vertices, r.sum_sigma, r.sum_stress,
+                                 r.max_stress)
+                for r in landmark_stress(g, lms, max_depth=4).collect()}
     assert loc == dist
 
 
@@ -156,8 +159,8 @@ def test_cc_and_temporal_ea_local_matches_distributed(spark):
     edges = sorted({tuple(rng.sample(vids, 2)) for _ in range(70)})
     g = _graph(spark, vids, [(a, b, 1) for a, b in edges])
     loc = {r.id: r.comp for r in connected_components(g).collect()}
-    dist = {r.id: r.comp
-            for r in connected_components(g, local_guard=0).collect()}
+    with distributed_regime():
+        dist = {r.id: r.comp for r in connected_components(g).collect()}
     assert loc == dist
     te = spark.createDataFrame(
         [(a, b, rng.randrange(100)) for a, b in edges]
@@ -168,10 +171,10 @@ def test_cc_and_temporal_ea_local_matches_distributed(spark):
         loc = {(r.seed, r.node): r.arrival
                for r in temporal_earliest_arrival(te, seeds,
                                                   **kw).collect()}
-        dist = {(r.seed, r.node): r.arrival
-                for r in temporal_earliest_arrival(te, seeds,
-                                                   local_guard=0,
-                                                   **kw).collect()}
+        with distributed_regime():
+            dist = {(r.seed, r.node): r.arrival
+                    for r in temporal_earliest_arrival(te, seeds,
+                                                       **kw).collect()}
         assert loc == dist
 
 
@@ -192,18 +195,18 @@ def test_landmark_bfs_local_matches_distributed(spark):
         loc = {r.lm: (r.n_reached, r.sum_dist, r.closeness)
                for r in landmark_closeness(g, lms, max_depth=4,
                                            undirected=und).collect()}
-        dist = {r.lm: (r.n_reached, r.sum_dist, r.closeness)
-                for r in landmark_closeness(g, lms, max_depth=4,
-                                            undirected=und,
-                                            local_guard=0).collect()}
+        with distributed_regime():
+            dist = {r.lm: (r.n_reached, r.sum_dist, r.closeness)
+                    for r in landmark_closeness(g, lms, max_depth=4,
+                                                undirected=und).collect()}
         assert loc == dist
         loc = {r.lm: (r.n_reached, r.ecc, r.diameter_lb)
                for r in landmark_eccentricity(g, lms, max_depth=5,
                                               undirected=und).collect()}
-        dist = {r.lm: (r.n_reached, r.ecc, r.diameter_lb)
-                for r in landmark_eccentricity(g, lms, max_depth=5,
-                                               undirected=und,
-                                               local_guard=0).collect()}
+        with distributed_regime():
+            dist = {r.lm: (r.n_reached, r.ecc, r.diameter_lb)
+                    for r in landmark_eccentricity(
+                        g, lms, max_depth=5, undirected=und).collect()}
         assert loc == dist
 
 
@@ -262,11 +265,12 @@ def test_random_walks_deterministic_and_valid(spark):
     # z has no out-edges: its walks emit only step 0
     z = [r for r in r1 if r[0].startswith("z#")]
     assert z and all(s == 0 for _, s, _ in z)
-    # round-10 differential pin: the broadcast-lazy regime (default under
-    # bcast_guard) emits exactly the per-step-checkpointed equi-join
-    # walks (bcast_guard=0 forces the past-guard path)
-    w3 = random_walks(g, walk_length=4, walks_per_node=3, bcast_guard=0)
-    r3 = {(r["walk_id"], r["step"], r["node"]) for r in w3.collect()}
+    # round-10 differential pin: the broadcast-lazy regime (default
+    # within the driver bound) emits exactly the per-step-checkpointed
+    # equi-join walks (the distributed regime past the bound)
+    with distributed_regime():
+        w3 = random_walks(g, walk_length=4, walks_per_node=3)
+        r3 = {(r["walk_id"], r["step"], r["node"]) for r in w3.collect()}
     assert r1 == r3
 
 
@@ -303,20 +307,42 @@ def test_hits_star(star):
 
 
 def test_hits_bcast_matches_copartitioned(star):
-    # the broadcast-state regime (default below bcast_guard) must emit
-    # bit-identical scores to the past-guard co-partitioned formulation
-    # (bcast_guard=0 forces it) — the round-10 differential pin for the
-    # hits rewrite, including the out-degree-seeded first half-round
+    # the broadcast-state regime (default within the driver bound) must
+    # emit bit-identical scores to the past-the-bound co-partitioned
+    # formulation — the round-10 differential pin for the hits rewrite,
+    # including the out-degree-seeded first half-round
     from vivace_graph_v3_spark.operators.graph_algorithms import hits
     fast = sorted(map(tuple, hits(star, max_iter=3).collect()))
-    dist = sorted(map(tuple, hits(star, max_iter=3,
-                                  bcast_guard=0).collect()))
-    assert fast == dist
     # max_iter=1 exercises the seeded-final-round edge case in both paths
     fast1 = sorted(map(tuple, hits(star, max_iter=1).collect()))
-    dist1 = sorted(map(tuple, hits(star, max_iter=1,
-                                   bcast_guard=0).collect()))
+    with distributed_regime():
+        dist = sorted(map(tuple, hits(star, max_iter=3).collect()))
+        dist1 = sorted(map(tuple, hits(star, max_iter=1).collect()))
+    assert fast == dist
     assert fast1 == dist1
+
+
+def test_pagerank_bcast_matches_shuffle_join(spark):
+    """The broadcast rank-state regime (within the driver bound) must
+    emit bit-identical ranks to the past-the-bound shuffle join, for the
+    uniform, personalized and weighted variants, with and without the
+    tol convergence probe."""
+    import random
+
+    rng = random.Random(17)
+    vids = [str(i) for i in range(30)]
+    edges = sorted({tuple(rng.sample(vids[:25], 2)) for _ in range(70)})
+    # vertices 25..29 have no out-edges: dangling mass every round
+    g = _graph(spark, vids, [(a, b, 1 + (i % 5))
+                             for i, (a, b) in enumerate(edges)])
+    for kw in ({}, {"sources": ["0", "3"]}, {"weighted": True}):
+        # tol=0.05 stops the uniform run at round 4 of its 6-round budget
+        for tol in (0.05, None):
+            args = dict(kw, tol=tol, max_iter=6)
+            fast = sorted(map(tuple, pagerank(g, **args).collect()))
+            with distributed_regime():
+                dist = sorted(map(tuple, pagerank(g, **args).collect()))
+            assert fast == dist, (kw, tol)
 
 
 def test_common_neighbor_similarity(spark):
@@ -375,8 +401,9 @@ def test_negative_samples_deterministic_and_uniformish(spark):
     from collections import Counter
     counts = Counter(r.negative for r in out)
     assert max(counts.values()) < 800 / 50 * 3
-    # the distributed rank path (past rank_guard) draws identical samples
-    dist = negative_samples(pairs, verts, k=4, rank_guard=0).collect()
+    # the distributed rank path (past the bound) draws identical samples
+    with distributed_regime():
+        dist = negative_samples(pairs, verts, k=4).collect()
     assert {(r.center, r.context, r.neg_idx, r.negative) for r in out} \
         == {(r.center, r.context, r.neg_idx, r.negative) for r in dist}
 
@@ -506,7 +533,7 @@ def test_k_truss_two_triangles_and_pendant(spark):
 
 
 def test_k_truss_local_matches_distributed(spark):
-    """The local_guard vectorized peel must emit exactly the distributed
+    """The driver-local vectorized peel must emit exactly the distributed
     loop's fixpoint — same surviving edges, same support values — on a
     random graph dense enough to cascade over several rounds."""
     import random
@@ -522,8 +549,9 @@ def test_k_truss_local_matches_distributed(spark):
     for k in (3, 5, 8):
         loc = {(r.src, r.dst): r.support
                for r in k_truss(g, k).collect()}
-        dist = {(r.src, r.dst): r.support
-                for r in k_truss(g, k, local_guard=0).collect()}
+        with distributed_regime():
+            dist = {(r.src, r.dst): r.support
+                    for r in k_truss(g, k).collect()}
         assert loc == dist
 
 

@@ -1967,23 +1967,29 @@ def test_hard_negatives_seed_scan_bit_identical(spark, embeds):
     from vivace_graph_v3_spark.pipeline.dedup import cosine
     from vivace_graph_v3_spark.pipeline.similarity import hard_negatives
 
-    emb = embeds.limit(300)
-    a = emb.select(F.col("vec_id").alias("anchor_id"),
-                   F.col("embedding").alias("va"),
-                   F.col("label").alias("la"))
-    b = emb.select(F.col("vec_id").alias("negative_id"),
-                   F.col("embedding").alias("vb"),
-                   F.col("label").alias("lb"))
-    pairs = (a.join(b, (F.col("anchor_id") != F.col("negative_id"))
-                    & (F.col("la") != F.col("lb")))
-             .select("anchor_id", "negative_id",
-                     F.round(cosine(F.col("va"), F.col("vb")), 6)
-                     .alias("cosine")))
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("cosine").desc(), F.col("negative_id").asc())
-    spec = (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 3))
-    got = hard_negatives(emb, k=3)
-    assert got.schema == spec.schema
-    assert sorted(map(tuple, got.collect())) == \
-        sorted(map(tuple, spec.collect()))
+    base = embeds.limit(300)
+    # null labels on anchors and candidates alike: SQL `la != lb` drops
+    # every pair with a null on either side
+    nulled = base.withColumn(
+        "label", F.when(F.col("vec_id") % 7 == 0, F.lit(None))
+        .otherwise(F.col("label")))
+    for emb in (base, nulled):
+        a = emb.select(F.col("vec_id").alias("anchor_id"),
+                       F.col("embedding").alias("va"),
+                       F.col("label").alias("la"))
+        b = emb.select(F.col("vec_id").alias("negative_id"),
+                       F.col("embedding").alias("vb"),
+                       F.col("label").alias("lb"))
+        pairs = (a.join(b, (F.col("anchor_id") != F.col("negative_id"))
+                        & (F.col("la") != F.col("lb")))
+                 .select("anchor_id", "negative_id",
+                         F.round(cosine(F.col("va"), F.col("vb")), 6)
+                         .alias("cosine")))
+        w = Window.partitionBy("anchor_id").orderBy(
+            F.col("cosine").desc(), F.col("negative_id").asc())
+        spec = (pairs.withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") <= 3))
+        got = hard_negatives(emb, k=3)
+        assert got.schema == spec.schema
+        assert sorted(map(tuple, got.collect())) == \
+            sorted(map(tuple, spec.collect()))

@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 
 from vivace_graph_v3_spark.pipeline.dedup import edit_distance_pairs
 
+from tests.conftest import distributed_regime
+
 
 def _lev(a: str, b: str) -> int:
     prev = list(range(len(b) + 1))
@@ -232,9 +234,9 @@ class TestStronglyConnectedComponents:
                    for r in strongly_connected_components(edges).collect())
         assert got == {"a": "a", "b": "a", "c": "c", "d": "c"}
 
-    def test_local_guard_equals_distributed(self, spark):
-        # the bounded-local Tarjan finish (local_guard) must label
-        # exactly like the distributed peel loop (local_guard=0)
+    def test_local_finish_equals_distributed(self, spark):
+        # the bounded-local Tarjan finish must label exactly like the
+        # distributed peel loop
         import random
         rng = random.Random(23)
         nodes = [f"n{i:02d}" for i in range(30)]
@@ -244,9 +246,9 @@ class TestStronglyConnectedComponents:
         df = spark.createDataFrame(edges, "src string, dst string")
         local = dict((r["id"], r["scc_id"])
                      for r in strongly_connected_components(df).collect())
-        dist = dict((r["id"], r["scc_id"])
-                    for r in strongly_connected_components(
-                        df, local_guard=0).collect())
+        with distributed_regime():
+            dist = dict((r["id"], r["scc_id"])
+                        for r in strongly_connected_components(df).collect())
         assert local == dist
 
 
@@ -274,9 +276,9 @@ class TestBowtie:
         assert got == {"m": "core", "n": "core", "i1": "in", "i2": "in",
                        "o1": "out", "o2": "out", "t1": "in"}
 
-    def test_local_guard_equals_distributed(self, spark):
+    def test_local_finish_equals_distributed(self, spark):
         # the bounded-local reach closures must classify exactly like
-        # the distributed _reach_min fixpoints (local_guard=0)
+        # the distributed _reach_min fixpoints
         import random
         rng = random.Random(29)
         nodes = [f"n{i:02d}" for i in range(26)]
@@ -287,9 +289,9 @@ class TestBowtie:
         scc = strongly_connected_components(df)
         local = dict((r["id"], r["klass"])
                      for r in bowtie_decomposition(df, scc).collect())
-        dist = dict((r["id"], r["klass"])
-                    for r in bowtie_decomposition(
-                        df, scc, local_guard=0).collect())
+        with distributed_regime():
+            dist = dict((r["id"], r["klass"])
+                        for r in bowtie_decomposition(df, scc).collect())
         assert local == dist
 
 

@@ -13,6 +13,8 @@ from vivace_graph_v3_spark.query.rules import (
 )
 from vivace_graph_v3_spark.schema import SchemaRegistry
 
+from tests.conftest import distributed_regime
+
 
 @pytest.fixture()
 def chain_graph(spark):
@@ -181,16 +183,16 @@ def test_cut_fail_idiom_fails_predicate(chain_graph):
     assert df.count() == 0
 
 
-def test_broadcast_guard_differential(chain_graph):
+def test_broadcast_regime_differential(chain_graph):
     """r10 bounded-relation regime: the broadcast-hinted semi-naive joins
-    (guard on) must produce the identical relation as the shuffle-join
-    regime (guard 0 — the 100 TB shape)."""
+    (within the driver bound) must produce the identical relation as the
+    shuffle-join regime (the 100 TB shape)."""
     def_rule("reach", ["?x", "?y"],
              [("next", "?x", "?y")],
              [("next", "?x", "?z"), ("reach", "?z", "?y")])
     on = {tuple(r) for r in
           RuleEvaluator(chain_graph).relation("reach").collect()}
-    off = {tuple(r) for r in
-           RuleEvaluator(chain_graph, broadcast_guard=0)
-           .relation("reach").collect()}
+    with distributed_regime():
+        off = {tuple(r) for r in
+               RuleEvaluator(chain_graph).relation("reach").collect()}
     assert on == off and on

@@ -1,11 +1,12 @@
-"""Past-the-guard probe (VERDICT r9 item 3): every local-finish operator
-keeps its distributed loop as the at-scale fallback, but at sf0.1 the F6
-fixtures sit under ``local_guard``, so the bench exercises the driver-local
-path only. This probe runs each guarded ENTRY both ways at a given SF —
+"""Past-the-bound probe: every bounded operator keeps its distributed
+path as the at-scale fallback, but at sf0.1 the fixtures fit the one
+driver bound (``util.DRIVER_ROWS``), so the bench exercises the
+driver-local finishes and broadcast-state regimes only. This probe runs
+each listed ENTRY both ways at a given SF —
 
-  - declared: exactly what the registry/bench runs (local path engages),
-  - distributed: the same entry with the guarded operator(s) forced to
-    ``local_guard=0`` (``driver_pairs_guard=0`` for the dedup union-find),
+  - declared: exactly what the registry/bench runs (bounded paths engage),
+  - distributed: the same entry with ``util.DRIVER_ROWS`` patched to 0,
+    which forces every operator onto its distributed path,
 
 asserts the canonicalized results are IDENTICAL (the check_contract
 canonicalization: %.6f floats, order-insensitive hash), times both with
@@ -18,7 +19,6 @@ Usage:
 
 from __future__ import annotations
 
-import functools
 import os
 import statistics
 import sys
@@ -34,39 +34,15 @@ os.environ["PYTHONPATH"] = (
 
 from check_contract import canon_pdf  # noqa: E402  (tools/ sibling)
 
-# entry name -> (module path, [guarded operator attribute, ...], kwarg)
-_GA = "vivace_graph_v3_spark.operators.graph_algorithms"
-_DD = "vivace_graph_v3_spark.pipeline.dedup"
-GUARDED: dict[str, tuple[str, list[str], str]] = {
-    "graph_connected_components": (_GA, ["connected_components"],
-                                   "local_guard"),
-    "graph_ktruss": (_GA, ["k_truss"], "local_guard"),
-    "graph_kcore": (_GA, ["k_core"], "local_guard"),
-    "graph_shortest_paths": (_GA, ["shortest_paths"], "local_guard"),
-    "graph_closeness_landmarks": (_GA, ["landmark_closeness"], "local_guard"),
-    "graph_eccentricity": (_GA, ["landmark_eccentricity"], "local_guard"),
-    "graph_stress_landmarks": (_GA, ["landmark_stress"], "local_guard"),
-    "graph_scc": (_GA, ["strongly_connected_components"], "local_guard"),
-    "graph_bowtie": (_GA, ["strongly_connected_components",
-                           "bowtie_decomposition"], "local_guard"),
-    "temporal_reach": (_GA, ["temporal_earliest_arrival"], "local_guard"),
-    "temporal_reach_converged": (_GA, ["temporal_earliest_arrival"],
-                                 "local_guard"),
-    "dedup_survivors": (_DD, ["dedup_clusters"], "driver_pairs_guard"),
-}
-
-
-def _force_distributed(module_path: str, attrs: list[str], kwarg: str):
-    """Context stack patching each operator with <kwarg>=0."""
-    import importlib
-
-    module = importlib.import_module(module_path)
-    patches = []
-    for attr in attrs:
-        fn = getattr(module, attr)
-        patches.append(mock.patch.object(
-            module, attr, functools.partial(fn, **{kwarg: 0})))
-    return patches
+# entries whose operators choose between a bounded and a distributed path
+GUARDED = [
+    "graph_connected_components", "graph_ktruss", "graph_kcore",
+    "graph_shortest_paths", "graph_closeness_landmarks",
+    "graph_eccentricity", "graph_stress_landmarks", "graph_scc",
+    "graph_bowtie", "temporal_reach", "temporal_reach_converged",
+    "dedup_survivors", "graph_pagerank", "graph_pagerank_personalized",
+    "graph_hits", "graph_random_walks", "graph_negative_samples",
+]
 
 
 def main() -> int:
@@ -83,11 +59,11 @@ def main() -> int:
             plans_dir = args.pop(0)
         else:
             names.append(a)
-    names = names or list(GUARDED)
+    names = names or GUARDED
 
     from opt_measure import formatted_plan
 
-    from vivace_graph_v3_spark import entry_queries as eq
+    from vivace_graph_v3_spark import entry_queries as eq, util
     from vivace_graph_v3_spark.session import get_spark
 
     spark = get_spark("guard-probe")
@@ -98,8 +74,6 @@ def main() -> int:
     rows = []
     failures = []
     for name in names:
-        module_path, attrs, kwarg = GUARDED[name]
-
         def run(mode: str):
             samples = []
             plan = None
@@ -122,14 +96,8 @@ def main() -> int:
             return statistics.median(samples), result_hash
 
         t_local, h_local = run("declared")
-        patches = _force_distributed(module_path, attrs, kwarg)
-        for p in patches:
-            p.start()
-        try:
+        with mock.patch.object(util, "DRIVER_ROWS", 0):
             t_dist, h_dist = run("distributed")
-        finally:
-            for p in patches:
-                p.stop()
         same = h_local == h_dist
         status = "IDENTICAL" if same else "MISMATCH"
         if not same:

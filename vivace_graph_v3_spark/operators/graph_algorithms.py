@@ -23,7 +23,9 @@ from pyspark.sql import DataFrame, Observation, Window, functions as F
 from pyspark.sql import types as T
 
 from vivace_graph_v3_spark.graph import GraphStore
-from vivace_graph_v3_spark.util import checkpoint_counted, checkpoint_rebased
+from vivace_graph_v3_spark.util import (
+    checkpoint_counted, checkpoint_rebased, finish_locally, fits_driver,
+    union_find_min)
 
 
 def _ckpt_n(df: DataFrame) -> tuple[DataFrame, int]:
@@ -94,7 +96,6 @@ def pagerank(graph: GraphStore, *, edge_type: str | None = None,
              tol: float | None = 1.0e-4,
              sources: list | None = None,
              weighted: bool = False,
-             bcast_guard: int = 2_000_000,
              check_every: int = 1) -> DataFrame:
     """Standard damped PageRank over active edges. Returns (id, rank) with
     ranks summing to |V| (the classic normalization). Dangling mass is
@@ -161,10 +162,11 @@ def pagerank(graph: GraphStore, *, edge_type: str | None = None,
     # ship it to the static edge partitions instead of shuffling both sides —
     # each round is then ONE shuffle (the contribution aggregate). Measured
     # on local[32], broadcast still wins at 1.9M rank rows (~50 MB/round:
-    # 41 s vs 57 s for the shuffle join over 15M edges), so the guard sits
-    # at 2M. Past it, fall back to the shuffle join — the formulation that
-    # holds at 100 TB, where |V| dwarfs any broadcast budget.
-    bcast_state = n <= bcast_guard
+    # 41 s vs 57 s for the shuffle join over 15M edges), so the bound
+    # (util.DRIVER_ROWS) sits at 2M. Past it, fall back to the shuffle
+    # join — the formulation that holds at 100 TB, where |V| dwarfs any
+    # broadcast budget.
+    bcast_state = fits_driver(n)
     _b = (lambda df: F.broadcast(df)) if bcast_state else (lambda df: df)
     # teleport vector (mass-|V| convention): uniform 1.0, or |V|/|S| on the
     # personalization sources and 0 elsewhere. Built as a function of the
@@ -306,39 +308,9 @@ def _contract_edges_locally(edges: DataFrame) -> DataFrame:
     return edges.mapInPandas(uf, schema="src string, dst string")
 
 
-def _local_cc_ids(edge_rows) -> dict:
-    """Driver-local exact undirected component labels: id -> min member
-    id, by union-find with path halving over a bounded edge list (the
-    ``local_guard`` seam in :func:`connected_components`). Min by the
-    same total order as the distributed F.least/F.min over the label
-    column (UTF-8 byte order == code-point order)."""
-    parent: dict = {}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edge_rows:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[rb] = ra
-    comp_min: dict = {}
-    for v in parent:
-        r = find(v)
-        m = comp_min.get(r)
-        if m is None or v < m:
-            comp_min[r] = v
-    return {v: comp_min[find(v)] for v in parent}
-
-
 def connected_components(graph: GraphStore, *, edge_type: str | None = None,
                          max_iter: int = 50, check_every: int = 3,
-                         contract: bool = True,
-                         local_guard: int = 2_000_000) -> DataFrame:
+                         contract: bool = True) -> DataFrame:
     """Undirected connected components by label propagation with the
     large-star/small-star-style doubling trick: each round every vertex
     adopts the min component id among itself and its neighbors' labels,
@@ -348,7 +320,11 @@ def connected_components(graph: GraphStore, *, edge_type: str | None = None,
     With ``contract`` (default), edges are first collapsed per-partition by
     a local union-find, so the iterative loop shuffles a spanning mapping of
     size O(|V|) rather than the raw O(|E|) edge list — the component labels
-    (min vertex id per component) are identical either way."""
+    (min vertex id per component) are identical either way. When the
+    edge list fits the driver (:func:`~vivace_graph_v3_spark.util.
+    finish_locally`), one driver union-find settles every component
+    instead (the contracted mapping is O(|V|) anyway); vertices outside
+    the edge list keep their singleton label."""
     edges = _edge_pairs(graph, edge_type, undirected=True)
     if contract:
         edges = _contract_edges_locally(edges)
@@ -359,24 +335,16 @@ def connected_components(graph: GraphStore, *, edge_type: str | None = None,
     labels = (graph.scan_vertices(columns=["id"]).select("id").dropDuplicates()
               .withColumn("comp", F.col("id")))
     labels = labels.localCheckpoint(eager=True)
-    n_e = edges.count()
-    if n_e <= local_guard:
-        # bounded (the contracted mapping is O(|V|) anyway): settle every
-        # component with one driver union-find — the same local-finish
-        # discipline as SCC/k-truss/k-core; vertices outside the edge
-        # list keep their singleton label
-        try:
-            comp = _local_cc_ids((r["src"], r["dst"])
-                                 for r in edges.collect())
-            id_f = labels.schema["id"]
-            lab_df = labels.sparkSession.createDataFrame(
-                list(comp.items()),
-                T.StructType([id_f, T.StructField("c2", id_f.dataType)]))
-            return (labels.join(F.broadcast(lab_df), "id", "left")
-                    .select("id", F.coalesce(F.col("c2"), F.col("comp"))
-                            .alias("comp")))
-        finally:
-            edges.unpersist()
+    id_f = labels.schema["id"]
+    lab_df = finish_locally(
+        edges, edges.count(),
+        lambda pdf: list(union_find_min(zip(pdf["src"], pdf["dst"]))
+                         .items()),
+        T.StructType([id_f, T.StructField("c2", id_f.dataType)]))
+    if lab_df is not None:
+        return (labels.join(F.broadcast(lab_df), "id", "left")
+                .select("id", F.coalesce(F.col("c2"), F.col("comp"))
+                        .alias("comp")))
     try:
         for it in range(max_iter):
             # neighbor min
@@ -424,7 +392,7 @@ def cc_incremental(labels: DataFrame, new_edges: DataFrame, *,
        broadcasts against a bucketed label layout);
     2. collapse the resulting (comp_a, comp_b) LABEL graph with
        :func:`~vivace_graph_v3_spark.pipeline.dedup.dedup_clusters`
-       (driver union-find under its 2M-pair guard, distributed
+       (driver union-find within the driver bound, distributed
        min-label + pointer jumping past it);
     3. apply the old->merged map to the label table with ONE broadcast
        left join (the map has at most one row per touched component).
@@ -534,11 +502,11 @@ def _edge_support(e: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("support"))
 
 
-def _local_truss(srcs, dsts, sup_min: int, *,
+def _local_truss(pdf, sup_min: int, *,
                  max_triangles: int = 50_000_000,
                  max_wedges: int = 256_000_000, threads: int = 8):
     """Driver-local exact k-truss peel over a bounded canonical edge list
-    (the ``local_guard`` seam in :func:`k_truss`). One vectorized triangle
+    (the local finish of :func:`k_truss`). One vectorized triangle
     enumeration — degree-ordered orientation so hub wedge fan-out stays
     bounded, processed in chunks across a thread pool (the numpy kernels
     release the GIL, so chunks genuinely parallelize) with int32 scratch
@@ -547,8 +515,8 @@ def _local_truss(srcs, dsts, sup_min: int, *,
     maintenance: support(edge) always equals its triangle count within
     the surviving subgraph, which is exactly the per-round recompute of
     the distributed loop, so the fixpoint (and the emitted support
-    values) are identical. ``srcs``/``dsts`` are parallel arrays of the
-    canonical endpoints. Returns a list of (src, dst, support) tuples
+    values) are identical. ``pdf`` holds the canonical endpoints as
+    ``src``/``dst``. Returns a list of (src, dst, support) tuples
     for survivors, or ``None`` when the wedge or triangle volume would
     exceed the local caps (the caller keeps the distributed loop as the
     at-scale fallback)."""
@@ -556,12 +524,12 @@ def _local_truss(srcs, dsts, sup_min: int, *,
     import pandas as pd
     from concurrent.futures import ThreadPoolExecutor
 
-    m = len(srcs)
+    m = len(pdf)
     if m == 0:
         return []
     codes, _vocab = pd.factorize(
-        np.concatenate([np.asarray(srcs, dtype=object),
-                        np.asarray(dsts, dtype=object)]))
+        np.concatenate([pdf["src"].to_numpy(dtype=object),
+                        pdf["dst"].to_numpy(dtype=object)]))
     u = codes[:m].astype(np.int64)
     v = codes[m:].astype(np.int64)
     vocab = np.asarray(_vocab, dtype=object)
@@ -659,7 +627,7 @@ def _local_truss(srcs, dsts, sup_min: int, *,
 
 
 def k_truss(graph: GraphStore, k: int, *, edge_type: str | None = None,
-            max_iter: int = 30, local_guard: int = 2_000_000) -> DataFrame:
+            max_iter: int = 30) -> DataFrame:
     """k-truss (Cohen 2008): the maximal subgraph in which every edge
     participates in at least k-2 triangles — the cohesive-subgraph
     refinement of :func:`k_core` (every k-truss is inside the (k-1)-core,
@@ -672,11 +640,10 @@ def k_truss(graph: GraphStore, k: int, *, edge_type: str | None = None,
     set (two endpoint-keyed shuffles, AQE-skew-splittable — never
     vertex-pair all-pairs) plus a side aggregate; the edge set shrinks
     monotonically so rounds get cheaper. Rounds are checkpoint-truncated
-    like the other iterative operators. ``local_guard``: once the active
-    edge set fits under this bound, the remaining cascade is settled by
-    one driver-local vectorized enumeration + incremental peel
-    (:func:`_local_truss`) — the same bounded-local-finish discipline as
-    :func:`strongly_connected_components` and dedup's union-find guard;
+    like the other iterative operators. Once the active edge set fits
+    the driver, the remaining cascade is settled by one driver-local
+    vectorized enumeration + incremental peel (:func:`_local_truss`
+    through :func:`~vivace_graph_v3_spark.util.finish_locally`);
     the cascade's sequential round latency dominates exactly when the
     frames are small, and the local pass reaches the identical unique
     fixpoint (differential test in test_graph_algorithms). The
@@ -688,20 +655,19 @@ def k_truss(graph: GraphStore, k: int, *, edge_type: str | None = None,
         _edge_pairs(graph, edge_type, undirected=True)
         .filter(F.col("src") < F.col("dst"))
         .dropDuplicates(["src", "dst"]))
+    schema = T.StructType([e.schema["src"], e.schema["dst"],
+                           T.StructField("support", T.LongType())])
     sup = None
     converged = False
     local_tried = False
     for _ in range(max_iter):
-        if n_edges <= local_guard and not local_tried:
+        # one local attempt: past it the kernel declined (memory cap)
+        if not local_tried and fits_driver(n_edges):
             local_tried = True
-            pdf = e.toPandas()       # bounded by local_guard rows (Arrow)
-            rows = _local_truss(pdf["src"].to_numpy(dtype=object),
-                                pdf["dst"].to_numpy(dtype=object), sup_min)
-            if rows is not None:
-                schema = T.StructType([
-                    e.schema["src"], e.schema["dst"],
-                    T.StructField("support", T.LongType())])
-                return e.sparkSession.createDataFrame(rows, schema)
+            local = finish_locally(
+                e, n_edges, lambda pdf: _local_truss(pdf, sup_min), schema)
+            if local is not None:
+                return local
         sup = _edge_support(e)
         kept, n_next = _ckpt_n(sup.filter(F.col("support") >= sup_min))
         e = kept.select("src", "dst")
@@ -767,9 +733,9 @@ def degree_assortativity(graph: GraphStore, *,
         .cast("long").alias("r_ppm"))
 
 
-def _local_sssp(srcs, dsts, ws, root_ids, max_iter: int):
+def _local_sssp(pdf, root_ids, max_iter: int):
     """Driver-local exact frontier Bellman-Ford over a bounded edge list
-    (the ``local_guard`` seam in :func:`shortest_paths`). Replays the
+    (the local finish of :func:`shortest_paths`). Replays the
     distributed loop round for round — per round, candidates come only
     from the frontier improved last round, the per-destination minimum
     is taken over the identical candidate multiset, and the loop runs
@@ -779,15 +745,15 @@ def _local_sssp(srcs, dsts, ws, root_ids, max_iter: int):
     import numpy as np
     import pandas as pd
 
-    m = len(srcs)
+    m = len(pdf)
     codes, _vocab = pd.factorize(
-        np.concatenate([np.asarray(srcs, dtype=object),
-                        np.asarray(dsts, dtype=object),
+        np.concatenate([pdf["src"].to_numpy(dtype=object),
+                        pdf["dst"].to_numpy(dtype=object),
                         np.asarray(root_ids, dtype=object)]))
     u = codes[:m].astype(np.int64)
     v = codes[m:2 * m].astype(np.int64)
     r = np.unique(codes[2 * m:])
-    w = np.asarray(ws, dtype=np.float64)
+    w = pdf["w"].to_numpy(dtype=np.float64)
     vocab = np.asarray(_vocab, dtype=object)
     nv = int(len(vocab))
     dist = np.full(nv, np.inf)
@@ -811,17 +777,17 @@ def _local_sssp(srcs, dsts, ws, root_ids, max_iter: int):
 
 def shortest_paths(graph: GraphStore, roots, *, edge_type: str | None = None,
                    weighted: bool = False, max_iter: int = 50,
-                   direction: str = "out",
-                   local_guard: int = 2_000_000) -> DataFrame:
+                   direction: str = "out") -> DataFrame:
     """Single/multi-source shortest paths (hop count, or summed edge weight
     with ``weighted``): distributed Bellman-Ford. Returns (id, dist) for
     reachable vertices. Frontier-based: only improved vertices relax their
     neighbors next round, so rounds touch the active frontier, not all V.
-    ``local_guard``: when the edge list fits under this bound, the whole
-    relaxation is replayed driver-locally (:func:`_local_sssp`, the SCC /
-    k-truss bounded-local-finish discipline) — long chains mean many tiny
-    sequential rounds, which is exactly where per-round job latency
-    dominates; the distributed loop stays the at-scale path."""
+    When the edge list fits the driver, the whole relaxation is replayed
+    driver-locally (:func:`_local_sssp` through
+    :func:`~vivace_graph_v3_spark.util.finish_locally`) — long chains
+    mean many tiny sequential rounds, which is exactly where per-round
+    job latency dominates; the distributed loop stays the at-scale
+    path."""
     spark = graph.spark
     edges = _edge_pairs(graph, edge_type, weighted=weighted,
                         undirected=(direction == "both"))
@@ -835,21 +801,14 @@ def shortest_paths(graph: GraphStore, roots, *, edge_type: str | None = None,
         dist = roots.select("id").dropDuplicates()
     else:
         dist = spark.createDataFrame([(r,) for r in roots], ["id"])
-    n_e = edges.count()
-    if n_e <= local_guard:
-        try:
-            epdf = edges.toPandas()
-            rpdf = dist.toPandas()
-            rows = _local_sssp(epdf["src"].to_numpy(dtype=object),
-                               epdf["dst"].to_numpy(dtype=object),
-                               epdf["w"].to_numpy(),
-                               rpdf["id"].to_numpy(dtype=object), max_iter)
-            schema = T.StructType([
-                T.StructField("id", edges.schema["src"].dataType),
-                T.StructField("dist", T.DoubleType())])
-            return spark.createDataFrame(rows, schema)
-        finally:
-            edges.unpersist()
+    local = finish_locally(
+        edges, edges.count(),
+        lambda pdf: _local_sssp(
+            pdf, dist.toPandas()["id"].to_numpy(dtype=object), max_iter),
+        T.StructType([T.StructField("id", edges.schema["src"].dataType),
+                      T.StructField("dist", T.DoubleType())]))
+    if local is not None:
+        return local
     dist = dist.withColumn("dist", F.lit(0.0)).localCheckpoint(eager=True)
     frontier = dist
     try:
@@ -915,10 +874,10 @@ def label_propagation(graph: GraphStore, *, edge_type: str | None = None,
     return labels
 
 
-def _local_kcore(srcs, dsts, k: int, max_iter: int):
+def _local_kcore(pdf, k: int, max_iter: int):
     """Driver-local exact k-core peel over a bounded doubled-directed
     edge list (each undirected edge present in both orientations, the
-    ``local_guard`` seam in :func:`k_core`). Round r removes every
+    local finish of :func:`k_core`). Round r removes every
     vertex whose degree within the round-r surviving set is under ``k``
     — the identical per-round rule as the distributed loop, bounded by
     the same ``max_iter`` budget, so the output (id, degree-in-core)
@@ -927,12 +886,12 @@ def _local_kcore(srcs, dsts, k: int, max_iter: int):
     import numpy as np
     import pandas as pd
 
-    m = len(srcs)
+    m = len(pdf)
     if m == 0:
         return []
     codes, _vocab = pd.factorize(
-        np.concatenate([np.asarray(srcs, dtype=object),
-                        np.asarray(dsts, dtype=object)]))
+        np.concatenate([pdf["src"].to_numpy(dtype=object),
+                        pdf["dst"].to_numpy(dtype=object)]))
     u = codes[:m].astype(np.int64)
     v = codes[m:].astype(np.int64)
     vocab = np.asarray(_vocab, dtype=object)
@@ -952,7 +911,7 @@ def _local_kcore(srcs, dsts, k: int, max_iter: int):
 
 
 def k_core(graph: GraphStore, k: int, *, edge_type: str | None = None,
-           max_iter: int = 50, local_guard: int = 2_000_000) -> DataFrame:
+           max_iter: int = 50) -> DataFrame:
     """k-core: the maximal subgraph where every vertex has degree >= k,
     found by iterative peeling (remove under-degree vertices until fixpoint;
     the k-core is unique, so peeling order is irrelevant — no ordering
@@ -960,10 +919,10 @@ def k_core(graph: GraphStore, k: int, *, edge_type: str | None = None,
 
     Each round is one degree aggregation over edges semi-joined to the
     surviving set; the surviving set shrinks monotonically, so rounds get
-    cheaper as they proceed. ``local_guard``: when the deduped edge list
-    fits under this bound (and k >= 1), the whole cascade is settled by
-    one driver-local vectorized peel (:func:`_local_kcore`) — the same
-    bounded-local-finish discipline as SCC and k-truss; the sequential
+    cheaper as they proceed. When the deduped edge list fits the driver
+    (and k >= 1), the whole cascade is settled by one driver-local
+    vectorized peel (:func:`_local_kcore` through
+    :func:`~vivace_graph_v3_spark.util.finish_locally`); the sequential
     round latency dominates exactly when the frames are small, and the
     local peel applies the identical per-round rule under the identical
     ``max_iter`` budget. The distributed loop stays the at-scale path."""
@@ -972,19 +931,13 @@ def k_core(graph: GraphStore, k: int, *, edge_type: str | None = None,
     edges = (_edge_pairs(graph, edge_type, undirected=True)
              .dropDuplicates(["src", "dst"]).persist())
     if k >= 1:
-        n_e = edges.count()
-        if n_e <= local_guard:
-            try:
-                pdf = edges.select("src", "dst").toPandas()
-                rows = _local_kcore(pdf["src"].to_numpy(dtype=object),
-                                    pdf["dst"].to_numpy(dtype=object),
-                                    k, max_iter)
-                schema = T.StructType([
-                    T.StructField("id", edges.schema["src"].dataType),
-                    T.StructField("degree", T.LongType())])
-                return graph.spark.createDataFrame(rows, schema)
-            finally:
-                edges.unpersist()
+        local = finish_locally(
+            edges, edges.count(),
+            lambda pdf: _local_kcore(pdf, k, max_iter),
+            T.StructType([T.StructField("id", edges.schema["src"].dataType),
+                          T.StructField("degree", T.LongType())]))
+        if local is not None:
+            return local
     alive, n_alive = _ckpt_n(graph.scan_vertices(columns=["id"])
                              .select("id").dropDuplicates())
     deg = None
@@ -1031,7 +984,7 @@ def k_core(graph: GraphStore, k: int, *, edge_type: str | None = None,
 
 
 def hits(graph: GraphStore, *, edge_type: str | None = None,
-         max_iter: int = 5, bcast_guard: int = 2_000_000) -> DataFrame:
+         max_iter: int = 5) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999) over active edges:
     alternating hub = sum of pointed-to authorities, authority = sum of
     incoming hubs. Returns (id, hub, auth) for every vertex, each score
@@ -1044,13 +997,14 @@ def hits(graph: GraphStore, *, edge_type: str | None = None,
     can drift between engines. Scores stay well inside double range for
     any realistic iteration count (growth ~ lambda_max^rounds).
 
-    Scale shape — two regimes behind ``bcast_guard`` (the pagerank
-    discipline). Below the guard (|V| bounded), the score state is
+    Scale shape — two regimes behind the driver bound
+    (:func:`~vivace_graph_v3_spark.util.fits_driver`, as in pagerank).
+    When |V| fits, the score state is
     broadcast into each half-round's join against ONE checkpointed edge
     copy: no edge co-partitioning at all, one |V|-bounded aggregate
     exchange per half-round, round 1's hub seeded as the out-degree sum
     (round-10 same-window A/B: 7.46 -> 4.49 s at sf0.1, bit-identical).
-    Past the guard — the 100 TB regime, where |V| dwarfs any broadcast
+    Past the bound — the 100 TB regime, where |V| dwarfs any broadcast
     budget — the alternating iteration stays one lazy shuffle-join chain
     against TWO persisted pre-partitioned edge copies, materialized once
     at the end: per-round state shuffles are |V|-bounded and AQE
@@ -1082,19 +1036,19 @@ def hits(graph: GraphStore, *, edge_type: str | None = None,
     # trade pagerank makes; memory holds 2x edges, which on a cluster is
     # storage-tier disk/memory, not driver.
     ob_h, ob_a = Observation(), Observation()
-    if n_v <= bcast_guard:
-        # bounded-state regime (same discipline as pagerank's
-        # bcast_guard, measured same-window 7.46 -> 4.49 s at sf0.1,
-        # bit-identical output): the |V|-row score state is BROADCAST to
-        # each half-round's join, so the edge list is never
-        # co-partitioned at all — one checkpointed copy streams map-side
-        # through every half-round and the only exchange per half-round
-        # is the |V|-bounded message aggregate. Round 1's hub is seeded
-        # directly as the out-degree sum (auth_0 = 1.0 everywhere, so
-        # hub_1(src) = sum of 1.0 over src's out-edges — the identical
-        # double), skipping one broadcast join. Past the guard the
-        # co-partitioned formulation below is the one that holds at
-        # 100 TB, where |V| dwarfs any broadcast budget.
+    if fits_driver(n_v):
+        # bounded-state regime (as in pagerank; measured same-window
+        # 7.46 -> 4.49 s at sf0.1, bit-identical output): the |V|-row
+        # score state is BROADCAST to each half-round's join, so the edge
+        # list is never co-partitioned at all — one checkpointed copy
+        # streams map-side through every half-round and the only
+        # exchange per half-round is the |V|-bounded message aggregate.
+        # Round 1's hub is seeded directly as the out-degree sum
+        # (auth_0 = 1.0 everywhere, so hub_1(src) = sum of 1.0 over
+        # src's out-edges — the identical double), skipping one
+        # broadcast join. Past the bound the co-partitioned formulation
+        # below is the one that holds at 100 TB, where |V| dwarfs any
+        # broadcast budget.
         pairs = (_edge_pairs(graph, edge_type).select("src", "dst")
                  .localCheckpoint(eager=True))
 
@@ -1269,9 +1223,9 @@ def walk_census(graph: GraphStore, *, edge_type: str | None = None,
     return out
 
 
-def _local_landmark_levels(srcs, dsts, landmarks, max_depth: int):
+def _local_landmark_levels(pdf, landmarks, max_depth: int):
     """Driver-local BFS level sizes per landmark over a bounded edge
-    list (the ``local_guard`` seam of :func:`landmark_closeness` /
+    list (the local finish of :func:`landmark_closeness` /
     :func:`landmark_eccentricity`): the same per-depth
     frontier-join/anti-join semantics as the distributed loops —
     frontier expands along directed arcs, a vertex joins the level of
@@ -1280,10 +1234,10 @@ def _local_landmark_levels(srcs, dsts, landmarks, max_depth: int):
     import numpy as np
     import pandas as pd
 
-    m = len(srcs)
+    m = len(pdf)
     codes, _vocab = pd.factorize(
-        np.concatenate([np.asarray(srcs, dtype=object),
-                        np.asarray(dsts, dtype=object),
+        np.concatenate([pdf["src"].to_numpy(dtype=object),
+                        pdf["dst"].to_numpy(dtype=object),
                         np.asarray(landmarks, dtype=object)]))
     u = codes[:m].astype(np.int64)
     v = codes[m:2 * m].astype(np.int64)
@@ -1322,8 +1276,7 @@ def _local_landmark_levels(srcs, dsts, landmarks, max_depth: int):
 
 def landmark_closeness(graph: GraphStore, landmarks: list[str], *,
                        edge_type: str | None = None, max_depth: int = 6,
-                       undirected: bool = True,
-                       local_guard: int = 2_000_000) -> DataFrame:
+                       undirected: bool = True) -> DataFrame:
     """Closeness centrality of ``landmarks`` (Freeman 1979), depth-bounded:
     closeness(l) = (reached - 1) / sum of BFS distances over the vertices
     l reaches within ``max_depth`` hops. Exact closeness needs all-pairs
@@ -1337,39 +1290,34 @@ def landmark_closeness(graph: GraphStore, landmarks: list[str], *,
     width, never the graph; rounds are bounded by max_depth. The
     closeness ratio uses the integer round-half-up recipe (engine-exact
     6 decimals). Returns (lm, n_reached, sum_dist, closeness) where
-    n_reached counts the landmark itself. ``local_guard``: under the
-    bound the per-depth frontier rounds run as one driver-local BFS
-    (:func:`_local_landmark_levels`, the SCC/k-truss local-finish
-    discipline) — identical levels, exact integer aggregates.
+    n_reached counts the landmark itself. When the edge list fits the
+    driver, the per-depth frontier rounds run as one driver-local BFS
+    (:func:`_local_landmark_levels` through
+    :func:`~vivace_graph_v3_spark.util.finish_locally`) — identical
+    levels, exact integer aggregates. The bound counts DISTINCT
+    UNDIRECTED edges, so an undirected arc list may hold twice as many
+    rows.
     """
     spark = graph.spark
     edges = (_edge_pairs(graph, edge_type, undirected=undirected)
              .select("src", "dst").dropDuplicates().persist())
-    n_e = edges.count()
-    # guard on DISTINCT UNDIRECTED edges (the SCC/k-truss memory class);
-    # the arc list carries each edge twice when undirected
-    if n_e <= (local_guard * 2 if undirected else local_guard):
-        try:
-            epdf = edges.toPandas()
-            levels = _local_landmark_levels(
-                epdf["src"].to_numpy(dtype=object),
-                epdf["dst"].to_numpy(dtype=object),
-                list(landmarks), max_depth)
-            acc: dict = {}
-            for lm, d, n in levels:
-                r, s = acc.get(lm, (0, 0))
-                acc[lm] = (r + n, s + d * n)
-            rows = []
-            for lm, (r, s) in acc.items():
-                # mirror the expression: long div -> NULL on zero divisor
-                c = (float(((r - 1) * 2000000 + s) // (s * 2)) / 1e6
-                     if s else None)
-                rows.append((lm, r, s, c))
-            schema = ("lm string, n_reached long, sum_dist long, "
-                      "closeness double")
-            return spark.createDataFrame(rows, schema)
-        finally:
-            edges.unpersist()
+
+    def _closeness_rows(pdf):
+        acc: dict = {}
+        for lm, d, n in _local_landmark_levels(pdf, list(landmarks),
+                                               max_depth):
+            r, s = acc.get(lm, (0, 0))
+            acc[lm] = (r + n, s + d * n)
+        # mirror the expression: long div -> NULL on zero divisor
+        return [(lm, r, s, float(((r - 1) * 2000000 + s) // (s * 2)) / 1e6
+                 if s else None) for lm, (r, s) in acc.items()]
+
+    local = finish_locally(
+        edges, edges.count(), _closeness_rows,
+        "lm string, n_reached long, sum_dist long, closeness double",
+        scale=2 if undirected else 1)
+    if local is not None:
+        return local
     visited = (spark.createDataFrame([(l, l, 0) for l in landmarks],
                                      "lm string, id string, dist int")
                .localCheckpoint(eager=True))
@@ -1472,8 +1420,7 @@ def avg_neighbor_degree(graph: GraphStore, *, edge_type: str | None = None,
 
 def landmark_eccentricity(graph: GraphStore, landmarks: list[str], *,
                           edge_type: str | None = None, max_depth: int = 8,
-                          undirected: bool = True,
-                          local_guard: int = 2_000_000) -> DataFrame:
+                          undirected: bool = True) -> DataFrame:
     """Depth-bounded eccentricity of ``landmarks`` and the graph-diameter
     LOWER BOUND they witness: ecc(l) = max BFS distance from l within
     ``max_depth``; diameter >= max over any landmark set (the standard
@@ -1484,31 +1431,27 @@ def landmark_eccentricity(graph: GraphStore, landmarks: list[str], *,
     one frontier-edge join + one anti-join against visited, k landmarks
     widen the frontier, never the graph; rounds bounded by max_depth.
     Returns (lm, n_reached, ecc, diameter_lb) — diameter_lb constant
-    across rows (a window max over the landmark-bounded result)."""
+    across rows (a window max over the landmark-bounded result). Same
+    bounded local finish as landmark_closeness."""
     spark = graph.spark
     edges = (_edge_pairs(graph, edge_type, undirected=undirected)
              .select("src", "dst").dropDuplicates().persist())
-    n_e = edges.count()
-    # same local-finish guard as landmark_closeness (distinct undirected
-    # edges; the arc list doubles each edge when undirected)
-    if n_e <= (local_guard * 2 if undirected else local_guard):
-        try:
-            epdf = edges.toPandas()
-            levels = _local_landmark_levels(
-                epdf["src"].to_numpy(dtype=object),
-                epdf["dst"].to_numpy(dtype=object),
-                list(landmarks), max_depth)
-            acc: dict = {}
-            for lm, d, n in levels:
-                r, e = acc.get(lm, (0, 0))
-                acc[lm] = (r + n, max(e, d))
-            dlb = max((e for _, e in acc.values()), default=0)
-            rows = [(lm, r, e, dlb) for lm, (r, e) in acc.items()]
-            schema = ("lm string, n_reached long, ecc long, "
-                      "diameter_lb long")
-            return spark.createDataFrame(rows, schema)
-        finally:
-            edges.unpersist()
+
+    def _ecc_rows(pdf):
+        acc: dict = {}
+        for lm, d, n in _local_landmark_levels(pdf, list(landmarks),
+                                               max_depth):
+            r, e = acc.get(lm, (0, 0))
+            acc[lm] = (r + n, max(e, d))
+        dlb = max((e for _, e in acc.values()), default=0)
+        return [(lm, r, e, dlb) for lm, (r, e) in acc.items()]
+
+    local = finish_locally(
+        edges, edges.count(), _ecc_rows,
+        "lm string, n_reached long, ecc long, diameter_lb long",
+        scale=2 if undirected else 1)
+    if local is not None:
+        return local
     visited = (spark.createDataFrame([(l, l, 0) for l in landmarks],
                                      "lm string, id string, dist int")
                .localCheckpoint(eager=True))
@@ -1578,9 +1521,9 @@ def rich_club_coefficient(graph: GraphStore, thresholds: list[int],
     return out.withColumn("phi_ppm", phi.cast("long"))
 
 
-def _local_stress(srcs, dsts, landmarks, max_depth: int):
+def _local_stress(pdf, landmarks, max_depth: int):
     """Driver-local exact two-pass landmark stress over a bounded edge
-    list (the ``local_guard`` seam in :func:`landmark_stress`). Per
+    list (the local finish of :func:`landmark_stress`). Per
     landmark: forward BFS accumulating exact sigma path counts per
     level, backward rho fold from the deepest level — all BIGINT
     arithmetic via integer bincounts, identical to the distributed
@@ -1589,10 +1532,10 @@ def _local_stress(srcs, dsts, landmarks, max_depth: int):
     import numpy as np
     import pandas as pd
 
-    m = len(srcs)
+    m = len(pdf)
     codes, _vocab = pd.factorize(
-        np.concatenate([np.asarray(srcs, dtype=object),
-                        np.asarray(dsts, dtype=object),
+        np.concatenate([pdf["src"].to_numpy(dtype=object),
+                        pdf["dst"].to_numpy(dtype=object),
                         np.asarray(landmarks, dtype=object)]))
     u = codes[:m].astype(np.int64)
     v = codes[m:2 * m].astype(np.int64)
@@ -1656,8 +1599,7 @@ def _local_stress(srcs, dsts, landmarks, max_depth: int):
 
 def landmark_stress(graph: GraphStore, landmarks: list[str], *,
                     edge_type: str | None = None, max_depth: int = 6,
-                    undirected: bool = True,
-                    local_guard: int = 2_000_000) -> DataFrame:
+                    undirected: bool = True) -> DataFrame:
     """Depth-bounded stress centrality from landmark sources (Shimbel
     1953; the integer-exact sibling of Brandes 2001 betweenness — path
     COUNTS through a vertex, not fractional dependencies, so every
@@ -1682,29 +1624,19 @@ def landmark_stress(graph: GraphStore, landmarks: list[str], *,
     per-(lm, dist) aggregate (lm, dist, n_vertices, sum_sigma,
     sum_stress, max_stress) — BIGINT-exact while per-vertex
     sigma * rho fits 2^63 (holds through the test gates; lift to
-    DECIMAL(38,0) sums past that, the ks_drift discipline)."""
+    DECIMAL(38,0) sums past that, the ks_drift discipline). Same bounded
+    local finish as landmark_closeness (:func:`_local_stress`)."""
     spark = graph.spark
     edges = (_edge_pairs(graph, edge_type, undirected=undirected)
              .select("src", "dst").dropDuplicates().persist())
-    n_e = edges.count()
-    # the guard bounds DISTINCT UNDIRECTED edges (the SCC/k-truss memory
-    # class); with undirected=True the arc list carries each edge twice
-    if n_e <= (local_guard * 2 if undirected else local_guard):
-        try:
-            epdf = edges.toPandas()
-            rows = _local_stress(epdf["src"].to_numpy(dtype=object),
-                                 epdf["dst"].to_numpy(dtype=object),
-                                 list(landmarks), max_depth)
-            schema = T.StructType([
-                T.StructField("lm", T.StringType()),
-                T.StructField("dist", T.LongType()),
-                T.StructField("n_vertices", T.LongType()),
-                T.StructField("sum_sigma", T.LongType()),
-                T.StructField("sum_stress", T.LongType()),
-                T.StructField("max_stress", T.LongType())])
-            return spark.createDataFrame(rows, schema)
-        finally:
-            edges.unpersist()
+    local = finish_locally(
+        edges, edges.count(),
+        lambda pdf: _local_stress(pdf, list(landmarks), max_depth),
+        "lm string, dist long, n_vertices long, sum_sigma long, "
+        "sum_stress long, max_stress long",
+        scale=2 if undirected else 1)
+    if local is not None:
+        return local
     level0 = (spark.createDataFrame([(l, l, 1) for l in landmarks],
                                     "lm string, id string, sigma long")
               .localCheckpoint(eager=True))
@@ -1826,8 +1758,8 @@ def _tarjan_components(adj: dict, nodes) -> tuple[list, dict]:
 
 def _local_scc_ids(edge_rows) -> dict:
     """Driver-local exact SCC labels: id -> min member id of its
-    component. Input is a bounded list of (src, dst) pairs (the
-    ``local_guard`` seam below)."""
+    component. Input is a bounded list of (src, dst) pairs (the local
+    finish of :func:`strongly_connected_components`)."""
     adj: dict = {}
     nodes: set = set()
     for src, dst in edge_rows:
@@ -1908,8 +1840,7 @@ def _reach_min(edges: DataFrame, nodes: DataFrame, *, max_iter: int = 50,
 
 def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
                                   dst_col: str = "dst", max_rounds: int = 25,
-                                  max_iter: int = 50,
-                                  local_guard: int = 2_000_000) -> DataFrame:
+                                  max_iter: int = 50) -> DataFrame:
     """Exact strongly connected components of a directed edge DataFrame,
     by iterated forward/backward min-label peeling (the coloring variant
     of FW-BW — Fleischer, Hendrickson & Pinar IPDPS 2000; Orzan 2004;
@@ -1930,14 +1861,13 @@ def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
 
     100 TB shape: every step is an edge-grouped aggregate or a label
     join — the Pregel cost model, linear in |E| per propagation round,
-    no driver-side state above the guard. ``local_guard``: once the
-    ACTIVE edge set fits under this bound, the remaining components are
-    settled by one driver-local iterative Tarjan pass over the collected
-    (bounded) edge list — the same bounded-local-finish discipline as
-    dedup's ≤2M-pair union-find (dedup.py) and grid-DBSCAN's clustering
-    guard, with the distributed peel loop as the at-scale fallback. The
-    peel loop's sequential fixpoint latency dominates exactly when the
-    frames are tiny, so the guard removes ~60 near-empty sequential jobs
+    no driver-side state above the driver bound. Once the ACTIVE edge
+    set fits the driver, the remaining components are settled by one
+    driver-local iterative Tarjan pass over the collected edge list
+    (:func:`~vivace_graph_v3_spark.util.finish_locally`), with the
+    distributed peel loop as the at-scale fallback. The peel loop's
+    sequential fixpoint latency dominates exactly when the frames are
+    tiny, so the local finish removes ~60 near-empty sequential jobs
     without changing a single output label (Tarjan partition + min
     member id ≡ the fmin/bmin fixpoint certificate; differential test in
     test_round7_batch6). Returns (id, scc_id) with scc_id = min member
@@ -1951,21 +1881,9 @@ def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
         .dropDuplicates())
     rev = e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
 
-    def _settle_locally(active_e, active_n, result):
-        # bounded by local_guard rows; exact Tarjan labels, then every
-        # active node absent from the (deduped, self-loop-free) active
-        # edge list is its own singleton component
-        labs = _local_scc_ids((r["src"], r["dst"])
-                              for r in active_e.collect())
-        spark = active_e.sparkSession
-        id_f = active_n.schema["id"]
-        schema = T.StructType([id_f, T.StructField("scc_id", id_f.dataType)])
-        lab_df = spark.createDataFrame(list(labs.items()), schema)
-        settled = (active_n.join(F.broadcast(lab_df), "id", "left")
-                   .select("id", F.coalesce(F.col("scc_id"), F.col("id"))
-                           .alias("scc_id")))
-        return result.unionByName(settled)
-
+    id_f = nodes.schema["id"]
+    lab_schema = T.StructType([id_f,
+                               T.StructField("scc_id", id_f.dataType)])
     try:
         active_n, n_active, active_e, active_r = nodes, n_nodes, e0, rev
         n_active_e = None   # unknown for round 0 until counted
@@ -1978,8 +1896,19 @@ def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
                 return result
             if n_active_e is None:
                 n_active_e = active_e.count()   # persisted e0, one probe
-            if n_active_e <= local_guard:
-                return _settle_locally(active_e, active_n, result)
+            lab_df = finish_locally(
+                active_e, n_active_e,
+                lambda pdf: list(_local_scc_ids(
+                    zip(pdf["src"], pdf["dst"])).items()),
+                lab_schema)
+            if lab_df is not None:
+                # exact Tarjan labels; every active node absent from the
+                # (deduped, self-loop-free) active edge list is its own
+                # singleton component
+                return result.unionByName(
+                    active_n.join(F.broadcast(lab_df), "id", "left")
+                    .select("id", F.coalesce(F.col("scc_id"), F.col("id"))
+                            .alias("scc_id")))
             f = _reach_min(active_e, active_n, max_iter=max_iter)
             b = (_reach_min(active_r, active_n, max_iter=max_iter)
                  .withColumnRenamed("lab", "blab"))
@@ -2007,8 +1936,7 @@ def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
 
 def bowtie_decomposition(edges: DataFrame, scc: DataFrame, *,
                          src_col: str = "src", dst_col: str = "dst",
-                         max_iter: int = 50,
-                         local_guard: int = 2_000_000) -> DataFrame:
+                         max_iter: int = 50) -> DataFrame:
     """Broder bow-tie decomposition (Broder et al., "Graph structure in
     the web", WWW 2000) relative to the largest SCC: every node is CORE
     (in the largest SCC — ties broken by min scc_id), IN (reaches the
@@ -2023,7 +1951,10 @@ def bowtie_decomposition(edges: DataFrame, scc: DataFrame, *,
     to-core is exactly "my forward reach-min equals the core's collapsed
     label" after relabeling every core node to one sentinel smaller than
     all ids. Takes the (id, scc_id) output of
-    ``strongly_connected_components``. Returns (id, klass)."""
+    ``strongly_connected_components``. Returns (id, klass). When the
+    collapsed edge list fits the driver, both closures come from one
+    collected copy (:func:`_local_reach_min` through
+    :func:`~vivace_graph_v3_spark.util.finish_locally`)."""
     e = (edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
          .filter(F.col("src") != F.col("dst")).dropDuplicates())
     core_id = (scc.groupBy("scc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -2042,28 +1973,32 @@ def bowtie_decomposition(edges: DataFrame, scc: DataFrame, *,
     # materialize the collapsed edge list ONCE — _reach_min re-reads its
     # edge side every iteration, and without this the whole upstream edge
     # pipeline (joins, aggregates) would re-run per propagation round
-    # (the count rides the checkpoint as an observation, guard below)
+    # (the count rides the checkpoint as an observation)
     ce, n_ce = checkpoint_counted(
         e.join(remap_src, "src").join(remap_dst, "dst")
         .select(F.col("csrc").alias("src"), F.col("cdst").alias("dst"))
         .filter(F.col("src") != F.col("dst")).dropDuplicates(),
         rebase=True)
-    if n_ce <= local_guard:
-        # bounded-local finish (same guard discipline as SCC above): both
-        # closures from ONE collected copy of the collapsed edge list;
-        # lab == sentinel membership becomes two small broadcast frames
-        rows = [(r["src"], r["dst"]) for r in ce.collect()]
+
+    def _sides(pdf):
+        # lab == sentinel membership, both directions: (id, side) rows
+        rows = list(zip(pdf["src"], pdf["dst"]))
         fwd_lab = _local_reach_min(rows)
         bwd_lab = _local_reach_min([(d, s) for s, d in rows])
-        spark = ce.sparkSession
-        id_t = scc.schema["id"].dataType
-        sch = T.StructType([T.StructField("id", id_t)])
-        reach_in = (spark.createDataFrame(
-            [(v,) for v, l in fwd_lab.items() if l == sent and v != sent],
-            sch).withColumn("in_side", F.lit(True)))
-        reach_out = (spark.createDataFrame(
-            [(v,) for v, l in bwd_lab.items() if l == sent and v != sent],
-            sch).withColumn("out_side", F.lit(True)))
+        return ([(v, "in") for v, l in fwd_lab.items()
+                 if l == sent and v != sent]
+                + [(v, "out") for v, l in bwd_lab.items()
+                   if l == sent and v != sent])
+
+    sides = finish_locally(
+        ce, n_ce, _sides,
+        T.StructType([T.StructField("id", scc.schema["id"].dataType),
+                      T.StructField("side", T.StringType())]))
+    if sides is not None:
+        reach_in = (sides.filter(F.col("side") == "in").select("id")
+                    .withColumn("in_side", F.lit(True)))
+        reach_out = (sides.filter(F.col("side") == "out").select("id")
+                     .withColumn("out_side", F.lit(True)))
     else:
         cnodes = (ce.select(F.col("src").alias("id"))
                   .unionByName(ce.select(F.col("dst").alias("id")))
@@ -2208,28 +2143,27 @@ def dyad_census(edges: DataFrame, *, src_col: str = "src",
         .alias("reciprocity_ppm")))
 
 
-def _local_temporal_ea(us, vs, ts, seed_list, max_hops, max_iter: int):
+def _local_temporal_ea(pdf, seed_list, max_hops, max_iter: int):
     """Driver-local exact earliest-arrival DP over a bounded temporal
-    edge list (the ``local_guard`` seam in
-    :func:`temporal_earliest_arrival`). Replays the distributed loop
-    round for round: the frontier is exactly the improved set, a seed
-    row's NULL arrival admits every outgoing edge (and is itself
-    improvable by any numeric arrival, like the relational left-join
-    rule), numeric arrivals only decrease, and the convergence budget
-    raises the same RuntimeError. Returns ([(seed, node, arrival)],
-    improving_flag)."""
+    edge list (the local finish of :func:`temporal_earliest_arrival`).
+    Replays the distributed loop round for round: the frontier is
+    exactly the improved set, a seed row's NULL arrival admits every
+    outgoing edge (and is itself improvable by any numeric arrival, like
+    the relational left-join rule), numeric arrivals only decrease, and
+    the convergence budget raises the same RuntimeError. Returns
+    [(seed, node, arrival)]."""
     import numpy as np
     import pandas as pd
 
-    m = len(us)
+    m = len(pdf)
     codes, _vocab = pd.factorize(
-        np.concatenate([np.asarray(us, dtype=object),
-                        np.asarray(vs, dtype=object),
+        np.concatenate([pdf["u"].to_numpy(dtype=object),
+                        pdf["v"].to_numpy(dtype=object),
                         np.asarray(seed_list, dtype=object)]))
     u = codes[:m].astype(np.int64)
     v = codes[m:2 * m].astype(np.int64)
     sc = codes[2 * m:]
-    t = np.asarray(ts, dtype=np.int64)
+    t = np.asarray(pdf["t"].to_numpy(), dtype=np.int64)
     vocab = np.asarray(_vocab, dtype=object)
     nv = int(len(vocab))
     order = np.lexsort((t, u))
@@ -2279,15 +2213,18 @@ def _local_temporal_ea(us, vs, ts, seed_list, max_hops, max_iter: int):
         improving_any = improving_any or improving
         reached = np.nonzero(arr < MAXL)[0]
         out.extend((seed, vocab[i], int(arr[i])) for i in reached)
-    return out, improving_any
+    if max_hops is None and improving_any:
+        raise RuntimeError(
+            f"temporal_earliest_arrival did not converge in "
+            f"{max_iter} rounds")
+    return out
 
 
 def temporal_earliest_arrival(edges: DataFrame, seeds: DataFrame, *,
                               max_hops: int | None = 4,
                               max_iter: int = 50, src_col: str = "src",
                               dst_col: str = "dst",
-                              ts_col: str = "ts",
-                              local_guard: int = 2_000_000) -> DataFrame:
+                              ts_col: str = "ts") -> DataFrame:
     """Earliest-arrival time-respecting reachability over a temporal
     edge list (Wu et al., VLDB 2014 "Path problems in temporal
     graphs"): a path is time-respecting when edge timestamps are
@@ -2307,39 +2244,30 @@ def temporal_earliest_arrival(edges: DataFrame, seeds: DataFrame, *,
     ``max_iter`` budget under the same discipline as the other fixpoint
     loops here (:func:`_reach_min`): a frontier still improving after
     ``max_iter`` rounds raises RuntimeError rather than returning a
-    silently-unconverged result."""
+    silently-unconverged result. When the edge list fits the driver and
+    seeds x edges stays under 256M, the whole DP runs driver-locally
+    (:func:`_local_temporal_ea` through
+    :func:`~vivace_graph_v3_spark.util.finish_locally`)."""
     e = (edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"),
                       F.col(ts_col).cast("long").alias("t"))
          .dropDuplicates().persist())
     n_e = e.count()
-    seed_rows = None
-    if n_e <= local_guard:
+    if fits_driver(n_e):
         seed_rows = [r[0] for r in
                      seeds.select(seeds.columns[0]).collect()]
         # per-seed state is an O(|V|) array — keep the local path to a
         # bounded seeds x vertices footprint, else fall through
-        if len(seed_rows) * max(n_e, 1) > 256_000_000:
-            seed_rows = None
-    if seed_rows is not None:
-        try:
-            epdf = e.toPandas()
-            rows, improving = _local_temporal_ea(
-                epdf["u"].to_numpy(dtype=object),
-                epdf["v"].to_numpy(dtype=object),
-                epdf["t"].to_numpy(), list(dict.fromkeys(seed_rows)),
-                max_hops, max_iter)
-            if max_hops is None and improving:
-                raise RuntimeError(
-                    f"temporal_earliest_arrival did not converge in "
-                    f"{max_iter} rounds")
-            schema = T.StructType([
-                T.StructField("seed",
-                              seeds.schema[seeds.columns[0]].dataType),
-                T.StructField("node", e.schema["u"].dataType),
-                T.StructField("arrival", T.LongType())])
-            return e.sparkSession.createDataFrame(rows, schema)
-        finally:
-            e.unpersist()
+        if len(seed_rows) * max(n_e, 1) <= 256_000_000:
+            return finish_locally(
+                e, n_e,
+                lambda pdf: _local_temporal_ea(
+                    pdf, list(dict.fromkeys(seed_rows)), max_hops,
+                    max_iter),
+                T.StructType([
+                    T.StructField("seed",
+                                  seeds.schema[seeds.columns[0]].dataType),
+                    T.StructField("node", e.schema["u"].dataType),
+                    T.StructField("arrival", T.LongType())]))
     total = (seeds.select(F.col(seeds.columns[0]).alias("seed"))
              .select("seed", F.col("seed").alias("node"),
                      F.lit(None).cast("long").alias("arrival"))

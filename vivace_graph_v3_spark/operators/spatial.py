@@ -224,8 +224,8 @@ def polygon_metrics(polys: DataFrame, *, id_col: str = "id",
 
 
 def grid_dbscan(df: DataFrame, *, eps: float, min_pts: int,
-                id_col: str = "id", x_col: str = "x", y_col: str = "y",
-                driver_pairs_guard: int = 2_000_000) -> DataFrame:
+                id_col: str = "id", x_col: str = "x",
+                y_col: str = "y") -> DataFrame:
     """Exact DBSCAN (Ester et al., KDD'96) over planar points with
     CELL-BLOCKED neighbor generation — the distributed formulation.
 
@@ -327,8 +327,7 @@ def grid_dbscan(df: DataFrame, *, eps: float, min_pts: int,
                   .join(core_pos.withColumnRenamed("pk", "pkb"), "pkb")
                   .select(F.col("pk").alias("id_a"),
                           F.col("pkb").alias("id_b")))
-    plab = dedup_clusters(core_edges,
-                          driver_pairs_guard=driver_pairs_guard)
+    plab = dedup_clusters(core_edges)
     # cluster label = min POINT id over the cluster's core positions
     # (the label a point-level union-find would produce)
     pmin = pos.select("pk", "min_id")

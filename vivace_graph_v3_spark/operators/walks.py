@@ -25,11 +25,11 @@ from pyspark.sql import DataFrame, Window, functions as F
 from vivace_graph_v3_spark.graph import GraphStore
 from vivace_graph_v3_spark.operators.graph_algorithms import _edge_pairs
 from vivace_graph_v3_spark.pipeline.dedup import md5_hash64
+from vivace_graph_v3_spark.util import checkpoint_counted, fits_driver
 
 
 def random_walks(graph: GraphStore, *, edge_type: str | None = None,
-                 walk_length: int = 3, walks_per_node: int = 1,
-                 bcast_guard: int = 2_000_000) -> DataFrame:
+                 walk_length: int = 3, walks_per_node: int = 1) -> DataFrame:
     """Generate ``walks_per_node`` walks of up to ``walk_length`` steps
     from every vertex. Returns (walk_id, step, node); a walk that reaches
     a vertex with no outgoing edges terminates early (no further rows).
@@ -39,23 +39,21 @@ def random_walks(graph: GraphStore, *, edge_type: str | None = None,
     # (src, dst) total order), but each walk step is then a single join of
     # the cursor against this table instead of two (degree pick + neighbor
     # pick) — half the per-step shuffles and checkpoint-bounded lineage
-    from vivace_graph_v3_spark.util import checkpoint_counted
-
     edges = _edge_pairs(graph, edge_type).dropDuplicates(["src", "dst"])
     nbr, n_nbr = checkpoint_counted(
         edges.groupBy("src")
         .agg(F.sort_array(F.collect_list("dst")).alias("__nbrs"),
              F.count(F.lit(1)).alias("deg")))
-    # bounded neighbor table (the pagerank bcast_guard discipline): ship
+    # neighbor table within the driver bound (as pagerank's state): ship
     # it broadcast into every step's join and leave the step chain LAZY —
     # the whole walk corpus is then ONE map-only job (each union arm
     # replays its prefix of broadcast joins over the small cursor frame;
     # the broadcast itself is built once and ReusedExchange'd). Measured
     # same-window at sf0.1: 4.08 -> 3.03 s, identical rows. Past the
-    # guard the per-step checkpointed equi-join below is the shape that
+    # bound the per-step checkpointed equi-join below is the shape that
     # holds at 100 TB (the neighbor table is O(|V|) and never fits a
     # broadcast there).
-    bcast = n_nbr <= bcast_guard
+    bcast = fits_driver(n_nbr)
 
     starts = (graph.scan_vertices(columns=["id"]).select("id")
               .dropDuplicates()
@@ -113,8 +111,7 @@ def skipgram_pairs(walks: DataFrame, *, window: int = 2,
 
 
 def negative_samples(pairs: DataFrame, vertices: DataFrame, *,
-                     k: int = 3, id_col: str = "id",
-                     rank_guard: int = 4_000_000) -> DataFrame:
+                     k: int = 3, id_col: str = "id") -> DataFrame:
     """Attach ``k`` deterministic negative samples to every skip-gram
     pair — the final ingredient of word2vec-style embedding training
     (Mikolov et al. 2013 negative sampling). Negative j for a pair is
@@ -135,9 +132,10 @@ def negative_samples(pairs: DataFrame, vertices: DataFrame, *,
     base = (vertices.select(F.col(id_col).alias("negative"))
             .dropDuplicates().localCheckpoint(eager=True))
     n = base.count()
-    if n <= rank_guard:
-        # bounded vocab: one single-task sort is cheaper than the
-        # distributed rank's extra shuffle + offset pass
+    if fits_driver(n, scale=2):
+        # bounded vocab (a one-column sort, so twice the driver bound):
+        # one single-task sort is cheaper than the distributed rank's
+        # extra shuffle + offset pass
         ranked = base.withColumn(
             "__r", F.row_number().over(Window.orderBy("negative")) - 1)
     else:

@@ -30,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from vivace_graph_v3_spark.pipeline.text import tokens
-from vivace_graph_v3_spark.util import checkpoint_counted, ensure_parallelism
+from vivace_graph_v3_spark.util import (
+    checkpoint_counted, ensure_parallelism, fits_driver, union_find_min)
 
 # -- exact ---------------------------------------------------------------------
 
@@ -772,7 +773,7 @@ _ = Window  # (window paging used by callers)
 
 def dedup_clusters(pairs: DataFrame, *, id_a: str = "id_a",
                    id_b: str = "id_b", max_iter: int = 15,
-                   driver_pairs_guard: int = 2_000_000) -> DataFrame:
+                   driver_pairs_guard: int | None = None) -> DataFrame:
     """Collapse near-dup PAIRS into duplicate clusters: connected components
     over the pair graph. Returns (id, cluster) for every id that appears in
     a pair; cluster = min id of the component — the canonical
@@ -781,10 +782,13 @@ def dedup_clusters(pairs: DataFrame, *, id_a: str = "id_a",
     Two regimes, like pagerank's broadcast guard: the pair graph is the
     OUTPUT of dedup (bounded by the duplicate count, not the corpus), so
     even at 100 TB it is usually orders of magnitude smaller than the
-    input. Below ``driver_pairs_guard`` pairs (~tens of MB) the component
-    labels come from a single-pass union-find on the driver — one job,
-    no iteration. Past the guard, distributed min-label propagation with
-    pointer jumping (shallow dup clusters converge in a few rounds)."""
+    input. Up to ``driver_pairs_guard`` pairs (default: the shared driver
+    bound, :data:`~vivace_graph_v3_spark.util.DRIVER_ROWS`, read at call
+    time) the component labels come from a single-pass union-find on
+    the driver (:func:`~vivace_graph_v3_spark.util.union_find_min`) —
+    one job, no iteration. Past it, distributed min-label propagation
+    with pointer jumping (shallow dup clusters converge in a few
+    rounds)."""
     spark = pairs.sparkSession
     # the symmetric closure reads `pairs` twice (forward + reversed branch
     # of the union); pair generators are the expensive half of the pipeline
@@ -793,32 +797,15 @@ def dedup_clusters(pairs: DataFrame, *, id_a: str = "id_a",
     # whole upstream dedup pipeline executes twice before iteration starts
     pairs, n_pairs = checkpoint_counted(
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")))
-    if n_pairs <= driver_pairs_guard:
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for row in pairs.toLocalIterator():
-            a, b = row["a"], row["b"]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by min so the representative is already the min id
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        rows = [(x, find(x)) for x in parent]
+    if (fits_driver(n_pairs) if driver_pairs_guard is None
+            else n_pairs <= driver_pairs_guard):
+        comp = union_find_min((r["a"], r["b"])
+                              for r in pairs.toLocalIterator())
         id_type = pairs.schema["a"].dataType
         from pyspark.sql import types as T
         schema = T.StructType([T.StructField("id", id_type),
                                T.StructField("cluster", id_type)])
-        return spark.createDataFrame(rows, schema)
+        return spark.createDataFrame(list(comp.items()), schema)
     edges = (pairs
              .unionByName(pairs.select(F.col("b").alias("a"),
                                        F.col("a").alias("b")))

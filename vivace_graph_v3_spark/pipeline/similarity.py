@@ -83,7 +83,8 @@ def _cosine_topk_seed_scan(corpus: DataFrame, queries: DataFrame, k: int, *,
     (queries x ~k)-row rank.
 
     ``label_col``/``q_label_col`` (both or neither): additionally
-    exclude candidates whose label EQUALS the query row's — the
+    exclude candidates whose label EQUALS the query row's, or where
+    either label is null (SQL ``la != lb`` semantics) — the
     hard-negative-mining constraint (rank among different-label vectors
     only). The mask composes with the self-id mask before the kth-raw
     pre-selection, so excluded candidates can never displace a kept
@@ -142,9 +143,13 @@ def _cosine_topk_seed_scan(corpus: DataFrame, queries: DataFrame, k: int, *,
             S = fold_dot(Q, C) / np.multiply.outer(fold_norm(Q), cnorm)
             self_mask = qids[:, None] == cids[None, :]
             if clabels is not None:
+                # SQL ``la != lb``: equal labels AND a null on either side
+                # exclude the pair
                 qlabels = pdf["qlabel"].to_numpy()
-                self_mask = self_mask | (qlabels[:, None]
-                                         == clabels[None, :])
+                self_mask = (self_mask
+                             | (qlabels[:, None] == clabels[None, :])
+                             | pd.isna(qlabels)[:, None]
+                             | pd.isna(clabels)[None, :])
             Sm = np.where(self_mask, -np.inf, S)
             # kth-largest raw per query (NaN sorts as largest in numpy,
             # matching Spark/DuckDB NaN-greatest ordering)

@@ -42,6 +42,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 
 from vivace_graph_v3_spark.graph import GraphStore
+from vivace_graph_v3_spark import util
 from vivace_graph_v3_spark.util import checkpoint_counted
 from vivace_graph_v3_spark.query.builder import (
     Plan, QueryError, Select, is_var, var_col,
@@ -138,23 +139,24 @@ class RuleEvaluator:
     """Evaluates rule relations over one graph, memoizing solved relations."""
 
     def __init__(self, graph: GraphStore, *, max_iterations: int = 64,
-                 select_opts: dict | None = None,
-                 broadcast_guard: int = 2_000_000) -> None:
+                 select_opts: dict | None = None) -> None:
         self.graph = graph
         self.max_iterations = max_iterations
         self.select_opts = select_opts or {}
         self._solved: dict[str, DataFrame] = {}
-        # bounded-relation regime (the pagerank/HITS bcast_guard
-        # discipline): delta/total relations whose EXACT row count (known
-        # for free — counts ride the delta checkpoints as observations) is
-        # under the guard are broadcast into the semi-naive joins and the
-        # freshness anti-join, so an iteration is map-side work plus the
-        # one candidate-dedup exchange. Checkpointed scans have no
-        # catalyst stats, so without the hint every iteration shuffles
-        # BOTH sides of both joins. Past the guard — the 100 TB regime —
-        # the shuffle joins below are unchanged. 0 disables (differential
-        # tests pin the two regimes against each other).
-        self.broadcast_guard = broadcast_guard
+
+    @staticmethod
+    def _broadcastable(rows: int) -> bool:
+        """Bounded-relation regime (as pagerank/HITS state): delta/total
+        relations whose EXACT row count (known for free — counts ride
+        the delta checkpoints as observations) fits the driver bound are
+        broadcast into the semi-naive joins and the freshness anti-join,
+        so an iteration is map-side work plus the one candidate-dedup
+        exchange. Checkpointed scans have no catalyst stats, so without
+        the hint every iteration shuffles BOTH sides of both joins. Past
+        the bound — the 100 TB regime — the shuffle joins are unchanged.
+        A bound of 0 disables broadcasting altogether."""
+        return bool(util.DRIVER_ROWS) and util.fits_driver(rows)
 
     def relation(self, name: str) -> DataFrame:
         """The full relation of a rule, columns ``__a0..__a{k-1}``."""
@@ -239,7 +241,7 @@ class RuleEvaluator:
                     continue
                 cand = self._union(frames, arity=rule.arity).dropDuplicates()
                 tot = totals[n]
-                if self.broadcast_guard and arm_rows[n] <= self.broadcast_guard:
+                if self._broadcastable(arm_rows[n]):
                     tot = F.broadcast(tot)
                 fresh, n_fresh = checkpoint_counted(
                     cand.join(tot, on=list(cand.columns),
@@ -308,8 +310,7 @@ class RuleEvaluator:
                 rows = ((deltas_rows if use_delta else totals_rows)
                         or {}).get(head)
                 if (plan.df is not None and rows is not None
-                        and self.broadcast_guard
-                        and rows <= self.broadcast_guard):
+                        and self._broadcastable(rows)):
                     rel = F.broadcast(rel)
                 plan = self._merge_rule_goal(plan, rel, goal[1:])
                 occ += 1

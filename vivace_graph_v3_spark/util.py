@@ -36,6 +36,70 @@ def checkpoint_counted(df: DataFrame, *,
     return out, int(ob.get["n"])
 
 
+# The one driver bound: how many rows the driver may collect (a bounded
+# local finish) or ship as a broadcast (bounded iteration state or rule
+# relations). Every bounded-vs-distributed choice reads it at call time
+# through fits_driver / finish_locally, so setting it to 0 forces every
+# operator onto its distributed path. Size it to driver memory: ~100
+# bytes per collected edge row, so 2M rows is a few hundred MB.
+DRIVER_ROWS = 2_000_000
+
+
+def fits_driver(n: int, *, scale: int = 1) -> bool:
+    """May the driver hold or broadcast ``n`` rows? ``scale`` widens the
+    bound for frames whose rows are lighter than one edge (an undirected
+    arc list carries each edge twice)."""
+    return n <= DRIVER_ROWS * scale
+
+
+def finish_locally(df: DataFrame, n: int, kernel, schema, *,
+                   scale: int = 1) -> DataFrame | None:
+    """Bounded local finish for an iterative operator: when the
+    persisted or checkpointed ``df`` (``n`` rows, already counted) fits
+    the driver, collect it over Arrow, run ``kernel(pdf)`` and rebuild
+    its rows as ``createDataFrame(rows, schema)``, releasing ``df``.
+
+    Returns None above the bound, so the caller keeps its distributed
+    loop. A kernel may also return None to decline (e.g. a memory cap
+    inside the kernel); ``df`` is then left as it was for that loop."""
+    if not fits_driver(n, scale=scale):
+        return None
+    declined = False
+    try:
+        rows = kernel(df.toPandas())
+        declined = rows is None
+    finally:
+        if not declined:
+            df.unpersist()
+    return None if declined else df.sparkSession.createDataFrame(rows, schema)
+
+
+def union_find_min(edge_rows) -> dict:
+    """Driver-local connected components of an undirected edge list:
+    id -> min member id of its component. Union by min root with path
+    compression, so every root is already its component's minimum (by
+    the ids' Python order, which for strings is the code-point order
+    Spark's min uses)."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edge_rows:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {x: find(x) for x in parent}
+
+
 def rows_to_json(df, *, col: str = "json"):
     """One JSON object per row — the REST layer's NDJSON/JSON encoding of
     nodes (rest.lisp:101-146, 249-291) as a single JVM expression."""
