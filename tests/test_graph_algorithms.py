@@ -62,6 +62,23 @@ def test_connected_components_long_chain_logarithmic(spark):
     assert set(comp.values()) == {"n00"}
 
 
+def test_min_label_budget_raises_not_partial(spark):
+    """A 40-node path cannot settle in 2 min-label rounds: past the
+    budget both connected_components and dedup_clusters must raise,
+    not return the unconverged labels as a partial answer."""
+    from vivace_graph_v3_spark.pipeline.dedup import dedup_clusters
+
+    ids = [f"n{i:02d}" for i in range(40)]
+    path = list(zip(ids, ids[1:]))
+    g = _graph(spark, ids, [(a, b, 1) for a, b in path])
+    pairs = spark.createDataFrame(path, "id_a string, id_b string")
+    with distributed_regime():
+        with pytest.raises(RuntimeError, match="converge"):
+            connected_components(g, max_iter=2)
+        with pytest.raises(RuntimeError, match="converge"):
+            dedup_clusters(pairs, max_iter=2)
+
+
 def test_triangle_count(spark):
     # one triangle a-b-c plus a dangling edge c-d
     g = _graph(spark, ["a", "b", "c", "d"],
@@ -189,8 +206,9 @@ def test_landmark_bfs_local_matches_distributed(spark):
     rng = random.Random(47)
     vids = [str(i) for i in range(50)]
     edges = sorted({tuple(rng.sample(vids, 2)) for _ in range(120)})
-    g = _graph(spark, vids, [(a, b, 1) for a, b in edges])
-    lms = ["0", "9", "49"]
+    # "iso" has no edge: closeness 0/0 must be NULL in both regimes
+    g = _graph(spark, vids + ["iso"], [(a, b, 1) for a, b in edges])
+    lms = ["0", "9", "49", "iso"]
     for und in (True, False):
         loc = {r.lm: (r.n_reached, r.sum_dist, r.closeness)
                for r in landmark_closeness(g, lms, max_depth=4,
@@ -199,7 +217,7 @@ def test_landmark_bfs_local_matches_distributed(spark):
             dist = {r.lm: (r.n_reached, r.sum_dist, r.closeness)
                     for r in landmark_closeness(g, lms, max_depth=4,
                                                 undirected=und).collect()}
-        assert loc == dist
+        assert loc == dist and loc["iso"] == (1, 0, None)
         loc = {r.lm: (r.n_reached, r.ecc, r.diameter_lb)
                for r in landmark_eccentricity(g, lms, max_depth=5,
                                               undirected=und).collect()}

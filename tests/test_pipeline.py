@@ -4,7 +4,7 @@ checked against DuckDB / brute-force oracles."""
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR, rows_set, duck_set
+from tests.conftest import SF_DIR, distributed_regime, duck_set, rows_set
 from vivace_graph_v3_spark.pipeline.text import (
     with_token_count, with_quality_score, with_lang_id, with_fingerprint,
     with_winnowing_fingerprint)
@@ -758,8 +758,9 @@ def test_dedup_clusters_driver_guard_matches_distributed(spark):
         "id_a long, id_b long")
     fast = {(r["id"], r["cluster"])
             for r in dedup_clusters(pairs).collect()}
-    dist = {(r["id"], r["cluster"])
-            for r in dedup_clusters(pairs, driver_pairs_guard=0).collect()}
+    with distributed_regime():
+        dist = {(r["id"], r["cluster"])
+                for r in dedup_clusters(pairs).collect()}
     assert fast == dist
     assert ({r for r in fast if r[0] in (1, 2, 3)} ==
             {(1, 1), (2, 1), (3, 1)})

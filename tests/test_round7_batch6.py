@@ -278,7 +278,7 @@ class TestBowtie:
 
     def test_local_finish_equals_distributed(self, spark):
         # the bounded-local reach closures must classify exactly like
-        # the distributed _reach_min fixpoints
+        # the distributed min_label_fixpoint runs
         import random
         rng = random.Random(29)
         nodes = [f"n{i:02d}" for i in range(26)]
@@ -492,8 +492,9 @@ class TestDistributedClusters:
         df = spark.createDataFrame(pairs, "id_a string, id_b string")
         drv = {(r["id"], r["cluster"])
                for r in dedup_clusters(df).collect()}
-        dist = {(r["id"], r["cluster"])
-                for r in dedup_clusters(df, driver_pairs_guard=0).collect()}
+        with distributed_regime():
+            dist = {(r["id"], r["cluster"])
+                    for r in dedup_clusters(df).collect()}
         assert drv == dist and drv
 
 

@@ -170,8 +170,8 @@ def test_temporal_earliest_arrival_converges_past_hop_budget(spark):
 
 
 def test_temporal_earliest_arrival_budget_raises(spark):
-    # still-improving frontier past max_iter must raise (the _reach_min
-    # discipline), not return a silently-unconverged result
+    # still-improving frontier past max_iter must raise (as
+    # min_label_fixpoint does), not return a silently-unconverged result
     from vivace_graph_v3_spark.operators.graph_algorithms import (
         temporal_earliest_arrival)
 

@@ -1,6 +1,6 @@
 """BFS traversal vs a DuckDB oracle — mirrors tests/traverse-tests.lisp."""
 
-from tests.conftest import rows_set, duck_set
+from tests.conftest import distributed_regime, duck_set, rows_set
 from vivace_graph_v3_spark.operators.traverse import traverse
 
 
@@ -102,3 +102,15 @@ def test_typed_arm_pruning_differential(tpch):
                          max_depth=2).collect()}
     assert got == want
     assert got_both == want_both
+
+
+def test_bfs_broadcast_regime_differential(tpch):
+    """Broadcast frontier/visited joins (within the driver bound) and the
+    shuffle joins past it must give identical rows, with and without
+    discovery paths."""
+    for paths in (False, True):
+        kw = dict(direction="both", max_depth=3, include_paths=paths)
+        got = rows_set(traverse(tpch, ["nation:3"], **kw))
+        with distributed_regime():
+            want = rows_set(traverse(tpch, ["nation:3"], **kw))
+        assert got == want and len(got) > 1

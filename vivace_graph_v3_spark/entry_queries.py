@@ -13957,19 +13957,28 @@ SQL_EVENTS_MARKOV_STEADY = _markov_steady_oracle_sql()
 
 
 def q_dedup_edit_clusters(spark, sf_dir):
-    """Duplicate clusters over the PassJoin edit-distance pairs with the
-    driver union-find guard FORCED OFF (driver_pairs_guard=0), so the
-    contract exercises the DISTRIBUTED min-label + pointer-jumping
-    regime — the code path a 100 TB dedup run takes when the pair list
-    exceeds driver memory (pipeline/dedup.dedup_clusters). Output: the
-    cluster-size histogram. Oracle: recursive-CTE connected components
-    over the identical pair list."""
-    from vivace_graph_v3_spark.pipeline.dedup import (
-        dedup_clusters, edit_distance_pairs)
+    """Duplicate clusters over the PassJoin edit-distance pairs through
+    the DISTRIBUTED min-label + pointer-jumping engine
+    (operators/graph_algorithms.min_label_fixpoint over both orientations
+    of the pairs) instead of dedup_clusters' driver union-find, so the
+    contract pins the code path a 100 TB dedup run takes when the pair
+    list exceeds driver memory. Output: the cluster-size histogram.
+    Oracle: recursive-CTE connected components over the identical pair
+    list."""
+    from vivace_graph_v3_spark.operators.graph_algorithms import (
+        min_label_fixpoint)
+    from vivace_graph_v3_spark.pipeline.dedup import edit_distance_pairs
 
-    pairs = edit_distance_pairs(_docs(spark, sf_dir), k=4)
-    cl = dedup_clusters(pairs, driver_pairs_guard=0)
-    return (cl.groupBy("cluster").agg(F.count(F.lit(1)).alias("sz"))
+    # checkpointed once: the engine re-reads both orientations every round
+    pairs = (edit_distance_pairs(_docs(spark, sf_dir), k=4)
+             .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+             .localCheckpoint(eager=True))
+    edges = pairs.unionByName(pairs.select(F.col("dst").alias("src"),
+                                           F.col("src").alias("dst")))
+    cl = min_label_fixpoint(
+        edges, edges.select(F.col("src").alias("id")).dropDuplicates()
+        .withColumn("lab", F.col("id")), max_iter=15)
+    return (cl.groupBy("lab").agg(F.count(F.lit(1)).alias("sz"))
             .groupBy(F.col("sz").alias("cluster_size"))
             .agg(F.count(F.lit(1)).alias("n_clusters"))
             .orderBy("cluster_size"))

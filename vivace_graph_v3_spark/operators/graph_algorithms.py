@@ -28,19 +28,6 @@ from vivace_graph_v3_spark.util import (
     union_find_min)
 
 
-def _ckpt_n(df: DataFrame) -> tuple[DataFrame, int]:
-    """Checkpoint + count in one job (see util.checkpoint_counted): the
-    iterative loops below used to pay a separate ``.count()``/``.isEmpty()``
-    driver round-trip per round over the frame they had just checkpointed."""
-    return checkpoint_counted(df)
-
-
-def _ckpt_rebased_n(df: DataFrame) -> tuple[DataFrame, int]:
-    """Stats-reset (checkpoint_rebased) variant of :func:`_ckpt_n` for
-    frames the loop body re-joins every round."""
-    return checkpoint_counted(df, rebase=True)
-
-
 def _edge_pairs(graph: GraphStore, edge_type: str | None,
                 *, weighted: bool = False, undirected: bool = False) -> DataFrame:
     cols = ["src", "dst"] + (["weight"] if weighted else [])
@@ -95,8 +82,7 @@ def pagerank(graph: GraphStore, *, edge_type: str | None = None,
              damping: float = 0.85, max_iter: int = 20,
              tol: float | None = 1.0e-4,
              sources: list | None = None,
-             weighted: bool = False,
-             check_every: int = 1) -> DataFrame:
+             weighted: bool = False) -> DataFrame:
     """Standard damped PageRank over active edges. Returns (id, rank) with
     ranks summing to |V| (the classic normalization). Dangling mass is
     redistributed uniformly each round so the total stays conserved.
@@ -127,7 +113,7 @@ def pagerank(graph: GraphStore, *, edge_type: str | None = None,
     # stay dense instead of scheduling 32 near-empty tasks x 10 rounds at
     # small SF, while the count grows unbounded with |V| (at 100 TB this
     # lands at thousands of partitions, as it should).
-    vertices, n = _ckpt_n(vertices)
+    vertices, n = checkpoint_counted(vertices)
     nparts = max(4, min(int(graph.spark.conf.get(
         "spark.sql.shuffle.partitions", "32")) * 4, n // 100_000 + 1))
     # ``weighted``: contributions split by edge weight (w / Σw_out) instead
@@ -250,11 +236,8 @@ def pagerank(graph: GraphStore, *, edge_type: str | None = None,
                    .localCheckpoint(eager=True))
             dang = ob.get["dang"]
             base = base_of(F.col("id"), dang)
-            # amortize the L1-delta convergence probe: extra converged rounds
-            # are cheaper than a full diff join every round, and rank error
-            # only shrinks with additional iterations
-            if tol is not None and ((it + 1) % check_every == 0
-                                    or it == max_iter - 1):
+            # L1-delta convergence probe, every round
+            if tol is not None:
                 new = assemble(agg, base)
                 old = assemble(prev_agg, prev_base)
                 delta = (new.join(old.withColumnRenamed("rank", "old"), "id")
@@ -267,71 +250,98 @@ def pagerank(graph: GraphStore, *, edge_type: str | None = None,
     return assemble(agg, base)
 
 
+def min_label_fixpoint(edges: DataFrame, labels: DataFrame, *,
+                       max_iter: int) -> DataFrame:
+    """The min-label engine behind connected components, SCC peeling,
+    bow-tie reach and dedup clusters: the fixpoint of
+    lab(v) = min(lab(v), lab(w)) over every directed edge v -> w of
+    ``edges`` (src, dst). A label flows from dst to src, so undirected
+    callers pass both orientations. ``labels`` (id, lab) seeds every
+    vertex with lab = id; the result (id, lab) then carries the min id
+    over {v} ∪ {w : v ⇝ w}, i.e. the component minimum on symmetric
+    edges. The fixpoint is unique, so the labels never depend on how many
+    rounds ran.
+
+    Each round takes the neighbour min, then pointer-jumps
+    lab <- least(lab, lab(lab)). The jump is sound because lab(v) is
+    always a node v reaches and reach is transitive (R(lab(v)) ⊆ R(v)),
+    so chains converge in O(log diameter) rounds. Both steps land in
+    stats-reset checkpoints (util.checkpoint_rebased), and the step is
+    materialized BEFORE its self-join: self-joining the live plan can
+    stall the broadcast-build thread until spark.sql.broadcastTimeout
+    (the v_optimal_histogram lesson, SCALING.md), and a checkpointed
+    2-column label table is strictly cheaper to read twice. The
+    changed-row count rides the jump checkpoint as an observation, so
+    convergence is checked every round at no extra job. ``max_iter``
+    rounds without convergence raise RuntimeError rather than return a
+    partial answer. ``edges`` is re-read every round: pass it persisted
+    or checkpointed."""
+    labels = labels.select("id", "lab").transform(checkpoint_rebased)
+    for _ in range(max_iter):
+        nbr = (edges.join(labels.select(F.col("id").alias("dst"),
+                                        F.col("lab").alias("nlab")), "dst")
+               .groupBy("src").agg(F.min("nlab").alias("nmin"))
+               .withColumnRenamed("src", "id"))
+        # the pre-round label travels along as ``old`` for the change count
+        stepped = (labels.join(nbr, "id", "left")
+                   .select("id", F.least("lab", F.coalesce("nmin", "lab"))
+                           .alias("lab"), F.col("lab").alias("old"))
+                   .transform(checkpoint_rebased))
+        ob = Observation()
+        labels = (stepped.join(stepped.select(F.col("id").alias("lab"),
+                                              F.col("lab").alias("lab2")),
+                               "lab", "left")
+                  .select("id", F.least("lab", F.coalesce("lab2", "lab"))
+                          .alias("lab"), "old")
+                  .observe(ob, F.count(F.when(F.col("lab") != F.col("old"),
+                                              1)).alias("chg"))
+                  .select("id", "lab")
+                  .transform(checkpoint_rebased))
+        if ob.get["chg"] == 0:
+            return labels
+    raise RuntimeError(
+        f"min_label_fixpoint did not converge in {max_iter} rounds")
+
+
 def _contract_edges_locally(edges: DataFrame) -> DataFrame:
     """Partition-local union-find contraction: within each Arrow batch stream
-    (= one partition), collapse its edges to a spanning (id, root) mapping.
-    The union of the per-partition mappings preserves global connectivity
-    exactly (two ids are connected through the mappings iff they were through
-    the original edges), but has at most one row per distinct endpoint per
-    partition — O(|V|) rows into the global loop instead of O(|E|). This is
-    the standard pre-contraction step for distributed CC (cf. GraphFrames /
-    Kiveris et al. "Connected Components in MapReduce"); per-partition state
-    is a dict over that partition's endpoints, bounded by partition size."""
+    (= one partition), collapse its edges to a spanning (id, root) mapping
+    (:func:`~vivace_graph_v3_spark.util.union_find_min`). The union of the
+    per-partition mappings preserves global connectivity exactly (two ids
+    are connected through the mappings iff they were through the original
+    edges), but has at most one row per distinct endpoint per partition —
+    O(|V|) rows into the global loop instead of O(|E|). This is the
+    standard pre-contraction step for distributed CC (cf. GraphFrames /
+    Kiveris et al. "Connected Components in MapReduce"); per-partition
+    state is a dict over that partition's endpoints, bounded by partition
+    size."""
 
     def uf(batches):
         import pandas as pd
 
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:           # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for pdf in batches:
-            for s, d in zip(pdf["src"], pdf["dst"]):
-                if s not in parent:
-                    parent[s] = s
-                if d not in parent:
-                    parent[d] = d
-                rs, rd = find(s), find(d)
-                if rs != rd:
-                    if rd < rs:             # union-by-min: roots tend small
-                        rs, rd = rd, rs
-                    parent[rd] = rs
-        ids = list(parent)
-        yield pd.DataFrame({"src": ids, "dst": [find(i) for i in ids]})
+        root = union_find_min(pair for pdf in batches
+                              for pair in zip(pdf["src"], pdf["dst"]))
+        yield pd.DataFrame({"src": list(root), "dst": list(root.values())})
 
     return edges.mapInPandas(uf, schema="src string, dst string")
 
 
 def connected_components(graph: GraphStore, *, edge_type: str | None = None,
-                         max_iter: int = 50, check_every: int = 3,
-                         contract: bool = True) -> DataFrame:
-    """Undirected connected components by label propagation with the
-    large-star/small-star-style doubling trick: each round every vertex
-    adopts the min component id among itself and its neighbors' labels,
-    AND labels propagate transitively via label-of-label joins — so chain
-    graphs converge in O(log diameter) rounds, not O(diameter).
-
-    With ``contract`` (default), edges are first collapsed per-partition by
-    a local union-find, so the iterative loop shuffles a spanning mapping of
-    size O(|V|) rather than the raw O(|E|) edge list — the component labels
-    (min vertex id per component) are identical either way. When the
-    edge list fits the driver (:func:`~vivace_graph_v3_spark.util.
-    finish_locally`), one driver union-find settles every component
-    instead (the contracted mapping is O(|V|) anyway); vertices outside
-    the edge list keep their singleton label."""
-    edges = _edge_pairs(graph, edge_type, undirected=True)
-    if contract:
-        edges = _contract_edges_locally(edges)
-        # the mapping is directed id->root; propagation needs both directions
-        edges = edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    edges = edges.persist()
+                         max_iter: int = 50) -> DataFrame:
+    """Undirected connected components: comp(v) = min vertex id of v's
+    component. Edges are first collapsed per partition by a local
+    union-find, so what follows sees a spanning mapping of size O(|V|)
+    rather than the raw O(|E|) edge list. When that mapping fits the
+    driver (:func:`~vivace_graph_v3_spark.util.finish_locally`), one
+    driver union-find settles every component; past the bound, one
+    :func:`min_label_fixpoint` over both orientations of the mapping
+    does. Vertices outside the edge list keep their singleton label."""
+    edges = _contract_edges_locally(
+        _edge_pairs(graph, edge_type, undirected=True))
+    # the mapping is directed id->root; propagation needs both directions
+    edges = edges.unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).persist()
     labels = (graph.scan_vertices(columns=["id"]).select("id").dropDuplicates()
               .withColumn("comp", F.col("id")))
     labels = labels.localCheckpoint(eager=True)
@@ -346,38 +356,11 @@ def connected_components(graph: GraphStore, *, edge_type: str | None = None,
                 .select("id", F.coalesce(F.col("c2"), F.col("comp"))
                         .alias("comp")))
     try:
-        for it in range(max_iter):
-            # neighbor min
-            nbr = (edges.join(labels.withColumnRenamed("id", "dst")
-                              .withColumnRenamed("comp", "ncomp"), "dst")
-                   .groupBy("src").agg(F.min("ncomp").alias("nmin"))
-                   .withColumnRenamed("src", "id"))
-            stepped = (labels.join(nbr, "id", "left")
-                       .select("id", F.least(F.col("comp"),
-                                             F.coalesce(F.col("nmin"),
-                                                        F.col("comp"))).alias("comp")))
-            # pointer-jumping: comp <- label(comp)  (log-round convergence)
-            lab2 = stepped.select(F.col("id").alias("comp"),
-                                  F.col("comp").alias("comp2"))
-            jumped = (stepped.join(lab2, "comp")
-                      .select("id", F.least(F.col("comp"),
-                                            F.col("comp2")).alias("comp")))
-            jumped = jumped.localCheckpoint(eager=True)
-            # the convergence probe is a full diff join — amortize it over
-            # check_every rounds (an extra round of converged iteration is
-            # cheaper than a probe per round)
-            if (it + 1) % check_every == 0 or it == max_iter - 1:
-                changed = (jumped.join(labels.withColumnRenamed("comp", "old"),
-                                       "id")
-                           .filter(F.col("comp") != F.col("old")).limit(1))
-                labels = jumped
-                if changed.isEmpty():
-                    break
-            else:
-                labels = jumped
+        return min_label_fixpoint(
+            edges, labels.withColumnRenamed("comp", "lab"),
+            max_iter=max_iter).withColumnRenamed("lab", "comp")
     finally:
         edges.unpersist()
-    return labels
 
 
 def cc_incremental(labels: DataFrame, new_edges: DataFrame, *,
@@ -651,7 +634,7 @@ def k_truss(graph: GraphStore, k: int, *, edge_type: str | None = None,
     last resort when the bounded edge set is still so dense that its
     triangle list would exceed the local memory cap)."""
     sup_min = k - 2
-    e, n_edges = _ckpt_n(
+    e, n_edges = checkpoint_counted(
         _edge_pairs(graph, edge_type, undirected=True)
         .filter(F.col("src") < F.col("dst"))
         .dropDuplicates(["src", "dst"]))
@@ -669,7 +652,8 @@ def k_truss(graph: GraphStore, k: int, *, edge_type: str | None = None,
             if local is not None:
                 return local
         sup = _edge_support(e)
-        kept, n_next = _ckpt_n(sup.filter(F.col("support") >= sup_min))
+        kept, n_next = checkpoint_counted(
+            sup.filter(F.col("support") >= sup_min))
         e = kept.select("src", "dst")
         if n_next == n_edges:
             converged = True   # kept == e, so sup describes the fixpoint
@@ -817,7 +801,7 @@ def shortest_paths(graph: GraphStore, roots, *, edge_type: str | None = None,
                     .select(F.col("dst").alias("id"),
                             (F.col("dist") + F.col("w")).alias("nd"))
                     .groupBy("id").agg(F.min("nd").alias("nd")))
-            improved, n_imp = _ckpt_n(
+            improved, n_imp = checkpoint_counted(
                 cand.join(dist, "id", "left")
                 .filter(F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
                 .select("id", F.col("nd").alias("dist")))
@@ -938,8 +922,8 @@ def k_core(graph: GraphStore, k: int, *, edge_type: str | None = None,
                           T.StructField("degree", T.LongType())]))
         if local is not None:
             return local
-    alive, n_alive = _ckpt_n(graph.scan_vertices(columns=["id"])
-                             .select("id").dropDuplicates())
+    alive, n_alive = checkpoint_counted(
+        graph.scan_vertices(columns=["id"]).select("id").dropDuplicates())
     deg = None
     converged = False
     try:
@@ -952,7 +936,7 @@ def k_core(graph: GraphStore, k: int, *, edge_type: str | None = None,
             deg = (live_edges.groupBy("src")
                    .agg(F.count(F.lit(1)).alias("degree"))
                    .withColumnRenamed("src", "id"))
-            survivors, n_next = _ckpt_n(
+            survivors, n_next = checkpoint_counted(
                 deg.filter(F.col("degree") >= k).select("id"))
             alive = survivors
             if n_next == n_alive:
@@ -1014,8 +998,8 @@ def hits(graph: GraphStore, *, edge_type: str | None = None,
     checkpointed in that regime. Reference analog: none — the reference
     exposes traverse/recursive rules but no eigenvector scores; cited as
     beyond-ref alongside pagerank (SURVEY.md §2.3)."""
-    vertices, n_v = _ckpt_n(graph.scan_vertices(columns=["id"])
-                            .select("id").dropDuplicates())
+    vertices, n_v = checkpoint_counted(
+        graph.scan_vertices(columns=["id"]).select("id").dropDuplicates())
     # Partition count sized off the data (same ~1M-edge-rows-per-task rule
     # as pagerank's edge frame, derived from |V| at avg degree ~10) rather
     # than pinned to spark.sql.shuffle.partitions: each half-round's
@@ -1274,6 +1258,53 @@ def _local_landmark_levels(pdf, landmarks, max_depth: int):
     return out
 
 
+def _landmark_levels(graph: GraphStore, landmarks: list[str], *,
+                     edge_type: str | None, max_depth: int,
+                     undirected: bool) -> DataFrame:
+    """BFS level sizes (lm, dist, n_vertices) per landmark within
+    ``max_depth`` hops — the shared half of :func:`landmark_closeness`
+    and :func:`landmark_eccentricity`. Frontier BFS carrying (lm, id):
+    each round joins only the ACTIVE frontier against the edge list,
+    anti-joins the visited set, and checkpoints — k landmarks multiply
+    the frontier width, never the graph; rounds are bounded by
+    max_depth. When the edge list fits the driver, the rounds run as one
+    driver-local BFS (:func:`_local_landmark_levels` through
+    :func:`~vivace_graph_v3_spark.util.finish_locally`) with identical
+    levels. The bound counts DISTINCT UNDIRECTED edges, so an undirected
+    arc list may hold twice as many rows."""
+    spark = graph.spark
+    edges = (_edge_pairs(graph, edge_type, undirected=undirected)
+             .select("src", "dst").dropDuplicates().persist())
+    local = finish_locally(
+        edges, edges.count(),
+        lambda pdf: _local_landmark_levels(pdf, list(landmarks), max_depth),
+        "lm string, dist long, n_vertices long",
+        scale=2 if undirected else 1)
+    if local is not None:
+        return local
+    visited = (spark.createDataFrame([(l, l, 0) for l in landmarks],
+                                     "lm string, id string, dist long")
+               .localCheckpoint(eager=True))
+    frontier = visited
+    try:
+        for depth in range(1, max_depth + 1):
+            nxt, n_nxt = checkpoint_counted(
+                frontier.join(edges, frontier["id"] == edges["src"])
+                .select("lm", F.col("dst").alias("id"))
+                .dropDuplicates()
+                .join(visited.select("lm", "id"), ["lm", "id"],
+                      "left_anti")
+                .withColumn("dist", F.lit(depth).cast("long")))
+            if n_nxt == 0:
+                break
+            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+            frontier = nxt
+    finally:
+        edges.unpersist()
+    return (visited.groupBy("lm", "dist")
+            .agg(F.count(F.lit(1)).alias("n_vertices")))
+
+
 def landmark_closeness(graph: GraphStore, landmarks: list[str], *,
                        edge_type: str | None = None, max_depth: int = 6,
                        undirected: bool = True) -> DataFrame:
@@ -1284,66 +1315,20 @@ def landmark_closeness(graph: GraphStore, landmarks: list[str], *,
     (the Eppstein-Wang 2004 sampling shape) — here the landmarks ARE the
     queried vertices, so the result is exact for them.
 
-    Frontier BFS carrying (lm, id): each round joins only the ACTIVE
-    frontier against the src-partitioned edge list, anti-joins the
-    visited set, and checkpoints — k landmarks multiply the frontier
-    width, never the graph; rounds are bounded by max_depth. The
+    The BFS level sizes come from :func:`_landmark_levels`; the
     closeness ratio uses the integer round-half-up recipe (engine-exact
     6 decimals). Returns (lm, n_reached, sum_dist, closeness) where
-    n_reached counts the landmark itself. When the edge list fits the
-    driver, the per-depth frontier rounds run as one driver-local BFS
-    (:func:`_local_landmark_levels` through
-    :func:`~vivace_graph_v3_spark.util.finish_locally`) — identical
-    levels, exact integer aggregates. The bound counts DISTINCT
-    UNDIRECTED edges, so an undirected arc list may hold twice as many
-    rows.
-    """
-    spark = graph.spark
-    edges = (_edge_pairs(graph, edge_type, undirected=undirected)
-             .select("src", "dst").dropDuplicates().persist())
-
-    def _closeness_rows(pdf):
-        acc: dict = {}
-        for lm, d, n in _local_landmark_levels(pdf, list(landmarks),
-                                               max_depth):
-            r, s = acc.get(lm, (0, 0))
-            acc[lm] = (r + n, s + d * n)
-        # mirror the expression: long div -> NULL on zero divisor
-        return [(lm, r, s, float(((r - 1) * 2000000 + s) // (s * 2)) / 1e6
-                 if s else None) for lm, (r, s) in acc.items()]
-
-    local = finish_locally(
-        edges, edges.count(), _closeness_rows,
-        "lm string, n_reached long, sum_dist long, closeness double",
-        scale=2 if undirected else 1)
-    if local is not None:
-        return local
-    visited = (spark.createDataFrame([(l, l, 0) for l in landmarks],
-                                     "lm string, id string, dist int")
-               .localCheckpoint(eager=True))
-    frontier = visited
-    try:
-        for depth in range(1, max_depth + 1):
-            nxt, n_nxt = _ckpt_n(
-                frontier.join(edges, frontier["id"] == edges["src"])
-                .select("lm", F.col("dst").alias("id"))
-                .dropDuplicates()
-                .join(visited.select("lm", "id"), ["lm", "id"],
-                      "left_anti")
-                .withColumn("dist", F.lit(depth)))
-            if n_nxt == 0:
-                break
-            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = nxt
-    finally:
-        edges.unpersist()
-    agg = (visited.groupBy("lm")
-           .agg(F.count(F.lit(1)).alias("n_reached"),
-                F.sum("dist").cast("long").alias("sum_dist")))
-    closeness = (F.expr("((n_reached - 1) * 2000000 + sum_dist) "
-                        "div (sum_dist * 2)").cast("double") / 1e6)
-    return agg.select("lm", F.col("n_reached").cast("long").alias("n_reached"),
-                      "sum_dist", closeness.alias("closeness"))
+    n_reached counts the landmark itself."""
+    levels = _landmark_levels(graph, landmarks, edge_type=edge_type,
+                              max_depth=max_depth, undirected=undirected)
+    # nullif: a landmark that reaches nothing gets NULL, not a div-by-zero
+    return (levels.groupBy("lm")
+            .agg(F.sum("n_vertices").alias("n_reached"),
+                 F.sum(F.col("dist") * F.col("n_vertices")).alias("sum_dist"))
+            .withColumn("closeness",
+                        F.expr("((n_reached - 1) * 2000000 + sum_dist) "
+                               "div nullif(sum_dist * 2, 0)")
+                        .cast("double") / 1e6))
 
 
 def community_modularity(graph: GraphStore, *, edge_type: str | None = None,
@@ -1427,53 +1412,15 @@ def landmark_eccentricity(graph: GraphStore, landmarks: list[str], *,
     landmark/BoundingDiameters estimation shape — exact eccentricity
     needs all-pairs, production graphs bound it from sampled vertices).
 
-    Same frontier-BFS engine shape as landmark_closeness above: per round
-    one frontier-edge join + one anti-join against visited, k landmarks
-    widen the frontier, never the graph; rounds bounded by max_depth.
-    Returns (lm, n_reached, ecc, diameter_lb) — diameter_lb constant
-    across rows (a window max over the landmark-bounded result). Same
-    bounded local finish as landmark_closeness."""
-    spark = graph.spark
-    edges = (_edge_pairs(graph, edge_type, undirected=undirected)
-             .select("src", "dst").dropDuplicates().persist())
-
-    def _ecc_rows(pdf):
-        acc: dict = {}
-        for lm, d, n in _local_landmark_levels(pdf, list(landmarks),
-                                               max_depth):
-            r, e = acc.get(lm, (0, 0))
-            acc[lm] = (r + n, max(e, d))
-        dlb = max((e for _, e in acc.values()), default=0)
-        return [(lm, r, e, dlb) for lm, (r, e) in acc.items()]
-
-    local = finish_locally(
-        edges, edges.count(), _ecc_rows,
-        "lm string, n_reached long, ecc long, diameter_lb long",
-        scale=2 if undirected else 1)
-    if local is not None:
-        return local
-    visited = (spark.createDataFrame([(l, l, 0) for l in landmarks],
-                                     "lm string, id string, dist int")
-               .localCheckpoint(eager=True))
-    frontier = visited
-    try:
-        for depth in range(1, max_depth + 1):
-            nxt, n_nxt = _ckpt_n(
-                frontier.join(edges, frontier["id"] == edges["src"])
-                .select("lm", F.col("dst").alias("id"))
-                .dropDuplicates()
-                .join(visited.select("lm", "id"), ["lm", "id"],
-                      "left_anti")
-                .withColumn("dist", F.lit(depth)))
-            if n_nxt == 0:
-                break
-            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = nxt
-    finally:
-        edges.unpersist()
-    agg = (visited.groupBy("lm")
-           .agg(F.count(F.lit(1)).cast("long").alias("n_reached"),
-                F.max("dist").cast("long").alias("ecc")))
+    The BFS level sizes come from :func:`_landmark_levels`, as for
+    landmark_closeness. Returns (lm, n_reached, ecc, diameter_lb) —
+    diameter_lb constant across rows (a window max over the
+    landmark-bounded result)."""
+    levels = _landmark_levels(graph, landmarks, edge_type=edge_type,
+                              max_depth=max_depth, undirected=undirected)
+    agg = (levels.groupBy("lm")
+           .agg(F.sum("n_vertices").alias("n_reached"),
+                F.max("dist").alias("ecc")))
     w = Window.partitionBy(F.lit(1))  # landmark-domain-bounded (k rows)
     return agg.withColumn("diameter_lb", F.max("ecc").over(w))
 
@@ -1645,7 +1592,7 @@ def landmark_stress(graph: GraphStore, landmarks: list[str], *,
     try:
         for depth in range(1, max_depth + 1):
             prev = levels[-1]
-            nxt, n_nxt = _ckpt_n(
+            nxt, n_nxt = checkpoint_counted(
                 prev.join(edges, prev["id"] == edges["src"])
                 .groupBy("lm", F.col("dst").alias("id"))
                 .agg(F.sum("sigma").alias("sigma"))
@@ -1772,7 +1719,7 @@ def _local_scc_ids(edge_rows) -> dict:
 
 
 def _local_reach_min(edge_rows) -> dict:
-    """Driver-local exact fixpoint of :func:`_reach_min`:
+    """Driver-local exact fixpoint of :func:`min_label_fixpoint`:
     lab(v) = min id over {v} ∪ {w : v ⇝ w}. Tarjan condensation, then a
     min DP over the condensation DAG in emission order (successor
     components are always emitted first, so their minima are final when
@@ -1796,48 +1743,6 @@ def _local_reach_min(edge_rows) -> dict:
     return {v: comp_min[comp_of[v]] for v in nodes}
 
 
-def _reach_min(edges: DataFrame, nodes: DataFrame, *, max_iter: int = 50,
-               check_every: int = 3) -> DataFrame:
-    """Fixpoint of directed min-label propagation: lab(v) = min id over
-    {v} ∪ {w : v ⇝ w} along ``edges`` (src -> dst). Pointer jumping is
-    sound here because lab(v) is always a node v REACHES, and reach is
-    transitive (R(lab(v)) ⊆ R(v)) — so chains converge in O(log diameter)
-    rounds like the undirected CC loop. Returns (id, lab)."""
-    labels = (nodes.select("id").withColumn("lab", F.col("id"))
-              .transform(checkpoint_rebased))
-    for it in range(max_iter):
-        nbr = (edges.join(labels.select(F.col("id").alias("dst"),
-                                        F.col("lab").alias("nlab")), "dst")
-               .groupBy("src").agg(F.min("nlab").alias("nmin"))
-               .withColumnRenamed("src", "id"))
-        stepped = (labels.join(nbr, "id", "left")
-                   .select("id", F.least(F.col("lab"),
-                                         F.coalesce(F.col("nmin"),
-                                                    F.col("lab"))).alias("lab"))
-                   # materialize before the self-join: self-joining the
-                   # live plan can stall the broadcast-build thread until
-                   # spark.sql.broadcastTimeout (the v_optimal_histogram
-                   # lesson, SCALING.md) — a checkpointed 2-column label
-                   # table is also strictly cheaper to rebuild twice
-                   .transform(checkpoint_rebased))
-        jumped = (stepped.join(stepped.select(F.col("id").alias("lab"),
-                                              F.col("lab").alias("lab2")),
-                               "lab", "left")
-                  .select("id", F.least(F.col("lab"),
-                                        F.coalesce(F.col("lab2"),
-                                                   F.col("lab"))).alias("lab"))
-                  .transform(checkpoint_rebased))
-        if (it + 1) % check_every == 0 or it == max_iter - 1:
-            changed = (jumped.join(labels.withColumnRenamed("lab", "old"), "id")
-                       .filter(F.col("lab") != F.col("old")).limit(1))
-            labels = jumped
-            if changed.isEmpty():
-                return labels
-        else:
-            labels = jumped
-    raise RuntimeError(f"_reach_min did not converge in {max_iter} rounds")
-
-
 def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
                                   dst_col: str = "dst", max_rounds: int = 25,
                                   max_iter: int = 50) -> DataFrame:
@@ -1847,8 +1752,8 @@ def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
     the standard Pregel/BSP SCC formulation):
 
     per round, fmin(v) = min id v can reach, bmin(v) = min id that can
-    reach v (two ``_reach_min`` fixpoints, the backward one on reversed
-    edges). fmin(v) = bmin(v) = m certifies v ⇝ m and m ⇝ v, i.e.
+    reach v (two :func:`min_label_fixpoint` runs, the backward one on
+    reversed edges). fmin(v) = bmin(v) = m certifies v ⇝ m and m ⇝ v, i.e.
     v ∈ SCC(m) — and conversely every member of SCC(m) carries exactly
     (m, m) when m is the min of both reach sets, so each round settles
     every "locally minimal" SCC at once (always including the SCC of the
@@ -1875,10 +1780,10 @@ def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
     e0 = (edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
           .filter(F.col("src") != F.col("dst"))
           .dropDuplicates().persist())
-    nodes, n_nodes = _ckpt_rebased_n(
+    nodes, n_nodes = checkpoint_counted(
         e0.select(F.col("src").alias("id"))
         .unionByName(e0.select(F.col("dst").alias("id")))
-        .dropDuplicates())
+        .dropDuplicates(), rebase=True)
     rev = e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
 
     id_f = nodes.schema["id"]
@@ -1909,8 +1814,9 @@ def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
                     active_n.join(F.broadcast(lab_df), "id", "left")
                     .select("id", F.coalesce(F.col("scc_id"), F.col("id"))
                             .alias("scc_id")))
-            f = _reach_min(active_e, active_n, max_iter=max_iter)
-            b = (_reach_min(active_r, active_n, max_iter=max_iter)
+            seed = active_n.withColumn("lab", F.col("id"))
+            f = min_label_fixpoint(active_e, seed, max_iter=max_iter)
+            b = (min_label_fixpoint(active_r, seed, max_iter=max_iter)
                  .withColumnRenamed("lab", "blab"))
             lab = f.join(b, "id")
             settled = (lab.filter(F.col("lab") == F.col("blab"))
@@ -1918,8 +1824,9 @@ def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
                        .transform(checkpoint_rebased))
             result = (result.unionByName(settled)
                       .transform(checkpoint_rebased))
-            active_n, n_active = _ckpt_rebased_n(
-                lab.filter(F.col("lab") != F.col("blab")).select("id"))
+            active_n, n_active = checkpoint_counted(
+                lab.filter(F.col("lab") != F.col("blab")).select("id"),
+                rebase=True)
             keep_src = active_n.withColumnRenamed("id", "src")
             keep_dst = active_n.withColumnRenamed("id", "dst")
             active_e, n_active_e = checkpoint_counted(
@@ -1947,10 +1854,10 @@ def bowtie_decomposition(edges: DataFrame, scc: DataFrame, *,
 
     Membership is two frontier closures seeded at the core (backward for
     IN, forward for OUT) — semi-join frontier expansion with min-label
-    shortcutting via ``_reach_min`` on the core-collapsed labels: reach-
-    to-core is exactly "my forward reach-min equals the core's collapsed
-    label" after relabeling every core node to one sentinel smaller than
-    all ids. Takes the (id, scc_id) output of
+    shortcutting via :func:`min_label_fixpoint` on the core-collapsed
+    labels: reach-to-core is exactly "my forward reach-min equals the
+    core's collapsed label" after relabeling every core node to one
+    sentinel smaller than all ids. Takes the (id, scc_id) output of
     ``strongly_connected_components``. Returns (id, klass). When the
     collapsed edge list fits the driver, both closures come from one
     collected copy (:func:`_local_reach_min` through
@@ -1970,7 +1877,7 @@ def bowtie_decomposition(edges: DataFrame, scc: DataFrame, *,
                     .otherwise(F.col("id")).alias("nid")))
     remap_src = lab0.select(F.col("id").alias("src"), F.col("nid").alias("csrc"))
     remap_dst = lab0.select(F.col("id").alias("dst"), F.col("nid").alias("cdst"))
-    # materialize the collapsed edge list ONCE — _reach_min re-reads its
+    # materialize the collapsed edge list ONCE — the engine re-reads its
     # edge side every iteration, and without this the whole upstream edge
     # pipeline (joins, aggregates) would re-run per propagation round
     # (the count rides the checkpoint as an observation)
@@ -2002,11 +1909,13 @@ def bowtie_decomposition(edges: DataFrame, scc: DataFrame, *,
     else:
         cnodes = (ce.select(F.col("src").alias("id"))
                   .unionByName(ce.select(F.col("dst").alias("id")))
-                  .dropDuplicates().transform(checkpoint_rebased))
-        fwd = _reach_min(ce, cnodes, max_iter=max_iter)      # reaches core?
-        bwd = _reach_min(ce.select(F.col("dst").alias("src"),
-                                   F.col("src").alias("dst")),
-                         cnodes, max_iter=max_iter)          # reached from?
+                  .dropDuplicates().withColumn("lab", F.col("id"))
+                  .transform(checkpoint_rebased))
+        # forward: reaches the core? backward: reached from it?
+        fwd = min_label_fixpoint(ce, cnodes, max_iter=max_iter)
+        bwd = min_label_fixpoint(
+            ce.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+            cnodes, max_iter=max_iter)
         reach_in = fwd.filter((F.col("lab") == sent) & (F.col("id") != sent)) \
             .select("id").withColumn("in_side", F.lit(True))
         reach_out = bwd.filter((F.col("lab") == sent) & (F.col("id") != sent)) \
@@ -2242,7 +2151,7 @@ def temporal_earliest_arrival(edges: DataFrame, seeds: DataFrame, *,
     until no node's earliest arrival improves (delta-emptiness — the
     improvement frontier is checked every round anyway), bounded by the
     ``max_iter`` budget under the same discipline as the other fixpoint
-    loops here (:func:`_reach_min`): a frontier still improving after
+    loops here (:func:`min_label_fixpoint`): a frontier still improving after
     ``max_iter`` rounds raises RuntimeError rather than returning a
     silently-unconverged result. When the edge list fits the driver and
     seeds x edges stays under 256M, the whole DP runs driver-locally
@@ -2284,13 +2193,13 @@ def temporal_earliest_arrival(edges: DataFrame, seeds: DataFrame, *,
                 .agg(F.min("t").alias("arr2")))
             old = total.select("seed", F.col("node").alias("node2"),
                                F.col("arrival").alias("old_arr"))
-            imp, n_imp = _ckpt_rebased_n(
+            imp, n_imp = checkpoint_counted(
                 relaxed.join(old, ["seed", "node2"], "left")
                 .filter(F.col("old_arr").isNull()
                         & F.col("arr2").isNotNull()
                         | (F.col("arr2") < F.col("old_arr")))
                 .select("seed", F.col("node2").alias("node"),
-                        F.col("arr2").alias("arrival")))
+                        F.col("arr2").alias("arrival")), rebase=True)
             if n_imp == 0:
                 improving = False
                 break

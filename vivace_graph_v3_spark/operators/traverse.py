@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from vivace_graph_v3_spark.graph import GraphStore
+from vivace_graph_v3_spark.util import fits_driver
 
 
 def traverse(graph: GraphStore, roots, *, direction: str = "out",
@@ -103,13 +104,6 @@ def traverse(graph: GraphStore, roots, *, direction: str = "out",
     persist_hop = max_depth > 3
     _arm_cache: dict = {}
     hop_static = None if prunable else hop_for(None)
-    # BFS frontiers are usually tiny relative to the edge relation: broadcast
-    # them (and the visited set) so each round is a broadcast-hash join that
-    # streams edges with NO shuffle. Guarded by row count — a frontier that
-    # outgrows the driver falls back to shuffle joins, which is the correct
-    # trade at that size.
-    broadcast_max = 2_000_000
-
     def ckpt_counted_typed(df):
         """Eager checkpoint; row count (and frontier type set, when arms
         are prunable) observed on the materialization — one job."""
@@ -130,7 +124,12 @@ def traverse(graph: GraphStore, roots, *, direction: str = "out",
             hop = hop_static if hop_static is not None else hop_for(ftypes)
             if hop is None:
                 break  # no arm can extend this frontier
-            f = F.broadcast(frontier) if frontier_n <= broadcast_max else frontier
+            # BFS frontiers are usually tiny relative to the edge relation:
+            # broadcast them (and the visited set) so each round is a
+            # broadcast-hash join that streams edges with NO shuffle. Past
+            # the driver bound (util.DRIVER_ROWS) they fall back to shuffle
+            # joins, the correct trade at that size.
+            f = F.broadcast(frontier) if fits_driver(frontier_n) else frontier
             nxt = (f.join(hop, f["id"] == hop["from_id"])
                    .select(F.col("to_id").alias("id"),
                            F.lit(depth).alias("depth"),
@@ -139,7 +138,7 @@ def traverse(graph: GraphStore, roots, *, direction: str = "out",
             if uniqueness:
                 # global uniqueness: drop anything already reported
                 vis = result.select("id")
-                if visited_n <= broadcast_max:
+                if fits_driver(visited_n):
                     vis = F.broadcast(vis)
                 nxt = nxt.join(vis, "id", "left_anti")
                 if include_paths:

@@ -27,7 +27,7 @@ element), which made the folds the dominant cost of every consumer
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from vivace_graph_v3_spark.pipeline.text import tokens
 from vivace_graph_v3_spark.util import (
@@ -772,81 +772,55 @@ _ = Window  # (window paging used by callers)
 # -- cluster + survivor selection --------------------------------------------------
 
 def dedup_clusters(pairs: DataFrame, *, id_a: str = "id_a",
-                   id_b: str = "id_b", max_iter: int = 15,
-                   driver_pairs_guard: int | None = None) -> DataFrame:
+                   id_b: str = "id_b", max_iter: int = 15) -> DataFrame:
     """Collapse near-dup PAIRS into duplicate clusters: connected components
     over the pair graph. Returns (id, cluster) for every id that appears in
     a pair; cluster = min id of the component — the canonical
     representative.
 
-    Two regimes, like pagerank's broadcast guard: the pair graph is the
-    OUTPUT of dedup (bounded by the duplicate count, not the corpus), so
-    even at 100 TB it is usually orders of magnitude smaller than the
-    input. Up to ``driver_pairs_guard`` pairs (default: the shared driver
-    bound, :data:`~vivace_graph_v3_spark.util.DRIVER_ROWS`, read at call
-    time) the component labels come from a single-pass union-find on
-    the driver (:func:`~vivace_graph_v3_spark.util.union_find_min`) —
-    one job, no iteration. Past it, distributed min-label propagation
-    with pointer jumping (shallow dup clusters converge in a few
-    rounds)."""
-    spark = pairs.sparkSession
+    Two regimes: the pair graph is the OUTPUT of dedup (bounded by the
+    duplicate count, not the corpus), so even at 100 TB it is usually
+    orders of magnitude smaller than the input. Within the driver bound
+    (:func:`~vivace_graph_v3_spark.util.fits_driver`) the component
+    labels come from a single-pass union-find on the driver
+    (:func:`~vivace_graph_v3_spark.util.union_find_min`) — one job, no
+    iteration. Past it, :func:`~vivace_graph_v3_spark.operators.
+    graph_algorithms.min_label_fixpoint` over both orientations of the
+    pairs (shallow dup clusters converge in a few rounds). The local
+    branch streams rows (``toLocalIterator``), not Arrow: ids may be
+    structs (grid DBSCAN cells), which Arrow hands back as unhashable
+    dicts."""
+    # imported here: the operators package imports this module
+    from vivace_graph_v3_spark.operators.graph_algorithms import (
+        min_label_fixpoint)
+
     # the symmetric closure reads `pairs` twice (forward + reversed branch
     # of the union); pair generators are the expensive half of the pipeline
     # (MinHash banding, shingle joins), so materialize the pair list ONCE
     # and build both branches from the checkpointed rows — without this the
     # whole upstream dedup pipeline executes twice before iteration starts
     pairs, n_pairs = checkpoint_counted(
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")))
-    if (fits_driver(n_pairs) if driver_pairs_guard is None
-            else n_pairs <= driver_pairs_guard):
-        comp = union_find_min((r["a"], r["b"])
+        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")))
+    if fits_driver(n_pairs):
+        comp = union_find_min((r["src"], r["dst"])
                               for r in pairs.toLocalIterator())
-        id_type = pairs.schema["a"].dataType
+        id_type = pairs.schema["src"].dataType
         from pyspark.sql import types as T
         schema = T.StructType([T.StructField("id", id_type),
                                T.StructField("cluster", id_type)])
-        return spark.createDataFrame(list(comp.items()), schema)
+        return pairs.sparkSession.createDataFrame(list(comp.items()), schema)
     edges = (pairs
-             .unionByName(pairs.select(F.col("b").alias("a"),
-                                       F.col("a").alias("b")))
+             .unionByName(pairs.select(F.col("dst").alias("src"),
+                                       F.col("src").alias("dst")))
              .dropDuplicates()
              .persist())
-    labels = (edges.select(F.col("a").alias("id")).dropDuplicates()
-              .withColumn("cluster", F.col("id"))
-              .localCheckpoint(eager=True))
     try:
-        for it in range(max_iter):
-            nbr = (edges.join(labels.select(F.col("id").alias("b"),
-                                            F.col("cluster").alias("nc")), "b")
-                   .groupBy("a").agg(F.min("nc").alias("nmin"))
-                   .withColumnRenamed("a", "id"))
-            stepped = (labels.join(nbr, "id", "left")
-                       .select("id", F.least("cluster", F.coalesce("nmin", "cluster"))
-                               .alias("cluster"),
-                               F.col("cluster").alias("old")))
-            jump = stepped.select(F.col("id").alias("cluster"),
-                                  F.col("cluster").alias("c2"))
-            # check convergence EVERY round, for free: the changed-row
-            # count rides the checkpoint as an observation (the pre-step
-            # label travels alongside as ``old`` and is projected away
-            # above the metric) — dup clusters are shallow near-cliques
-            # that typically converge after 1-2 rounds of jump+propagate,
-            # so a fixed multi-round cadence mostly runs wasted rounds
-            ob = Observation()
-            jumped = (stepped.join(jump, "cluster")
-                      .select("id", F.least("cluster", "c2").alias("cluster"),
-                              "old")
-                      .observe(ob, F.coalesce(
-                          F.sum(F.when(F.col("cluster") != F.col("old"), 1)
-                                .otherwise(0)), F.lit(0)).alias("chg"))
-                      .select("id", "cluster")
-                      .localCheckpoint(eager=True))
-            labels = jumped
-            if int(ob.get["chg"]) == 0:
-                break
+        return min_label_fixpoint(
+            edges, edges.select(F.col("src").alias("id")).dropDuplicates()
+            .withColumn("lab", F.col("id")),
+            max_iter=max_iter).withColumnRenamed("lab", "cluster")
     finally:
         edges.unpersist()
-    return labels
 
 
 def dedup_survivors(docs: DataFrame, pairs: DataFrame, *,
