@@ -9,6 +9,7 @@ import urllib.request
 import pytest
 from pyspark.sql import types as T
 
+from vivace_graph_v3_spark.graph import GraphStore
 from vivace_graph_v3_spark.mvcc import VersionedGraph
 from vivace_graph_v3_spark.query.pattern import clear_queries, def_query
 from vivace_graph_v3_spark.rest import (RestServer, clear_rest_procedures,
@@ -260,3 +261,44 @@ def test_ndjson_format(server):
         assert resp.headers["Content-Type"] == "application/x-ndjson"
         lines = resp.read().decode().splitlines()
     assert [json.loads(ln) for ln in lines] == [{"n": "ann"}, {"n": "bob"}]
+
+
+def _last_job_id(spark) -> int:
+    """Highest Spark job id issued so far, from the application status
+    store after the listener bus has drained (-1 before the first job)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(60_000)
+    jobs = sc.statusStore().jobsList(None)   # newest first
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
+def test_point_requests_job_budget(server):
+    """An id request is a point probe, not a scan of every type: on a
+    store with a base AND a non-empty log, planning a query view runs no
+    job, a GET runs at most 2 and a type lookup 1."""
+    srv, vg = server
+    spark = vg.spark
+    seed = GraphStore(spark, vg.registry)
+    seed.add_vertices("person", spark.createDataFrame(
+        [("p1", "person", False, 0, 0, "ann", 6),
+         ("p2", "person", False, 0, 0, "bob", 9)],
+        vg.registry.get("person").struct_type()))
+    seed.add_edges("knows", spark.createDataFrame(
+        [("e1", "knows", False, 0, 0, "p1", "p2", 1.0, 2019)],
+        vg.registry.get("knows").struct_type()))
+    vg.init_from_store(seed)
+    vg.commit(vg.begin().save("person", spark.createDataFrame(
+        [("p1", "ann", 7, 0)],
+        "id string, name string, age int, revision long")))
+
+    def jobs(fn):
+        j0 = _last_job_id(spark)
+        out = fn()
+        return _last_job_id(spark) - j0, out
+
+    n, _ = jobs(vg.store)
+    assert n == 0
+    n, got = jobs(lambda: srv._get_node(vg, "vertex", "p1"))
+    assert n <= 2 and got["age"] == 7 and got["revision"] == 1
+    n, tname = jobs(lambda: vg.locate("edge", "e1"))
+    assert n == 1 and tname == "knows"

@@ -50,6 +50,27 @@ def test_commit_invalidates(vg, spark, tmp_path):
     assert rc.stats["misses"] == 2
 
 
+def test_compaction_does_not_reuse_cached_epochs(vg, spark, tmp_path):
+    """Epochs survive compact(): a commit after a compaction gets a new
+    epoch, so a result cached before the compaction is not served."""
+    def add(pid, name, age):
+        vg.commit(vg.begin().create("person", spark.createDataFrame(
+            [(pid, name, age)], "id string, name string, age int")))
+
+    rc = ResultCache(vg, str(tmp_path / "rc"))
+    # a compacted base from the start: both runs plan the same scans, so
+    # only the epoch tells their results apart
+    vg.compact()
+    add("p4", "dee", 40)
+    assert sorted(rc.run(lambda: _agg(vg)).collect()) == [(30, 2), (40, 2)]
+    add("p5", "eve", 50)
+    vg.compact()
+    add("p6", "fay", 60)
+    fresh = sorted(rc.run(lambda: _agg(vg)).collect())
+    assert fresh == [(30, 2), (40, 2), (50, 1), (60, 1)]
+    assert rc.stats["misses"] == 2
+
+
 def test_fingerprint_stable_across_rebuilds(vg):
     # same query built twice = same fingerprint despite fresh expr ids;
     # a different query = different fingerprint

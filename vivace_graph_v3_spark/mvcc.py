@@ -36,11 +36,14 @@ the schema registry at read time. Base tables stay fully typed parquet.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import time
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql import (DataFrame, Row, SparkSession, Window, functions as F,
+                         types as T)
 
 from vivace_graph_v3_spark.graph import GraphStore
 from vivace_graph_v3_spark.schema import SYSTEM_COLUMNS, SchemaRegistry
@@ -122,14 +125,41 @@ class VersionedGraph:
     def _base_path(self, nt) -> str:
         return os.path.join(self.path, "base", f"{nt.kind}_{nt.name}")
 
+    @property
+    def _epoch_mark_path(self) -> str:
+        return os.path.join(self.path, "epoch_mark")
+
     # -- epoch bookkeeping ---------------------------------------------------
 
     def _log(self) -> DataFrame:
         return self.spark.read.schema(LOG_SCHEMA).parquet(self.log_path)
 
     def current_epoch(self) -> int:
+        """Newest committed epoch: the log's maximum, or the high-water
+        mark ``compact()`` recorded before it cleared the log, whichever
+        is larger — epochs never repeat across a compaction."""
         row = self._log().agg(F.max("commit_epoch")).first()
-        return int(row[0]) if row and row[0] is not None else 0
+        logged = int(row[0]) if row and row[0] is not None else 0
+        try:
+            with open(self._epoch_mark_path) as f:
+                return max(logged, int(f.read()))
+        except FileNotFoundError:
+            return logged
+
+    @contextlib.contextmanager
+    def _commit_lock(self):
+        """The reference's transaction-manager lock
+        (transactions.lisp:1803-1810) as a file lock on the graph
+        directory: one writer (a commit or a compaction) per graph across
+        processes; readers never take it."""
+        import fcntl
+
+        with open(os.path.join(self.path, ".commit.lock"), "w") as lk:
+            fcntl.flock(lk, fcntl.LOCK_EX)
+            try:
+                yield
+            finally:
+                fcntl.flock(lk, fcntl.LOCK_UN)
 
     # -- write path ----------------------------------------------------------
 
@@ -141,10 +171,8 @@ class VersionedGraph:
         revisions (OCC), serialize to log rows, append to the WAL
         (transactions.lisp:1906-1952 -> 1382-1424).
 
-        Commit-time mutual exclusion (the reference's transaction-manager
-        lock, transactions.lisp:1803-1810) is a file lock on the log
-        directory — one writer per graph across processes; readers never
-        take it.
+        Commit-time mutual exclusion is :meth:`_commit_lock`, shared with
+        :meth:`compact`.
 
         OCC validation is FUSED into the serialization job: each
         update/delete op carries an Observation whose aggregates are
@@ -155,58 +183,51 @@ class VersionedGraph:
         commit still leaves the log untouched — atomicity is the
         promote-after-validate rename, the same protocol a distributed
         committer uses."""
-        import fcntl
-
-        lock_file = os.path.join(self.path, ".commit.lock")
-        with open(lock_file, "w") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            try:
-                epoch = self.current_epoch() + 1
-                frames = []
-                checks = []
-                for op, type_name, df in tx.ops:
-                    nt = self.registry.get(type_name)
-                    fdf, check = self._to_log_rows(op, nt, df, epoch)
-                    frames.append(fdf)
-                    if check is not None:
-                        checks.append(check)
-                if not frames:
-                    return epoch
-                out = frames[0]
-                for fdf in frames[1:]:
-                    out = out.unionByName(fdf)
-                if not checks:
-                    # insert-only commit: no validation needed, append
-                    # directly (coalesce keeps the historical one-file-
-                    # per-commit log layout for map-only insert batches)
-                    out.coalesce(1).write.mode("append").parquet(self.log_path)
-                    return epoch
-                staging = os.path.join(
-                    self.path, f".staging-{epoch}-{os.getpid()}-{time.time_ns()}")
-                try:
-                    # no coalesce here: the validation join / merge-on-read
-                    # window keep their parallelism inside this one job and
-                    # AQE's partition coalescing sizes the output files
-                    out.write.mode("overwrite").parquet(staging)
-                    for obs, op, name, check_stale in checks:
-                        row = obs.get
-                        if row["missing"]:
-                            raise ConflictError(
-                                f"{op} on unknown {name} id "
-                                f"{row['missing_id']!r}")
-                        if check_stale and row["stale"]:
-                            raise ConflictError(
-                                f"stale save of {name} id {row['stale_id']!r}: "
-                                f"carried revision is no longer current")
-                    for fname in os.listdir(staging):
-                        if fname.startswith("part-"):
-                            os.rename(os.path.join(staging, fname),
-                                      os.path.join(self.log_path, fname))
-                finally:
-                    shutil.rmtree(staging, ignore_errors=True)
+        with self._commit_lock():
+            epoch = self.current_epoch() + 1
+            frames = []
+            checks = []
+            for op, type_name, df in tx.ops:
+                nt = self.registry.get(type_name)
+                fdf, check = self._to_log_rows(op, nt, df, epoch)
+                frames.append(fdf)
+                if check is not None:
+                    checks.append(check)
+            if not frames:
                 return epoch
+            out = frames[0]
+            for fdf in frames[1:]:
+                out = out.unionByName(fdf)
+            if not checks:
+                # insert-only commit: no validation needed, append
+                # directly (coalesce keeps the historical one-file-
+                # per-commit log layout for map-only insert batches)
+                out.coalesce(1).write.mode("append").parquet(self.log_path)
+                return epoch
+            staging = os.path.join(
+                self.path, f".staging-{epoch}-{os.getpid()}-{time.time_ns()}")
+            try:
+                # no coalesce here: the validation join / merge-on-read
+                # window keep their parallelism inside this one job and
+                # AQE's partition coalescing sizes the output files
+                out.write.mode("overwrite").parquet(staging)
+                for obs, op, name, check_stale in checks:
+                    row = obs.get
+                    if row["missing"]:
+                        raise ConflictError(
+                            f"{op} on unknown {name} id "
+                            f"{row['missing_id']!r}")
+                    if check_stale and row["stale"]:
+                        raise ConflictError(
+                            f"stale save of {name} id {row['stale_id']!r}: "
+                            f"carried revision is no longer current")
+                for fname in os.listdir(staging):
+                    if fname.startswith("part-"):
+                        os.rename(os.path.join(staging, fname),
+                                  os.path.join(self.log_path, fname))
             finally:
-                fcntl.flock(lk, fcntl.LOCK_UN)
+                shutil.rmtree(staging, ignore_errors=True)
+            return epoch
 
     def _to_log_rows(self, op: str, nt, df: DataFrame, epoch: int):
         """Serialize one op's rows to log-row shape. Returns
@@ -297,7 +318,10 @@ class VersionedGraph:
         if not os.path.exists(p) and os.path.isdir(p + ".old"):
             os.rename(p + ".old", p)
         if os.path.exists(p):
-            return self.spark.read.parquet(p)
+            # the declared schema, not inference: inferring costs one
+            # Spark job per read, and read()'s union already requires the
+            # base columns to be the declared ones
+            return self.spark.read.schema(nt.struct_type()).parquet(p)
         return self.spark.createDataFrame([], nt.struct_type())
 
     def read(self, type_name: str, *, as_of: int | None = None,
@@ -334,17 +358,64 @@ class VersionedGraph:
                                  (F.col("type") == nt.name))
         return self._base(nt).unionByName(self._decode(nt, log))
 
+    # -- point access --------------------------------------------------------
+
+    def _id_log(self, kind: str, node_id: str) -> DataFrame:
+        return self._log().filter((F.col("kind") == kind) &
+                                  (F.col("id") == node_id))
+
+    def locate(self, kind: str, node_id: str) -> str | None:
+        """The first ``kind`` type in registry order that holds ``node_id``,
+        tombstoned or not, or None: the store-wide ``lookup-vertex`` /
+        ``lookup-edge`` probe (vertex.lisp:84-91).
+
+        One Spark job over narrow id probes, no merge-on-read: an id is in
+        ``read(t, include_deleted=True)`` iff it is in t's base or in t's
+        log rows."""
+        types = self.registry.types(kind)
+        probes = [self._base(nt).filter(F.col("id") == node_id)
+                  .select(F.lit(nt.name).alias("type")) for nt in types]
+        probes.append(self._id_log(kind, node_id).select("type"))
+        found = {r["type"] for r in reduce(DataFrame.union, probes).collect()}
+        return next((nt.name for nt in types if nt.name in found), None)
+
+    def get(self, type_name: str, node_id: str) -> Row | None:
+        """The current version of one node, tombstone included, or None:
+        the row ``read(type_name, include_deleted=True)`` holds for the id.
+
+        One Spark job collects the id's base row and decoded log rows; the
+        winner is picked here by read()'s rule: any log row supersedes the
+        base row (the anti-join), and among log rows the highest
+        ``(commit_epoch, revision)`` wins (the window)."""
+        nt = self.registry.get(type_name)
+        log = self._id_log(nt.kind, node_id).filter(F.col("type") == nt.name)
+        rows = (self._base(nt).filter(F.col("id") == node_id)
+                .withColumn("__log", F.lit(False))
+                .unionByName(self._decode(nt, log)
+                             .withColumn("__log", F.lit(True)))
+                .collect())
+        if not rows:
+            return None
+        best = max(rows, key=lambda r: (r["__log"], r["commit_epoch"],
+                                        r["revision"])).asDict()
+        del best["__log"]
+        return Row(**best)
+
     def store(self, *, as_of: int | None = None) -> GraphStore:
-        """Materialize a :class:`GraphStore` view (optionally a snapshot read,
-        the ``:snapshot t`` analog, prologc.lisp:1024-1031) for querying."""
+        """A :class:`GraphStore` view (optionally a snapshot read, the
+        ``:snapshot t`` analog, prologc.lisp:1024-1031) for querying. Each
+        type's merge-on-read is planned when a query first reads it, so a
+        query pays only for the types it touches."""
         g = GraphStore(self.spark, self.registry, name=self.name,
                        has_tombstones=True)
-        for nt in self.registry.types("vertex"):
-            g.add_vertices(nt.name, self.read(nt.name, as_of=as_of,
-                                              include_deleted=True))
-        for nt in self.registry.types("edge"):
-            g.add_edges(nt.name, self.read(nt.name, as_of=as_of,
-                                           include_deleted=True))
+
+        def plan(type_name: str) -> DataFrame:
+            return self.read(type_name, as_of=as_of, include_deleted=True)
+
+        g._vertices = _LazyTables(
+            [nt.name for nt in self.registry.types("vertex")], plan)
+        g._edges = _LazyTables(
+            [nt.name for nt in self.registry.types("edge")], plan)
         return g
 
     # -- bootstrap / snapshot / replay / compact ------------------------------
@@ -398,7 +469,23 @@ class VersionedGraph:
     def compact(self) -> None:
         """Fold the delta log into the base (copy-on-write), retaining at most
         ``keep_revisions`` superseded versions per id in ``path/history``
-        (the epoch-gated reaper analog, transactions.lisp:470-599)."""
+        (the epoch-gated reaper analog, transactions.lisp:470-599).
+
+        Holds the commit lock throughout, so no commit lands in a log that
+        is about to be removed, and records the epoch high-water mark
+        before removing the log, so :meth:`current_epoch` never goes
+        back."""
+        with self._commit_lock():
+            epoch = self.current_epoch()
+            self._fold_log()
+            tmp = self._epoch_mark_path + ".tmp"
+            with open(tmp, "w") as f:
+                f.write(str(epoch))
+            os.replace(tmp, self._epoch_mark_path)
+            shutil.rmtree(self.log_path)
+            os.makedirs(self.log_path, exist_ok=True)
+
+    def _fold_log(self) -> None:
         hist_path = os.path.join(self.path, "history")
         for nt in self.registry.types():
             log = self._log().filter((F.col("kind") == nt.kind) &
@@ -432,8 +519,6 @@ class VersionedGraph:
                 os.rename(final, old)
             os.rename(tmp, final)
             shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(self.log_path)
-        os.makedirs(self.log_path, exist_ok=True)
 
     # -- prolog-side mutation (retract) ---------------------------------------
 
@@ -453,6 +538,22 @@ class VersionedGraph:
             df = df.filter(F.col("dst") == dst)
         tx = self.begin().mark_deleted(edge_type, df.select("id"))
         return self.commit(tx)
+
+
+class _LazyTables(dict):
+    """Type name -> DataFrame, planned by ``plan(name)`` on first ``[]``.
+    :class:`GraphStore` reaches its tables only by ``[]`` and key
+    iteration, so the types a query never touches are never planned."""
+
+    def __init__(self, names: list[str], plan) -> None:
+        super().__init__(dict.fromkeys(names))
+        self._plan = plan
+
+    def __getitem__(self, name: str) -> DataFrame:
+        df = super().__getitem__(name)
+        if df is None:
+            df = self[name] = self._plan(name)
+        return df
 
 
 def revision_diff(log: DataFrame, epoch_a: int, epoch_b: int, *,

@@ -28,9 +28,11 @@ endpoints are bounded by ``max_rows`` before ``collect()``, so the JVM does
 the scan/join work and the HTTP process only ships a capped JSON payload.
 Point CRUD flows through the MVCC transaction log (one commit per request —
 the ``with-transaction`` analog), so OCC conflict detection, tombstones and
-time travel all apply to REST writers too. This is not the 100 TB data
-path — bulk loads go through Spark jobs — it is the operational surface the
-reference offers, kept faithfully thin.
+time travel all apply to REST writers too. Id requests resolve through
+the store's point probes (``VersionedGraph.locate`` / ``get``, the
+reference's hash-index ``lookup-vertex``), not per-type scans. This is not
+the 100 TB data path — bulk loads go through Spark jobs — it is the
+operational surface the reference offers, kept faithfully thin.
 
 Error mapping (rest.lisp:420-433): malformed body/params → 400, unknown
 resource/query → 404, auth failure → 401, forbidden operation → 403,
@@ -290,16 +292,17 @@ class RestServer:
     def _find_type(self, vg: VersionedGraph, kind: str, node_id: str) -> str:
         """Resolve which declared type holds this id (the reference's
         store-wide lookup-vertex/lookup-edge, vertex.lisp:84-91)."""
-        for nt in vg.registry.types(kind):
-            if not vg.read(nt.name, include_deleted=True).filter(
-                    F.col("id") == node_id).isEmpty():
-                return nt.name
-        raise _HttpError(404, f"unknown {kind} '{node_id}'")
+        tname = vg.locate(kind, node_id)
+        if tname is None:
+            raise _HttpError(404, f"unknown {kind} '{node_id}'")
+        return tname
 
-    def _get_node(self, vg, kind, node_id):
-        tname = self._find_type(vg, kind, node_id)
-        row = (vg.read(tname, include_deleted=True)
-               .filter(F.col("id") == node_id).first())
+    def _get_node(self, vg, kind, node_id, tname=None):
+        """``tname`` is passed by a handler that already knows the type."""
+        tname = tname or self._find_type(vg, kind, node_id)
+        row = vg.get(tname, node_id)
+        if row is None:
+            raise _HttpError(404, f"unknown {kind} '{node_id}'")
         return _json_value(row.asDict(recursive=True)) | {"type": tname}
 
     def _one_row_df(self, vg, nt, node_id: str, slots: dict, extra=None):
@@ -326,8 +329,7 @@ class RestServer:
         node_id = params.get("id") or self._gen_id(type_name)
         # make-vertex retries on id collision (vertex.lisp:105-146); a
         # client-supplied duplicate is the client's error -> 409
-        if not vg.read(nt.name, include_deleted=True).filter(
-                F.col("id") == node_id).isEmpty():
+        if vg.get(nt.name, node_id) is not None:
             raise _HttpError(409, f"{kind} id '{node_id}' already exists")
         extra = None
         if kind == "edge":
@@ -336,9 +338,8 @@ class RestServer:
                 # rest.lisp:720-722
                 raise _HttpError(400,
                                  "You must provide both FROM and TO vertices")
-            store = vg.store()
-            if store.lookup_vertex(frm).isEmpty() or \
-                    store.lookup_vertex(to).isEmpty():
+            if vg.locate("vertex", frm) is None or \
+                    vg.locate("vertex", to) is None:
                 raise _HttpError(400,
                                  "You must provide both FROM and TO vertices")
             extra = {"src": T.StringType(), "dst": T.StringType(),
@@ -348,13 +349,13 @@ class RestServer:
             params["src"], params["dst"] = frm, to
         df = self._one_row_df(vg, nt, node_id, params, extra)
         vg.commit(vg.begin().create(nt.name, df))
-        return self._get_node(vg, kind, node_id)
+        return self._get_node(vg, kind, node_id, nt.name)
 
     def _update_node(self, vg, kind, node_id, params):
         tname = self._find_type(vg, kind, node_id)
         nt = vg.registry.get(tname)
-        cur = (vg.read(tname).filter(F.col("id") == node_id).first())
-        if cur is None:
+        cur = vg.get(tname, node_id)
+        if cur is None or cur["deleted"]:
             raise _HttpError(404, f"{kind} '{node_id}' is deleted")
         merged = cur.asDict()
         for sname in nt.slots:
@@ -365,7 +366,7 @@ class RestServer:
         df = (self._one_row_df(vg, nt, node_id, merged, extra)
               .withColumn("revision", F.lit(cur["revision"]).cast("long")))
         vg.commit(vg.begin().save(tname, df))
-        return self._get_node(vg, kind, node_id)
+        return self._get_node(vg, kind, node_id, tname)
 
     def _delete_node(self, vg, kind, node_id):
         tname = self._find_type(vg, kind, node_id)
