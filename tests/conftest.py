@@ -100,6 +100,15 @@ def distributed_regime():
         yield
 
 
+def last_job_id(spark) -> int:
+    """Highest Spark job id issued so far, from the application status
+    store after the listener bus has drained (-1 before the first job)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(60_000)
+    jobs = sc.statusStore().jobsList(None)   # newest first
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")

@@ -286,9 +286,11 @@ def test_contract_values_partitioning_invariant(spark):
     shuffle-agg, hash-mix, sketch, skew-rewrite shapes) under a different
     shuffle-partition count and input partitioning, and require identical
     canonical hashes."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools"))
     from check_contract import canon_pdf
 
     qs = entry_mod.queries()

@@ -2,16 +2,20 @@
 answers: PageRank mass conservation + ordering, connected components on a
 disconnected forest, triangle counting, weighted/unweighted shortest paths."""
 
+from unittest import mock
+
 import pytest
 from pyspark.sql import types as T
 
+from vivace_graph_v3_spark import util
 from vivace_graph_v3_spark.graph import GraphStore
 from vivace_graph_v3_spark.operators.graph_algorithms import (
-    connected_components, pagerank, shortest_paths, triangle_count,
+    connected_components, hits, label_propagation, pagerank, shortest_paths,
+    triangle_count,
 )
 from vivace_graph_v3_spark.schema import SchemaRegistry
 
-from tests.conftest import distributed_regime
+from tests.conftest import distributed_regime, last_job_id
 
 
 def _graph(spark, vertices, edges):
@@ -325,14 +329,17 @@ def test_hits_star(star):
 
 
 def test_hits_bcast_matches_copartitioned(star):
-    # the broadcast-state regime (default within the driver bound) must
-    # emit bit-identical scores to the past-the-bound co-partitioned
-    # formulation — the round-10 differential pin for the hits rewrite,
-    # including the out-degree-seeded first half-round
-    from vivace_graph_v3_spark.operators.graph_algorithms import hits
-    fast = sorted(map(tuple, hits(star, max_iter=3).collect()))
-    # max_iter=1 exercises the seeded-final-round edge case in both paths
-    fast1 = sorted(map(tuple, hits(star, max_iter=1).collect()))
+    # the broadcast-state regime must emit bit-identical scores to the
+    # past-the-bound co-partitioned formulation — the round-10
+    # differential pin for the hits rewrite, including the
+    # out-degree-seeded first half-round. A bound of |V| = 4 rows keeps
+    # the state broadcast but the 4 + 4 vertex and edge rows off the
+    # driver-local kernel.
+    with mock.patch.object(util, "DRIVER_ROWS", 4):
+        fast = sorted(map(tuple, hits(star, max_iter=3).collect()))
+        # max_iter=1 exercises the seeded-final-round edge case in both
+        # paths
+        fast1 = sorted(map(tuple, hits(star, max_iter=1).collect()))
     with distributed_regime():
         dist = sorted(map(tuple, hits(star, max_iter=3).collect()))
         dist1 = sorted(map(tuple, hits(star, max_iter=1).collect()))
@@ -341,10 +348,10 @@ def test_hits_bcast_matches_copartitioned(star):
 
 
 def test_pagerank_bcast_matches_shuffle_join(spark):
-    """The broadcast rank-state regime (within the driver bound) must
-    emit bit-identical ranks to the past-the-bound shuffle join, for the
-    uniform, personalized and weighted variants, with and without the
-    tol convergence probe."""
+    """The broadcast rank-state regime (|V| within the driver bound,
+    the graph past it) must emit bit-identical ranks to the
+    past-the-bound shuffle join, for the uniform, personalized and
+    weighted variants, with and without the tol convergence probe."""
     import random
 
     rng = random.Random(17)
@@ -357,10 +364,123 @@ def test_pagerank_bcast_matches_shuffle_join(spark):
         # tol=0.05 stops the uniform run at round 4 of its 6-round budget
         for tol in (0.05, None):
             args = dict(kw, tol=tol, max_iter=6)
-            fast = sorted(map(tuple, pagerank(g, **args).collect()))
+            # 30 vertex rows fit, 30 + |E| rows do not
+            with mock.patch.object(util, "DRIVER_ROWS", len(vids)):
+                fast = sorted(map(tuple, pagerank(g, **args).collect()))
             with distributed_regime():
                 dist = sorted(map(tuple, pagerank(g, **args).collect()))
             assert fast == dist, (kw, tol)
+
+
+def _kernel_graph(spark, *, ghost: bool = True):
+    """30 vertices, dangling ones (25..29), multi-edges with differing
+    weights, a self-loop and, with ``ghost``, edges to and from "ghost",
+    an endpoint that is not a vertex."""
+    import random
+
+    rng = random.Random(23)
+    vids = [str(i) for i in range(30)]
+    edges = [tuple(rng.sample(vids[:25], 2)) for _ in range(60)]
+    edges += edges[:10] + [("4", "4")]
+    if ghost:
+        edges += [("2", "ghost"), ("ghost", "7")]
+    return _graph(spark, vids, [(a, b, 1 + (i % 7))
+                                for i, (a, b) in enumerate(edges)])
+
+
+def test_pagerank_local_matches_distributed(spark):
+    """The driver-local kernel against the Spark loop at relative 1e-12
+    (only the summation order differs), for the uniform, personalized
+    and weighted variants, with and without the tol probe, on a graph
+    with dangling vertices, multi-edges and a non-vertex endpoint, and
+    on an edgeless graph."""
+    import math
+
+    g = _kernel_graph(spark)
+    edgeless = _graph(spark, ["a", "b", "c"], [])
+    cases = [(g, kw, tol)
+             for kw in ({}, {"sources": ["0", "3", "ghost"]},
+                        {"weighted": True})
+             for tol in (None, 0.05)]
+    cases += [(edgeless, {}, None), (edgeless, {"sources": ["b"]}, 0.05)]
+    for graph, kw, tol in cases:
+        args = dict(kw, tol=tol, max_iter=6)
+        local = {r.id: r.rank for r in pagerank(graph, **args).collect()}
+        with distributed_regime():
+            dist = {r.id: r.rank for r in pagerank(graph, **args).collect()}
+        assert local.keys() == dist.keys(), (kw, tol)
+        assert "ghost" not in local
+        for k in dist:
+            assert math.isclose(local[k], dist[k], rel_tol=1e-12,
+                                abs_tol=0.0), (kw, tol, k)
+    with pytest.raises(ValueError):
+        pagerank(g, sources=["ghost"])
+    with pytest.raises(ValueError):
+        pagerank(g, sources=[])
+
+
+def test_label_propagation_local_matches_distributed(spark):
+    """Labels are ids, so the local kernel must match the Spark loop
+    exactly, ties (count, then smallest label) included."""
+    g = _kernel_graph(spark)
+    # a 4-cycle: every vertex sees a two-way tie every round
+    ring = _graph(spark, ["b", "a", "d", "c", "z"],
+                  [("a", "b", 1), ("b", "c", 1), ("c", "d", 1),
+                   ("d", "a", 1), ("z", "nowhere", 1)])
+    for graph in (g, ring):
+        for rounds in (1, 3):
+            local = sorted(map(tuple, label_propagation(
+                graph, max_iter=rounds).collect()))
+            with distributed_regime():
+                dist = sorted(map(tuple, label_propagation(
+                    graph, max_iter=rounds).collect()))
+            assert local == dist, rounds
+
+
+def test_hits_local_matches_distributed(spark):
+    """Sums of integer-valued scores before one final division: the local
+    kernel must match the Spark loops exactly. The co-partitioned loop
+    seeds its first hub from vertex authorities only, so an edge to a
+    non-vertex is checked against the broadcast-state loop alone."""
+    def rows(graph, rounds):
+        return sorted(map(tuple, hits(graph, max_iter=rounds).collect()))
+
+    g, ghost = _kernel_graph(spark, ghost=False), _kernel_graph(spark)
+    for rounds in (1, 3):
+        with distributed_regime():
+            dist = rows(g, rounds)
+        assert rows(g, rounds) == dist, rounds
+        with mock.patch.object(util, "DRIVER_ROWS", 30):  # broadcast state
+            bcast = rows(ghost, rounds)
+        assert rows(ghost, rounds) == bcast, rounds
+    edgeless = _graph(spark, ["a", "b"], [])
+    with distributed_regime():
+        dist = rows(edgeless, 3)
+    assert rows(edgeless, 3) == dist
+
+
+def test_local_kernels_hold_no_blocks_and_few_jobs(spark):
+    """Within the driver bound, pagerank, label propagation and HITS
+    collect once and iterate on the driver: each call, its result
+    collected, issues at most 4 Spark jobs and leaves no persisted or
+    checkpointed RDD behind."""
+    import gc
+
+    g = _kernel_graph(spark)
+    jsc = spark.sparkContext._jsc
+
+    def held():
+        gc.collect()
+        return jsc.getPersistentRDDs().size()
+
+    for op in (lambda: pagerank(g, max_iter=10),
+               lambda: pagerank(g, max_iter=10, tol=None, weighted=True),
+               lambda: label_propagation(g, max_iter=3),
+               lambda: hits(g, max_iter=3)):
+        before, j0 = held(), last_job_id(spark)
+        op().collect()
+        assert last_job_id(spark) - j0 <= 4
+        assert held() == before
 
 
 def test_common_neighbor_similarity(spark):

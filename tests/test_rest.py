@@ -16,6 +16,8 @@ from vivace_graph_v3_spark.rest import (RestServer, clear_rest_procedures,
                                         def_rest_procedure)
 from vivace_graph_v3_spark.schema import SchemaRegistry
 
+from tests.conftest import last_job_id
+
 
 def _req(method, url, body=None, expect_error=None):
     data = json.dumps(body).encode() if body is not None else None
@@ -263,15 +265,6 @@ def test_ndjson_format(server):
     assert [json.loads(ln) for ln in lines] == [{"n": "ann"}, {"n": "bob"}]
 
 
-def _last_job_id(spark) -> int:
-    """Highest Spark job id issued so far, from the application status
-    store after the listener bus has drained (-1 before the first job)."""
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty(60_000)
-    jobs = sc.statusStore().jobsList(None)   # newest first
-    return jobs.apply(0).jobId() if jobs.size() else -1
-
-
 def test_point_requests_job_budget(server):
     """An id request is a point probe, not a scan of every type: on a
     store with a base AND a non-empty log, planning a query view runs no
@@ -292,9 +285,9 @@ def test_point_requests_job_budget(server):
         "id string, name string, age int, revision long")))
 
     def jobs(fn):
-        j0 = _last_job_id(spark)
+        j0 = last_job_id(spark)
         out = fn()
-        return _last_job_id(spark) - j0, out
+        return last_job_id(spark) - j0, out
 
     n, _ = jobs(vg.store)
     assert n == 0

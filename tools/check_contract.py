@@ -21,10 +21,12 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the repository this script sits in, wherever it is checked out
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _cell(v) -> str:

@@ -41,6 +41,7 @@ GUARDED = [
     "graph_eccentricity", "graph_stress_landmarks", "graph_scc",
     "graph_bowtie", "temporal_reach", "temporal_reach_converged",
     "dedup_survivors", "graph_pagerank", "graph_pagerank_personalized",
+    "graph_pagerank_weighted", "graph_label_propagation", "graph_modularity",
     "graph_hits", "graph_random_walks", "graph_negative_samples",
     "traverse_bfs", "geo_grid_dbscan", "graph_cc_incremental",
 ]

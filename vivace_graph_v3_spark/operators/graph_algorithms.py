@@ -15,17 +15,34 @@ Scale notes: state is O(|V|) and every round shuffles O(|E|) messages — the
 same cost model as GraphX Pregel. Edges are persisted across rounds; for a
 1000-executor run, pre-bucket edges by src so the per-round join is
 shuffle-free on the edge side.
+
+Most iterative operators choose their plan by graph size through the one
+driver bound (``util.DRIVER_ROWS``). PageRank, HITS and label propagation
+have three regimes:
+
+- driver-local: when |V| + |E| rows fit, one bounded collect
+  (:func:`_coded_graph`) and the same rounds as numpy kernels over
+  integer-coded ids, with no Spark job per round;
+- broadcast state (pagerank and HITS only): when |V| fits but the graph
+  does not, the Spark loop broadcasts the O(|V|) state into each round;
+- shuffle: past the bound, the Spark loop above.
+
+The other local finishes (CC, SCC, k-core, SSSP, ...) count their
+persisted input and go through ``util.finish_locally``.
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
+import numpy as np
 from pyspark.sql import DataFrame, Observation, Window, functions as F
 from pyspark.sql import types as T
 
 from vivace_graph_v3_spark.graph import GraphStore
 from vivace_graph_v3_spark.util import (
-    checkpoint_counted, checkpoint_rebased, finish_locally, fits_driver,
-    union_find_min)
+    checkpoint_counted, checkpoint_rebased, collect_bounded, finish_locally,
+    fits_driver, union_find_min)
 
 
 def _edge_pairs(graph: GraphStore, edge_type: str | None,
@@ -37,6 +54,71 @@ def _edge_pairs(graph: GraphStore, edge_type: str | None,
                        *([F.col("weight")] if weighted else []))
         e = e.unionByName(rev)
     return e
+
+
+class _CodedGraph(NamedTuple):
+    """A graph collected to the driver with its ids coded as integers:
+    code ``c`` stands for ``ids[c]``, and code order is the ids' order."""
+    ids: np.ndarray             # sorted vertex ids and edge endpoints
+    vertex: np.ndarray          # per code: is it a vertex id?
+    src: np.ndarray             # int64 code per active edge
+    dst: np.ndarray
+    weight: np.ndarray | None   # float64 per edge, nulls as 0.0
+    id_type: T.DataType
+
+
+def _coded_graph(graph: GraphStore, edge_type: str | None, *,
+                 weighted: bool = False) -> _CodedGraph | None:
+    """Input of the driver-local kernels (pagerank, label propagation,
+    HITS): the vertex ids and the active edge list in ONE bounded
+    collect over Arrow (one union, one job, nothing persisted or
+    checkpointed), ids factorized with ``sort=True`` so code order is
+    the ids' order (for strings the code-point order Spark compares
+    in). Returns None when the |V| + |E| rows do not fit the driver
+    bound; the caller then runs its Spark loop."""
+    import pandas as pd
+
+    v = graph.scan_vertices(columns=["id"]).select("id")
+    # vertex rows carry their id on both sides, so no id column is null
+    rows = collect_bounded(
+        v.select(F.col("id").alias("src"), F.col("id").alias("dst"),
+                 F.lit(True).alias("is_v"))
+        .unionByName(_edge_pairs(graph, edge_type, weighted=weighted)
+                     .withColumn("is_v", F.lit(False)),
+                     allowMissingColumns=True))
+    if rows is None:
+        return None
+    is_v = rows["is_v"].to_numpy(dtype=bool)
+    e = rows[~is_v]
+    m = len(e)
+    codes, ids = pd.factorize(
+        np.concatenate([e["src"].to_numpy(dtype=object),
+                        e["dst"].to_numpy(dtype=object),
+                        rows["src"].to_numpy(dtype=object)[is_v]]),
+        sort=True)
+    codes = codes.astype(np.int64)
+    vertex = np.zeros(len(ids), dtype=bool)
+    vertex[codes[2 * m:]] = True
+    weight = (np.nan_to_num(e["weight"].to_numpy(dtype=np.float64))
+              if weighted else None)
+    return _CodedGraph(np.asarray(ids, dtype=object), vertex, codes[:m],
+                       codes[m:2 * m], weight,
+                       v.schema["id"].dataType)
+
+
+def _vertex_rows(graph: GraphStore, cg: _CodedGraph, **cols) -> DataFrame:
+    """One row per vertex of ``cg``: (id, *cols), each column given as
+    an array over codes. float64 columns become doubles, the others
+    (ids) take the id type."""
+    import pandas as pd
+
+    fields = [T.StructField("id", cg.id_type)] + [
+        T.StructField(name, T.DoubleType() if a.dtype.kind == "f"
+                      else cg.id_type) for name, a in cols.items()]
+    data = {"id": cg.ids, **cols}
+    return graph.spark.createDataFrame(
+        pd.DataFrame({k: a[cg.vertex] for k, a in data.items()}),
+        T.StructType(fields))
 
 
 def aggregate_messages(graph: GraphStore, *, agg, edge_type: str | None = None,
@@ -78,6 +160,50 @@ def aggregate_messages(graph: GraphStore, *, agg, edge_type: str | None = None,
     return out.groupBy("id").agg(agg)
 
 
+def _local_pagerank(cg: _CodedGraph, damping: float, max_iter: int,
+                    tol: float | None, sources: list | None) -> np.ndarray:
+    """Driver-local pagerank over a coded graph: the Spark loop of
+    :func:`pagerank` round for round, as numpy over codes. Ranks live on
+    every code (vertex ids and edge endpoints alike, as the Spark loop's
+    contribution join computes them); only vertices are returned by the
+    caller. Edges are sorted by (dst, src) so every received-mass sum
+    runs in one fixed order."""
+    nc, n = len(cg.ids), int(cg.vertex.sum())
+    if sources is None:
+        tele = np.ones(nc)
+    else:
+        hit = np.isin(cg.ids, list(sources))
+        matched = int((hit & cg.vertex).sum())
+        if matched == 0:
+            raise ValueError(
+                f"none of the {len(sources)} personalization sources "
+                "exist in the vertex set")
+        tele = np.where(hit, float(n) / matched, 0.0)
+    order = np.lexsort((cg.src, cg.dst))
+    src, dst = cg.src[order], cg.dst[order]
+    out_edges = np.bincount(src, minlength=nc)
+    if cg.weight is not None:
+        w = cg.weight[order]
+        deg = np.bincount(src, weights=w, minlength=nc)[src]
+        # a zero out-weight sum sends nothing: Spark's quotient is null
+        # without ANSI mode (with it, the Spark loop raises DIVIDE_BY_ZERO)
+        inv = np.divide(w, deg, out=np.zeros_like(w), where=deg != 0)
+    else:
+        inv = 1.0 / out_edges[src]
+    dangling = cg.vertex & (out_edges == 0)
+    rank = tele
+    for _ in range(max_iter if n else 0):
+        recv = np.bincount(dst, weights=rank[src] * inv, minlength=nc)
+        dang = float(rank[dangling].sum())
+        new = ((1.0 - damping) + damping * dang / n) * tele + damping * recv
+        converged = (tol is not None and
+                     np.abs(new - rank)[cg.vertex].sum() < tol * n)
+        rank = new
+        if converged:
+            break
+    return rank
+
+
 def pagerank(graph: GraphStore, *, edge_type: str | None = None,
              damping: float = 0.85, max_iter: int = 20,
              tol: float | None = 1.0e-4,
@@ -93,7 +219,24 @@ def pagerank(graph: GraphStore, *, edge_type: str | None = None,
     mass-|V| convention (|V|/|S| on each source, 0 elsewhere), so
     ``sources=None`` is exactly the uniform special case; the iteration
     body is IDENTICAL (the teleport column simply scales the base term),
-    so the scale profile is unchanged."""
+    so the scale profile is unchanged.
+
+    Three regimes behind the one driver bound
+    (:func:`~vivace_graph_v3_spark.util.fits_driver`):
+
+    - |V| + |E| fits: one bounded collect and the same rounds as numpy
+      on the driver (:func:`_local_pagerank`); a round costs no Spark
+      job. Ranks may differ from the Spark loop in the last ulps, since
+      the sums run in another order.
+    - only |V| fits: the Spark loop with the rank state broadcast into
+      each round's contribution join.
+    - past the bound: the same loop with a shuffle join."""
+    if sources is not None and not sources:
+        raise ValueError("personalized pagerank needs >= 1 source")
+    cg = _coded_graph(graph, edge_type, weighted=weighted)
+    if cg is not None:
+        return _vertex_rows(graph, cg, rank=_local_pagerank(
+            cg, damping, max_iter, tol, sources))
     # materialize the vertex universe once — it joins into EVERY iteration,
     # and recomputing the multi-type union scan per round would dominate
     vertices = (graph.scan_vertices(columns=["id"]).select("id")
@@ -162,8 +305,6 @@ def pagerank(graph: GraphStore, *, edge_type: str | None = None,
         def tele_of(c):
             return F.lit(1.0)
     else:
-        if not sources:
-            raise ValueError("personalized pagerank needs >= 1 source")
         # intersect with the vertex universe: a source absent from the
         # graph would silently lose teleport mass (ranks no longer summing
         # to |V|; with no valid source at all, every rank decays to 0).
@@ -821,6 +962,31 @@ def shortest_paths(graph: GraphStore, roots, *, edge_type: str | None = None,
     return dist
 
 
+def _local_label_propagation(cg: _CodedGraph, max_iter: int) -> np.ndarray:
+    """Driver-local label propagation over a coded graph: the Spark loop
+    of :func:`label_propagation` round for round. Labels are codes, and
+    code order is id order, so the smallest-label tie rule is the
+    smallest code. Returns the label code per code."""
+    nc = len(cg.ids)
+    src = np.concatenate([cg.src, cg.dst])
+    dst = np.concatenate([cg.dst, cg.src])
+    keep = cg.vertex[dst]              # neighbours must be vertices
+    src, dst = src[keep], dst[keep]
+    label = np.arange(nc)
+    for _ in range(max_iter):
+        pairs, cnt = np.unique(src * nc + label[dst], return_counts=True)
+        s, lbl = np.divmod(pairs, nc)
+        # per vertex: highest count first, then the smallest label
+        order = np.lexsort((lbl, -cnt, s))
+        s, lbl = s[order], lbl[order]
+        first = np.ones(len(s), dtype=bool)
+        first[1:] = s[1:] != s[:-1]
+        s, lbl = s[first], lbl[first]
+        upd = cg.vertex[s]             # only vertices update
+        label[s[upd]] = lbl[upd]
+    return label
+
+
 def label_propagation(graph: GraphStore, *, edge_type: str | None = None,
                       max_iter: int = 5) -> DataFrame:
     """Community detection by synchronous label propagation (beyond the
@@ -830,8 +996,20 @@ def label_propagation(graph: GraphStore, *, edge_type: str | None = None,
     dependent, which a distributed engine must not be). Fixed round budget,
     synchronous updates; returns (id, label).
 
-    Two shuffles per round (neighbor-label count, per-vertex argmax) over an
-    O(|E|) frame — the same profile as one pagerank round."""
+    Two regimes behind the one driver bound
+    (:func:`~vivace_graph_v3_spark.util.fits_driver`); the label state
+    has no broadcast regime, unlike pagerank and HITS:
+
+    - |V| + |E| fits: one bounded collect and the same rounds as numpy
+      on the driver (:func:`_local_label_propagation`), with identical
+      labels.
+    - otherwise the Spark loop: two shuffles per round (neighbor-label
+      count, per-vertex argmax) over an O(|E|) frame — the same profile
+      as one pagerank round."""
+    cg = _coded_graph(graph, edge_type)
+    if cg is not None:
+        return _vertex_rows(
+            graph, cg, label=cg.ids[_local_label_propagation(cg, max_iter)])
     edges = _edge_pairs(graph, edge_type, undirected=True).persist()
     labels = (graph.scan_vertices(columns=["id"]).select("id").dropDuplicates()
               .withColumn("label", F.col("id"))
@@ -967,6 +1145,24 @@ def k_core(graph: GraphStore, k: int, *, edge_type: str | None = None,
             alive.withColumn("degree", F.lit(0)))
 
 
+def _local_hits(cg: _CodedGraph,
+                max_iter: int) -> tuple[np.ndarray, np.ndarray]:
+    """Driver-local HITS over a coded graph: the broadcast-state loop of
+    :func:`hits` (out-degree hub seed, ``max_iter`` hub/authority
+    rounds, one final max normalization). Every sum before that
+    division adds integer-valued doubles, so scores are identical to
+    the Spark loops'. Returns (hub, auth) per code."""
+    nc = len(cg.ids)
+    hub = np.bincount(cg.src, minlength=nc).astype(np.float64)
+    auth = np.bincount(cg.dst, weights=hub[cg.src], minlength=nc)
+    for _ in range(max_iter - 1):
+        hub = np.bincount(cg.src, weights=auth[cg.dst], minlength=nc)
+        auth = np.bincount(cg.dst, weights=hub[cg.src], minlength=nc)
+    # edgeless graph: every score is 0.0, normalized by 1.0
+    return (hub / (hub.max(initial=0.0) or 1.0),
+            auth / (auth.max(initial=0.0) or 1.0))
+
+
 def hits(graph: GraphStore, *, edge_type: str | None = None,
          max_iter: int = 5) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999) over active edges:
@@ -981,9 +1177,11 @@ def hits(graph: GraphStore, *, edge_type: str | None = None,
     can drift between engines. Scores stay well inside double range for
     any realistic iteration count (growth ~ lambda_max^rounds).
 
-    Scale shape — two regimes behind the driver bound
+    Scale shape — three regimes behind the driver bound
     (:func:`~vivace_graph_v3_spark.util.fits_driver`, as in pagerank).
-    When |V| fits, the score state is
+    When |V| + |E| fits, one bounded collect feeds the same rounds as
+    numpy on the driver (:func:`_local_hits`), with identical scores.
+    When only |V| fits, the score state is
     broadcast into each half-round's join against ONE checkpointed edge
     copy: no edge co-partitioning at all, one |V|-bounded aggregate
     exchange per half-round, round 1's hub seeded as the out-degree sum
@@ -998,6 +1196,10 @@ def hits(graph: GraphStore, *, edge_type: str | None = None,
     checkpointed in that regime. Reference analog: none — the reference
     exposes traverse/recursive rules but no eigenvector scores; cited as
     beyond-ref alongside pagerank (SURVEY.md §2.3)."""
+    cg = _coded_graph(graph, edge_type)
+    if cg is not None:
+        hub, auth = _local_hits(cg, max_iter)
+        return _vertex_rows(graph, cg, hub=hub, auth=auth)
     vertices, n_v = checkpoint_counted(
         graph.scan_vertices(columns=["id"]).select("id").dropDuplicates())
     # Partition count sized off the data (same ~1M-edge-rows-per-task rule

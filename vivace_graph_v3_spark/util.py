@@ -39,9 +39,10 @@ def checkpoint_counted(df: DataFrame, *,
 # The one driver bound: how many rows the driver may collect (a bounded
 # local finish) or ship as a broadcast (bounded iteration state or rule
 # relations). Every bounded-vs-distributed choice reads it at call time
-# through fits_driver / finish_locally, so setting it to 0 forces every
-# operator onto its distributed path. Size it to driver memory: ~100
-# bytes per collected edge row, so 2M rows is a few hundred MB.
+# through fits_driver / finish_locally / collect_bounded, so setting it
+# to 0 forces every operator onto its distributed path. Size it to driver
+# memory: ~100 bytes per collected edge row, so 2M rows is a few hundred
+# MB.
 DRIVER_ROWS = 2_000_000
 
 
@@ -52,12 +53,28 @@ def fits_driver(n: int, *, scale: int = 1) -> bool:
     return n <= DRIVER_ROWS * scale
 
 
+def collect_bounded(df: DataFrame):
+    """``df`` collected over Arrow as a pandas frame when its rows fit
+    the driver, else None. One job and nothing persisted: the collect is
+    capped one row past the bound, so a frame too big for the driver
+    costs at most that many rows before the caller takes its
+    distributed path."""
+    pdf = df.limit(DRIVER_ROWS + 1).toPandas()
+    return pdf if fits_driver(len(pdf)) else None
+
+
 def finish_locally(df: DataFrame, n: int, kernel, schema, *,
                    scale: int = 1) -> DataFrame | None:
-    """Bounded local finish for an iterative operator: when the
-    persisted or checkpointed ``df`` (``n`` rows, already counted) fits
-    the driver, collect it over Arrow, run ``kernel(pdf)`` and rebuild
-    its rows as ``createDataFrame(rows, schema)``, releasing ``df``.
+    """Bounded local finish for an iterative operator: when ``df``
+    (``n`` rows, already counted) fits the driver, collect it over
+    Arrow, run ``kernel(pdf)`` and rebuild its rows as
+    ``createDataFrame(rows, schema)``, then ``df.unpersist()``.
+
+    That call releases a ``persist()``-ed ``df``. It does NOT release an
+    eager ``localCheckpoint``'s blocks (``getPersistentRDDs()`` still
+    lists them afterwards, even after a forced gc), so a caller that
+    must not hold blocks persists its input instead of checkpointing
+    it, or collects with :func:`collect_bounded`.
 
     Returns None above the bound, so the caller keeps its distributed
     loop. A kernel may also return None to decline (e.g. a memory cap
