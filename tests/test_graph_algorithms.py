@@ -439,24 +439,47 @@ def test_label_propagation_local_matches_distributed(spark):
 
 def test_hits_local_matches_distributed(spark):
     """Sums of integer-valued scores before one final division: the local
-    kernel must match the Spark loops exactly. The co-partitioned loop
-    seeds its first hub from vertex authorities only, so an edge to a
-    non-vertex is checked against the broadcast-state loop alone."""
+    kernel must match both Spark loops exactly, also on a graph with an
+    edge to and from a non-vertex (every regime seeds round 1's hub with
+    the full out-degree, that edge included)."""
     def rows(graph, rounds):
         return sorted(map(tuple, hits(graph, max_iter=rounds).collect()))
 
-    g, ghost = _kernel_graph(spark, ghost=False), _kernel_graph(spark)
-    for rounds in (1, 3):
-        with distributed_regime():
-            dist = rows(g, rounds)
-        assert rows(g, rounds) == dist, rounds
-        with mock.patch.object(util, "DRIVER_ROWS", 30):  # broadcast state
-            bcast = rows(ghost, rounds)
-        assert rows(ghost, rounds) == bcast, rounds
+    for graph in (_kernel_graph(spark, ghost=False), _kernel_graph(spark)):
+        for rounds in (1, 3):
+            local = rows(graph, rounds)
+            with distributed_regime():
+                assert local == rows(graph, rounds), rounds
+            with mock.patch.object(util, "DRIVER_ROWS", 30):  # broadcast state
+                assert local == rows(graph, rounds), rounds
     edgeless = _graph(spark, ["a", "b"], [])
     with distributed_regime():
         dist = rows(edgeless, 3)
     assert rows(edgeless, 3) == dist
+
+
+def test_weighted_pagerank_zero_out_weight(spark):
+    """A vertex whose out-edges weigh 0 in total sends nothing, in every
+    regime: the Spark loops must not raise DIVIDE_BY_ZERO (ANSI mode)
+    and must match the local kernel."""
+    import math
+
+    g = _graph(spark, ["a", "b", "c", "z"],
+               [("a", "b", 1), ("b", "c", 2), ("c", "a", 1),
+                ("z", "a", 0), ("z", "b", 0)])
+    local = {r.id: r.rank for r in
+             pagerank(g, weighted=True, max_iter=5, tol=None).collect()}
+    # z receives only teleport mass and passes none of it on
+    assert math.isclose(local["z"], 0.15, rel_tol=1e-12)
+    regimes = [distributed_regime(),
+               mock.patch.object(util, "DRIVER_ROWS", 4)]  # broadcast state
+    for regime in regimes:
+        with regime:
+            spark_loop = {r.id: r.rank for r in pagerank(
+                g, weighted=True, max_iter=5, tol=None).collect()}
+        assert spark_loop.keys() == local.keys()
+        for k in local:
+            assert math.isclose(local[k], spark_loop[k], rel_tol=1e-12), k
 
 
 def test_local_kernels_hold_no_blocks_and_few_jobs(spark):

@@ -2,12 +2,17 @@
 write-path-tests.lisp assertions: create/save/delete round trips, stale-save
 conflict, epoch time travel, snapshot/replay, compaction retention."""
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import types as T
 
 from vivace_graph_v3_spark.mvcc import ConflictError, VersionedGraph
 from vivace_graph_v3_spark.schema import SchemaRegistry
+from vivace_graph_v3_spark.util import local_frame
+
+from tests.conftest import distributed_regime, last_job_id
 
 
 @pytest.fixture()
@@ -183,51 +188,122 @@ def test_compact_waits_for_commit_lock(vg):
 def test_point_access_matches_merge_on_read(spark, tmp_path):
     """Differential test: ``get`` against ``read(t, include_deleted=True)``
     filtered to the id, and ``locate`` against probing each type's
-    merge-on-read in registry order, over log-only inserts, updates, a
-    tombstone, a compacted base, commits after compact(), log rows whose
-    epoch is below the base's, an unknown id and one id held by two
-    types."""
+    merge-on-read in registry order; and every read (``as_of`` included),
+    get, locate and ``current_epoch`` answered from the driver-held log
+    tail against the same call past the driver bound. Covers log-only
+    inserts, updates, tombstones, an edge update that keeps its
+    endpoints and weight, stale, missing-id and null-id conflicts on both
+    commit paths (point probe, fused write), a probe of several base-only
+    ids, a foreign writer, a compacted base, commits after compact(),
+    log rows whose epoch is below the base's (replay), an unknown id and
+    one id held by two types."""
     reg = SchemaRegistry()
     reg.def_vertex("person", {"name": T.StringType(), "age": T.IntegerType()},
                    keep_revisions=1)
     reg.def_vertex("robot", {"name": T.StringType()})
     reg.def_edge("knows", {"since": T.IntegerType()})
     vg = VersionedGraph(spark, reg, str(tmp_path / "g"))
-    ids = {"vertex": ["p1", "p2", "p3", "dup", "r1", "nobody"],
+    ids = {"vertex": ["p1", "p2", "p3", "p4", "dup", "r1", "nobody"],
            "edge": ["e1"]}
 
-    def check():
+    def rows_by_id(df):
+        return {r["id"]: r.asDict() for r in df.collect()}
+
+    def state():
+        epoch = vg.current_epoch()
+        out = {"epoch": epoch}
+        for nt in reg.types():
+            out[nt.name] = rows_by_id(vg.read(nt.name, as_of=epoch - 1))
         for kind, kind_ids in ids.items():
-            held = {nt.name: {r["id"]: r.asDict() for r in
-                              vg.read(nt.name, include_deleted=True).collect()}
+            held = {nt.name: rows_by_id(vg.read(nt.name, include_deleted=True))
                     for nt in reg.types(kind)}
+            out[kind] = held
             for node_id in kind_ids:
                 first = next((t for t, rows in held.items() if node_id in rows),
                              None)
-                assert vg.locate(kind, node_id) == first, node_id
+                out["locate", node_id] = vg.locate(kind, node_id)
+                assert out["locate", node_id] == first, node_id
                 for tname, rows in held.items():
                     got = vg.get(tname, node_id)
-                    assert (got.asDict() if got else None) == \
-                        rows.get(node_id), (tname, node_id)
+                    out["get", tname, node_id] = got.asDict() if got else None
+                    assert out["get", tname, node_id] == rows.get(node_id), \
+                        (tname, node_id)
+        return out
 
-    def save_age(node_id, age):
-        cur = vg.get("person", node_id)
+    def check():
+        j0 = last_job_id(spark)
+        vg.current_epoch()
+        assert last_job_id(spark) == j0      # the tail fits: no job
+        tail = state()
+        with distributed_regime():
+            assert state() == tail
+
+    def save_age(node_id, age, graph=vg):
+        cur = graph.get("person", node_id)
         upd = spark.createDataFrame(
             [(node_id, cur["name"], age, cur["revision"])],
             "id string, name string, age int, revision long")
-        vg.commit(vg.begin().save("person", upd))
+        graph.commit(graph.begin().save("person", upd))
 
     vg.commit(vg.begin().create("person", _people(spark, [
         ("p1", "ann", 30), ("p2", "bob", 40), ("dup", "dee", 50)])))
     vg.commit(vg.begin().create("knows", spark.createDataFrame(
-        [("e1", "p1", "p2", 1.0, 2019)],
+        [("e1", "p1", "p2", 2.5, 2019)],
         "id string, src string, dst string, weight double, since int")))
     for age in (31, 32, 33):
         save_age("p1", age)
     vg.commit(vg.begin().mark_deleted("person", ["p2"]))
+    # an edge update without src/dst/weight keeps the current ones
+    vg.commit(vg.begin().save("knows", spark.createDataFrame(
+        [("e1", 2020, 0)], "id string, since int, revision long")))
+    assert vg.get("knows", "e1")["src"] == "p1"
+    assert vg.get("knows", "e1")["weight"] == 2.5
     check()                                   # log only
+    # conflicts raise the same error in both regimes and write nothing;
+    # a local-relation write-set is validated by point probe under the
+    # tail, any other one by the fused write; a null id is unknown
+    stale = [("p1", "ann", 99, 0)]
+    stale_schema = T.StructType([
+        T.StructField("id", T.StringType()), T.StructField("name", T.StringType()),
+        T.StructField("age", T.IntegerType()),
+        T.StructField("revision", T.LongType())])
+    for tx in (vg.begin().save("person", spark.createDataFrame(stale,
+                                                               stale_schema)),
+               vg.begin().save("person", local_frame(spark, stale,
+                                                     stale_schema)),
+               vg.begin().mark_deleted("person", ["p1", "ghost"]),
+               vg.begin().mark_deleted("person", [None]),
+               vg.begin().mark_deleted("person", ["ghost", None, "p1"]),
+               vg.begin().save("person", local_frame(
+                   spark, [(None, "x", 1, 0)], stale_schema))):
+        files = sorted(os.listdir(vg.log_path))
+        with pytest.raises(ConflictError) as tail_err:
+            vg.commit(tx)
+        with distributed_regime(), pytest.raises(ConflictError) as dist_err:
+            vg.commit(tx)
+        assert str(tail_err.value) == str(dist_err.value)
+        assert sorted(os.listdir(vg.log_path)) == files
+    # a second handle on the same path is a foreign writer
+    other = VersionedGraph(spark, reg, vg.path)
+    other.commit(other.begin().create("person", _people(spark, [
+        ("p4", "fay", 20)])))
+    save_age("p1", 35, graph=other)
+    check()
     vg.compact()
     save_age("p1", 34)
+    # base-only ids, more than one: the probe semi-joins the base
+    heads = [vg.get("person", i) for i in ("p4", "dup")]
+    vg.commit(vg.begin().save("person", local_frame(
+        spark, [(h["id"], h["name"], 60, h["revision"]) for h in heads],
+        stale_schema)))
+    tx = vg.begin().mark_deleted("person", ["zed", "p4", "ghost", "dup"])
+    files = sorted(os.listdir(vg.log_path))
+    with pytest.raises(ConflictError, match="unknown person id 'ghost'"):
+        vg.commit(tx)
+    with distributed_regime(), \
+            pytest.raises(ConflictError, match="unknown person id 'ghost'"):
+        vg.commit(tx)
+    assert sorted(os.listdir(vg.log_path)) == files
     vg.commit(vg.begin().create("person", _people(spark, [("p3", "cy", 9)])))
     vg.commit(vg.begin().create("robot", spark.createDataFrame(
         [("dup", "r2d2"), ("r1", "c3po")], "id string, name string")))

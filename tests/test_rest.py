@@ -266,9 +266,12 @@ def test_ndjson_format(server):
 
 
 def test_point_requests_job_budget(server):
-    """An id request is a point probe, not a scan of every type: on a
-    store with a base AND a non-empty log, planning a query view runs no
-    job, a GET runs at most 2 and a type lookup 1."""
+    """An id request is a point probe, not a scan of every type, and the
+    driver-held log tail answers for the log. On a store with a base AND
+    a non-empty log: planning a query view and reading the epoch run no
+    job; a GET of a logged id runs none and one of a base-only id 2; a
+    type lookup 1; POST 2; PUT of a base-only id 4 and of a logged one 1;
+    DELETE of a logged id 1."""
     srv, vg = server
     spark = vg.spark
     seed = GraphStore(spark, vg.registry)
@@ -283,15 +286,101 @@ def test_point_requests_job_budget(server):
     vg.commit(vg.begin().save("person", spark.createDataFrame(
         [("p1", "ann", 7, 0)],
         "id string, name string, age int, revision long")))
+    base = f"{srv.address}/graph/main"
 
     def jobs(fn):
         j0 = last_job_id(spark)
         out = fn()
         return last_job_id(spark) - j0, out
 
-    n, _ = jobs(vg.store)
-    assert n == 0
+    assert jobs(vg.store)[0] == 0
+    assert jobs(vg.current_epoch) == (0, 1)
     n, got = jobs(lambda: srv._get_node(vg, "vertex", "p1"))
-    assert n <= 2 and got["age"] == 7 and got["revision"] == 1
+    assert n == 0 and got["age"] == 7 and got["revision"] == 1
+    n, got = jobs(lambda: srv._get_node(vg, "vertex", "p2"))
+    assert n <= 2 and got["age"] == 9
     n, tname = jobs(lambda: vg.locate("edge", "e1"))
     assert n == 1 and tname == "knows"
+    n, (_, got) = jobs(lambda: _req("POST", f"{base}/vertex/person",
+                                    {"id": "p3", "name": "cy"}))
+    assert n <= 2 and got["revision"] == 0
+    n, (_, got) = jobs(lambda: _req("PUT", f"{base}/vertex/p2", {"age": 10}))
+    assert n <= 4 and got["age"] == 10 and got["revision"] == 1
+    n, (_, got) = jobs(lambda: _req("PUT", f"{base}/vertex/p1", {"age": 8}))
+    assert n <= 1 and got["age"] == 8 and got["revision"] == 2
+    n, _ = jobs(lambda: _req("DELETE", f"{base}/vertex/p3"))
+    assert n <= 1 and vg.get("person", "p3")["deleted"] is True
+
+
+def test_request_write_sets_are_local_relations(server):
+    """POST, PUT and DELETE hand commit() write-sets that plan as a JVM
+    LocalRelation, so no Python worker runs on a request path."""
+    from unittest import mock
+
+    srv, vg = server
+    base = f"{srv.address}/graph/main"
+    plans = []
+    commit = vg.commit
+
+    def spy(tx):
+        plans.extend((op, df._jdf.queryExecution().optimizedPlan()
+                      .getClass().getSimpleName()) for op, _, df in tx.ops)
+        return commit(tx)
+
+    with mock.patch.object(vg, "commit", spy):
+        for pid in ("p1", "p2"):
+            _req("POST", f"{base}/vertex/person", {"id": pid, "name": pid})
+        _req("POST", f"{base}/edge/knows", {"id": "e1", "from": "p1",
+                                            "to": "p2", "since": 2019})
+        _req("PUT", f"{base}/vertex/p1", {"age": 4})
+        _req("PUT", f"{base}/edge/e1", {"since": 2020})
+        _req("DELETE", f"{base}/edge/e1")
+        _req("DELETE", f"{base}/vertex/p2")
+    assert [op for op, _ in plans] == ["insert"] * 3 + ["update"] * 2 + \
+        ["delete"] * 2
+    assert {cls for _, cls in plans} == {"LocalRelation"}
+
+
+def test_threaded_gets_during_commits(server):
+    """GETs from more threads than cores, with a short switch interval,
+    while commits stream in: every reply is a committed version (slot and
+    revision move together), no reader ever sees the revision go back,
+    and the last reply is the final state."""
+    import sys
+    import threading
+
+    srv, vg = server
+    url = f"{srv.address}/graph/main/vertex/p1"
+    _req("POST", f"{srv.address}/graph/main/vertex/person",
+         {"id": "p1", "name": "ann", "age": 0})
+    stop, seen, errors = threading.Event(), [], []
+
+    def reader():
+        last = -1
+        try:
+            while not stop.is_set():
+                _, got = _req("GET", url)
+                assert got["age"] == got["revision"] >= last, (got, last)
+                last = got["revision"]
+                seen.append(last)
+        except Exception as ex:  # pragma: no cover - surfaced below
+            errors.append(ex)
+
+    threads = [threading.Thread(target=reader) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for age in range(1, 6):
+            _req("PUT", url, {"age": age})
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(60)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert seen and max(seen) <= 5
+    _, got = _req("GET", url)
+    assert got["age"] == got["revision"] == 5

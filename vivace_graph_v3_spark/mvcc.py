@@ -26,7 +26,13 @@ base snapshot plus the (small) delta log, resolved with
 latest-(epoch, revision)-per-id-wins. The window function runs only over log
 rows touching changed ids — never over the 100 TB base, which contributes via
 a broadcast-able anti-join of changed ids. ``compact()`` folds deltas into the
-base copy-on-write so the delta window stays bounded.
+base copy-on-write so the delta window stays bounded. While the log fits the
+driver bound, each handle holds it as Arrow tables (:class:`_LogTail`), so
+the epoch and point probes of logged ids run no Spark job — what a
+long-lived server's requests need. Scans (``read``) keep the windowed log
+scan: a driver-side window hands Spark a local relation whose projections
+the optimizer evaluates on the driver, one thread, which costs seconds per
+100k logged rows of a type.
 
 The log row schema is fixed across node types: declared slots are carried as a
 JSON payload (the columnar analog of the reference serializing the slot plist
@@ -39,12 +45,19 @@ from __future__ import annotations
 import contextlib
 import os
 import shutil
+import threading
 import time
 from functools import reduce
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import (DataFrame, Row, SparkSession, Window, functions as F,
                          types as T)
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from vivace_graph_v3_spark import util
 from vivace_graph_v3_spark.graph import GraphStore
 from vivace_graph_v3_spark.schema import SYSTEM_COLUMNS, SchemaRegistry
 
@@ -62,6 +75,8 @@ LOG_SCHEMA = T.StructType([
     T.StructField("payload", T.StringType(), True),     # JSON of declared slots
     T.StructField("committed_at", T.DoubleType(), True),
 ])
+_LOG_ARROW = to_arrow_schema(LOG_SCHEMA)
+_ID_SCHEMA = T.StructType([T.StructField("id", T.StringType())])
 
 
 class ConflictError(Exception):
@@ -71,6 +86,109 @@ class ConflictError(Exception):
 
 def _slot_struct(nt) -> T.StructType:
     return T.StructType([T.StructField(n, t, True) for n, t in nt.slots.items()])
+
+
+class _LogTail:
+    """The txn log's rows held on the driver as one Arrow table, with the
+    part-file names they were read from: the long-lived server's copy of
+    the log, so a request reads the log without a Spark job.
+
+    :meth:`rows` refreshes it from one directory listing. Every commit
+    adds part files and nothing but ``compact()`` removes them, so a new
+    name means some writer committed (this process, another one, or
+    ``replay()``) and only the new files are read; a name that vanished
+    means a compaction cleared the log, and everything is read again.
+    Refreshes take a lock, because the REST server runs handlers on
+    several threads."""
+
+    def __init__(self, log_path: str) -> None:
+        self._path = log_path
+        self._lock = threading.Lock()
+        self._reset()
+
+    def rows(self) -> pa.Table | None:
+        """Every log row in ``LOG_SCHEMA``, or None when the log holds
+        more rows than ``util.fits_driver`` allows."""
+        with self._lock:
+            while True:
+                try:
+                    return self._refresh()
+                except FileNotFoundError:   # compact() raced the listing
+                    self._reset()
+
+    def _reset(self) -> None:
+        self._counts: dict[str, int] = {}   # part file -> rows
+        self._read: set[str] = set()        # part files held in _rows
+        self._rows = _LOG_ARROW.empty_table()
+
+    def _refresh(self) -> pa.Table | None:
+        try:
+            names = {f for f in os.listdir(self._path)
+                     if f.startswith("part-")}
+        except FileNotFoundError:           # compact() between two steps
+            names = set()
+        if not names >= self._counts.keys():
+            self._reset()
+        for f in names - self._counts.keys():
+            self._counts[f] = pq.read_metadata(
+                os.path.join(self._path, f)).num_rows
+        if not util.fits_driver(sum(self._counts.values())):
+            return None
+        new = sorted(names - self._read)
+        if new:
+            # one contiguous table: a call filters it whole, whatever the
+            # number of commits since the last compaction
+            self._rows = pa.concat_tables([self._rows] + [
+                pq.read_table(os.path.join(self._path, f))
+                .select(_LOG_ARROW.names).cast(_LOG_ARROW)
+                for f in new]).combine_chunks()
+            self._read.update(new)
+        return self._rows
+
+
+def _raise_conflict(op: str, type_name: str, missing, missing_id, stale,
+                    stale_id) -> None:
+    """OCC's verdict on one op from the counts of unknown ids and stale
+    saves and the least non-null id of each: an unknown id wins over a
+    stale save. A null id is unknown, so it is named None unless a
+    non-null unknown id is named instead."""
+    if missing:
+        raise ConflictError(f"{op} on unknown {type_name} id {missing_id!r}")
+    if stale:
+        raise ConflictError(f"stale save of {type_name} id {stale_id!r}: "
+                            f"carried revision is no longer current")
+
+
+def _is_local(df: DataFrame) -> bool:
+    """Does ``df`` plan as a JVM ``LocalRelation`` (rows held by the
+    driver, collected without a job)?"""
+    return (df._jdf.queryExecution().optimizedPlan().getClass()
+            .getSimpleName() == "LocalRelation")
+
+
+def _head_columns(nt) -> dict[str, str]:
+    """Current-state column -> the ``__cur_*`` name an update or delete
+    row carries it under into ``VersionedGraph._to_log_rows``."""
+    cols = {"revision": "__cur_rev"}
+    if nt.kind == "edge":
+        cols.update(src="__cur_src", dst="__cur_dst", weight="__cur_w")
+    return cols
+
+
+def _latest(rows: pa.Table, nt, ids) -> pa.Table:
+    """``read()``'s rule over driver-held log rows of type ``nt`` and
+    ``ids``: per id, the row with the highest ``(commit_epoch,
+    revision)``."""
+    mask = pc.and_(pc.and_(pc.equal(rows["kind"], nt.kind),
+                           pc.equal(rows["type"], nt.name)),
+                   pc.is_in(rows["id"], value_set=pa.array(ids, pa.string())))
+    rows = rows.filter(mask).sort_by([("id", "ascending"),
+                                      ("commit_epoch", "descending"),
+                                      ("revision", "descending")])
+    key = rows["id"].to_numpy()
+    first = np.ones(len(key), dtype=bool)
+    first[1:] = key[1:] != key[:-1]
+    return rows.filter(pa.array(first))
 
 
 class Transaction:
@@ -98,8 +216,8 @@ class Transaction:
     def mark_deleted(self, type_name: str, ids) -> "Transaction":
         """Soft delete (interface.lisp:15-25): tombstone rows."""
         if not isinstance(ids, DataFrame):
-            ids = self.graph.spark.createDataFrame(
-                [(i,) for i in ids], T.StructType([T.StructField("id", T.StringType())]))
+            ids = util.local_frame(self.graph.spark, [(i,) for i in ids],
+                                   _ID_SCHEMA)
         self.ops.append(("delete", type_name, ids.select("id")))
         return self
 
@@ -115,6 +233,7 @@ class VersionedGraph:
         self.path = path
         self.name = name
         os.makedirs(self.log_path, exist_ok=True)
+        self._tail = _LogTail(self.log_path)
 
     # -- paths ---------------------------------------------------------------
 
@@ -137,9 +256,15 @@ class VersionedGraph:
     def current_epoch(self) -> int:
         """Newest committed epoch: the log's maximum, or the high-water
         mark ``compact()`` recorded before it cleared the log, whichever
-        is larger — epochs never repeat across a compaction."""
-        row = self._log().agg(F.max("commit_epoch")).first()
-        logged = int(row[0]) if row and row[0] is not None else 0
+        is larger — epochs never repeat across a compaction. The maximum
+        comes from the driver-held log tail without a Spark job, or from
+        one aggregate job when the log is past the driver bound."""
+        tail = self._tail.rows()
+        if tail is not None:
+            logged = pc.max(tail["commit_epoch"]).as_py() or 0
+        else:
+            row = self._log().agg(F.max("commit_epoch")).first()
+            logged = int(row[0]) if row and row[0] is not None else 0
         try:
             with open(self._epoch_mark_path) as f:
                 return max(logged, int(f.read()))
@@ -174,36 +299,39 @@ class VersionedGraph:
         Commit-time mutual exclusion is :meth:`_commit_lock`, shared with
         :meth:`compact`.
 
-        OCC validation is FUSED into the serialization job: each
+        A write-set whose update and delete frames are local relations
+        (a request's write) is validated by point probe
+        (:meth:`_probe_heads`) while the log tail fits the driver, before
+        anything is written, then appended as one write. For every other
+        write-set, OCC validation is FUSED into the serialization job: each
         update/delete op carries an Observation whose aggregates are
         computed on the rows as they stream into a staging write; the
         staged files are promoted into the log only after every
-        observation validates. One Spark job per commit instead of three
-        (validation-join checkpoint + probe + write), and a conflicting
-        commit still leaves the log untouched — atomicity is the
+        observation validates. Either way a conflicting commit leaves
+        the log untouched — for the fused path, atomicity is the
         promote-after-validate rename, the same protocol a distributed
         committer uses."""
         with self._commit_lock():
             epoch = self.current_epoch() + 1
-            frames = []
-            checks = []
-            for op, type_name, df in tx.ops:
-                nt = self.registry.get(type_name)
-                fdf, check = self._to_log_rows(op, nt, df, epoch)
-                frames.append(fdf)
-                if check is not None:
-                    checks.append(check)
-            if not frames:
+            ops = [(op, self.registry.get(t), df) for op, t, df in tx.ops]
+            if not ops:
                 return epoch
-            out = frames[0]
-            for fdf in frames[1:]:
-                out = out.unionByName(fdf)
-            if not checks:
-                # insert-only commit: no validation needed, append
-                # directly (coalesce keeps the historical one-file-
-                # per-commit log layout for map-only insert batches)
+            probed = self._probe_heads(ops)
+            if probed is not None:
+                # validated (or insert-only): append directly; coalesce
+                # keeps the one-file-per-commit log layout
+                out = reduce(DataFrame.unionByName, [
+                    self._to_log_rows(op, nt, df, epoch)
+                    for op, nt, df in probed])
                 out.coalesce(1).write.mode("append").parquet(self.log_path)
                 return epoch
+            frames, checks = [], []
+            for op, nt, df in ops:
+                if op != "insert":
+                    df, check = self._observe_heads(op, nt, df)
+                    checks.append(check)
+                frames.append(self._to_log_rows(op, nt, df, epoch))
+            out = reduce(DataFrame.unionByName, frames)
             staging = os.path.join(
                 self.path, f".staging-{epoch}-{os.getpid()}-{time.time_ns()}")
             try:
@@ -213,14 +341,9 @@ class VersionedGraph:
                 out.write.mode("overwrite").parquet(staging)
                 for obs, op, name, check_stale in checks:
                     row = obs.get
-                    if row["missing"]:
-                        raise ConflictError(
-                            f"{op} on unknown {name} id "
-                            f"{row['missing_id']!r}")
-                    if check_stale and row["stale"]:
-                        raise ConflictError(
-                            f"stale save of {name} id {row['stale_id']!r}: "
-                            f"carried revision is no longer current")
+                    _raise_conflict(op, name, row["missing"],
+                                    row["missing_id"], check_stale
+                                    and row["stale"], row["stale_id"])
                 for fname in os.listdir(staging):
                     if fname.startswith("part-"):
                         os.rename(os.path.join(staging, fname),
@@ -229,14 +352,101 @@ class VersionedGraph:
                 shutil.rmtree(staging, ignore_errors=True)
             return epoch
 
-    def _to_log_rows(self, op: str, nt, df: DataFrame, epoch: int):
-        """Serialize one op's rows to log-row shape. Returns
-        ``(frame, check)`` where ``check`` is ``None`` for inserts and
-        ``(Observation, op, type_name, check_stale)`` for update/delete —
-        the OCC probe aggregates ride the commit's single write job via
-        ``observe`` instead of paying a checkpoint + probe job first."""
+    def _heads(self, nt, tail: pa.Table, ids: set) -> dict:
+        """id -> current ``(revision[, src, dst, weight])`` of the ids in
+        ``read(nt, include_deleted=True)``: from the log tail where it
+        holds the id, else from one base probe: ``get()``'s point filter
+        for one id (a request's write), a semi-join against a local frame
+        of the ids for more (one broadcast job more, whatever their
+        number)."""
+        cols = list(_head_columns(nt))
+        heads = {r["id"]: tuple(r[c] for c in cols) for r in
+                 _latest(tail, nt, list(ids)).to_pylist()}
+        rest = ids - heads.keys()
+        if rest:
+            base = self._base(nt)
+            base = (base.filter(F.col("id") == next(iter(rest)))
+                    if len(rest) == 1 else base.join(util.local_frame(
+                        self.spark, [(i,) for i in rest], _ID_SCHEMA),
+                        "id", "left_semi"))
+            heads.update((r["id"], tuple(r[c] for c in cols))
+                         for r in base.select("id", *cols).collect())
+        return heads
+
+    def _probe_heads(self, ops: list) -> list | None:
+        """OCC by point probe, for write-sets whose update and delete
+        frames are local relations — what a request builds with
+        :func:`util.local_frame`, so collecting them runs no job. Look up
+        each id's current state with :meth:`_heads`, raise
+        :class:`ConflictError` for an unknown id or a stale carried
+        revision, and return ``ops`` with those frames rebuilt as local
+        frames carrying the ``__cur_*`` columns. Returns None for any
+        other write-set, or when the log is past the driver bound (the
+        caller then fuses validation into its write)."""
+        checked = [i for i, (op, _, _) in enumerate(ops) if op != "insert"]
+        if not checked:
+            return ops
+        if not all(_is_local(ops[i][2]) for i in checked):
+            return None
+        tail = self._tail.rows()
+        if tail is None:
+            return None
+        out = list(ops)
+        for i in checked:
+            op, nt, df = ops[i]
+            rows = df.collect()
+            heads = self._heads(nt, tail, {r["id"] for r in rows} - {None})
+            missing = [r["id"] for r in rows if r["id"] not in heads]
+            stale = ([r["id"] for r in rows if r["id"] in heads
+                      and r["revision"] is not None
+                      and r["revision"] != heads[r["id"]][0]]
+                     if op == "update" and "revision" in df.columns else [])
+            _raise_conflict(op, nt.name, len(missing),
+                            min((m for m in missing if m is not None),
+                                default=None),
+                            len(stale), min(stale, default=None))
+            declared = nt.struct_type()
+            out[i] = (op, nt, util.local_frame(
+                self.spark, [tuple(r) + heads[r["id"]] for r in rows],
+                T.StructType(df.schema.fields + [
+                    T.StructField(alias, declared[c].dataType)
+                    for c, alias in _head_columns(nt).items()])))
+        return out
+
+    def _observe_heads(self, op: str, nt, df: DataFrame):
+        """OCC fused into the commit's write: join each row to its
+        current state (the ``__cur_*`` columns) and observe, on the rows
+        as they stream into the write, the count and least id of unknown
+        ids and of stale saves. Returns ``(frame, check)`` with ``check``
+        = ``(Observation, op, type_name, check_stale)``."""
         from pyspark.sql import Observation
 
+        cur = self.read(nt.name, include_deleted=True).select(
+            "id", *[F.col(c).alias(alias)
+                    for c, alias in _head_columns(nt).items()])
+        df = df.join(cur, "id", "left")
+        check_stale = (op == "update" and "revision" in df.columns)
+        obs = Observation()
+        df = df.observe(
+            obs,
+            F.sum(F.when(F.col("__cur_rev").isNull(), 1).otherwise(0))
+            .alias("missing"),
+            (F.sum(F.when(F.col("revision") != F.col("__cur_rev"), 1)
+                   .otherwise(0)) if check_stale else F.lit(0))
+            .alias("stale"),
+            F.min(F.when(F.col("__cur_rev").isNull(), F.col("id")))
+            .alias("missing_id"),
+            (F.min(F.when(F.col("revision") != F.col("__cur_rev"),
+                          F.col("id"))) if check_stale
+             else F.lit(None)).alias("stale_id"),
+        )
+        return df, (obs, op, nt.name, check_stale)
+
+    def _to_log_rows(self, op: str, nt, df: DataFrame, epoch: int) -> DataFrame:
+        """Serialize one op's rows to log-row shape. Update and delete rows
+        carry their current state in the ``__cur_*`` columns: the
+        revision is bumped from it, and an edge update keeps the current
+        ``src``/``dst``/``weight`` where the row leaves them null."""
         slots = [c for c in nt.slots if c not in SYSTEM_COLUMNS]
         payload = (F.to_json(F.struct(*[F.col(c) for c in slots if c in df.columns]))
                    if any(c in df.columns for c in slots) else F.lit(None).cast("string"))
@@ -246,37 +456,10 @@ class VersionedGraph:
                else (F.lit(1.0) if nt.kind == "edge" and op == "insert"
                      else F.lit(None).cast("double")))
 
-        check = None
         if op == "insert":
             revision = F.lit(0).cast("long")
             deleted = F.lit(False)
         else:
-            # join current state for revision validation / bump
-            cur = self.read(nt.name, include_deleted=True).select(
-                F.col("id"), F.col("revision").alias("__cur_rev"),
-                *( [F.col("src").alias("__cur_src"), F.col("dst").alias("__cur_dst"),
-                    F.col("weight").alias("__cur_w")] if nt.kind == "edge" else [] ))
-            df = df.join(cur, "id", "left")
-            # OCC probe aggregates observed on the rows streaming into the
-            # commit write — count unknown ids and stale saves; commit()
-            # raises BEFORE promoting the staged files, so a conflict
-            # never becomes visible
-            check_stale = (op == "update" and "revision" in df.columns)
-            obs = Observation()
-            df = df.observe(
-                obs,
-                F.sum(F.when(F.col("__cur_rev").isNull(), 1).otherwise(0))
-                .alias("missing"),
-                (F.sum(F.when(F.col("revision") != F.col("__cur_rev"), 1)
-                       .otherwise(0)) if check_stale else F.lit(0))
-                .alias("stale"),
-                F.min(F.when(F.col("__cur_rev").isNull(), F.col("id")))
-                .alias("missing_id"),
-                (F.min(F.when(F.col("revision") != F.col("__cur_rev"),
-                              F.col("id"))) if check_stale
-                 else F.lit(None)).alias("stale_id"),
-            )
-            check = (obs, op, nt.name, check_stale)
             revision = (F.col("__cur_rev") + 1).cast("long")
             deleted = F.lit(op == "delete")
             if nt.kind == "edge":
@@ -284,7 +467,7 @@ class VersionedGraph:
                 dst = F.coalesce(dst, F.col("__cur_dst"))
                 wgt = F.coalesce(wgt, F.col("__cur_w"))
 
-        out = df.select(
+        return df.select(
             F.lit(epoch).cast("long").alias("commit_epoch"),
             F.lit(nt.kind).alias("kind"),
             F.lit(nt.name).alias("type"),
@@ -296,7 +479,6 @@ class VersionedGraph:
             payload.alias("payload"),
             F.lit(time.time()).alias("committed_at"),
         )
-        return out, check
 
     # -- read path -----------------------------------------------------------
 
@@ -322,7 +504,7 @@ class VersionedGraph:
             # Spark job per read, and read()'s union already requires the
             # base columns to be the declared ones
             return self.spark.read.schema(nt.struct_type()).parquet(p)
-        return self.spark.createDataFrame([], nt.struct_type())
+        return util.local_frame(self.spark, [], nt.struct_type())
 
     def read(self, type_name: str, *, as_of: int | None = None,
              include_deleted: bool = False) -> DataFrame:
@@ -331,7 +513,9 @@ class VersionedGraph:
 
         The per-id window runs only over delta-log rows; base rows join in by
         anti-join on the changed-id set (broadcast-able: the delta is small
-        relative to the base between compactions).
+        relative to the base between compactions). When the log tail holds
+        no row of the type (at or before ``as_of``), the base is the
+        answer, with no log scan, window or join.
         """
         nt = self.registry.get(type_name)
         base = self._base(nt)
@@ -340,6 +524,16 @@ class VersionedGraph:
         if as_of is not None:
             log = log.filter(F.col("commit_epoch") <= as_of)
             base = base.filter(F.col("commit_epoch") <= as_of)
+        tail = self._tail.rows()
+        if tail is not None:
+            mask = pc.and_(pc.equal(tail["kind"], nt.kind),
+                           pc.equal(tail["type"], nt.name))
+            if as_of is not None:
+                mask = pc.and_(mask,
+                               pc.less_equal(tail["commit_epoch"], as_of))
+            if not pc.any(mask).as_py():
+                return (base if include_deleted
+                        else base.filter(~F.col("deleted")))
         w = Window.partitionBy("id").orderBy(F.desc("commit_epoch"),
                                             F.desc("revision"))
         latest = (log.withColumn("__rn", F.row_number().over(w))
@@ -369,25 +563,50 @@ class VersionedGraph:
         tombstoned or not, or None: the store-wide ``lookup-vertex`` /
         ``lookup-edge`` probe (vertex.lisp:84-91).
 
-        One Spark job over narrow id probes, no merge-on-read: an id is in
-        ``read(t, include_deleted=True)`` iff it is in t's base or in t's
-        log rows."""
+        No merge-on-read: an id is in ``read(t, include_deleted=True)``
+        iff it is in t's base or in t's log rows. The log tail answers
+        for the log, so one Spark job probes only the bases of the types
+        ahead of the first logged one (none when that is the first
+        type); past the driver bound the same job also probes the log."""
         types = self.registry.types(kind)
-        probes = [self._base(nt).filter(F.col("id") == node_id)
-                  .select(F.lit(nt.name).alias("type")) for nt in types]
-        probes.append(self._id_log(kind, node_id).select("type"))
-        found = {r["type"] for r in reduce(DataFrame.union, probes).collect()}
+        tail = self._tail.rows()
+        if tail is None:
+            logged = set()
+            probes = [self._id_log(kind, node_id).select("type")]
+        else:
+            hit = tail.filter(pc.and_(pc.equal(tail["kind"], kind),
+                                      pc.equal(tail["id"], node_id)))
+            logged, probes = set(hit["type"].to_pylist()), []
+        for nt in types:
+            if nt.name in logged:   # no later type can come first
+                break
+            probes.append(self._base(nt).filter(F.col("id") == node_id)
+                          .select(F.lit(nt.name).alias("type")))
+        found = logged | ({r["type"] for r in
+                           reduce(DataFrame.union, probes).collect()}
+                          if probes else set())
         return next((nt.name for nt in types if nt.name in found), None)
 
     def get(self, type_name: str, node_id: str) -> Row | None:
         """The current version of one node, tombstone included, or None:
         the row ``read(type_name, include_deleted=True)`` holds for the id.
 
-        One Spark job collects the id's base row and decoded log rows; the
-        winner is picked here by read()'s rule: any log row supersedes the
-        base row (the anti-join), and among log rows the highest
-        ``(commit_epoch, revision)`` wins (the window)."""
+        The winner is read()'s: any log row supersedes the base row (the
+        anti-join), and among log rows the highest ``(commit_epoch,
+        revision)`` wins (the window). When the log tail holds the id,
+        its winner is decoded from a local frame and no Spark job runs;
+        otherwise one job probes the base. Past the driver bound, one job
+        collects the id's base row and decoded log rows."""
         nt = self.registry.get(type_name)
+        tail = self._tail.rows()
+        if tail is not None:
+            won = _latest(tail, nt, [node_id])
+            if won.num_rows:
+                return self._decode(
+                    nt, util.local_frame(self.spark, won, LOG_SCHEMA)).first()
+            rows = self._base(nt).filter(F.col("id") == node_id).collect()
+            return max(rows, key=lambda r: (r["commit_epoch"], r["revision"]),
+                       default=None)
         log = self._id_log(nt.kind, node_id).filter(F.col("type") == nt.name)
         rows = (self._base(nt).filter(F.col("id") == node_id)
                 .withColumn("__log", F.lit(False))

@@ -42,7 +42,7 @@ from pyspark.sql import types as T
 from vivace_graph_v3_spark.graph import GraphStore
 from vivace_graph_v3_spark.util import (
     checkpoint_counted, checkpoint_rebased, collect_bounded, finish_locally,
-    fits_driver, union_find_min)
+    fits_driver, local_frame, union_find_min)
 
 
 def _edge_pairs(graph: GraphStore, edge_type: str | None,
@@ -185,8 +185,7 @@ def _local_pagerank(cg: _CodedGraph, damping: float, max_iter: int,
     if cg.weight is not None:
         w = cg.weight[order]
         deg = np.bincount(src, weights=w, minlength=nc)[src]
-        # a zero out-weight sum sends nothing: Spark's quotient is null
-        # without ANSI mode (with it, the Spark loop raises DIVIDE_BY_ZERO)
+        # a zero out-weight sum sends nothing, as in the Spark loop
         inv = np.divide(w, deg, out=np.zeros_like(w), where=deg != 0)
     else:
         inv = 1.0 / out_edges[src]
@@ -266,10 +265,15 @@ def pagerank(graph: GraphStore, *, edge_type: str | None = None,
     edges = (_edge_pairs(graph, edge_type, weighted=weighted)
              .repartition(nparts, F.col("src")))
     if weighted:
+        # a zero out-weight sum sends nothing (a null share, summed as
+        # absent), as in _local_pagerank; under ANSI mode the bare
+        # quotient would raise DIVIDE_BY_ZERO
         out_deg = edges.groupBy("src").agg(F.sum("weight").alias("deg"))
         edges_w = (edges.join(out_deg, "src")
                    .select("src", "dst",
-                           (F.col("weight") / F.col("deg")).alias("inv")))
+                           F.when(F.col("deg") != 0,
+                                  F.col("weight") / F.col("deg"))
+                           .alias("inv")))
     else:
         out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         edges_w = (edges.join(out_deg, "src")
@@ -925,7 +929,8 @@ def shortest_paths(graph: GraphStore, roots, *, edge_type: str | None = None,
     if isinstance(roots, DataFrame):
         dist = roots.select("id").dropDuplicates()
     else:
-        dist = spark.createDataFrame([(r,) for r in roots], ["id"])
+        dist = local_frame(spark, [(r,) for r in roots], T.StructType(
+            [T.StructField("id", edges.schema["src"].dataType)]))
     local = finish_locally(
         edges, edges.count(),
         lambda pdf: _local_sssp(
@@ -1168,7 +1173,9 @@ def hits(graph: GraphStore, *, edge_type: str | None = None,
     """HITS hubs & authorities (Kleinberg 1999) over active edges:
     alternating hub = sum of pointed-to authorities, authority = sum of
     incoming hubs. Returns (id, hub, auth) for every vertex, each score
-    max-normalized to [0, 1].
+    max-normalized to [0, 1]. Every regime starts from authority 1.0 on
+    every edge endpoint, so round 1's hub is the out-degree, counting
+    edges whose ``dst`` is not a vertex.
 
     Numerics: the iteration runs UN-normalized (the update is linear, so
     any per-round scaling only rescales the eigenvector — rankings are
@@ -1222,6 +1229,13 @@ def hits(graph: GraphStore, *, edge_type: str | None = None,
     # trade pagerank makes; memory holds 2x edges, which on a cluster is
     # storage-tier disk/memory, not driver.
     ob_h, ob_a = Observation(), Observation()
+
+    def _seed_hub(p):
+        # round 1's hub with auth_0 = 1.0 on every edge endpoint, vertex
+        # or not: the out-degree sum, the same double in every regime
+        return (p.groupBy("src").agg(F.sum(F.lit(1.0)).alias("score"))
+                .withColumnRenamed("src", "id"))
+
     if fits_driver(n_v):
         # bounded-state regime (as in pagerank; measured same-window
         # 7.46 -> 4.49 s at sf0.1, bit-identical output): the |V|-row
@@ -1230,11 +1244,9 @@ def hits(graph: GraphStore, *, edge_type: str | None = None,
         # streams map-side through every half-round and the only
         # exchange per half-round is the |V|-bounded message aggregate.
         # Round 1's hub is seeded directly as the out-degree sum
-        # (auth_0 = 1.0 everywhere, so hub_1(src) = sum of 1.0 over
-        # src's out-edges — the identical double), skipping one
-        # broadcast join. Past the bound the co-partitioned formulation
-        # below is the one that holds at 100 TB, where |V| dwarfs any
-        # broadcast budget.
+        # (``_seed_hub``), skipping one broadcast join. Past the bound
+        # the co-partitioned formulation below is the one that holds at
+        # 100 TB, where |V| dwarfs any broadcast budget.
         pairs = (_edge_pairs(graph, edge_type).select("src", "dst")
                  .localCheckpoint(eager=True))
 
@@ -1248,11 +1260,6 @@ def hits(graph: GraphStore, *, edge_type: str | None = None,
                     .groupBy("dst").agg(F.sum("score").alias("score"))
                     .withColumnRenamed("dst", "id"))
 
-        def _seed_hub():
-            return (pairs.groupBy("src")
-                    .agg(F.sum(F.lit(1.0)).alias("score"))
-                    .withColumnRenamed("src", "id"))
-
         auth = None
         for it in range(max_iter - 1):
             # the loop's hub feeds exactly ONE consumer (this round's
@@ -1261,10 +1268,10 @@ def hits(graph: GraphStore, *, edge_type: str | None = None,
             # single materialization (bit-identical, measured ~7% off
             # the iteration chain at sf0.1; only the FINAL hub, read by
             # two consumers, is checkpointed below)
-            hub = _seed_hub() if it == 0 else _hub_from(auth)
+            hub = _seed_hub(pairs) if it == 0 else _hub_from(auth)
             auth = _auth_from(hub).localCheckpoint(eager=True)
         # final round (observations ride the checkpoints, as below)
-        hub = ((_seed_hub() if max_iter == 1 else _hub_from(auth))
+        hub = ((_seed_hub(pairs) if max_iter == 1 else _hub_from(auth))
                .observe(ob_h, F.max("score").alias("m"))
                .localCheckpoint(eager=True))
         auth = (_auth_from(hub)
@@ -1274,8 +1281,6 @@ def hits(graph: GraphStore, *, edge_type: str | None = None,
         pairs = _edge_pairs(graph, edge_type)
         e_by_dst = pairs.repartition(nparts, F.col("dst")).persist()
         e_by_src = pairs.repartition(nparts, F.col("src")).persist()
-        auth = vertices.withColumn("score", F.lit(1.0))
-        hub = None
 
         def _hub_from(a):
             return (e_by_dst.join(a, e_by_dst["dst"] == a["id"])
@@ -1288,8 +1293,10 @@ def hits(graph: GraphStore, *, edge_type: str | None = None,
                     .withColumnRenamed("dst", "id"))
 
         try:
+            # the seed aggregates the src-hashed copy: no extra exchange
+            hub = _seed_hub(e_by_src)
             for _ in range(max_iter - 1):
-                auth = _auth_from(_hub_from(auth))
+                hub = _hub_from(_auth_from(hub))
             # final round: checkpoint hub FIRST, then derive auth from the
             # checkpointed hub — deriving both from the lazy chain would
             # execute the whole chain twice. The normalization constants
@@ -1297,7 +1304,7 @@ def hits(graph: GraphStore, *, edge_type: str | None = None,
             # (fire on eager localCheckpoint, same as pagerank's dangling
             # probe): ZERO extra jobs instead of a separate 2x|V|-scan
             # collect.
-            hub = (_hub_from(auth)
+            hub = (hub
                    .observe(ob_h, F.max("score").alias("m"))
                    .localCheckpoint(eager=True))
             auth = (_auth_from(hub)
@@ -1484,8 +1491,9 @@ def _landmark_levels(graph: GraphStore, landmarks: list[str], *,
         scale=2 if undirected else 1)
     if local is not None:
         return local
-    visited = (spark.createDataFrame([(l, l, 0) for l in landmarks],
-                                     "lm string, id string, dist long")
+    visited = (local_frame(spark, [(l, l, 0) for l in landmarks],
+                           T.StructType.fromDDL(
+                               "lm string, id string, dist long"))
                .localCheckpoint(eager=True))
     frontier = visited
     try:
@@ -1786,8 +1794,9 @@ def landmark_stress(graph: GraphStore, landmarks: list[str], *,
         scale=2 if undirected else 1)
     if local is not None:
         return local
-    level0 = (spark.createDataFrame([(l, l, 1) for l in landmarks],
-                                    "lm string, id string, sigma long")
+    level0 = (local_frame(spark, [(l, l, 1) for l in landmarks],
+                          T.StructType.fromDDL(
+                              "lm string, id string, sigma long"))
               .localCheckpoint(eager=True))
     levels = [level0]
     visited = level0.select("lm", "id")

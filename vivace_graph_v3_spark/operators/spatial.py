@@ -24,12 +24,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from vivace_graph_v3_spark.functions.geohash import (
     covering_for_radius, geohash_covering, _pick_precision)
 from vivace_graph_v3_spark.functions.geometry import (
     haversine_m, point_in_polygon_udf, polygon_bbox)
+from vivace_graph_v3_spark.util import local_frame
 
 DEFAULT_PRECISION = 7  # ~150 m cells; the reference's spatial opt-in default
 
@@ -64,7 +65,8 @@ def _cell_filter(df: DataFrame, cells: list[str], precision: int,
     if len(cells) <= 256:
         return df.filter(prefix.isin(cells))
     spark = df.sparkSession
-    cells_df = spark.createDataFrame([(c,) for c in cells], ["__cell"])
+    cells_df = local_frame(spark, [(c,) for c in cells],
+                           StructType([StructField("__cell", StringType())]))
     return (df.withColumn("__cell", prefix)
             .join(F.broadcast(cells_df), "__cell", "left_semi")
             .drop("__cell"))

@@ -17,10 +17,10 @@ small relative to edges and broadcasts when under the AQE threshold.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from vivace_graph_v3_spark.graph import GraphStore
-from vivace_graph_v3_spark.util import fits_driver
+from vivace_graph_v3_spark.util import fits_driver, local_frame
 
 
 def traverse(graph: GraphStore, roots, *, direction: str = "out",
@@ -87,7 +87,8 @@ def traverse(graph: GraphStore, roots, *, direction: str = "out",
     if isinstance(roots, DataFrame):
         frontier = roots.select("id").dropDuplicates()
     else:
-        frontier = spark.createDataFrame([(r,) for r in roots], ["id"])
+        frontier = local_frame(spark, [(r,) for r in roots],
+                               T.StructType([T.StructField("id", T.StringType())]))
     frontier = frontier.withColumn("depth", F.lit(0))
     if include_paths:
         frontier = frontier.withColumn("path", F.array(F.col("id")))

@@ -30,8 +30,10 @@ Point CRUD flows through the MVCC transaction log (one commit per request —
 the ``with-transaction`` analog), so OCC conflict detection, tombstones and
 time travel all apply to REST writers too. Id requests resolve through
 the store's point probes (``VersionedGraph.locate`` / ``get``, the
-reference's hash-index ``lookup-vertex``), not per-type scans. This is not
-the 100 TB data path — bulk loads go through Spark jobs — it is the
+reference's hash-index ``lookup-vertex``), not per-type scans, and the
+store's driver-held log tail answers for the log; write-sets are local
+frames (``util.local_frame``), so no Python worker runs per request. This
+is not the 100 TB data path — bulk loads go through Spark jobs — it is the
 operational surface the reference offers, kept faithfully thin.
 
 Error mapping (rest.lisp:420-433): malformed body/params → 400, unknown
@@ -51,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from vivace_graph_v3_spark.mvcc import ConflictError, VersionedGraph
+from vivace_graph_v3_spark.util import local_frame
 
 # def-rest-procedure registry (rest.lisp:6-8, 340-357): name -> fn(graph,
 # params) -> JSON-able. The server author owns the procedure body.
@@ -315,8 +318,9 @@ class RestServer:
             fields.append(T.StructField(sname, stype, True))
             values[sname] = _coerce(slots.get(sname), stype)
         schema = T.StructType(fields)
-        return vg.spark.createDataFrame(
-            [tuple(values[f.name] for f in schema.fields)], schema)
+        return local_frame(vg.spark,
+                           [tuple(values[f.name] for f in schema.fields)],
+                           schema)
 
     def _create_node(self, vg, kind, type_name, params):
         try:

@@ -63,6 +63,34 @@ def collect_bounded(df: DataFrame):
     return pdf if fits_driver(len(pdf)) else None
 
 
+def local_frame(spark, rows, schema) -> DataFrame:
+    """A driver-built frame as a JVM ``LocalRelation``: ``rows`` (tuples
+    in ``schema`` field order, or a pyarrow Table already in that shape)
+    go over Arrow, and ``collect()`` on the result runs no Spark job.
+
+    Request paths must never call ``spark.createDataFrame(list)``
+    instead: PySpark parallelizes the list and re-maps it through a
+    Python RDD, so every job over that frame runs Python-worker tasks
+    (about 0.5 CPU s more per small write, and one job to collect what
+    the driver already held). The optimizer folds projections, filters
+    and limits over a ``LocalRelation`` into a new one, so plans stay
+    local until they meet a scan.
+
+    Values are converted with the schema's own ``toInternal``, so every
+    type reads back exactly as ``createDataFrame(rows, schema)`` would
+    give it (naive datetimes as local time, dates, decimals, arrays)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(rows, pa.Table):
+        arrow_schema = to_arrow_schema(schema)
+        internal = [schema.toInternal(r) for r in rows]
+        rows = pa.Table.from_arrays(
+            [pa.array([r[i] for r in internal], type=f.type)
+             for i, f in enumerate(arrow_schema)], schema=arrow_schema)
+    return spark.createDataFrame(rows, schema)
+
+
 def finish_locally(df: DataFrame, n: int, kernel, schema, *,
                    scale: int = 1) -> DataFrame | None:
     """Bounded local finish for an iterative operator: when ``df``
