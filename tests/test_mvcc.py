@@ -8,7 +8,7 @@ import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import types as T
 
-from vivace_graph_v3_spark.mvcc import ConflictError, VersionedGraph
+from vivace_graph_v3_spark.mvcc import LOG_SCHEMA, ConflictError, VersionedGraph
 from vivace_graph_v3_spark.schema import SchemaRegistry
 from vivace_graph_v3_spark.util import local_frame
 
@@ -163,6 +163,55 @@ def test_multi_type_atomic_commit(vg, spark):
     assert vg.read("knows", as_of=epoch - 1).count() == 0
 
 
+def test_timestamp_slots_keep_microseconds(spark, tmp_path):
+    """A timestamp slot reads back with its microseconds through the log
+    (``read``, ``get``, ``as_of``, in both regimes), after ``compact()``
+    and after ``snapshot`` then ``replay``; a payload written with
+    milliseconds still parses."""
+    import datetime
+
+    reg = SchemaRegistry()
+    reg.def_vertex("ev", {"at": T.TimestampType(),
+                          "wall": T.TimestampNTZType()})
+    vg = VersionedGraph(spark, reg, str(tmp_path / "g"))
+    t1 = datetime.datetime(2021, 2, 3, 4, 5, 6, 123456)
+    t2 = datetime.datetime(2022, 12, 31, 23, 59, 59, 999999)
+    schema = "id string, at timestamp, wall timestamp_ntz"
+    e1 = vg.commit(vg.begin().create("ev", spark.createDataFrame(
+        [("a", t1, t1)], schema)))
+    vg.commit(vg.begin().save("ev", spark.createDataFrame(
+        [("a", t2, t2, 0)], schema + ", revision long")))
+
+    def slots(row):
+        return row["at"], row["wall"]
+
+    def check(graph, *, then=True):
+        assert slots(graph.read("ev").first()) == (t2, t2)
+        assert slots(graph.get("ev", "a")) == (t2, t2)
+        if then:
+            assert slots(graph.read("ev", as_of=e1).first()) == (t1, t1)
+
+    check(vg)
+    with distributed_regime():
+        check(vg)
+    snap = str(tmp_path / "snap")
+    vg.snapshot(snap)
+    check(VersionedGraph.replay(spark, reg, snap, str(tmp_path / "g2")),
+          then=False)
+    vg.compact()
+    check(vg, then=False)
+    # a payload logged with milliseconds, as older commits wrote it
+    old = spark.createDataFrame([(
+        9, "vertex", "ev", "insert", "b", 0, False, None, None, None,
+        '{"at":"2020-01-01T00:00:00.250Z","wall":"2020-01-01T00:00:00.250"}',
+        0.0)], LOG_SCHEMA)
+    old.write.mode("append").parquet(vg.log_path)
+    want = datetime.datetime(2020, 1, 1, 0, 0, 0, 250000)
+    assert slots(vg.get("ev", "b")) == (want, want)
+    with distributed_regime():
+        assert slots(vg.get("ev", "b")) == (want, want)
+
+
 def test_compact_waits_for_commit_lock(vg):
     """compact() takes the commit lock: while a writer holds it, a
     compaction must not start, or it would delete the writer's commit
@@ -185,35 +234,60 @@ def test_compact_waits_for_commit_lock(vg):
     assert not t.is_alive() and done
 
 
+def _comparable(row: dict) -> dict:
+    """A row dict whose NaNs compare equal."""
+    return {k: "NaN" if isinstance(v, float) and v != v else v
+            for k, v in row.items()}
+
+
 def test_point_access_matches_merge_on_read(spark, tmp_path):
     """Differential test: ``get`` against ``read(t, include_deleted=True)``
     filtered to the id, and ``locate`` against probing each type's
-    merge-on-read in registry order; and every read (``as_of`` included),
-    get, locate and ``current_epoch`` answered from the driver-held log
-    tail against the same call past the driver bound. Covers log-only
-    inserts, updates, tombstones, an edge update that keeps its
-    endpoints and weight, stale, missing-id and null-id conflicts on both
-    commit paths (point probe, fused write), a probe of several base-only
-    ids, a foreign writer, a compacted base, commits after compact(),
-    log rows whose epoch is below the base's (replay), an unknown id and
-    one id held by two types."""
+    merge-on-read in registry order; and every read (``as_of`` and
+    ``include_deleted`` included), store view, get, locate, edge listing
+    (``incident_edges``, which past the bound is the
+    ``store().active_edges()`` filter) and ``current_epoch`` answered from
+    the driver-held log tail against the same call past the driver bound.
+    Covers log-only inserts, updates, tombstones (of a vertex, so an edge
+    loses an endpoint, and of an edge), an edge update that keeps its
+    endpoints and weight, a payload of null, NaN, +-Infinity, date,
+    decimal, array and timestamp slots, stale, missing-id and null-id
+    conflicts on both commit paths (point probe, fused write), a probe of
+    several base-only ids, a foreign writer, a compacted base, commits
+    after compact(), log rows whose epoch is below the base's (replay), an
+    unknown id, a vertex with no edges and one id held by two types."""
+    import datetime
+    import decimal
+
     reg = SchemaRegistry()
     reg.def_vertex("person", {"name": T.StringType(), "age": T.IntegerType()},
                    keep_revisions=1)
     reg.def_vertex("robot", {"name": T.StringType()})
-    reg.def_edge("knows", {"since": T.IntegerType()})
+    reg.def_edge("knows", {"since": T.IntegerType(), "x": T.DoubleType(),
+                           "d": T.DateType(), "m": T.DecimalType(10, 2),
+                           "a": T.ArrayType(T.IntegerType()),
+                           "ts": T.TimestampType()})
     vg = VersionedGraph(spark, reg, str(tmp_path / "g"))
     ids = {"vertex": ["p1", "p2", "p3", "p4", "dup", "r1", "nobody"],
-           "edge": ["e1"]}
+           "edge": ["e1", "e2", "e3"]}
 
     def rows_by_id(df):
-        return {r["id"]: r.asDict() for r in df.collect()}
+        return {r["id"]: _comparable(r.asDict()) for r in df.collect()}
+
+    def rows(df):
+        return sorted(repr(sorted(_comparable(r.asDict()).items()))
+                      for r in df.collect())
 
     def state():
         epoch = vg.current_epoch()
         out = {"epoch": epoch}
         for nt in reg.types():
             out[nt.name] = rows_by_id(vg.read(nt.name, as_of=epoch - 1))
+        then = vg.store(as_of=epoch - 1)
+        out["store"] = rows(then.scan_vertices()), rows(then.active_edges())
+        # past the bound, incident_edges is the active_edges() filter
+        for node_id in ("p1", "dup", "r1"):
+            out["edges", node_id] = rows(vg.incident_edges(node_id))
         for kind, kind_ids in ids.items():
             held = {nt.name: rows_by_id(vg.read(nt.name, include_deleted=True))
                     for nt in reg.types(kind)}
@@ -223,11 +297,12 @@ def test_point_access_matches_merge_on_read(spark, tmp_path):
                              None)
                 out["locate", node_id] = vg.locate(kind, node_id)
                 assert out["locate", node_id] == first, node_id
-                for tname, rows in held.items():
+                for tname, held_rows in held.items():
                     got = vg.get(tname, node_id)
-                    out["get", tname, node_id] = got.asDict() if got else None
-                    assert out["get", tname, node_id] == rows.get(node_id), \
-                        (tname, node_id)
+                    out["get", tname, node_id] = (_comparable(got.asDict())
+                                                  if got else None)
+                    assert out["get", tname, node_id] == \
+                        held_rows.get(node_id), (tname, node_id)
         return out
 
     def check():
@@ -247,15 +322,24 @@ def test_point_access_matches_merge_on_read(spark, tmp_path):
 
     vg.commit(vg.begin().create("person", _people(spark, [
         ("p1", "ann", 30), ("p2", "bob", 40), ("dup", "dee", 50)])))
-    vg.commit(vg.begin().create("knows", spark.createDataFrame(
-        [("e1", "p1", "p2", 2.5, 2019)],
-        "id string, src string, dst string, weight double, since int")))
+    ts = datetime.datetime(2021, 2, 3, 4, 5, 6, 123456)
+    vg.commit(vg.begin().create("knows", spark.createDataFrame([
+        ("e1", "p1", "p2", 2.5, 2019, None, None, None, None, None),
+        ("e2", "p1", "dup", 1.0, None, float("nan"),
+         datetime.date(2020, 2, 29), decimal.Decimal("12.34"),
+         [1, None, 3], ts),
+        ("e3", "dup", "p1", 1.0, 2001, float("inf"), None,
+         decimal.Decimal("-0.50"), [], ts)],
+        "id string, src string, dst string, weight double, since int, "
+        "x double, d date, m decimal(10,2), a array<int>, ts timestamp")))
+    vg.commit(vg.begin().mark_deleted("knows", ["e3"]))
     for age in (31, 32, 33):
         save_age("p1", age)
     vg.commit(vg.begin().mark_deleted("person", ["p2"]))
     # an edge update without src/dst/weight keeps the current ones
     vg.commit(vg.begin().save("knows", spark.createDataFrame(
-        [("e1", 2020, 0)], "id string, since int, revision long")))
+        [("e1", 2020, float("-inf"), 0)],
+        "id string, since int, x double, revision long")))
     assert vg.get("knows", "e1")["src"] == "p1"
     assert vg.get("knows", "e1")["weight"] == 2.5
     check()                                   # log only

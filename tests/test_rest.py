@@ -271,7 +271,8 @@ def test_point_requests_job_budget(server):
     a non-empty log: planning a query view and reading the epoch run no
     job; a GET of a logged id runs none and one of a base-only id 2; a
     type lookup 1; POST 2; PUT of a base-only id 4 and of a logged one 1;
-    DELETE of a logged id 1."""
+    DELETE of a logged id 1; a named query over the logged type 3, a
+    pattern query 5, and an edge listing 3."""
     srv, vg = server
     spark = vg.spark
     seed = GraphStore(spark, vg.registry)
@@ -310,6 +311,24 @@ def test_point_requests_job_budget(server):
     assert n <= 1 and got["age"] == 8 and got["revision"] == 2
     n, _ = jobs(lambda: _req("DELETE", f"{base}/vertex/p3"))
     assert n <= 1 and vg.get("person", "p3")["deleted"] is True
+    # queries over a type with log rows read its winners from the tail
+    def_query("aged", vars=["?p", "?a"],
+              goals=[("is-a", "?p", "person"),
+                     ("node-slot-value", "?p", "age", "?a"),
+                     ("param", "?min", "min_age"),
+                     (">=", "?a", "?min")],
+              params={"min_age": "int"}, limit=25)
+    n, (_, got) = jobs(lambda: _req("POST", f"{base}/query/aged",
+                                    {"min_age": 8}))
+    assert n <= 3 and sorted((r["p"], r["a"]) for r in got) == \
+        [("p1", 8), ("p2", 10)]
+    spec = {"match": [{"vertex": "?p", "type": "person"}],
+            "where": [{"slot": ["?p", "age"], "op": ">", "value": 8}],
+            "select": [{"slot": ["?p", "name"], "as": "?n"}]}
+    n, (_, got) = jobs(lambda: _req("POST", f"{base}/query", spec))
+    assert n <= 5 and [r["n"] for r in got] == ["bob"]
+    n, (_, got) = jobs(lambda: _req("GET", f"{base}/vertex/p1/edges"))
+    assert n <= 3 and [e["id"] for e in got["out"]] == ["e1"]
 
 
 def test_request_write_sets_are_local_relations(server):

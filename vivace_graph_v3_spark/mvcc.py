@@ -27,12 +27,13 @@ latest-(epoch, revision)-per-id-wins. The window function runs only over log
 rows touching changed ids — never over the 100 TB base, which contributes via
 a broadcast-able anti-join of changed ids. ``compact()`` folds deltas into the
 base copy-on-write so the delta window stays bounded. While the log fits the
-driver bound, each handle holds it as Arrow tables (:class:`_LogTail`), so
-the epoch and point probes of logged ids run no Spark job — what a
-long-lived server's requests need. Scans (``read``) keep the windowed log
-scan: a driver-side window hands Spark a local relation whose projections
-the optimizer evaluates on the driver, one thread, which costs seconds per
-100k logged rows of a type.
+driver bound, each handle holds it as Arrow tables (:class:`_LogTail`), with
+each logged type's rows decoded once, when their file is first read for that
+type. The epoch and point probes of logged ids then run no Spark job, and a
+scan (``read``) hands Spark the base without the logged ids plus the logged
+winners as a local frame of typed rows: no log scan, window or payload
+decode per read — what a long-lived server's requests need. Past the bound,
+the windowed log scan above is the read.
 
 The log row schema is fixed across node types: declared slots are carried as a
 JSON payload (the columnar analog of the reference serializing the slot plist
@@ -77,6 +78,13 @@ LOG_SCHEMA = T.StructType([
 ])
 _LOG_ARROW = to_arrow_schema(LOG_SCHEMA)
 _ID_SCHEMA = T.StructType([T.StructField("id", T.StringType())])
+_PAYLOAD_SCHEMA = T.StructType([T.StructField("payload", T.StringType())])
+# Up to this many driver-held ids narrow a frame as an IN list, which the
+# scan filters and which runs no job; more go in as a broadcast join
+# against a local frame of them: one job more, but planned in constant
+# time, while an IN list costs ~0.15 ms per id to build over py4j (on a
+# 4-core host the two cost about the same at 1000 ids).
+_IN_LIST_IDS = 1000
 
 
 class ConflictError(Exception):
@@ -89,20 +97,24 @@ def _slot_struct(nt) -> T.StructType:
 
 
 class _LogTail:
-    """The txn log's rows held on the driver as one Arrow table, with the
-    part-file names they were read from: the long-lived server's copy of
-    the log, so a request reads the log without a Spark job.
+    """The txn log's rows held on the driver as Arrow, with the part-file
+    names they were read from: the long-lived server's copy of the log,
+    so a request reads the log without a Spark job. Each logged type's
+    rows are also kept decoded to typed node rows (:meth:`typed`), so a
+    payload is decoded once, not once per read.
 
     :meth:`rows` refreshes it from one directory listing. Every commit
     adds part files and nothing but ``compact()`` removes them, so a new
     name means some writer committed (this process, another one, or
-    ``replay()``) and only the new files are read; a name that vanished
-    means a compaction cleared the log, and everything is read again.
-    Refreshes take a lock, because the REST server runs handlers on
-    several threads."""
+    ``replay()``) and only the new files are read, each appended as its
+    own chunk; a name that vanished means a compaction cleared the log,
+    and the raw and decoded rows are dropped and everything is read
+    again. Refreshes take a lock, because the REST server runs handlers
+    on several threads."""
 
-    def __init__(self, log_path: str) -> None:
+    def __init__(self, log_path: str, decode) -> None:
         self._path = log_path
+        self._decode = decode     # (nt, log rows of nt) -> typed rows
         self._lock = threading.Lock()
         self._reset()
 
@@ -110,16 +122,42 @@ class _LogTail:
         """Every log row in ``LOG_SCHEMA``, or None when the log holds
         more rows than ``util.fits_driver`` allows."""
         with self._lock:
-            while True:
-                try:
-                    return self._refresh()
-                except FileNotFoundError:   # compact() raced the listing
-                    self._reset()
+            return self._current()
+
+    def typed(self, nt) -> pa.Table | None:
+        """The log rows of type ``nt`` as ``decode`` made them, in log
+        order, or None past the driver bound. Only the rows that arrived
+        since the last call are decoded, and from the same refresh that
+        the returned rows reflect."""
+        with self._lock:
+            rows = self._current()
+            if rows is None:
+                return None
+            seen, typed = self._typed.get((nt.kind, nt.name), (0, None))
+            if typed is None or seen < rows.num_rows:
+                new = rows.slice(seen)
+                new = new.filter(pc.and_(pc.equal(new["kind"], nt.kind),
+                                         pc.equal(new["type"], nt.name)))
+                if typed is None:
+                    typed = self._decode(nt, new)
+                elif new.num_rows:
+                    typed = pa.concat_tables([typed, self._decode(nt, new)])
+                self._typed[nt.kind, nt.name] = (rows.num_rows, typed)
+            return typed
+
+    def _current(self) -> pa.Table | None:
+        while True:
+            try:
+                return self._refresh()
+            except FileNotFoundError:   # compact() raced the listing
+                self._reset()
 
     def _reset(self) -> None:
         self._counts: dict[str, int] = {}   # part file -> rows
         self._read: set[str] = set()        # part files held in _rows
         self._rows = _LOG_ARROW.empty_table()
+        # (kind, type) -> (rows of _rows decoded, typed rows)
+        self._typed: dict[tuple[str, str], tuple[int, pa.Table]] = {}
 
     def _refresh(self) -> pa.Table | None:
         try:
@@ -136,12 +174,11 @@ class _LogTail:
             return None
         new = sorted(names - self._read)
         if new:
-            # one contiguous table: a call filters it whole, whatever the
-            # number of commits since the last compaction
+            # one chunk per file, no copy of the rows already held
             self._rows = pa.concat_tables([self._rows] + [
                 pq.read_table(os.path.join(self._path, f))
                 .select(_LOG_ARROW.names).cast(_LOG_ARROW)
-                for f in new]).combine_chunks()
+                for f in new])
             self._read.update(new)
         return self._rows
 
@@ -175,20 +212,57 @@ def _head_columns(nt) -> dict[str, str]:
     return cols
 
 
-def _latest(rows: pa.Table, nt, ids) -> pa.Table:
-    """``read()``'s rule over driver-held log rows of type ``nt`` and
-    ``ids``: per id, the row with the highest ``(commit_epoch,
-    revision)``."""
-    mask = pc.and_(pc.and_(pc.equal(rows["kind"], nt.kind),
-                           pc.equal(rows["type"], nt.name)),
-                   pc.is_in(rows["id"], value_set=pa.array(ids, pa.string())))
-    rows = rows.filter(mask).sort_by([("id", "ascending"),
-                                      ("commit_epoch", "descending"),
-                                      ("revision", "descending")])
-    key = rows["id"].to_numpy()
+def _latest(rows: pa.Table, *, ids=None, as_of: int | None = None
+            ) -> pa.Table:
+    """``read()``'s rule over driver-held rows of one type (optionally
+    only ``ids``, and only commits at or before ``as_of``): per id, the
+    row with the highest ``(commit_epoch, revision)``."""
+    if ids is not None:
+        rows = rows.filter(pc.is_in(rows["id"],
+                                    value_set=pa.array(ids, pa.string())))
+    if as_of is not None:
+        rows = rows.filter(pc.less_equal(rows["commit_epoch"], as_of))
+    rows = rows.sort_by([("id", "ascending"), ("commit_epoch", "descending"),
+                         ("revision", "descending")])
+    key = rows["id"].combine_chunks()
     first = np.ones(len(key), dtype=bool)
-    first[1:] = key[1:] != key[:-1]
+    first[1:] = pc.not_equal(key[1:], key[:-1]).to_numpy(
+        zero_copy_only=False)
     return rows.filter(pa.array(first))
+
+
+def _with_slots(df: DataFrame, nt, *cols) -> DataFrame:
+    """``cols`` of ``df`` and its ``payload`` decoded to the declared slot
+    columns of ``nt``."""
+    return (df.withColumn("__p", F.from_json("payload", _slot_struct(nt)))
+            .select(*cols, *[F.col(f"__p.{c}").alias(c) for c in nt.slots]))
+
+
+def _by_ids(spark, df: DataFrame, ids, how: str) -> DataFrame:
+    """The rows of ``df`` whose ``id`` is in (``how="left_semi"``) or not
+    in (``"left_anti"``) the non-null pyarrow string array ``ids``."""
+    if len(ids) <= _IN_LIST_IDS:
+        hit = F.col("id").isin(ids.to_pylist())
+        return df.filter(hit if how == "left_semi" else ~hit)
+    return df.join(F.broadcast(util.local_frame(
+        spark, pa.table({"id": ids}), _ID_SCHEMA)), "id", how)
+
+
+def _typed_schema(nt) -> T.StructType:
+    """The rows ``read()`` takes from the log: the declared columns, every
+    one nullable, since a log row may leave an edge's endpoints and weight
+    and any slot null."""
+    return T.StructType([T.StructField(f.name, f.dataType, True)
+                         for f in nt.struct_type()])
+
+
+def _slots_json(cols) -> F.Column:
+    """Slot columns -> the log's JSON payload. Timestamps keep their
+    microseconds (``to_json``'s default format writes milliseconds);
+    ``from_json``'s default parser reads either."""
+    return F.to_json(F.struct(*cols), {
+        "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+        "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"})
 
 
 class Transaction:
@@ -233,7 +307,7 @@ class VersionedGraph:
         self.path = path
         self.name = name
         os.makedirs(self.log_path, exist_ok=True)
-        self._tail = _LogTail(self.log_path)
+        self._tail = _LogTail(self.log_path, self._decode_rows)
 
     # -- paths ---------------------------------------------------------------
 
@@ -352,23 +426,18 @@ class VersionedGraph:
                 shutil.rmtree(staging, ignore_errors=True)
             return epoch
 
-    def _heads(self, nt, tail: pa.Table, ids: set) -> dict:
+    def _heads(self, nt, typed: pa.Table, ids: set) -> dict:
         """id -> current ``(revision[, src, dst, weight])`` of the ids in
-        ``read(nt, include_deleted=True)``: from the log tail where it
-        holds the id, else from one base probe: ``get()``'s point filter
-        for one id (a request's write), a semi-join against a local frame
-        of the ids for more (one broadcast job more, whatever their
-        number)."""
+        ``read(nt, include_deleted=True)``: from the log tail's ``typed``
+        rows of ``nt`` where they hold the id, else from one base probe
+        (:func:`_by_ids`)."""
         cols = list(_head_columns(nt))
         heads = {r["id"]: tuple(r[c] for c in cols) for r in
-                 _latest(tail, nt, list(ids)).to_pylist()}
+                 _latest(typed, ids=list(ids)).to_pylist()}
         rest = ids - heads.keys()
         if rest:
-            base = self._base(nt)
-            base = (base.filter(F.col("id") == next(iter(rest)))
-                    if len(rest) == 1 else base.join(util.local_frame(
-                        self.spark, [(i,) for i in rest], _ID_SCHEMA),
-                        "id", "left_semi"))
+            base = _by_ids(self.spark, self._base(nt),
+                           pa.array(sorted(rest), pa.string()), "left_semi")
             heads.update((r["id"], tuple(r[c] for c in cols))
                          for r in base.select("id", *cols).collect())
         return heads
@@ -388,14 +457,16 @@ class VersionedGraph:
             return ops
         if not all(_is_local(ops[i][2]) for i in checked):
             return None
-        tail = self._tail.rows()
-        if tail is None:
+        typed = {nt.name: self._tail.typed(nt) for op, nt, _ in ops
+                 if op != "insert"}
+        if None in typed.values():
             return None
         out = list(ops)
         for i in checked:
             op, nt, df = ops[i]
             rows = df.collect()
-            heads = self._heads(nt, tail, {r["id"] for r in rows} - {None})
+            heads = self._heads(nt, typed[nt.name],
+                                {r["id"] for r in rows} - {None})
             missing = [r["id"] for r in rows if r["id"] not in heads]
             stale = ([r["id"] for r in rows if r["id"] in heads
                       and r["revision"] is not None
@@ -448,7 +519,7 @@ class VersionedGraph:
         revision is bumped from it, and an edge update keeps the current
         ``src``/``dst``/``weight`` where the row leaves them null."""
         slots = [c for c in nt.slots if c not in SYSTEM_COLUMNS]
-        payload = (F.to_json(F.struct(*[F.col(c) for c in slots if c in df.columns]))
+        payload = (_slots_json([F.col(c) for c in slots if c in df.columns])
                    if any(c in df.columns for c in slots) else F.lit(None).cast("string"))
         src = F.col("src") if "src" in df.columns else F.lit(None).cast("string")
         dst = F.col("dst") if "dst" in df.columns else F.lit(None).cast("string")
@@ -488,9 +559,23 @@ class VersionedGraph:
                     F.col("revision"), F.col("commit_epoch")]
         if nt.kind == "edge":
             sys_cols += [F.col("src"), F.col("dst"), F.col("weight")]
-        decoded = log.withColumn("__p", F.from_json("payload", _slot_struct(nt)))
-        return decoded.select(*sys_cols,
-                              *[F.col(f"__p.{c}").alias(c) for c in nt.slots])
+        return _with_slots(log, nt, *sys_cols)
+
+    def _decode_rows(self, nt, rows: pa.Table) -> pa.Table:
+        """Driver-held log rows of ``nt`` -> ``_typed_schema(nt)`` rows,
+        for the log tail. The system columns are taken as logged; the
+        payloads go through :meth:`_decode`'s own ``from_json`` over a
+        local frame, so the slots decode exactly as a Spark read decodes
+        them, and the collect of that LocalRelation runs no job."""
+        payloads = (_with_slots(util.local_frame(
+            self.spark, rows.select(["payload"]), _PAYLOAD_SCHEMA), nt)
+            .collect() if nt.slots and rows.num_rows else [])
+        slots = util.arrow_rows(payloads, _slot_struct(nt))
+        schema = to_arrow_schema(_typed_schema(nt))
+        return pa.Table.from_arrays([
+            pa.array([nt.name] * rows.num_rows, pa.string()) if c == "type"
+            else slots[c] if c in nt.slots else rows[c]
+            for c in schema.names], schema=schema)
 
     def _base(self, nt) -> DataFrame:
         p = self._base_path(nt)
@@ -511,36 +596,39 @@ class VersionedGraph:
         """Current (or ``as_of`` snapshot) state of one type: newest version
         with commit_epoch <= snapshot epoch per id (transactions.lisp:444-462).
 
-        The per-id window runs only over delta-log rows; base rows join in by
-        anti-join on the changed-id set (broadcast-able: the delta is small
-        relative to the base between compactions). When the log tail holds
-        no row of the type (at or before ``as_of``), the base is the
-        answer, with no log scan, window or join.
+        Any log row of an id supersedes its base row. While the log fits
+        the driver bound, the log tail's decoded rows of the type give
+        each logged id's winner on the driver, and the plan is the base
+        without those ids (:func:`_by_ids`), unioned with the winners as
+        a local frame: no log scan, window or ``from_json``.
+        A type with no log rows (at or before ``as_of``) reads its base
+        alone. Past the bound, the per-id window runs over the type's
+        log rows and the base joins in by anti-join on the changed-id set
+        (broadcast-able: the delta is small relative to the base between
+        compactions).
         """
         nt = self.registry.get(type_name)
         base = self._base(nt)
-        log = self._log().filter((F.col("kind") == nt.kind) &
-                                 (F.col("type") == nt.name))
         if as_of is not None:
-            log = log.filter(F.col("commit_epoch") <= as_of)
             base = base.filter(F.col("commit_epoch") <= as_of)
-        tail = self._tail.rows()
-        if tail is not None:
-            mask = pc.and_(pc.equal(tail["kind"], nt.kind),
-                           pc.equal(tail["type"], nt.name))
+        typed = self._tail.typed(nt)
+        if typed is None:
+            log = self._log().filter((F.col("kind") == nt.kind) &
+                                     (F.col("type") == nt.name))
             if as_of is not None:
-                mask = pc.and_(mask,
-                               pc.less_equal(tail["commit_epoch"], as_of))
-            if not pc.any(mask).as_py():
-                return (base if include_deleted
-                        else base.filter(~F.col("deleted")))
-        w = Window.partitionBy("id").orderBy(F.desc("commit_epoch"),
-                                            F.desc("revision"))
-        latest = (log.withColumn("__rn", F.row_number().over(w))
-                  .filter(F.col("__rn") == 1).drop("__rn"))
-        changed = F.broadcast(latest.select("id"))
-        cur = (base.join(changed, "id", "left_anti")
-               .unionByName(self._decode(nt, latest)))
+                log = log.filter(F.col("commit_epoch") <= as_of)
+            w = Window.partitionBy("id").orderBy(F.desc("commit_epoch"),
+                                                F.desc("revision"))
+            latest = self._decode(nt, log.withColumn(
+                "__rn", F.row_number().over(w)).filter(F.col("__rn") == 1))
+            cur = (base.join(F.broadcast(latest.select("id")), "id",
+                             "left_anti").unionByName(latest))
+        else:
+            won = _latest(typed, as_of=as_of)
+            cur = base if not won.num_rows else (
+                _by_ids(self.spark, base, won["id"], "left_anti")
+                .unionByName(util.local_frame(self.spark, won,
+                                              _typed_schema(nt))))
         if not include_deleted:
             cur = cur.filter(~F.col("deleted"))
         return cur
@@ -594,16 +682,17 @@ class VersionedGraph:
         The winner is read()'s: any log row supersedes the base row (the
         anti-join), and among log rows the highest ``(commit_epoch,
         revision)`` wins (the window). When the log tail holds the id,
-        its winner is decoded from a local frame and no Spark job runs;
-        otherwise one job probes the base. Past the driver bound, one job
-        collects the id's base row and decoded log rows."""
+        its winner comes from the tail's decoded rows, the ones ``read()``
+        takes, through a local frame, and no Spark job runs; otherwise
+        one job probes the base. Past the driver bound, one job collects
+        the id's base row and decoded log rows."""
         nt = self.registry.get(type_name)
-        tail = self._tail.rows()
-        if tail is not None:
-            won = _latest(tail, nt, [node_id])
+        typed = self._tail.typed(nt)
+        if typed is not None:
+            won = _latest(typed, ids=[node_id])
             if won.num_rows:
-                return self._decode(
-                    nt, util.local_frame(self.spark, won, LOG_SCHEMA)).first()
+                return util.local_frame(self.spark, won,
+                                        _typed_schema(nt)).first()
             rows = self._base(nt).filter(F.col("id") == node_id).collect()
             return max(rows, key=lambda r: (r["commit_epoch"], r["revision"]),
                        default=None)
@@ -636,6 +725,31 @@ class VersionedGraph:
         g._edges = _LazyTables(
             [nt.name for nt in self.registry.types("edge")], plan)
         return g
+
+    def incident_edges(self, node_id: str) -> DataFrame:
+        """The rows of ``store().active_edges()`` with ``node_id`` as
+        ``src`` or ``dst``, by probe: one job collects every edge type's
+        read filtered on ``src``/``dst``, and one more finds which of the
+        endpoints those rows name are live vertices (each vertex type's
+        read narrowed to them: the log tail answers for logged ids, a
+        base probe for the rest). The answer is a local frame. Past the
+        driver bound, the ``active_edges()`` filter."""
+        store = self.store()
+        touching = (F.col("src") == node_id) | (F.col("dst") == node_id)
+        edges = store.scan_edges().filter(touching)
+        # toArrow runs a limit as one job; collect() would take it in
+        # rounds of partitions
+        rows = edges.limit(util.DRIVER_ROWS + 1).toArrow()
+        if not util.fits_driver(rows.num_rows):
+            return store.active_edges().filter(touching)
+        ends = pc.unique(pa.chunked_array(
+            rows["src"].chunks + rows["dst"].chunks, pa.string())).drop_null()
+        live = pa.array([r["id"] for r in _by_ids(
+            self.spark, store.scan_vertices(columns=["id"]), ends,
+            "left_semi").collect()] if len(ends) else [], pa.string())
+        return util.local_frame(self.spark, rows.filter(pc.and_(
+            pc.is_in(rows["src"], value_set=live),
+            pc.is_in(rows["dst"], value_set=live))), edges.schema)
 
     # -- bootstrap / snapshot / replay / compact ------------------------------
 
@@ -671,7 +785,7 @@ class VersionedGraph:
             (F.col("dst") if nt.kind == "edge" else F.lit(None).cast("string")).alias("dst"),
             (F.col("weight").cast("double") if nt.kind == "edge"
              else F.lit(None).cast("double")).alias("weight"),
-            (F.to_json(F.struct(*slots)) if slots
+            (_slots_json(slots) if slots
              else F.lit(None).cast("string")).alias("payload"),
             F.lit(time.time()).alias("committed_at"),
         )

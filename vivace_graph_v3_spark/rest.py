@@ -30,8 +30,9 @@ Point CRUD flows through the MVCC transaction log (one commit per request —
 the ``with-transaction`` analog), so OCC conflict detection, tombstones and
 time travel all apply to REST writers too. Id requests resolve through
 the store's point probes (``VersionedGraph.locate`` / ``get``, the
-reference's hash-index ``lookup-vertex``), not per-type scans, and the
-store's driver-held log tail answers for the log; write-sets are local
+reference's hash-index ``lookup-vertex``), not per-type scans, an edge
+listing through ``VersionedGraph.incident_edges``, and the store's
+driver-held log tail answers for the log; write-sets are local
 frames (``util.local_frame``), so no Python worker runs per request. This
 is not the 100 TB data path — bulk loads go through Spark jobs — it is the
 operational surface the reference offers, kept faithfully thin.
@@ -380,7 +381,7 @@ class RestServer:
     def _list_edges(self, vg, node_id):
         # rest-list-edges (rest.lisp:749-762): out then in, active only
         self._find_type(vg, "vertex", node_id)
-        edges = vg.store().active_edges()
+        edges = vg.incident_edges(node_id)
         out = edges.filter(F.col("src") == node_id)
         inc = edges.filter(F.col("dst") == node_id)
         return {"out": _rows_json(out, self.max_rows),

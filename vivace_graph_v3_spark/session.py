@@ -33,6 +33,13 @@ def get_spark(app_name: str = "vivace-graph-v3-spark", master: str | None = None
         .config("spark.sql.session.timeZone", "UTC")
         # Dimension tables (region/nation/supplier) should broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Arrow-built frames (util.local_frame, createDataFrame from
+        # pyarrow or pandas) of up to 1 MB stay a LocalRelation, which
+        # the driver reads without a job; bigger ones become an Arrow RDD
+        # that tasks decode in parallel. Under Spark's 48 MB default a
+        # 150k-row frame stayed local and one scan of it took ~2x as long.
+        .config("spark.sql.execution.arrow.localRelationThreshold",
+                str(1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )

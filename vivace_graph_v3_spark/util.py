@@ -67,6 +67,10 @@ def local_frame(spark, rows, schema) -> DataFrame:
     """A driver-built frame as a JVM ``LocalRelation``: ``rows`` (tuples
     in ``schema`` field order, or a pyarrow Table already in that shape)
     go over Arrow, and ``collect()`` on the result runs no Spark job.
+    That holds up to the session's
+    ``spark.sql.execution.arrow.localRelationThreshold`` (1 MB, set in
+    ``session.py``); a bigger frame becomes an Arrow RDD, which tasks
+    scan in parallel and which takes one job to collect.
 
     Request paths must never call ``spark.createDataFrame(list)``
     instead: PySpark parallelizes the list and re-maps it through a
@@ -80,15 +84,25 @@ def local_frame(spark, rows, schema) -> DataFrame:
     type reads back exactly as ``createDataFrame(rows, schema)`` would
     give it (naive datetimes as local time, dates, decimals, arrays)."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     if not isinstance(rows, pa.Table):
-        arrow_schema = to_arrow_schema(schema)
-        internal = [schema.toInternal(r) for r in rows]
-        rows = pa.Table.from_arrays(
-            [pa.array([r[i] for r in internal], type=f.type)
-             for i, f in enumerate(arrow_schema)], schema=arrow_schema)
+        rows = arrow_rows(rows, schema)
     return spark.createDataFrame(rows, schema)
+
+
+def arrow_rows(rows, schema):
+    """``rows`` (tuples or Rows in ``schema`` field order) as a pyarrow
+    Table in ``schema``'s Arrow shape, each value converted with the
+    schema's own ``toInternal``: the table :func:`local_frame` hands
+    Spark, so a collected row goes back into a local frame unchanged."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    return pa.Table.from_arrays(
+        [pa.array([r[i] for r in internal], type=f.type)
+         for i, f in enumerate(arrow_schema)], schema=arrow_schema)
 
 
 def finish_locally(df: DataFrame, n: int, kernel, schema, *,
