@@ -187,7 +187,9 @@ def test_cc_and_temporal_ea_local_matches_distributed(spark):
         [(a, b, rng.randrange(100)) for a, b in edges]
         + [(b, a, rng.randrange(100)) for a, b in edges],
         "src string, dst string, ts long")
-    seeds = spark.createDataFrame([("0",), ("7",), ("11",)], ["id"])
+    # a null seed reaches nothing in either regime
+    seeds = spark.createDataFrame([("0",), ("7",), ("11",), (None,)],
+                                  "id string")
     for kw in ({"max_hops": 3}, {"max_hops": None, "max_iter": 50}):
         loc = {(r.seed, r.node): r.arrival
                for r in temporal_earliest_arrival(te, seeds,
@@ -483,27 +485,58 @@ def test_weighted_pagerank_zero_out_weight(spark):
 
 
 def test_local_kernels_hold_no_blocks_and_few_jobs(spark):
-    """Within the driver bound, pagerank, label propagation and HITS
-    collect once and iterate on the driver: each call, its result
-    collected, issues at most 4 Spark jobs and leaves no persisted or
-    checkpointed RDD behind."""
+    """Within the driver bound, every driver-local graph finish collects
+    once and finishes on the driver: each call, its result collected,
+    issues at most 4 Spark jobs (bow-tie, given a precomputed SCC frame,
+    fewer than 18) and leaves no persisted or checkpointed RDD behind."""
     import gc
+
+    from vivace_graph_v3_spark.operators.graph_algorithms import (
+        _edge_pairs, bowtie_decomposition, k_core, k_truss,
+        landmark_closeness, landmark_eccentricity, landmark_stress,
+        strongly_connected_components, temporal_earliest_arrival)
 
     g = _kernel_graph(spark)
     jsc = spark.sparkContext._jsc
+    edges = util.local_frame(
+        spark, [(r.src, r.dst, int(r.weight)) for r in
+                _edge_pairs(g, None, weighted=True).collect()],
+        T.StructType.fromDDL("src string, dst string, ts long"))
+    scc = util.local_frame(spark,
+                           strongly_connected_components(edges).collect(),
+                           T.StructType.fromDDL("id string, scc_id string"))
+    seeds = util.local_frame(spark, [("0",), ("3",)],
+                             T.StructType.fromDDL("id string"))
+    lms = ["0", "3"]
 
     def held():
+        # ids, not a count: the context cleaner may release blocks that
+        # earlier tests left, while an operator runs
         gc.collect()
-        return jsc.getPersistentRDDs().size()
+        return set(jsc.getPersistentRDDs().keySet())
 
-    for op in (lambda: pagerank(g, max_iter=10),
-               lambda: pagerank(g, max_iter=10, tol=None, weighted=True),
-               lambda: label_propagation(g, max_iter=3),
-               lambda: hits(g, max_iter=3)):
+    for name, op, jobs in (
+            ("pagerank", lambda: pagerank(g, max_iter=10), 4),
+            ("weighted pagerank", lambda: pagerank(
+                g, max_iter=10, tol=None, weighted=True), 4),
+            ("label propagation", lambda: label_propagation(g, max_iter=3),
+             4),
+            ("hits", lambda: hits(g, max_iter=3), 4),
+            ("cc", lambda: connected_components(g), 4),
+            ("k-truss", lambda: k_truss(g, 3), 4),
+            ("sssp", lambda: shortest_paths(g, ["0"]), 4),
+            ("k-core", lambda: k_core(g, 2), 4),
+            ("closeness", lambda: landmark_closeness(g, lms), 4),
+            ("eccentricity", lambda: landmark_eccentricity(g, lms), 4),
+            ("stress", lambda: landmark_stress(g, lms), 4),
+            ("scc", lambda: strongly_connected_components(edges), 4),
+            ("bow-tie", lambda: bowtie_decomposition(edges, scc), 17),
+            ("temporal", lambda: temporal_earliest_arrival(edges, seeds),
+             4)):
         before, j0 = held(), last_job_id(spark)
         op().collect()
-        assert last_job_id(spark) - j0 <= 4
-        assert held() == before
+        assert last_job_id(spark) - j0 <= jobs, name
+        assert held() <= before, name
 
 
 def test_common_neighbor_similarity(spark):

@@ -141,6 +141,37 @@ def test_compact_preserves_state_and_retention(vg, spark):
     assert vg.read("person").first()["age"] == 40
 
 
+def test_compact_jobs_do_not_grow_with_unlogged_types(spark, tmp_path):
+    """compact() finds the logged types from the driver-held log tail
+    (past the driver bound, from one distinct collect), so types that
+    have no log rows cost it no Spark job: its job count is the same
+    with 0 or 3 extra registered types, in both regimes."""
+    import contextlib
+
+    def compact_jobs(extra: int, where: str) -> int:
+        reg = SchemaRegistry()
+        reg.def_vertex("person", {"name": T.StringType(),
+                                  "age": T.IntegerType()})
+        reg.def_edge("knows")
+        for i in range(extra):
+            reg.def_vertex(f"unlogged{i}", {})
+        g = VersionedGraph(spark, reg, str(tmp_path / where))
+        g.commit(g.begin().create("person", _people(
+            spark, [("p1", "ann", 30), ("p2", "bob", 40)])))
+        j0 = last_job_id(spark)
+        g.compact()
+        jobs = last_job_id(spark) - j0
+        assert sorted(r["name"] for r in g.read("person").collect()) == \
+            ["ann", "bob"]
+        return jobs
+
+    for regime in (contextlib.nullcontext, distributed_regime):
+        with regime():
+            name = regime.__name__
+            assert (compact_jobs(0, f"{name}0")
+                    == compact_jobs(3, f"{name}3")), name
+
+
 def test_multi_type_atomic_commit(vg, spark):
     """One transaction spanning vertices AND edges lands under ONE epoch
     (atomic apply, transactions.lisp:1906-1952)."""

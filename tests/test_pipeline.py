@@ -1994,3 +1994,17 @@ def test_hard_negatives_seed_scan_bit_identical(spark, embeds):
         assert got.schema == spec.schema
         assert sorted(map(tuple, got.collect())) == \
             sorted(map(tuple, spec.collect()))
+
+
+def test_hard_negatives_seed_past_driver_bound_raises(spark, embeds):
+    """The seed matrix is collected once, capped at the driver bound: a
+    corpus past ``util.DRIVER_ROWS`` raises ValueError naming it rather
+    than pulling the whole corpus onto the driver."""
+    from unittest import mock
+
+    from vivace_graph_v3_spark import util
+    from vivace_graph_v3_spark.pipeline.similarity import hard_negatives
+
+    with mock.patch.object(util, "DRIVER_ROWS", 9):
+        with pytest.raises(ValueError, match="DRIVER_ROWS"):
+            hard_negatives(embeds.limit(10), k=3)

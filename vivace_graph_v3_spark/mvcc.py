@@ -820,10 +820,17 @@ class VersionedGraph:
 
     def _fold_log(self) -> None:
         hist_path = os.path.join(self.path, "history")
+        # the logged types: from the driver-held tail, or past the
+        # driver bound one distinct collect
+        tail = self._tail.rows()
+        if tail is not None:
+            logged = set(zip(tail["kind"].to_pylist(),
+                             tail["type"].to_pylist()))
+        else:
+            logged = {(r["kind"], r["type"]) for r in
+                      self._log().select("kind", "type").distinct().collect()}
         for nt in self.registry.types():
-            log = self._log().filter((F.col("kind") == nt.kind) &
-                                     (F.col("type") == nt.name))
-            if log.isEmpty():
+            if (nt.kind, nt.name) not in logged:
                 continue
             cur = self.read(nt.name, include_deleted=True)
             keep = nt.keep_revisions

@@ -27,8 +27,11 @@ have three regimes:
   does not, the Spark loop broadcasts the O(|V|) state into each round;
 - shuffle: past the bound, the Spark loop above.
 
-The other local finishes (CC, SCC, k-core, SSSP, ...) count their
-persisted input and go through ``util.finish_locally``.
+The other local finishes (CC, k-truss, SSSP, k-core, the landmark
+operators, SCC, bow-tie and temporal reach) go through
+``util.finish_locally``: one capped collect of their input is the bound
+check, then a driver kernel. Nothing is counted, persisted or
+checkpointed unless the collect declines and the Spark loop runs.
 """
 
 from __future__ import annotations
@@ -477,22 +480,22 @@ def connected_components(graph: GraphStore, *, edge_type: str | None = None,
     component. Edges are first collapsed per partition by a local
     union-find, so what follows sees a spanning mapping of size O(|V|)
     rather than the raw O(|E|) edge list. When that mapping fits the
-    driver (:func:`~vivace_graph_v3_spark.util.finish_locally`), one
-    driver union-find settles every component; past the bound, one
-    :func:`min_label_fixpoint` over both orientations of the mapping
-    does. Vertices outside the edge list keep their singleton label."""
+    driver (one capped collect through
+    :func:`~vivace_graph_v3_spark.util.finish_locally`, nothing counted
+    or held), one driver union-find settles every component; past the
+    bound, one :func:`min_label_fixpoint` over both orientations of the
+    persisted mapping does. Vertices outside the edge list keep their
+    singleton label."""
     edges = _contract_edges_locally(
         _edge_pairs(graph, edge_type, undirected=True))
     # the mapping is directed id->root; propagation needs both directions
     edges = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     labels = (graph.scan_vertices(columns=["id"]).select("id").dropDuplicates()
               .withColumn("comp", F.col("id")))
-    labels = labels.localCheckpoint(eager=True)
     id_f = labels.schema["id"]
     lab_df = finish_locally(
-        edges, edges.count(),
+        edges,
         lambda pdf: list(union_find_min(zip(pdf["src"], pdf["dst"]))
                          .items()),
         T.StructType([id_f, T.StructField("c2", id_f.dataType)]))
@@ -500,6 +503,7 @@ def connected_components(graph: GraphStore, *, edge_type: str | None = None,
         return (labels.join(F.broadcast(lab_df), "id", "left")
                 .select("id", F.coalesce(F.col("c2"), F.col("comp"))
                         .alias("comp")))
+    edges = edges.persist()
     try:
         return min_label_fixpoint(
             edges, labels.withColumnRenamed("comp", "lab"),
@@ -768,10 +772,12 @@ def k_truss(graph: GraphStore, k: int, *, edge_type: str | None = None,
     set (two endpoint-keyed shuffles, AQE-skew-splittable — never
     vertex-pair all-pairs) plus a side aggregate; the edge set shrinks
     monotonically so rounds get cheaper. Rounds are checkpoint-truncated
-    like the other iterative operators. Once the active edge set fits
-    the driver, the remaining cascade is settled by one driver-local
-    vectorized enumeration + incremental peel (:func:`_local_truss`
-    through :func:`~vivace_graph_v3_spark.util.finish_locally`);
+    like the other iterative operators. When the edge set fits the
+    driver (one capped collect, before anything is counted or
+    checkpointed), or once a peeled round's count says it does, the
+    remaining cascade is settled by one driver-local vectorized
+    enumeration + incremental peel (:func:`_local_truss` through
+    :func:`~vivace_graph_v3_spark.util.finish_locally`, tried once);
     the cascade's sequential round latency dominates exactly when the
     frames are small, and the local pass reaches the identical unique
     fixpoint (differential test in test_graph_algorithms). The
@@ -779,21 +785,28 @@ def k_truss(graph: GraphStore, k: int, *, edge_type: str | None = None,
     last resort when the bounded edge set is still so dense that its
     triangle list would exceed the local memory cap)."""
     sup_min = k - 2
-    e, n_edges = checkpoint_counted(
-        _edge_pairs(graph, edge_type, undirected=True)
-        .filter(F.col("src") < F.col("dst"))
-        .dropDuplicates(["src", "dst"]))
+    e = (_edge_pairs(graph, edge_type, undirected=True)
+         .filter(F.col("src") < F.col("dst"))
+         .dropDuplicates(["src", "dst"]))
     schema = T.StructType([e.schema["src"], e.schema["dst"],
                            T.StructField("support", T.LongType())])
+
+    def peel(pdf):
+        return _local_truss(pdf, sup_min)
+
+    local = finish_locally(e, peel, schema)
+    if local is not None:
+        return local
+    e, n_edges = checkpoint_counted(e)
+    # one local attempt: an edge set that fits was declined by the
+    # kernel's memory cap, and a peeled subset gets one try once it fits
+    local_tried = fits_driver(n_edges)
     sup = None
     converged = False
-    local_tried = False
     for _ in range(max_iter):
-        # one local attempt: past it the kernel declined (memory cap)
         if not local_tried and fits_driver(n_edges):
             local_tried = True
-            local = finish_locally(
-                e, n_edges, lambda pdf: _local_truss(pdf, sup_min), schema)
+            local = finish_locally(e, peel, schema)
             if local is not None:
                 return local
         sup = _edge_support(e)
@@ -911,12 +924,13 @@ def shortest_paths(graph: GraphStore, roots, *, edge_type: str | None = None,
     with ``weighted``): distributed Bellman-Ford. Returns (id, dist) for
     reachable vertices. Frontier-based: only improved vertices relax their
     neighbors next round, so rounds touch the active frontier, not all V.
-    When the edge list fits the driver, the whole relaxation is replayed
+    When the edge list fits the driver (one capped collect, nothing
+    counted or persisted first), the whole relaxation is replayed
     driver-locally (:func:`_local_sssp` through
     :func:`~vivace_graph_v3_spark.util.finish_locally`) — long chains
     mean many tiny sequential rounds, which is exactly where per-round
-    job latency dominates; the distributed loop stays the at-scale
-    path."""
+    job latency dominates; the distributed loop, over the persisted edge
+    list, stays the at-scale path."""
     spark = graph.spark
     edges = _edge_pairs(graph, edge_type, weighted=weighted,
                         undirected=(direction == "both"))
@@ -924,21 +938,25 @@ def shortest_paths(graph: GraphStore, roots, *, edge_type: str | None = None,
         edges = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"),
                              *([F.col("weight")] if weighted else []))
     w = F.col("weight") if weighted else F.lit(1.0)
-    edges = edges.select("src", "dst", w.alias("w")).persist()
+    edges = edges.select("src", "dst", w.alias("w"))
 
     if isinstance(roots, DataFrame):
         dist = roots.select("id").dropDuplicates()
     else:
         dist = local_frame(spark, [(r,) for r in roots], T.StructType(
             [T.StructField("id", edges.schema["src"].dataType)]))
-    local = finish_locally(
-        edges, edges.count(),
+    # the roots come in through the same bound: a roots frame may be as
+    # large as the vertex set
+    root_pdf = collect_bounded(dist)
+    local = None if root_pdf is None else finish_locally(
+        edges,
         lambda pdf: _local_sssp(
-            pdf, dist.toPandas()["id"].to_numpy(dtype=object), max_iter),
+            pdf, root_pdf["id"].to_numpy(dtype=object), max_iter),
         T.StructType([T.StructField("id", edges.schema["src"].dataType),
                       T.StructField("dist", T.DoubleType())]))
     if local is not None:
         return local
+    edges = edges.persist()
     dist = dist.withColumn("dist", F.lit(0.0)).localCheckpoint(eager=True)
     frontier = dist
     try:
@@ -1087,7 +1105,8 @@ def k_core(graph: GraphStore, k: int, *, edge_type: str | None = None,
     Each round is one degree aggregation over edges semi-joined to the
     surviving set; the surviving set shrinks monotonically, so rounds get
     cheaper as they proceed. When the deduped edge list fits the driver
-    (and k >= 1), the whole cascade is settled by one driver-local
+    (and k >= 1; one capped collect decides, nothing is counted or
+    persisted first), the whole cascade is settled by one driver-local
     vectorized peel (:func:`_local_kcore` through
     :func:`~vivace_graph_v3_spark.util.finish_locally`); the sequential
     round latency dominates exactly when the frames are small, and the
@@ -1096,15 +1115,15 @@ def k_core(graph: GraphStore, k: int, *, edge_type: str | None = None,
     # degree = distinct neighbors (simple-graph contract): reciprocal or
     # parallel edges must not double-count
     edges = (_edge_pairs(graph, edge_type, undirected=True)
-             .dropDuplicates(["src", "dst"]).persist())
+             .dropDuplicates(["src", "dst"]))
     if k >= 1:
         local = finish_locally(
-            edges, edges.count(),
-            lambda pdf: _local_kcore(pdf, k, max_iter),
+            edges, lambda pdf: _local_kcore(pdf, k, max_iter),
             T.StructType([T.StructField("id", edges.schema["src"].dataType),
                           T.StructField("degree", T.LongType())]))
         if local is not None:
             return local
+    edges = edges.persist()
     alive, n_alive = checkpoint_counted(
         graph.scan_vertices(columns=["id"]).select("id").dropDuplicates())
     deg = None
@@ -1476,21 +1495,23 @@ def _landmark_levels(graph: GraphStore, landmarks: list[str], *,
     each round joins only the ACTIVE frontier against the edge list,
     anti-joins the visited set, and checkpoints — k landmarks multiply
     the frontier width, never the graph; rounds are bounded by
-    max_depth. When the edge list fits the driver, the rounds run as one
+    max_depth. When the edge list fits the driver (one capped collect,
+    nothing counted or persisted first), the rounds run as one
     driver-local BFS (:func:`_local_landmark_levels` through
     :func:`~vivace_graph_v3_spark.util.finish_locally`) with identical
     levels. The bound counts DISTINCT UNDIRECTED edges, so an undirected
     arc list may hold twice as many rows."""
     spark = graph.spark
     edges = (_edge_pairs(graph, edge_type, undirected=undirected)
-             .select("src", "dst").dropDuplicates().persist())
+             .select("src", "dst").dropDuplicates())
     local = finish_locally(
-        edges, edges.count(),
+        edges,
         lambda pdf: _local_landmark_levels(pdf, list(landmarks), max_depth),
-        "lm string, dist long, n_vertices long",
+        T.StructType.fromDDL("lm string, dist long, n_vertices long"),
         scale=2 if undirected else 1)
     if local is not None:
         return local
+    edges = edges.persist()
     visited = (local_frame(spark, [(l, l, 0) for l in landmarks],
                            T.StructType.fromDDL(
                                "lm string, id string, dist long"))
@@ -1628,11 +1649,15 @@ def landmark_eccentricity(graph: GraphStore, landmarks: list[str], *,
     landmark-bounded result)."""
     levels = _landmark_levels(graph, landmarks, edge_type=edge_type,
                               max_depth=max_depth, undirected=undirected)
-    agg = (levels.groupBy("lm")
-           .agg(F.sum("n_vertices").alias("n_reached"),
-                F.max("dist").alias("ecc")))
-    w = Window.partitionBy(F.lit(1))  # landmark-domain-bounded (k rows)
-    return agg.withColumn("diameter_lb", F.max("ecc").over(w))
+    # the deepest level of any landmark is the largest ecc; the window
+    # (landmark-domain-bounded: k * max_depth rows) gathers one
+    # partition, which the per-landmark aggregate then reuses
+    w = Window.partitionBy(F.lit(1))
+    return (levels.withColumn("diameter_lb", F.max("dist").over(w))
+            .groupBy("lm")
+            .agg(F.sum("n_vertices").alias("n_reached"),
+                 F.max("dist").alias("ecc"),
+                 F.max("diameter_lb").alias("diameter_lb")))
 
 
 def rich_club_coefficient(graph: GraphStore, thresholds: list[int],
@@ -1782,18 +1807,20 @@ def landmark_stress(graph: GraphStore, landmarks: list[str], *,
     sum_stress, max_stress) — BIGINT-exact while per-vertex
     sigma * rho fits 2^63 (holds through the test gates; lift to
     DECIMAL(38,0) sums past that, the ks_drift discipline). Same bounded
-    local finish as landmark_closeness (:func:`_local_stress`)."""
+    local finish as landmark_closeness (:func:`_local_stress`, one capped
+    collect with nothing counted or persisted first)."""
     spark = graph.spark
     edges = (_edge_pairs(graph, edge_type, undirected=undirected)
-             .select("src", "dst").dropDuplicates().persist())
+             .select("src", "dst").dropDuplicates())
     local = finish_locally(
-        edges, edges.count(),
-        lambda pdf: _local_stress(pdf, list(landmarks), max_depth),
-        "lm string, dist long, n_vertices long, sum_sigma long, "
-        "sum_stress long, max_stress long",
+        edges, lambda pdf: _local_stress(pdf, list(landmarks), max_depth),
+        T.StructType.fromDDL(
+            "lm string, dist long, n_vertices long, sum_sigma long, "
+            "sum_stress long, max_stress long"),
         scale=2 if undirected else 1)
     if local is not None:
         return local
+    edges = edges.persist()
     level0 = (local_frame(spark, [(l, l, 1) for l in landmarks],
                           T.StructType.fromDDL(
                               "lm string, id string, sigma long"))
@@ -1977,9 +2004,11 @@ def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
 
     100 TB shape: every step is an edge-grouped aggregate or a label
     join — the Pregel cost model, linear in |E| per propagation round,
-    no driver-side state above the driver bound. Once the ACTIVE edge
-    set fits the driver, the remaining components are settled by one
-    driver-local iterative Tarjan pass over the collected edge list
+    no driver-side state above the driver bound. When the edge set fits
+    the driver (one capped collect, before anything is counted or
+    persisted), or once a peel round's count says the ACTIVE edge set
+    does, the remaining components are settled by one driver-local
+    iterative Tarjan pass over the collected edge list
     (:func:`~vivace_graph_v3_spark.util.finish_locally`), with the
     distributed peel loop as the at-scale fallback. The peel loop's
     sequential fixpoint latency dominates exactly when the frames are
@@ -1990,45 +2019,32 @@ def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
     id of the component."""
     e0 = (edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
           .filter(F.col("src") != F.col("dst"))
-          .dropDuplicates().persist())
-    nodes, n_nodes = checkpoint_counted(
-        e0.select(F.col("src").alias("id"))
-        .unionByName(e0.select(F.col("dst").alias("id")))
-        .dropDuplicates(), rebase=True)
-    rev = e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-
+          .dropDuplicates())
+    nodes = (e0.select(F.col("src").alias("id"))
+             .unionByName(e0.select(F.col("dst").alias("id")))
+             .dropDuplicates())
     id_f = nodes.schema["id"]
     lab_schema = T.StructType([id_f,
                                T.StructField("scc_id", id_f.dataType)])
+
+    def tarjan(pdf):
+        return list(_local_scc_ids(zip(pdf["src"], pdf["dst"])).items())
+
+    # Tarjan labels every endpoint of e0, so they are the whole answer
+    lab_df = finish_locally(e0, tarjan, lab_schema)
+    if lab_df is not None:
+        return lab_df
+    e0 = e0.persist()
     try:
-        active_n, n_active, active_e, active_r = nodes, n_nodes, e0, rev
-        n_active_e = None   # unknown for round 0 until counted
-        # start from an EMPTY (id, scc_id) frame, not None (ADVICE r7):
-        # a self-loop-only / empty edge set makes active_n empty on the
-        # first round, and callers must still get a well-typed frame
+        active_n, active_e = nodes.transform(checkpoint_rebased), e0
         result = nodes.limit(0).withColumn("scc_id", F.col("id"))
         for _ in range(max_rounds):
-            if n_active == 0:
-                return result
-            if n_active_e is None:
-                n_active_e = active_e.count()   # persisted e0, one probe
-            lab_df = finish_locally(
-                active_e, n_active_e,
-                lambda pdf: list(_local_scc_ids(
-                    zip(pdf["src"], pdf["dst"])).items()),
-                lab_schema)
-            if lab_df is not None:
-                # exact Tarjan labels; every active node absent from the
-                # (deduped, self-loop-free) active edge list is its own
-                # singleton component
-                return result.unionByName(
-                    active_n.join(F.broadcast(lab_df), "id", "left")
-                    .select("id", F.coalesce(F.col("scc_id"), F.col("id"))
-                            .alias("scc_id")))
             seed = active_n.withColumn("lab", F.col("id"))
             f = min_label_fixpoint(active_e, seed, max_iter=max_iter)
-            b = (min_label_fixpoint(active_r, seed, max_iter=max_iter)
-                 .withColumnRenamed("lab", "blab"))
+            b = (min_label_fixpoint(
+                active_e.select(F.col("dst").alias("src"),
+                                F.col("src").alias("dst")),
+                seed, max_iter=max_iter).withColumnRenamed("lab", "blab"))
             lab = f.join(b, "id")
             settled = (lab.filter(F.col("lab") == F.col("blab"))
                        .select("id", F.col("lab").alias("scc_id"))
@@ -2038,13 +2054,22 @@ def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
             active_n, n_active = checkpoint_counted(
                 lab.filter(F.col("lab") != F.col("blab")).select("id"),
                 rebase=True)
+            if n_active == 0:
+                return result
             keep_src = active_n.withColumnRenamed("id", "src")
             keep_dst = active_n.withColumnRenamed("id", "dst")
             active_e, n_active_e = checkpoint_counted(
                 active_e.join(keep_src, "src").join(keep_dst, "dst"),
                 rebase=True)
-            active_r = active_e.select(F.col("dst").alias("src"),
-                                       F.col("src").alias("dst"))
+            if fits_driver(n_active_e):
+                # exact Tarjan labels; every active node absent from the
+                # (deduped, self-loop-free) active edge list is its own
+                # singleton component
+                lab_df = finish_locally(active_e, tarjan, lab_schema)
+                return result.unionByName(
+                    active_n.join(F.broadcast(lab_df), "id", "left")
+                    .select("id", F.coalesce(F.col("scc_id"), F.col("id"))
+                            .alias("scc_id")))
         raise RuntimeError(
             f"strongly_connected_components: {max_rounds} peel rounds "
             "exhausted before the condensation chain bottomed out")
@@ -2071,8 +2096,9 @@ def bowtie_decomposition(edges: DataFrame, scc: DataFrame, *,
     sentinel smaller than all ids. Takes the (id, scc_id) output of
     ``strongly_connected_components``. Returns (id, klass). When the
     collapsed edge list fits the driver, both closures come from one
-    collected copy (:func:`_local_reach_min` through
-    :func:`~vivace_graph_v3_spark.util.finish_locally`)."""
+    capped collect of it (:func:`_local_reach_min` through
+    :func:`~vivace_graph_v3_spark.util.finish_locally`); only past the
+    bound is it checkpointed for the two fixpoints."""
     e = (edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
          .filter(F.col("src") != F.col("dst")).dropDuplicates())
     core_id = (scc.groupBy("scc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -2088,15 +2114,9 @@ def bowtie_decomposition(edges: DataFrame, scc: DataFrame, *,
                     .otherwise(F.col("id")).alias("nid")))
     remap_src = lab0.select(F.col("id").alias("src"), F.col("nid").alias("csrc"))
     remap_dst = lab0.select(F.col("id").alias("dst"), F.col("nid").alias("cdst"))
-    # materialize the collapsed edge list ONCE — the engine re-reads its
-    # edge side every iteration, and without this the whole upstream edge
-    # pipeline (joins, aggregates) would re-run per propagation round
-    # (the count rides the checkpoint as an observation)
-    ce, n_ce = checkpoint_counted(
-        e.join(remap_src, "src").join(remap_dst, "dst")
-        .select(F.col("csrc").alias("src"), F.col("cdst").alias("dst"))
-        .filter(F.col("src") != F.col("dst")).dropDuplicates(),
-        rebase=True)
+    ce = (e.join(remap_src, "src").join(remap_dst, "dst")
+          .select(F.col("csrc").alias("src"), F.col("cdst").alias("dst"))
+          .filter(F.col("src") != F.col("dst")).dropDuplicates())
 
     def _sides(pdf):
         # lab == sentinel membership, both directions: (id, side) rows
@@ -2109,7 +2129,7 @@ def bowtie_decomposition(edges: DataFrame, scc: DataFrame, *,
                    if l == sent and v != sent])
 
     sides = finish_locally(
-        ce, n_ce, _sides,
+        ce, _sides,
         T.StructType([T.StructField("id", scc.schema["id"].dataType),
                       T.StructField("side", T.StringType())]))
     if sides is not None:
@@ -2118,6 +2138,11 @@ def bowtie_decomposition(edges: DataFrame, scc: DataFrame, *,
         reach_out = (sides.filter(F.col("side") == "out").select("id")
                      .withColumn("out_side", F.lit(True)))
     else:
+        # materialize the collapsed edge list ONCE — the engine re-reads
+        # its edge side every iteration, and without this the whole
+        # upstream edge pipeline (joins, aggregates) would re-run per
+        # propagation round
+        ce = checkpoint_rebased(ce)
         cnodes = (ce.select(F.col("src").alias("id"))
                   .unionByName(ce.select(F.col("dst").alias("id")))
                   .dropDuplicates().withColumn("lab", F.col("id"))
@@ -2364,31 +2389,36 @@ def temporal_earliest_arrival(edges: DataFrame, seeds: DataFrame, *,
     ``max_iter`` budget under the same discipline as the other fixpoint
     loops here (:func:`min_label_fixpoint`): a frontier still improving after
     ``max_iter`` rounds raises RuntimeError rather than returning a
-    silently-unconverged result. When the edge list fits the driver and
-    seeds x edges stays under 256M, the whole DP runs driver-locally
-    (:func:`_local_temporal_ea` through
+    silently-unconverged result. When the seeds and the edge list each
+    fit the driver (one capped collect apiece, nothing counted or
+    persisted first) and seeds x edges stays under 256M, the whole DP
+    runs driver-locally (:func:`_local_temporal_ea` through
     :func:`~vivace_graph_v3_spark.util.finish_locally`)."""
     e = (edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"),
                       F.col(ts_col).cast("long").alias("t"))
-         .dropDuplicates().persist())
-    n_e = e.count()
-    if fits_driver(n_e):
-        seed_rows = [r[0] for r in
-                     seeds.select(seeds.columns[0]).collect()]
-        # per-seed state is an O(|V|) array — keep the local path to a
-        # bounded seeds x vertices footprint, else fall through
-        if len(seed_rows) * max(n_e, 1) <= 256_000_000:
-            return finish_locally(
-                e, n_e,
-                lambda pdf: _local_temporal_ea(
-                    pdf, list(dict.fromkeys(seed_rows)), max_hops,
-                    max_iter),
-                T.StructType([
-                    T.StructField("seed",
-                                  seeds.schema[seeds.columns[0]].dataType),
-                    T.StructField("node", e.schema["u"].dataType),
-                    T.StructField("arrival", T.LongType())]))
-    total = (seeds.select(F.col(seeds.columns[0]).alias("seed"))
+         .dropDuplicates())
+    seed_col = seeds.columns[0]
+    seed_pdf = collect_bounded(seeds.select(seed_col))
+
+    def ea(pdf):
+        # per-seed state is an O(|V|) array: decline past a bounded
+        # seeds x edges footprint
+        if len(seed_pdf) * max(len(pdf), 1) > 256_000_000:
+            return None
+        # a null seed reaches nothing, as in the Spark loop's join
+        return _local_temporal_ea(
+            pdf, list(dict.fromkeys(seed_pdf[seed_col].dropna().tolist())),
+            max_hops, max_iter)
+
+    local = None if seed_pdf is None else finish_locally(
+        e, ea, T.StructType([
+            T.StructField("seed", seeds.schema[seed_col].dataType),
+            T.StructField("node", e.schema["u"].dataType),
+            T.StructField("arrival", T.LongType())]))
+    if local is not None:
+        return local
+    e = e.persist()
+    total = (seeds.select(F.col(seed_col).alias("seed"))
              .select("seed", F.col("seed").alias("node"),
                      F.lit(None).cast("long").alias("arrival"))
              .transform(checkpoint_rebased))

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, Window, functions as F
 
+from vivace_graph_v3_spark import util
 from vivace_graph_v3_spark.pipeline.dedup import cosine
 
 
@@ -77,9 +78,10 @@ def _cosine_topk_seed_scan(corpus: DataFrame, queries: DataFrame, k: int, *,
     2.5e-6 margin — wider than one rounding step), then the k-row
     window runs over ~k+eps rows per query.
 
-    Scale shape: seed collect is |seed| x dims floats (the bounded side
-    by contract); the query side streams through mapInPandas Arrow
-    batches partition-parallel with zero shuffle before the final
+    Scale shape: seed collect is |seed| x dims floats, one collect
+    capped at the driver bound (``util.DRIVER_ROWS``; a larger seed
+    raises ValueError); the query side streams through mapInPandas
+    Arrow batches partition-parallel with zero shuffle before the final
     (queries x ~k)-row rank.
 
     ``label_col``/``q_label_col`` (both or neither): additionally
@@ -95,7 +97,13 @@ def _cosine_topk_seed_scan(corpus: DataFrame, queries: DataFrame, k: int, *,
     seed_cols = [F.col(id_col).alias("nid"), F.col(vec_col).alias("cv")]
     if label_col is not None:
         seed_cols.append(F.col(label_col).alias("nlabel"))
-    seed_rows = corpus.select(*seed_cols).collect()
+    # Arrow keeps null labels as None; a limit runs as one job there
+    seed_rows = (corpus.select(*seed_cols).limit(util.DRIVER_ROWS + 1)
+                 .toArrow().to_pylist())
+    if not util.fits_driver(len(seed_rows)):
+        raise ValueError(
+            f"seed corpus is larger than the driver bound "
+            f"(util.DRIVER_ROWS = {util.DRIVER_ROWS} rows)")
     q_cols = [F.col(q_id_col).alias("query_id"),
               F.col(q_vec_col).alias("qv")]
     if q_label_col is not None:

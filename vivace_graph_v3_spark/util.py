@@ -39,10 +39,11 @@ def checkpoint_counted(df: DataFrame, *,
 # The one driver bound: how many rows the driver may collect (a bounded
 # local finish) or ship as a broadcast (bounded iteration state or rule
 # relations). Every bounded-vs-distributed choice reads it at call time
-# through fits_driver / finish_locally / collect_bounded, so setting it
-# to 0 forces every operator onto its distributed path. Size it to driver
-# memory: ~100 bytes per collected edge row, so 2M rows is a few hundred
-# MB.
+# through fits_driver, or collect_bounded (which finish_locally uses):
+# a capped collect is the bound check, so no operator counts, persists
+# or checkpoints its input to decide. Setting it to 0 forces every
+# operator onto its distributed path. Size it to driver memory: ~100
+# bytes per collected edge row, so 2M rows is a few hundred MB.
 DRIVER_ROWS = 2_000_000
 
 
@@ -53,14 +54,15 @@ def fits_driver(n: int, *, scale: int = 1) -> bool:
     return n <= DRIVER_ROWS * scale
 
 
-def collect_bounded(df: DataFrame):
+def collect_bounded(df: DataFrame, *, scale: int = 1):
     """``df`` collected over Arrow as a pandas frame when its rows fit
-    the driver, else None. One job and nothing persisted: the collect is
-    capped one row past the bound, so a frame too big for the driver
-    costs at most that many rows before the caller takes its
-    distributed path."""
-    pdf = df.limit(DRIVER_ROWS + 1).toPandas()
-    return pdf if fits_driver(len(pdf)) else None
+    the driver (``scale`` as in :func:`fits_driver`), else None. One job
+    and nothing persisted: the collect is capped one row past the
+    bound, so a frame too big for the driver costs at most that many
+    rows before the caller takes its distributed path, and nothing has
+    to count ``df`` first."""
+    pdf = df.limit(DRIVER_ROWS * scale + 1).toPandas()
+    return pdf if fits_driver(len(pdf), scale=scale) else None
 
 
 def local_frame(spark, rows, schema) -> DataFrame:
@@ -105,32 +107,19 @@ def arrow_rows(rows, schema):
          for i, f in enumerate(arrow_schema)], schema=arrow_schema)
 
 
-def finish_locally(df: DataFrame, n: int, kernel, schema, *,
+def finish_locally(df: DataFrame, kernel, schema, *,
                    scale: int = 1) -> DataFrame | None:
-    """Bounded local finish for an iterative operator: when ``df``
-    (``n`` rows, already counted) fits the driver, collect it over
-    Arrow, run ``kernel(pdf)`` and rebuild its rows as
-    ``createDataFrame(rows, schema)``, then ``df.unpersist()``.
+    """Bounded local finish for an iterative operator: ``df`` through
+    :func:`collect_bounded`, ``kernel(pdf)`` on the driver, and the
+    kernel's rows (tuples in ``schema`` order) as a :func:`local_frame`.
 
-    That call releases a ``persist()``-ed ``df``. It does NOT release an
-    eager ``localCheckpoint``'s blocks (``getPersistentRDDs()`` still
-    lists them afterwards, even after a forced gc), so a caller that
-    must not hold blocks persists its input instead of checkpointing
-    it, or collects with :func:`collect_bounded`.
-
-    Returns None above the bound, so the caller keeps its distributed
-    loop. A kernel may also return None to decline (e.g. a memory cap
-    inside the kernel); ``df`` is then left as it was for that loop."""
-    if not fits_driver(n, scale=scale):
-        return None
-    declined = False
-    try:
-        rows = kernel(df.toPandas())
-        declined = rows is None
-    finally:
-        if not declined:
-            df.unpersist()
-    return None if declined else df.sparkSession.createDataFrame(rows, schema)
+    Returns None when ``df`` does not fit the driver, or when the
+    kernel returns None to decline (e.g. a memory cap inside it); the
+    caller then materializes what its distributed loop needs."""
+    pdf = collect_bounded(df, scale=scale)
+    rows = None if pdf is None else kernel(pdf)
+    return None if rows is None else local_frame(df.sparkSession, rows,
+                                                 schema)
 
 
 def union_find_min(edge_rows) -> dict:
