@@ -2008,3 +2008,98 @@ def test_hard_negatives_seed_past_driver_bound_raises(spark, embeds):
     with mock.patch.object(util, "DRIVER_ROWS", 9):
         with pytest.raises(ValueError, match="DRIVER_ROWS"):
             hard_negatives(embeds.limit(10), k=3)
+
+
+def _nan_rows(df):
+    """Order-insensitive rows with NaN made comparable."""
+    import math
+
+    return sorted((tuple("NaN" if isinstance(v, float) and math.isnan(v)
+                         else v for v in r) for r in df.collect()), key=repr)
+
+
+def test_containment_local_matches_distributed(spark):
+    """The driver-side containment kernel (within the driver bound) and
+    the Spark plan past it give identical rows: the +2 prefix case at
+    threshold 0.666667, documents under ``n`` tokens, duplicate texts
+    under distinct ids, one hot shingle in every document, a null id,
+    an id with two documents (the Spark plan decides that one) and two
+    documents sharing 1200 shingles (past an int's common * 2000000)."""
+    import random
+
+    from vivace_graph_v3_spark.pipeline.dedup import containment_pairs
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(25)]
+    rows = [(i, " ".join(rng.choice(vocab) for _ in range(12)) + " hot x y")
+            for i in range(30)]
+    rows += [(100 + i, rows[i][1] + " " + " ".join(
+        rng.choice(vocab) for _ in range(8))) for i in range(4)]
+    rows += [(200, "a b c d e"), (201, "x b c d e y"), (202, "a b c d e"),
+             (203, "a b"), (204, ""), (205, None), (None, "a b c d e f"),
+             (206, "p q r s"), (206, "p q r s")]
+    long_doc = " ".join(f"t{i}" for i in range(1202))
+    rows += [(300, long_doc), (301, long_doc + " z")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    unique_ids = df.filter(F.col("doc_id").isNull()
+                           | (F.col("doc_id") != 206))
+    for frame in (df, unique_ids):
+        for t in (0.666667, 0.8):
+            got = _nan_rows(containment_pairs(frame, threshold=t))
+            with distributed_regime():
+                want = _nan_rows(containment_pairs(frame, threshold=t))
+            assert got == want and got, t
+    got = {(a, b): c for a, b, c in _nan_rows(
+        containment_pairs(unique_ids, threshold=0.666667))}
+    assert got[(200, 201)] == 0.666667 and got[(200, 202)] == 1.0
+    assert got[(300, 301)] == 1.0 and got[(301, 300)] == 0.999167
+
+
+def test_bruteforce_topk_local_matches_distributed(spark):
+    """Exact top-k on the driver (within the driver bound) against the
+    Spark plans past it, for both branches: a zero vector (a NaN cosine,
+    null in every plan and ranked last), k larger than the corpus, ties
+    on the rounded cosine, string and long ids. The seed branch's Spark
+    path is forced by a bound that fits the seed but not the pairs. The
+    local path's executed plans hold no Python node."""
+    from unittest import mock
+
+    from vivace_graph_v3_spark import util
+    from vivace_graph_v3_spark.pipeline.similarity import (
+        cosine_topk_bruteforce)
+
+    vecs = [[1.0, 0.0], [0.0, 0.0], [1.0, 1.0], [2.0, 2.0], [3.0, 0.0],
+            [-1.0, 0.5], [1.0, 1e-8], [0.0, 0.0], [0.0, 0.0], [0.0, 0.0]]
+    longs = spark.createDataFrame(list(enumerate(vecs)),
+                                  "vec_id long, embedding array<float>")
+    strs = longs.select(F.concat(F.lit("v"), F.col("vec_id").cast("string"))
+                        .alias("vec_id"), "embedding")
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def plans():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        it, out = store.executionsList().iterator(), {}
+        while it.hasNext():
+            e = it.next()
+            out[e.executionId()] = e.physicalPlanDescription()
+        return out
+
+    for emb, picks in ((longs, [0, 1, 4, 6]), (strs, ["v0", "v1", "v6"])):
+        qs = emb.filter(F.col("vec_id").isin(picks))
+        for k in (3, 20):
+            for seed in (False, True):
+                before = plans()
+                got = _nan_rows(cosine_topk_bruteforce(
+                    emb, qs, k, broadcast_corpus=seed))
+                ran = [p for i, p in plans().items() if i not in before]
+                assert ran and not any("MapInPandas" in p or
+                                       "ArrowEvalPython" in p for p in ran)
+                with (mock.patch.object(util, "DRIVER_ROWS", len(vecs))
+                      if seed else distributed_regime()):
+                    want = _nan_rows(cosine_topk_bruteforce(
+                        emb, qs, k, broadcast_corpus=seed))
+                assert got == want, (k, seed)
+    got = {(q, n): (c, r) for q, n, c, r in _nan_rows(
+        cosine_topk_bruteforce(longs, longs.filter("vec_id = 0"), 20))}
+    assert got[(0, 4)] == (1.0, 1) and got[(0, 6)] == (1.0, 2)
+    assert got[(0, 1)] == (None, 6) and len(got) == 9

@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, distributed_regime
 from vivace_graph_v3_spark.plans import assert_plan, plan_facts
 
 
@@ -182,14 +182,22 @@ def test_round5c_operator_plan_shapes(spark):
 
     qs = eq.queries()
 
-    tr = qs["ann_truncation_recall"](spark, SF_DIR)
-    tr.collect()
+    # within the driver bound both scoring passes finish on the driver;
+    # the Spark plan they take past it is the one gated below
+    with distributed_regime():
+        tr = qs["ann_truncation_recall"](spark, SF_DIR)
+        tr.collect()
     ftr = plan_facts(tr)
     # the two scoring passes are non-equi (query_id != neighbor_id) ->
     # BroadcastNestedLoopJoin with the QUERY side broadcast
     assert ftr.broadcast_joins + ftr.broadcast_nl_joins >= 2
     assert ftr.sort_merge_joins + ftr.shuffled_hash_joins == 0
     assert not ftr.row_udf
+    tr = qs["ann_truncation_recall"](spark, SF_DIR)
+    tr.collect()
+    ftr = plan_facts(tr)
+    assert ftr.sort_merge_joins + ftr.shuffled_hash_joins == 0
+    assert not ftr.row_udf and not ftr.arrow
 
     lf = qs["order_lag_features"](spark, SF_DIR)
     lf.collect()

@@ -114,3 +114,119 @@ def test_bfs_broadcast_regime_differential(tpch):
         with distributed_regime():
             want = rows_set(traverse(tpch, ["nation:3"], **kw))
         assert got == want and len(got) > 1
+
+
+def _typed_graph(spark):
+    """Vertices ``a:0..5`` and ``b:0..3``; a typed arm ``ab`` (a -> b,
+    endpoint types declared, so arms prune per round), an untyped arm
+    ``ba`` (b -> a, one duplicate edge) and an untyped arm ``aa`` with
+    an edge to a missing vertex and one with a null ``dst``."""
+    from vivace_graph_v3_spark.graph import GraphStore
+    from vivace_graph_v3_spark.schema import SchemaRegistry
+
+    reg = SchemaRegistry()
+    for t in ("a", "b"):
+        reg.def_vertex(t, {})
+    for e in ("ab", "ba", "aa"):
+        reg.def_edge(e)
+    g = GraphStore(spark, reg, name="bfs", has_tombstones=False)
+    cols = "id string, type string, deleted boolean, revision long, " \
+           "commit_epoch long"
+    for t, n in (("a", 6), ("b", 4)):
+        g.add_vertices(t, spark.createDataFrame(
+            [(f"{t}:{i}", t, False, 0, 0) for i in range(n)], cols))
+
+    def edges(name, pairs):
+        return spark.createDataFrame(
+            [(f"{name}{i}", name, False, 0, 0, s, d, 1.0)
+             for i, (s, d) in enumerate(pairs)],
+            cols + ", src string, dst string, weight double")
+
+    g.add_edges("ab", edges("ab", [("a:0", "b:0"), ("a:0", "b:1"),
+                                   ("a:2", "b:1"), ("a:3", "b:2")]),
+                src_type="a", dst_type="b")
+    g.add_edges("ba", edges("ba", [("b:0", "a:1"), ("b:1", "a:1"),
+                                   ("b:1", "a:1"), ("b:1", "a:4"),
+                                   ("b:2", "a:0")]))
+    g.add_edges("aa", edges("aa", [("a:1", "a:2"), ("a:4", "a:2"),
+                                   ("a:1", None), ("a:4", "zz:0"),
+                                   ("a:5", "a:5")]))
+    return g
+
+
+def _rows(df):
+    return sorted((tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                   for r in df.collect()), key=repr)
+
+
+def test_bfs_local_matches_distributed(spark):
+    """The driver-held frontier (within the driver bound) and the Spark
+    frontier-join loop past it give identical rows: duplicate roots, a
+    root missing from the graph, a null ``dst`` edge (its null id is
+    reported once per round and never counts as visited), DataFrame
+    roots with a duplicate and a null id, discovery paths, an edge-type
+    restriction, every direction, and a typed arm pruned per round."""
+    g = _typed_graph(spark)
+    roots_df = spark.createDataFrame(
+        [("a:0",), ("a:0",), (None,), ("b:3",)], "id string")
+    cases = [
+        (["a:0", "a:0", "nope:1"], dict(direction="out", max_depth=4)),
+        (["a:0"], dict(direction="out", max_depth=4, include_paths=True)),
+        (["b:1", "a:3"], dict(direction="in", max_depth=3,
+                              include_paths=True)),
+        (["a:1"], dict(direction="both", max_depth=3, include_paths=True)),
+        (["a:0"], dict(direction="both", edge_type="ab", max_depth=2)),
+        (roots_df, dict(direction="out", max_depth=3)),
+        (roots_df, dict(direction="both", max_depth=2, include_paths=True)),
+        ([], dict(direction="out", max_depth=2)),
+    ]
+    for roots, kw in cases:
+        got = _rows(traverse(g, roots, **kw))
+        with distributed_regime():
+            want = _rows(traverse(g, roots, **kw))
+        assert got == want, (roots, kw)
+    # the cases above do reach the null endpoint, the missing vertex and
+    # a pruned round
+    out = _rows(traverse(g, ["a:0", "a:0", "nope:1"], direction="out",
+                         max_depth=4))
+    assert (None, 3) in out and ("zz:0", 3) in out
+    assert out.count(("a:0", 0)) == 2 and ("nope:1", 0) in out
+
+
+def test_local_finishes_hold_no_blocks_and_few_jobs(spark, tpch):
+    """Within the driver bound, BFS, containment and exact top-k (both
+    branches) finish on the driver: each call, its result collected,
+    issues at most 3 Spark jobs (BFS: one per round; top-k: one collect
+    per side, both sides in one for the default branch) and leaves no
+    persisted or checkpointed RDD behind."""
+    import gc
+
+    from pyspark.sql import functions as F
+
+    from tests.conftest import SF_DIR, last_job_id
+    from vivace_graph_v3_spark.pipeline.dedup import containment_pairs
+    from vivace_graph_v3_spark.pipeline.similarity import (
+        cosine_topk_bruteforce)
+
+    jsc = spark.sparkContext._jsc
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
+        .select("doc_id", "text")
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    qs = emb.filter(F.col("vec_id") < 10)
+
+    def held():
+        gc.collect()
+        return set(jsc.getPersistentRDDs().keySet())
+
+    for name, op, jobs in (
+            ("bfs", lambda: traverse(tpch, ["region:0"], direction="in",
+                                     max_depth=2), 2),
+            ("containment", lambda: containment_pairs(docs, threshold=0.8),
+             3),
+            ("top-k", lambda: cosine_topk_bruteforce(emb, qs, 5), 1),
+            ("seed top-k", lambda: cosine_topk_bruteforce(
+                emb, qs, 5, broadcast_corpus=True), 2)):
+        before, j0 = held(), last_job_id(spark)
+        op().collect()
+        assert last_job_id(spark) - j0 <= jobs, name
+        assert held() <= before, name

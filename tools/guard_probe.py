@@ -6,7 +6,11 @@ each listed ENTRY both ways at a given SF —
 
   - declared: exactly what the registry/bench runs (bounded paths engage),
   - distributed: the same entry with ``util.DRIVER_ROWS`` patched to 0,
-    which forces every operator onto its distributed path,
+    which forces every operator onto its distributed path (entries in
+    SEED_BOUND patch it to the row count of a table instead: their
+    seed-scan top-k raises when its seed passes the bound, and a bound
+    that fits the seed but not the seed x query pairs still takes the
+    Spark path),
 
 asserts the canonicalized results are IDENTICAL (the check_contract
 canonicalization: %.6f floats, order-insensitive hash), times both with
@@ -44,7 +48,17 @@ GUARDED = [
     "graph_pagerank_weighted", "graph_label_propagation", "graph_modularity",
     "graph_hits", "graph_random_walks", "graph_negative_samples",
     "traverse_bfs", "geo_grid_dbscan", "graph_cc_incremental",
+    # pipeline.dedup.containment_pairs
+    "dedup_containment",
+    # pipeline.similarity.cosine_topk_bruteforce / _cosine_topk_seed_scan
+    "ann_bruteforce_topk", "ann_binary_hamming", "ann_lsh_recall",
+    "ann_ivf_recall", "ann_ivfpq_recall", "ann_recall_curve",
+    "ann_truncation_recall", "embedding_hard_negatives",
+    "knn_label_propagation",
 ]
+# entry -> the table whose row count is the distributed run's bound
+SEED_BOUND = {"embedding_hard_negatives": "embeddings",
+              "knn_label_propagation": "embeddings"}
 
 
 def main() -> int:
@@ -98,7 +112,9 @@ def main() -> int:
             return statistics.median(samples), result_hash
 
         t_local, h_local = run("declared")
-        with mock.patch.object(util, "DRIVER_ROWS", 0):
+        bound = (spark.read.parquet(f"{sf_dir}/{SEED_BOUND[name]}.parquet")
+                 .count() if name in SEED_BOUND else 0)
+        with mock.patch.object(util, "DRIVER_ROWS", bound):
             t_dist, h_dist = run("distributed")
         same = h_local == h_dist
         status = "IDENTICAL" if same else "MISMATCH"

@@ -79,12 +79,6 @@ LOG_SCHEMA = T.StructType([
 _LOG_ARROW = to_arrow_schema(LOG_SCHEMA)
 _ID_SCHEMA = T.StructType([T.StructField("id", T.StringType())])
 _PAYLOAD_SCHEMA = T.StructType([T.StructField("payload", T.StringType())])
-# Up to this many driver-held ids narrow a frame as an IN list, which the
-# scan filters and which runs no job; more go in as a broadcast join
-# against a local frame of them: one job more, but planned in constant
-# time, while an IN list costs ~0.15 ms per id to build over py4j (on a
-# 4-core host the two cost about the same at 1000 ids).
-_IN_LIST_IDS = 1000
 
 
 class ConflictError(Exception):
@@ -236,16 +230,6 @@ def _with_slots(df: DataFrame, nt, *cols) -> DataFrame:
     columns of ``nt``."""
     return (df.withColumn("__p", F.from_json("payload", _slot_struct(nt)))
             .select(*cols, *[F.col(f"__p.{c}").alias(c) for c in nt.slots]))
-
-
-def _by_ids(spark, df: DataFrame, ids, how: str) -> DataFrame:
-    """The rows of ``df`` whose ``id`` is in (``how="left_semi"``) or not
-    in (``"left_anti"``) the non-null pyarrow string array ``ids``."""
-    if len(ids) <= _IN_LIST_IDS:
-        hit = F.col("id").isin(ids.to_pylist())
-        return df.filter(hit if how == "left_semi" else ~hit)
-    return df.join(F.broadcast(util.local_frame(
-        spark, pa.table({"id": ids}), _ID_SCHEMA)), "id", how)
 
 
 def _typed_schema(nt) -> T.StructType:
@@ -430,14 +414,13 @@ class VersionedGraph:
         """id -> current ``(revision[, src, dst, weight])`` of the ids in
         ``read(nt, include_deleted=True)``: from the log tail's ``typed``
         rows of ``nt`` where they hold the id, else from one base probe
-        (:func:`_by_ids`)."""
+        (:func:`util.filter_keys`)."""
         cols = list(_head_columns(nt))
         heads = {r["id"]: tuple(r[c] for c in cols) for r in
                  _latest(typed, ids=list(ids)).to_pylist()}
         rest = ids - heads.keys()
         if rest:
-            base = _by_ids(self.spark, self._base(nt),
-                           pa.array(sorted(rest), pa.string()), "left_semi")
+            base = util.filter_keys(self._base(nt), "id", sorted(rest))
             heads.update((r["id"], tuple(r[c] for c in cols))
                          for r in base.select("id", *cols).collect())
         return heads
@@ -599,8 +582,8 @@ class VersionedGraph:
         Any log row of an id supersedes its base row. While the log fits
         the driver bound, the log tail's decoded rows of the type give
         each logged id's winner on the driver, and the plan is the base
-        without those ids (:func:`_by_ids`), unioned with the winners as
-        a local frame: no log scan, window or ``from_json``.
+        without those ids (:func:`util.filter_keys`), unioned with the
+        winners as a local frame: no log scan, window or ``from_json``.
         A type with no log rows (at or before ``as_of``) reads its base
         alone. Past the bound, the per-id window runs over the type's
         log rows and the base joins in by anti-join on the changed-id set
@@ -626,7 +609,7 @@ class VersionedGraph:
         else:
             won = _latest(typed, as_of=as_of)
             cur = base if not won.num_rows else (
-                _by_ids(self.spark, base, won["id"], "left_anti")
+                util.filter_keys(base, "id", won["id"], anti=True)
                 .unionByName(util.local_frame(self.spark, won,
                                               _typed_schema(nt))))
         if not include_deleted:
@@ -744,9 +727,9 @@ class VersionedGraph:
             return store.active_edges().filter(touching)
         ends = pc.unique(pa.chunked_array(
             rows["src"].chunks + rows["dst"].chunks, pa.string())).drop_null()
-        live = pa.array([r["id"] for r in _by_ids(
-            self.spark, store.scan_vertices(columns=["id"]), ends,
-            "left_semi").collect()] if len(ends) else [], pa.string())
+        live = pa.array([r["id"] for r in util.filter_keys(
+            store.scan_vertices(columns=["id"]), "id", ends).collect()]
+            if len(ends) else [], pa.string())
         return util.local_frame(self.spark, rows.filter(pc.and_(
             pc.is_in(rows["src"], value_set=live),
             pc.is_in(rows["dst"], value_set=live))), edges.schema)

@@ -10,7 +10,8 @@ by (1) computing the covering cells, (2) pulling candidates per cell, and
   table is *partitioned or z-ordered by geohash prefix* so the cell filter
   becomes partition pruning, not a scan;
 - the filter stage is ``isin(covering_cells)`` (a pushed-down IN filter) or,
-  for large coverings, a broadcast join against a cells DataFrame;
+  for coverings past ``util.IN_LIST_KEYS`` cells, a broadcast semi-join
+  against a local frame of them (``util.filter_keys``);
 - the refine stage is an all-JVM haversine/bbox expression; polygon refine is
   a vectorized pandas UDF over the (small) candidate set.
 
@@ -24,13 +25,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StringType
 
 from vivace_graph_v3_spark.functions.geohash import (
     covering_for_radius, geohash_covering, _pick_precision)
 from vivace_graph_v3_spark.functions.geometry import (
     haversine_m, point_in_polygon_udf, polygon_bbox)
-from vivace_graph_v3_spark.util import local_frame
+from vivace_graph_v3_spark.util import filter_keys
 
 DEFAULT_PRECISION = 7  # ~150 m cells; the reference's spatial opt-in default
 
@@ -61,15 +62,7 @@ def _cell_filter(df: DataFrame, cells: list[str], precision: int,
                  gh_col: str) -> DataFrame:
     """Filter stage: candidates in covering cells. Cells are compared at
     ``precision`` via prefix (the stored hash may be finer)."""
-    prefix = F.substring(F.col(gh_col), 1, precision)
-    if len(cells) <= 256:
-        return df.filter(prefix.isin(cells))
-    spark = df.sparkSession
-    cells_df = local_frame(spark, [(c,) for c in cells],
-                           StructType([StructField("__cell", StringType())]))
-    return (df.withColumn("__cell", prefix)
-            .join(F.broadcast(cells_df), "__cell", "left_semi")
-            .drop("__cell"))
+    return filter_keys(df, F.substring(F.col(gh_col), 1, precision), cells)
 
 
 def find_nodes_near(df: DataFrame, lat: float, lon: float, radius_m: float, *,

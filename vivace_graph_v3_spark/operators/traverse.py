@@ -4,11 +4,20 @@ Reference semantics: breadth-first from a root vertex, direction :in / :out /
 :both, optional edge-type restriction, max-depth bound, global uniqueness (a
 vertex is reported once, at its minimum depth), optionally the discovery path.
 
-Spark-first: an iterative frontier-join loop — each round joins the frontier
-against the (pre-filtered) edge relation, anti-joins the visited set, and
-unions into the result. This is the standard distributed BFS (Pregel-style);
-depth is bounded, the frontier is cached per round, and lineage is truncated
-with localCheckpoint so 20-deep traversals don't build 20-deep plans.
+Within the driver bound (``util.DRIVER_ROWS``) the frontier and the visited
+set live on the driver: each round is one capped collect of the hop arms
+filtered to the frontier ids (``util.filter_keys``: an IN list the scans
+take, so the probe runs no job of its own), and deduplication, the
+anti-join against visited ids and the min-path choice happen on the driver.
+Nothing is persisted or checkpointed, and the result is a local frame.
+
+Past the bound (a round's hop rows or the visited set), and for
+``uniqueness=False``, the traversal is an iterative frontier-join loop in
+Spark — each round joins the frontier against the (pre-filtered) edge
+relation, anti-joins the visited set, and unions into the result. This is the
+standard distributed BFS (Pregel-style); depth is bounded, each frontier is
+materialized once with an eager localCheckpoint, which also truncates lineage
+so 20-deep traversals don't build 20-deep plans.
 
 At 100 TB the edges DataFrame should be bucketed by the join side (src for
 :out) so each round's join is shuffle-free on the edge side; the frontier is
@@ -20,7 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from vivace_graph_v3_spark.graph import GraphStore
-from vivace_graph_v3_spark.util import fits_driver, local_frame
+from vivace_graph_v3_spark.util import (
+    collect_bounded, filter_keys, fits_driver, local_frame)
 
 
 def traverse(graph: GraphStore, roots, *, direction: str = "out",
@@ -45,8 +55,9 @@ def traverse(graph: GraphStore, roots, *, direction: str = "out",
     # which asserts the "<type>:<key>" id convention), a round whose
     # frontier contains no vertex of the arm's from-side type can skip
     # that arm's SOURCE SCAN entirely — the join could never match it.
-    # Frontier types ride the frontier checkpoint as an observation (zero
-    # extra jobs); arms without metadata are always scanned, so untyped
+    # The driver path reads the frontier's types off its ids; on the
+    # Spark loop they ride the frontier checkpoint as an observation (zero
+    # extra jobs). Arms without metadata are always scanned, so untyped
     # graphs take the exact pre-pruning path.
     prunable = any(
         (st is not None) if direction == "out"
@@ -54,9 +65,12 @@ def traverse(graph: GraphStore, roots, *, direction: str = "out",
         else (st is not None or dt is not None)
         for st, dt in endpoints.values())
 
+    def arm_scan(n, a, b):
+        return (graph.active_edges(n, columns=["src", "dst"])
+                .select(F.col(a).alias("from_id"), F.col(b).alias("to_id")))
+
     def arm_df(n, a, b):
-        df = (graph.active_edges(n, columns=["src", "dst"])
-              .select(F.col(a).alias("from_id"), F.col(b).alias("to_id")))
+        df = arm_scan(n, a, b)
         if persist_hop:  # deep traversal: each used arm scanned once
             key = (n, a)
             if key not in _arm_cache:
@@ -64,9 +78,10 @@ def traverse(graph: GraphStore, roots, *, direction: str = "out",
             df = _arm_cache[key]
         return df
 
-    def hop_for(ftypes):
+    def hop_for(ftypes, scan=arm_df):
         """Union of hop arms that can extend a frontier whose vertex types
-        are ``ftypes`` (None = unknown -> all arms)."""
+        are ``ftypes`` (None = unknown -> all arms); None when no arm
+        can."""
         arms = []
         for n in arm_names:
             st, dt = endpoints[n]
@@ -76,13 +91,19 @@ def traverse(graph: GraphStore, roots, *, direction: str = "out",
             if direction in ("in", "both") and (
                     ftypes is None or dt is None or dt in ftypes):
                 arms.append((n, "dst", "src"))
-        hops = [arm_df(n, a, b) for n, a, b in arms]
+        hops = [scan(n, a, b) for n, a, b in arms]
         if not hops:
             return None
         hop = hops[0]
         for h in hops[1:]:
             hop = hop.unionByName(h)
         return hop
+
+    if uniqueness:
+        local = _bfs_local(spark, roots, lambda ft: hop_for(ft, arm_scan),
+                           prunable, max_depth, include_paths)
+        if local is not None:
+            return local
 
     if isinstance(roots, DataFrame):
         frontier = roots.select("id").dropDuplicates()
@@ -162,3 +183,66 @@ def traverse(graph: GraphStore, roots, *, direction: str = "out",
         for cached in _arm_cache.values():
             cached.unpersist()
     return result
+
+
+def _bfs_local(spark, roots, hop_for, prunable: bool, max_depth: int,
+               include_paths: bool) -> DataFrame | None:
+    """The uniqueness BFS with its frontier and visited set on the driver:
+    the same rows as the Spark loop in :func:`traverse`, or None when
+    the roots, a round's hop rows or the visited set pass the driver
+    bound (or DataFrame roots' ``id`` is not a string), so the caller
+    takes the Spark loop instead.
+
+    Spark's semantics carried over: list roots are kept as given (a
+    duplicate root is reported twice at depth 0), DataFrame roots are
+    deduplicated; a null id joins nothing, never counts as visited, and
+    is reported at most once per round; a vertex's path is the
+    lexicographically smallest among its min-depth discoveries."""
+    if isinstance(roots, DataFrame):
+        if not isinstance(roots.schema["id"].dataType, T.StringType):
+            return None
+        pdf = collect_bounded(roots.select("id"))
+        if pdf is None:
+            return None
+        ids = list(dict.fromkeys(pdf["id"]))
+    else:
+        ids = list(roots)
+        if not fits_driver(len(ids)):
+            return None
+    rows = [(r, 0, [r]) if include_paths else (r, 0) for r in ids]
+    frontier = {r: [r] for r in ids if r is not None}   # id -> path
+    visited = set(frontier)
+    for depth in range(1, max_depth + 1):
+        if not frontier:
+            break
+        hop = hop_for({i.split(":", 1)[0] for i in frontier}
+                      if prunable else None)
+        if hop is None:
+            break  # no arm can extend this frontier
+        pdf = collect_bounded(filter_keys(hop, "from_id", sorted(frontier)))
+        if pdf is None:
+            return None
+        nxt: dict = {}
+        for f, t in zip(pdf["from_id"], pdf["to_id"]):
+            if t in visited:
+                continue
+            if not include_paths:
+                nxt[t] = None
+                continue
+            path = frontier[f] + [t]
+            if t not in nxt or path < nxt[t]:
+                nxt[t] = path
+        if not nxt:
+            break
+        rows.extend((t, depth, p) if include_paths else (t, depth)
+                    for t, p in nxt.items())
+        frontier = {t: p for t, p in nxt.items() if t is not None}
+        visited.update(frontier)
+        if not fits_driver(len(visited)):
+            return None
+    fields = [T.StructField("id", T.StringType()),
+              T.StructField("depth", T.IntegerType(), False)]
+    if include_paths:
+        fields.append(T.StructField("path", T.ArrayType(T.StringType()),
+                                    False))
+    return local_frame(spark, rows, T.StructType(fields))

@@ -31,7 +31,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from vivace_graph_v3_spark.pipeline.text import tokens
 from vivace_graph_v3_spark.util import (
-    checkpoint_counted, ensure_parallelism, fits_driver, union_find_min)
+    checkpoint_counted, collect_bounded, ensure_parallelism, fits_driver,
+    local_frame, union_find_min)
 
 # -- exact ---------------------------------------------------------------------
 
@@ -175,11 +176,22 @@ def containment_pairs(df: DataFrame, *, text_col: str = "text",
     threshold (containment is not symmetric). Self-pairs excluded.
     At raw-corpus scale run it on blocked/candidate inputs; the measured
     10x-data probe ratio dropped from 12.6x to ~linear-in-output after
-    prefix filtering (SCALING.md)."""
+    prefix filtering (SCALING.md).
+
+    Within the driver bound the same prefix filter and verification run
+    on the driver (:func:`_containment_local`): shingles are hashed in
+    Spark and reach the driver as one capped collect of the
+    ``(id, shingle)`` postings, so ``util.DRIVER_ROWS`` counts postings,
+    not documents; nothing is persisted or checkpointed and the result is
+    a local frame. Past the bound the Spark plan below runs: the base is
+    persisted for its three consumers and the result checkpointed."""
     base = (ensure_parallelism(df)
             .filter(has_min_tokens(F.col(text_col), n))
             .select(F.col(id_col).alias("id"),
                     shingle_hashes(F.col(text_col), n).alias("sh")))
+    local = _containment_local(base, threshold)
+    if local is not None:
+        return local
     base = base.withColumn("sz", F.size("sh")).persist()
     try:
         inv = base.select("id", "sz", F.explode("sh").alias("shingle"))
@@ -217,15 +229,98 @@ def containment_pairs(df: DataFrame, *, text_col: str = "text",
                           F.size(F.array_intersect("sh_in", "sh_out"))
                           .alias("common")))
         # round-half-up in integer arithmetic so the 6-decimal value is
-        # bit-identical to any SQL oracle (the engine-stable ratio recipe)
-        cont = (F.expr("(common * 2000000 + sz_in) div (sz_in * 2)")
-                .cast("double") / 1e6)
+        # bit-identical to any SQL oracle (the engine-stable ratio recipe);
+        # in bigint, since common * 2000000 overflows an int from 1074
+        # common shingles on
+        cont = (F.expr("(cast(common as bigint) * 2000000 + sz_in) "
+                       "div (sz_in * 2)").cast("double") / 1e6)
         out = (common.withColumn("containment", cont)
                .filter(F.col("containment") >= threshold)
                .select("inner_id", "outer_id", "containment"))
         return out.localCheckpoint(eager=True)
     finally:
         base.unpersist()
+
+
+def _containment_local(base: DataFrame, threshold: float) -> DataFrame | None:
+    """:func:`containment_pairs` on the driver over ``base`` (``id``,
+    ``sh``: one row per document, its distinct shingle hashes): the same
+    rarest-first prefix (``floor((1-t)·sz)+2`` shingles by (document
+    frequency, hash)), candidate pairs from the prefix postings against
+    every posting, exact verification of each pair and the same integer
+    round-half-up ratio. Returns None, so the caller runs the Spark plan,
+    when the postings, the candidate postings or the verification
+    postings pass ``util.DRIVER_ROWS``, or when an id names more than one
+    document (the Spark plan's per-id size is then one of theirs).
+
+    A null id counts towards document frequencies and pairs with nothing,
+    as the Spark plan's ``!=`` and equi-joins have it."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    post = collect_bounded(base.select("id", F.posexplode("sh")), arrow=True)
+    if post is None:
+        return None
+    enc = post["id"].combine_chunks().dictionary_encode()
+    doc = enc.indices.fill_null(-1).to_numpy().astype(np.int64)
+    ndoc = len(enc.dictionary)
+    first = doc[(post["pos"].to_numpy() == 0) & (doc >= 0)]
+    if len(first) != ndoc:  # an id with two documents
+        return None
+    _, sh, dfreq = np.unique(post["col"].to_numpy(), return_inverse=True,
+                             return_counts=True)
+    live = doc >= 0
+    doc, sh = doc[live], sh[live]
+    sz = np.bincount(doc, minlength=ndoc)
+    # prefix: each document's shingles by (df, hash) -- unique shingle
+    # codes follow hash order -- first floor((1-t)*sz)+2 of them
+    order = np.lexsort((sh, dfreq[sh], doc))
+    pdoc, psh = doc[order], sh[order]
+    rank = np.arange(len(pdoc)) - np.searchsorted(pdoc, pdoc)
+    k_len = (np.floor((1.0 - threshold) * sz.astype(np.float64))
+             .astype(np.int64) + 2)
+    pre = rank < k_len[pdoc]
+    pdoc, psh = pdoc[pre], psh[pre]
+    # candidates: every posting of each prefix shingle, another document
+    by_sh = np.lexsort((doc, sh))
+    idoc, ish = doc[by_sh], sh[by_sh]
+    lo = np.searchsorted(ish, psh, "left")
+    cnt = np.searchsorted(ish, psh, "right") - lo
+    if not fits_driver(int(cnt.sum())):
+        return None
+    at = np.repeat(lo - np.cumsum(cnt) + cnt, cnt) + np.arange(cnt.sum())
+    pair = np.repeat(pdoc, cnt) * ndoc + idoc[at]
+    pair = np.unique(pair[np.repeat(pdoc, cnt) != idoc[at]])
+    inner, outer = pair // ndoc, pair % ndoc
+    # verification: each inner posting looked up among the outer's
+    if not fits_driver(int(sz[inner].sum())):
+        return None
+    by_doc = np.lexsort((sh, doc))
+    ddoc, dsh = doc[by_doc], sh[by_doc]
+    start = np.searchsorted(ddoc, np.arange(ndoc))
+    nsh = int(sh.max()) + 1 if len(sh) else 1
+    keys = ddoc * nsh + dsh
+    which = np.repeat(np.arange(len(pair)), sz[inner])
+    probe = (np.repeat(start[inner] - np.cumsum(sz[inner]) + sz[inner],
+                       sz[inner]) + np.arange(sz[inner].sum()))
+    want = outer[which] * nsh + dsh[probe]
+    hit = keys[np.minimum(np.searchsorted(keys, want),
+                          len(keys) - 1)] == want
+    common = np.bincount(which[hit], minlength=len(pair))
+    sz_in = sz[inner]
+    cont = ((common * 2000000 + sz_in) // (sz_in * 2)).astype(np.float64) / 1e6
+    ok = cont >= threshold
+    id_type = base.schema["id"].dataType
+    schema = T.StructType([T.StructField("inner_id", id_type),
+                           T.StructField("outer_id", id_type),
+                           T.StructField("containment", T.DoubleType())])
+    arrow_schema = to_arrow_schema(schema)
+    ids = enc.dictionary.cast(arrow_schema.field("inner_id").type)
+    return local_frame(base.sparkSession, pa.Table.from_arrays(
+        [ids.take(pa.array(inner[ok])), ids.take(pa.array(outer[ok])),
+         pa.array(cont[ok])], schema=arrow_schema), schema)
 
 
 def ngram_contamination(docs: DataFrame, eval_docs: DataFrame, *,

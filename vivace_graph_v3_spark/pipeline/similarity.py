@@ -1,6 +1,7 @@
 """Similarity search over an embedding column (``array<float>``).
 
-- ``cosine_topk_bruteforce``: exact top-k per query — broadcast the (small)
+- ``cosine_topk_bruteforce``: exact top-k per query — on the driver while
+  |queries| * |corpus| fits the driver bound, else broadcast the (small)
   query set against the corpus, windowed rank. The correctness baseline and
   perfectly adequate whenever |queries| * |corpus| per partition fits compute
   (it's one broadcast join: no shuffle of the corpus at all).
@@ -14,6 +15,7 @@ All vector math is JVM expressions (zip_with/aggregate), no Python.
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from vivace_graph_v3_spark import util
@@ -29,7 +31,17 @@ def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int, *,
     (query_id, neighbor_id, cosine, rank). Self-matches excluded when ids
     collide.
 
-    Two plan shapes by which side is small:
+    Within the driver bound (|queries| x |corpus| pairs up to
+    ``util.DRIVER_ROWS``) both sides are collected, in one capped collect
+    here and two with ``broadcast_corpus``, and the top-k runs on the
+    driver (:func:`_topk_local`): the numpy fold of
+    :func:`_cosine_topk_seed_scan`, rounding in Spark over a local frame
+    (no job), the rank on the driver. No Python worker starts and
+    nothing is persisted. A null id or vector, vectors of different
+    lengths, or id types that differ between the sides take the Spark
+    plans, which keep their own semantics for those.
+
+    Past the bound, two plan shapes by which side is small:
 
     - default (``broadcast_corpus=False``): broadcast the QUERY set
       against the corpus scan — right when queries are the bounded side
@@ -54,6 +66,21 @@ def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int, *,
                        F.col(q_vec_col).alias("qv"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"),
                       F.col(vec_col).alias("cv"))
+    if q.schema["query_id"].dataType == c.schema["neighbor_id"].dataType:
+        # one capped collect of both sides: |Q| x |C| <= DRIVER_ROWS
+        # implies |Q| + |C| <= DRIVER_ROWS + 1
+        both = util.collect_bounded(
+            q.select(F.lit(True).alias("is_q"), "query_id", "qv")
+            .union(c.select(F.lit(False), "neighbor_id", "cv")), arrow=True)
+        if both is not None:
+            is_q = both["is_q"]
+            qt = both.filter(is_q).drop(["is_q"])
+            ct = both.filter(pc.invert(is_q)).drop(["is_q"]) \
+                .rename_columns(["neighbor_id", "cv"])
+            if util.fits_driver(qt.num_rows * ct.num_rows):
+                local = _topk_local(q.sparkSession, qt, ct, k)
+                if local is not None:
+                    return local
     joined = (c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
               .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6)))
     w = Window.partitionBy("query_id").orderBy(
@@ -63,26 +90,152 @@ def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int, *,
             .select("query_id", "neighbor_id", "cosine", "rank"))
 
 
+def _fold_dot(A, B):
+    """All-pairs dot products in the exact left-fold order per element:
+    acc starts at 0.0 like the expression path's F.lit(0.0) seed."""
+    import numpy as np
+
+    acc = np.zeros((A.shape[0], B.shape[0]))
+    for i in range(A.shape[1]):
+        acc = acc + np.multiply.outer(A[:, i], B[:, i])
+    return acc
+
+
+def _fold_norm(A):
+    import numpy as np
+
+    acc = np.zeros(A.shape[0])
+    for i in range(A.shape[1]):
+        acc = acc + A[:, i] * A[:, i]
+    return np.sqrt(acc)
+
+
+def _topk_candidates(qids, Q, cids, C, cnorm, k: int, qlabels=None,
+                     clabels=None):
+    """(query index, corpus index, raw cosine) of every pair whose raw
+    cosine can still reach its query's rounded top-k: the kth largest
+    non-NaN raw minus a 2.5e-6 margin (wider than one rounding step),
+    plus every NaN (a zero vector's), which the callers' Arrow hand-off
+    turns into a null cosine that ranks last. Pairs with equal ids are
+    excluded, and with labels (SQL ``la != lb``) pairs with equal labels
+    or a null on either side."""
+    import numpy as np
+    import pandas as pd
+
+    with np.errstate(invalid="ignore", divide="ignore"):
+        S = _fold_dot(Q, C) / np.multiply.outer(_fold_norm(Q), cnorm)
+    mask = qids[:, None] == cids[None, :]
+    if clabels is not None:
+        mask = (mask | (qlabels[:, None] == clabels[None, :])
+                | pd.isna(qlabels)[:, None] | pd.isna(clabels)[None, :])
+    nan = np.isnan(S)
+    Sm = np.where(mask | nan, -np.inf, S)
+    n_cand, kk = Sm.shape[1], min(k, C.shape[0])
+    if n_cand > kk:
+        kth = np.partition(Sm, n_cand - kk, axis=1)[:, n_cand - kk]
+    else:
+        kth = np.full(len(qids), -np.inf)
+    keep = (~mask) & ((Sm >= kth[:, None] - 2.5e-6) | nan)
+    qi, ci = np.nonzero(keep)
+    return qi, ci, S[qi, ci]
+
+
+def _matrix(vectors):
+    """An Arrow list column as a float64 matrix (one row per vector), or
+    None when a vector or an element is null or the lengths differ."""
+    import numpy as np
+
+    arr = vectors.combine_chunks()
+    if arr.null_count or not len(arr):
+        return None if arr.null_count else np.zeros((0, 0))
+    lengths = pc.list_value_length(arr).to_numpy()
+    flat = arr.flatten()
+    if flat.null_count or (lengths != lengths[0]).any():
+        return None
+    return (flat.to_numpy(zero_copy_only=False).astype(np.float64)
+            .reshape(len(arr), int(lengths[0])))
+
+
+def _topk_local(spark, qt, ct, k: int, *,
+                labels: bool = False) -> DataFrame | None:
+    """Exact top-k on the driver: ``qt`` (query_id, qv[, qlabel]) against
+    ``ct`` (neighbor_id, cv[, nlabel]), both pyarrow Tables, with
+    ``labels`` meaning the label mask of :func:`_topk_candidates`.
+    Candidates come from :func:`_topk_candidates`; their raw cosines go
+    into a local frame as the Spark plans' Arrow hand-off has them (NaN
+    as null) and are rounded by Spark's ``F.round``, which the optimizer
+    folds into the ``LocalRelation`` (so ``collect()`` runs no job); the
+    rank, ``(cosine desc, nulls last; neighbor_id asc)``, is the Spark
+    window's, taken on the driver. None when an id or vector is null,
+    the vector lengths differ or the id types do: the caller's Spark
+    plan decides those."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    qids, cids = qt["query_id"], ct["neighbor_id"]
+    Q, C = _matrix(qt["qv"]), _matrix(ct["cv"])
+    if (qids.null_count or cids.null_count or qids.type != cids.type
+            or Q is None or C is None
+            or (len(Q) and len(C) and Q.shape[1] != C.shape[1])):
+        return None
+    id_type = from_arrow_type(qids.type)
+    out_schema = T.StructType([T.StructField("query_id", id_type),
+                               T.StructField("neighbor_id", id_type),
+                               T.StructField("cosine", T.DoubleType()),
+                               T.StructField("rank", T.IntegerType(),
+                                             False)])
+    if not len(Q) or not len(C):
+        return util.local_frame(spark, [], out_schema)
+    qn = qids.to_numpy(zero_copy_only=False)
+    cn = cids.to_numpy(zero_copy_only=False)
+    lab = ({} if not labels else
+           {"qlabels": qt["qlabel"].to_numpy(zero_copy_only=False),
+            "clabels": ct["nlabel"].to_numpy(zero_copy_only=False)})
+    qi, ci, raw = _topk_candidates(qn, Q, cn, C, _fold_norm(C), k, **lab)
+    cand = util.local_frame(spark, pa.table({
+        "query_id": qids.take(pa.array(qi)),
+        "neighbor_id": cids.take(pa.array(ci)),
+        "raw": pa.array(raw, pa.float64(), from_pandas=True)}),
+        T.StructType([T.StructField("query_id", id_type),
+                      T.StructField("neighbor_id", id_type),
+                      T.StructField("raw", T.DoubleType())]))
+    by_query: dict = {}
+    for qid, nid, cos in cand.select(
+            "query_id", "neighbor_id",
+            F.round("raw", 6).alias("cosine")).collect():
+        by_query.setdefault(qid, []).append((nid, cos))
+    rows = []
+    for qid, cands in by_query.items():
+        cands.sort(key=lambda r: (1, 0.0, r[0]) if r[1] is None
+                   else (0, -r[1], r[0]))
+        rows.extend((qid, nid, cos, rank)
+                    for rank, (nid, cos) in enumerate(cands[:k], 1))
+    return util.local_frame(spark, rows, out_schema)
+
+
 def _cosine_topk_seed_scan(corpus: DataFrame, queries: DataFrame, k: int, *,
                            vec_col: str, id_col: str, q_vec_col: str,
                            q_id_col: str, label_col: str | None = None,
                            q_label_col: str | None = None) -> DataFrame:
-    """Exact top-k against a BOUNDED corpus (seed) via one Arrow scan of
-    the queries. Bit-exactness contract: numpy reproduces the JVM
-    expression fold ``((0.0 + q0*c0) + q1*c1) + ...`` per element
-    (IEEE-754 doubles on both sides, sqrt correctly rounded), so the
-    emitted raw cosines equal the expression path's; ROUNDING AND
-    RANKING STAY IN SPARK (F.round's BigDecimal half-up is not numpy's
-    banker's round). Python pre-selects per query every candidate whose
-    raw cosine can still reach the rounded top-k (kth raw minus a
-    2.5e-6 margin — wider than one rounding step), then the k-row
-    window runs over ~k+eps rows per query.
+    """Exact top-k against a BOUNDED corpus (seed). Bit-exactness
+    contract: numpy reproduces the JVM expression fold
+    ``((0.0 + q0*c0) + q1*c1) + ...`` per element (IEEE-754 doubles on
+    both sides, sqrt correctly rounded), so the raw cosines equal the
+    expression path's; ROUNDING STAYS IN SPARK (F.round's BigDecimal
+    half-up is not numpy's banker's round). Python pre-selects per query
+    every candidate whose raw cosine can still reach the rounded top-k
+    (:func:`_topk_candidates`), so the rank runs over ~k+eps rows per
+    query.
 
     Scale shape: seed collect is |seed| x dims floats, one collect
     capped at the driver bound (``util.DRIVER_ROWS``; a larger seed
-    raises ValueError); the query side streams through mapInPandas
-    Arrow batches partition-parallel with zero shuffle before the final
-    (queries x ~k)-row rank.
+    raises ValueError). When |seed| x |queries| fits the bound too, the
+    queries are collected (capped at ``DRIVER_ROWS // |seed|`` + 1 rows)
+    and the top-k finishes on the driver (:func:`_topk_local`). Past
+    that, the query side streams through mapInPandas Arrow batches
+    partition-parallel with zero shuffle before the final
+    (queries x ~k)-row rank in a Spark window.
 
     ``label_col``/``q_label_col`` (both or neither): additionally
     exclude candidates whose label EQUALS the query row's, or where
@@ -94,13 +247,13 @@ def _cosine_topk_seed_scan(corpus: DataFrame, queries: DataFrame, k: int, *,
     import numpy as np
     import pandas as pd
 
-    seed_cols = [F.col(id_col).alias("nid"), F.col(vec_col).alias("cv")]
+    seed_cols = [F.col(id_col).alias("neighbor_id"),
+                 F.col(vec_col).alias("cv")]
     if label_col is not None:
         seed_cols.append(F.col(label_col).alias("nlabel"))
     # Arrow keeps null labels as None; a limit runs as one job there
-    seed_rows = (corpus.select(*seed_cols).limit(util.DRIVER_ROWS + 1)
-                 .toArrow().to_pylist())
-    if not util.fits_driver(len(seed_rows)):
+    seed = corpus.select(*seed_cols).limit(util.DRIVER_ROWS + 1).toArrow()
+    if not util.fits_driver(seed.num_rows):
         raise ValueError(
             f"seed corpus is larger than the driver bound "
             f"(util.DRIVER_ROWS = {util.DRIVER_ROWS} rows)")
@@ -108,39 +261,31 @@ def _cosine_topk_seed_scan(corpus: DataFrame, queries: DataFrame, k: int, *,
               F.col(q_vec_col).alias("qv")]
     if q_label_col is not None:
         q_cols.append(F.col(q_label_col).alias("qlabel"))
-    q_schema = queries.select(*q_cols).schema
-    qid_type = q_schema["query_id"].dataType.simpleString()
+    q = queries.select(*q_cols)
+    qid_type = q.schema["query_id"].dataType.simpleString()
     nid_type = corpus.select(F.col(id_col).alias("nid")) \
         .schema["nid"].dataType.simpleString()
 
-    if not seed_rows:
+    if not seed.num_rows:
         empty = queries.sparkSession.createDataFrame(
             [], f"query_id {qid_type}, neighbor_id {nid_type}, "
                 f"cosine double, rank int")
         return empty
 
-    cids = np.array([r["nid"] for r in seed_rows])
+    m = seed.num_rows
+    qt = q.limit(util.DRIVER_ROWS // m + 1).toArrow()
+    if util.fits_driver(qt.num_rows * m):
+        local = _topk_local(q.sparkSession, qt, seed, k,
+                            labels=label_col is not None)
+        if local is not None:
+            return local
+
+    seed_rows = seed.to_pylist()
+    cids = np.array([r["neighbor_id"] for r in seed_rows])
     C = np.array([r["cv"] for r in seed_rows], dtype=np.float64)
     clabels = (np.array([r["nlabel"] for r in seed_rows])
                if label_col is not None else None)
-    m, dims = C.shape
-
-    def fold_dot(A, B):
-        # exact left-fold order per element: acc starts at 0.0 like the
-        # expression path's F.lit(0.0) seed
-        acc = np.zeros((A.shape[0], B.shape[0]))
-        for i in range(A.shape[1]):
-            acc = acc + np.multiply.outer(A[:, i], B[:, i])
-        return acc
-
-    def fold_norm(A):
-        acc = np.zeros(A.shape[0])
-        for i in range(A.shape[1]):
-            acc = acc + A[:, i] * A[:, i]
-        return np.sqrt(acc)
-
-    cnorm = fold_norm(C)
-    kk = min(k, m)
+    cnorm = _fold_norm(C)
 
     def scan(batches):
         for pdf in batches:
@@ -148,32 +293,15 @@ def _cosine_topk_seed_scan(corpus: DataFrame, queries: DataFrame, k: int, *,
                 continue
             Q = np.array([list(v) for v in pdf["qv"]], dtype=np.float64)
             qids = pdf["query_id"].to_numpy()
-            S = fold_dot(Q, C) / np.multiply.outer(fold_norm(Q), cnorm)
-            self_mask = qids[:, None] == cids[None, :]
-            if clabels is not None:
-                # SQL ``la != lb``: equal labels AND a null on either side
-                # exclude the pair
-                qlabels = pdf["qlabel"].to_numpy()
-                self_mask = (self_mask
-                             | (qlabels[:, None] == clabels[None, :])
-                             | pd.isna(qlabels)[:, None]
-                             | pd.isna(clabels)[None, :])
-            Sm = np.where(self_mask, -np.inf, S)
-            # kth-largest raw per query (NaN sorts as largest in numpy,
-            # matching Spark/DuckDB NaN-greatest ordering)
-            n_cand = Sm.shape[1]
-            if n_cand > kk:
-                kth = np.partition(Sm, n_cand - kk, axis=1)[:, n_cand - kk]
-            else:
-                kth = np.full(len(qids), -np.inf)
-            keep = (~self_mask) & (
-                (Sm >= kth[:, None] - 2.5e-6) | np.isnan(Sm))
-            qi, ci = np.nonzero(keep)
+            qi, ci, raw = _topk_candidates(
+                qids, Q, cids, C, cnorm, k,
+                qlabels=(pdf["qlabel"].to_numpy() if clabels is not None
+                         else None), clabels=clabels)
             yield pd.DataFrame({"query_id": qids[qi],
                                 "neighbor_id": cids[ci],
-                                "raw_cosine": S[qi, ci]})
+                                "raw_cosine": raw})
 
-    cand = queries.select(*q_cols).mapInPandas(
+    cand = q.mapInPandas(
         scan, schema=f"query_id {qid_type}, neighbor_id {nid_type}, "
                      f"raw_cosine double")
     w = Window.partitionBy("query_id").orderBy(

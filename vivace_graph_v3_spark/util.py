@@ -54,15 +54,17 @@ def fits_driver(n: int, *, scale: int = 1) -> bool:
     return n <= DRIVER_ROWS * scale
 
 
-def collect_bounded(df: DataFrame, *, scale: int = 1):
-    """``df`` collected over Arrow as a pandas frame when its rows fit
-    the driver (``scale`` as in :func:`fits_driver`), else None. One job
-    and nothing persisted: the collect is capped one row past the
-    bound, so a frame too big for the driver costs at most that many
-    rows before the caller takes its distributed path, and nothing has
-    to count ``df`` first."""
-    pdf = df.limit(DRIVER_ROWS * scale + 1).toPandas()
-    return pdf if fits_driver(len(pdf), scale=scale) else None
+def collect_bounded(df: DataFrame, *, scale: int = 1, arrow: bool = False):
+    """``df`` collected over Arrow as a pandas frame (with ``arrow``, as
+    the pyarrow Table, whose integer columns stay integers when they hold
+    nulls) when its rows fit the driver (``scale`` as in
+    :func:`fits_driver`), else None. One job and nothing persisted: the
+    collect is capped one row past the bound, so a frame too big for the
+    driver costs at most that many rows before the caller takes its
+    distributed path, and nothing has to count ``df`` first."""
+    capped = df.limit(DRIVER_ROWS * scale + 1)
+    got = capped.toArrow() if arrow else capped.toPandas()
+    return got if fits_driver(len(got), scale=scale) else None
 
 
 def local_frame(spark, rows, schema) -> DataFrame:
@@ -120,6 +122,39 @@ def finish_locally(df: DataFrame, kernel, schema, *,
     rows = None if pdf is None else kernel(pdf)
     return None if rows is None else local_frame(df.sparkSession, rows,
                                                  schema)
+
+
+# Up to this many driver-held keys narrow a frame as an IN list, which
+# the scan filters and which runs no job; more go in as a broadcast join
+# against a local frame of them: one job more (the broadcast collects the
+# frame), but planned in constant time, while an IN list costs ~0.15 ms
+# per key to build over py4j (on a 4-core host the two cost about the
+# same at 1000 keys).
+IN_LIST_KEYS = 1000
+
+
+def filter_keys(df: DataFrame, key, keys, *, anti: bool = False) -> DataFrame:
+    """The rows of ``df`` whose ``key`` (a column name or Column) is among
+    the non-null string ``keys`` (an iterable or a pyarrow array), or with
+    ``anti`` is not among them: an IN list up to :data:`IN_LIST_KEYS`
+    keys, past that a broadcast semi/anti join against a
+    :func:`local_frame` of them."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F, types as T
+
+    col = F.col(key) if isinstance(key, str) else key
+    if not hasattr(keys, "to_pylist"):
+        keys = pa.array(list(keys), pa.string())
+    if len(keys) <= IN_LIST_KEYS:
+        hit = col.isin(keys.to_pylist())
+        return df.filter(~hit if anti else hit)
+    probe = local_frame(df.sparkSession, pa.table({"__key": keys}),
+                        T.StructType([T.StructField("__key",
+                                                    T.StringType())]))
+    return (df.withColumn("__key", col)
+            .join(F.broadcast(probe), "__key",
+                  "left_anti" if anti else "left_semi")
+            .drop("__key"))
 
 
 def union_find_min(edge_rows) -> dict:
