@@ -485,16 +485,22 @@ def test_weighted_pagerank_zero_out_weight(spark):
 
 
 def test_local_kernels_hold_no_blocks_and_few_jobs(spark):
-    """Within the driver bound, every driver-local graph finish collects
-    once and finishes on the driver: each call, its result collected,
+    """Within the driver bound, every driver-local finish collects its
+    input and finishes on the driver: each call, its result collected,
     issues at most 4 Spark jobs (bow-tie, given a precomputed SCC frame,
-    fewer than 18) and leaves no persisted or checkpointed RDD behind."""
+    fewer than 18; BFS one per round; containment one postings collect;
+    exact top-k one collect per side, the default branch's small case
+    in one) and leaves no persisted or checkpointed RDD behind."""
     import gc
 
     from vivace_graph_v3_spark.operators.graph_algorithms import (
         _edge_pairs, bowtie_decomposition, k_core, k_truss,
         landmark_closeness, landmark_eccentricity, landmark_stress,
         strongly_connected_components, temporal_earliest_arrival)
+    from vivace_graph_v3_spark.operators.traverse import traverse
+    from vivace_graph_v3_spark.pipeline.dedup import containment_pairs
+    from vivace_graph_v3_spark.pipeline.similarity import (
+        cosine_topk_bruteforce)
 
     g = _kernel_graph(spark)
     jsc = spark.sparkContext._jsc
@@ -508,6 +514,15 @@ def test_local_kernels_hold_no_blocks_and_few_jobs(spark):
     seeds = util.local_frame(spark, [("0",), ("3",)],
                              T.StructType.fromDDL("id string"))
     lms = ["0", "3"]
+    docs = util.local_frame(
+        spark, [(i, " ".join(f"w{(i * 7 + j) % 13}" for j in range(9)))
+                for i in range(12)],
+        T.StructType.fromDDL("doc_id long, text string"))
+    vecs = util.local_frame(
+        spark, [(i, [float(i % 5), float(i % 3) - 1.0, 1.0])
+                for i in range(40)],
+        T.StructType.fromDDL("vec_id long, embedding array<float>"))
+    qs = vecs.filter("vec_id < 6")
 
     def held():
         # ids, not a count: the context cleaner may release blocks that
@@ -532,7 +547,14 @@ def test_local_kernels_hold_no_blocks_and_few_jobs(spark):
             ("scc", lambda: strongly_connected_components(edges), 4),
             ("bow-tie", lambda: bowtie_decomposition(edges, scc), 17),
             ("temporal", lambda: temporal_earliest_arrival(edges, seeds),
-             4)):
+             4),
+            ("bfs", lambda: traverse(g, ["0", "3"], direction="out",
+                                     max_depth=2, include_paths=True), 2),
+            ("containment", lambda: containment_pairs(docs, threshold=0.6),
+             2),
+            ("top-k", lambda: cosine_topk_bruteforce(vecs, qs, 5), 1),
+            ("seed top-k", lambda: cosine_topk_bruteforce(
+                vecs, qs, 5, broadcast_corpus=True), 2)):
         before, j0 = held(), last_job_id(spark)
         op().collect()
         assert last_job_id(spark) - j0 <= jobs, name

@@ -2103,3 +2103,43 @@ def test_bruteforce_topk_local_matches_distributed(spark):
         cosine_topk_bruteforce(longs, longs.filter("vec_id = 0"), 20))}
     assert got[(0, 4)] == (1.0, 1) and got[(0, 6)] == (1.0, 2)
     assert got[(0, 1)] == (None, 6) and len(got) == 9
+
+
+def test_bruteforce_topk_bound_counts_pairs(spark, monkeypatch):
+    """The default top-k's collects are capped by query x corpus pairs,
+    not by vectors: past the driver bound a call collects
+    O(DRIVER_ROWS / |Q|) corpus rows (plus a 2·isqrt(DRIVER_ROWS) + 2-row
+    probe) before it takes its Spark plan, and within the bound it still
+    finishes on the driver."""
+    import math
+
+    from vivace_graph_v3_spark import util
+    from vivace_graph_v3_spark.pipeline.similarity import (
+        cosine_topk_bruteforce)
+
+    corpus = spark.range(3000).select(
+        F.col("id").alias("vec_id"),
+        F.array((F.col("id") % 17).cast("float"),
+                F.lit(1.0).cast("float")).alias("embedding"))
+    pulled = []
+    to_arrow = type(corpus).toArrow
+
+    def counted(self):
+        t = to_arrow(self)
+        pulled.append(t.num_rows)
+        return t
+
+    monkeypatch.setattr(type(corpus), "toArrow", counted)
+    monkeypatch.setattr(util, "DRIVER_ROWS", 10_000)
+    for nq, local in ((20, False), (3, True)):
+        pulled.clear()
+        qs = corpus.filter(F.col("vec_id") < nq)
+        got = _nan_rows(cosine_topk_bruteforce(corpus, qs, 3))
+        probe = 2 * math.isqrt(util.DRIVER_ROWS) + 2
+        if local:
+            assert pulled == [probe, nq, 3000]
+        else:
+            assert pulled and sum(pulled) <= (
+                probe + nq + util.DRIVER_ROWS // nq + 1)
+        with distributed_regime():
+            assert got == _nan_rows(cosine_topk_bruteforce(corpus, qs, 3))

@@ -191,42 +191,3 @@ def test_bfs_local_matches_distributed(spark):
                          max_depth=4))
     assert (None, 3) in out and ("zz:0", 3) in out
     assert out.count(("a:0", 0)) == 2 and ("nope:1", 0) in out
-
-
-def test_local_finishes_hold_no_blocks_and_few_jobs(spark, tpch):
-    """Within the driver bound, BFS, containment and exact top-k (both
-    branches) finish on the driver: each call, its result collected,
-    issues at most 3 Spark jobs (BFS: one per round; top-k: one collect
-    per side, both sides in one for the default branch) and leaves no
-    persisted or checkpointed RDD behind."""
-    import gc
-
-    from pyspark.sql import functions as F
-
-    from tests.conftest import SF_DIR, last_job_id
-    from vivace_graph_v3_spark.pipeline.dedup import containment_pairs
-    from vivace_graph_v3_spark.pipeline.similarity import (
-        cosine_topk_bruteforce)
-
-    jsc = spark.sparkContext._jsc
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
-        .select("doc_id", "text")
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") < 10)
-
-    def held():
-        gc.collect()
-        return set(jsc.getPersistentRDDs().keySet())
-
-    for name, op, jobs in (
-            ("bfs", lambda: traverse(tpch, ["region:0"], direction="in",
-                                     max_depth=2), 2),
-            ("containment", lambda: containment_pairs(docs, threshold=0.8),
-             3),
-            ("top-k", lambda: cosine_topk_bruteforce(emb, qs, 5), 1),
-            ("seed top-k", lambda: cosine_topk_bruteforce(
-                emb, qs, 5, broadcast_corpus=True), 2)):
-        before, j0 = held(), last_job_id(spark)
-        op().collect()
-        assert last_job_id(spark) - j0 <= jobs, name
-        assert held() <= before, name

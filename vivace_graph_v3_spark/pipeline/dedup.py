@@ -29,10 +29,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from vivace_graph_v3_spark import util
 from vivace_graph_v3_spark.pipeline.text import tokens
 from vivace_graph_v3_spark.util import (
-    checkpoint_counted, collect_bounded, ensure_parallelism, fits_driver,
-    local_frame, union_find_min)
+    checkpoint_counted, ensure_parallelism, fits_driver, local_frame,
+    union_find_min)
 
 # -- exact ---------------------------------------------------------------------
 
@@ -260,8 +261,10 @@ def _containment_local(base: DataFrame, threshold: float) -> DataFrame | None:
     from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    post = collect_bounded(base.select("id", F.posexplode("sh")), arrow=True)
-    if post is None:
+    # Arrow, not pandas: a nullable long id stays an integer
+    post = base.select("id", F.posexplode("sh")) \
+        .limit(util.DRIVER_ROWS + 1).toArrow()
+    if not fits_driver(post.num_rows):
         return None
     enc = post["id"].combine_chunks().dictionary_encode()
     doc = enc.indices.fill_null(-1).to_numpy().astype(np.int64)

@@ -32,9 +32,11 @@ def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int, *,
     collide.
 
     Within the driver bound (|queries| x |corpus| pairs up to
-    ``util.DRIVER_ROWS``) both sides are collected, in one capped collect
-    here and two with ``broadcast_corpus``, and the top-k runs on the
-    driver (:func:`_topk_local`): the numpy fold of
+    ``util.DRIVER_ROWS``) both sides are collected with caps that count
+    pairs, not rows (:func:`_collect_pairs_bounded`; with
+    ``broadcast_corpus`` the seed, then the queries capped at
+    ``DRIVER_ROWS // |seed|`` + 1), and the top-k runs on the driver
+    (:func:`_topk_local`): the numpy fold of
     :func:`_cosine_topk_seed_scan`, rounding in Spark over a local frame
     (no job), the rank on the driver. No Python worker starts and
     nothing is persisted. A null id or vector, vectors of different
@@ -67,20 +69,11 @@ def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int, *,
     c = corpus.select(F.col(id_col).alias("neighbor_id"),
                       F.col(vec_col).alias("cv"))
     if q.schema["query_id"].dataType == c.schema["neighbor_id"].dataType:
-        # one capped collect of both sides: |Q| x |C| <= DRIVER_ROWS
-        # implies |Q| + |C| <= DRIVER_ROWS + 1
-        both = util.collect_bounded(
-            q.select(F.lit(True).alias("is_q"), "query_id", "qv")
-            .union(c.select(F.lit(False), "neighbor_id", "cv")), arrow=True)
-        if both is not None:
-            is_q = both["is_q"]
-            qt = both.filter(is_q).drop(["is_q"])
-            ct = both.filter(pc.invert(is_q)).drop(["is_q"]) \
-                .rename_columns(["neighbor_id", "cv"])
-            if util.fits_driver(qt.num_rows * ct.num_rows):
-                local = _topk_local(q.sparkSession, qt, ct, k)
-                if local is not None:
-                    return local
+        qt, ct = _collect_pairs_bounded(q, c)
+        if qt is not None:
+            local = _topk_local(q.sparkSession, qt, ct, k)
+            if local is not None:
+                return local
     joined = (c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
               .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("cv")), 6)))
     w = Window.partitionBy("query_id").orderBy(
@@ -88,6 +81,37 @@ def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int, *,
     return (joined.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("query_id", "neighbor_id", "cosine", "rank"))
+
+
+def _collect_pairs_bounded(q: DataFrame, c: DataFrame):
+    """The default top-k's queries ``q`` (query_id, qv) and corpus ``c``
+    (neighbor_id, cv) as pyarrow Tables when their |Q| x |C| pairs fit
+    ``util.DRIVER_ROWS``, else ``(None, None)``. A capped collect counts
+    rows, not pairs, so the caps follow the pairs: one collect of both
+    sides capped at 2·isqrt(DRIVER_ROWS) + 1 rows settles the common
+    small case in one job; when it overflows, the queries are collected
+    capped at DRIVER_ROWS + 1 and then the corpus capped at
+    DRIVER_ROWS // |Q| + 1. A call past the bound so collects at most
+    2·isqrt(DRIVER_ROWS) + |Q| + DRIVER_ROWS // |Q| + 3 rows."""
+    import math
+
+    probe = 2 * math.isqrt(util.DRIVER_ROWS) + 1
+    both = (q.select(F.lit(True).alias("is_q"), "query_id", "qv")
+            .union(c.select(F.lit(False), "neighbor_id", "cv"))
+            .limit(probe + 1).toArrow())
+    if both.num_rows <= probe:
+        is_q = both["is_q"]
+        qt = both.filter(is_q).drop(["is_q"])
+        ct = both.filter(pc.invert(is_q)).drop(["is_q"]) \
+            .rename_columns(["neighbor_id", "cv"])
+    else:
+        qt = q.limit(util.DRIVER_ROWS + 1).toArrow()
+        if not util.fits_driver(qt.num_rows):
+            return None, None
+        ct = c.limit(util.DRIVER_ROWS // max(qt.num_rows, 1) + 1).toArrow()
+    if not util.fits_driver(qt.num_rows * ct.num_rows):
+        return None, None
+    return qt, ct
 
 
 def _fold_dot(A, B):

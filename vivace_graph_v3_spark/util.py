@@ -54,17 +54,15 @@ def fits_driver(n: int, *, scale: int = 1) -> bool:
     return n <= DRIVER_ROWS * scale
 
 
-def collect_bounded(df: DataFrame, *, scale: int = 1, arrow: bool = False):
-    """``df`` collected over Arrow as a pandas frame (with ``arrow``, as
-    the pyarrow Table, whose integer columns stay integers when they hold
-    nulls) when its rows fit the driver (``scale`` as in
-    :func:`fits_driver`), else None. One job and nothing persisted: the
-    collect is capped one row past the bound, so a frame too big for the
-    driver costs at most that many rows before the caller takes its
-    distributed path, and nothing has to count ``df`` first."""
-    capped = df.limit(DRIVER_ROWS * scale + 1)
-    got = capped.toArrow() if arrow else capped.toPandas()
-    return got if fits_driver(len(got), scale=scale) else None
+def collect_bounded(df: DataFrame, *, scale: int = 1):
+    """``df`` collected over Arrow as a pandas frame when its rows fit
+    the driver (``scale`` as in :func:`fits_driver`), else None. One job
+    and nothing persisted: the collect is capped one row past the
+    bound, so a frame too big for the driver costs at most that many
+    rows before the caller takes its distributed path, and nothing has
+    to count ``df`` first."""
+    pdf = df.limit(DRIVER_ROWS * scale + 1).toPandas()
+    return pdf if fits_driver(len(pdf), scale=scale) else None
 
 
 def local_frame(spark, rows, schema) -> DataFrame:
