@@ -109,6 +109,28 @@ def last_job_id(spark) -> int:
     return jobs.apply(0).jobId() if jobs.size() else -1
 
 
+def plan_rdds(df) -> set:
+    """Ids of every RDD ``df``'s logical plan reads: each ``LogicalRDD``
+    node's RDD (subquery plans included) and, transitively, its
+    dependencies. A checkpointed RDD's dependencies end at its checkpoint
+    RDD, so this is the set of blocks a collect of ``df`` can touch."""
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    todo, rdds, seen = [df._jdf.queryExecution().logical()], [], set()
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "LogicalRDD":
+            rdds.append(node.rdd())
+        todo += seq(node.children()) + seq(node.subqueries())
+    while rdds:
+        rdd = rdds.pop()
+        if rdd.id() not in seen:
+            seen.add(rdd.id())
+            rdds += [d.rdd() for d in seq(rdd.dependencies())]
+    return seen
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")

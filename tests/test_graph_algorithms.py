@@ -15,7 +15,7 @@ from vivace_graph_v3_spark.operators.graph_algorithms import (
 )
 from vivace_graph_v3_spark.schema import SchemaRegistry
 
-from tests.conftest import distributed_regime, last_job_id
+from tests.conftest import distributed_regime, last_job_id, plan_rdds
 
 
 def _graph(spark, vertices, edges):
@@ -490,15 +490,24 @@ def test_local_kernels_hold_no_blocks_and_few_jobs(spark):
     issues at most 4 Spark jobs (bow-tie, given a precomputed SCC frame,
     fewer than 18; BFS one per round; containment one postings collect;
     exact top-k one collect per side, the default branch's small case
-    in one) and leaves no persisted or checkpointed RDD behind."""
+    in one) and leaves no persisted or checkpointed RDD behind.
+
+    Past the bound the same operators (and ``lsh_band_tuning``) run
+    their Spark loops, and each call, its result collected, still holds
+    only the RDDs its returned plan reads: every other block it
+    persisted or checkpointed is released on return. So do calls on an
+    empty and a one-vertex graph; pagerank holds as many blocks after
+    10 rounds as after 3; and a fixpoint that raises holds none."""
     import gc
 
     from vivace_graph_v3_spark.operators.graph_algorithms import (
         _edge_pairs, bowtie_decomposition, k_core, k_truss,
         landmark_closeness, landmark_eccentricity, landmark_stress,
-        strongly_connected_components, temporal_earliest_arrival)
+        min_label_fixpoint, strongly_connected_components,
+        temporal_earliest_arrival)
     from vivace_graph_v3_spark.operators.traverse import traverse
-    from vivace_graph_v3_spark.pipeline.dedup import containment_pairs
+    from vivace_graph_v3_spark.pipeline.dedup import (
+        containment_pairs, lsh_band_tuning)
     from vivace_graph_v3_spark.pipeline.similarity import (
         cosine_topk_bruteforce)
 
@@ -559,6 +568,104 @@ def test_local_kernels_hold_no_blocks_and_few_jobs(spark):
         op().collect()
         assert last_job_id(spark) - j0 <= jobs, name
         assert held() <= before, name
+
+    def held_by(name, op):
+        """The RDDs ``op()`` leaves held once its result is collected,
+        asserted to be exactly those the result's plan reads."""
+        before = held()
+        out = op()
+        out.collect()
+        new = held() - before
+        assert new <= plan_rdds(out), (name, new - plan_rdds(out))
+        return new
+
+    # the Spark loops run on a smaller graph (a triangle, a tail, a
+    # self-loop, an isolated vertex): a leak shows at any size, and fewer
+    # rounds keep it quick
+    arcs = [("0", "1", 1), ("1", "2", 2), ("2", "0", 3), ("2", "3", 1),
+            ("3", "3", 2)]
+    g = _graph(spark, [str(i) for i in range(5)], arcs)
+    edges = util.local_frame(spark, arcs, edges.schema)
+    scc = util.local_frame(spark,
+                           strongly_connected_components(edges).collect(),
+                           scc.schema)
+    empty, single = _graph(spark, [], []), _graph(spark, ["a"], [])
+    chain = util.local_frame(spark, [("b", "a"), ("c", "b"), ("d", "c")],
+                             T.StructType.fromDDL("src string, dst string"))
+    with distributed_regime():
+        # pagerank's pass is the 3-round / 10-round pair below
+        for name, op in (
+                ("label propagation",
+                 lambda: label_propagation(g, max_iter=1)),
+                ("hits", lambda: hits(g, max_iter=2)),
+                ("cc", lambda: connected_components(g)),
+                ("k-truss", lambda: k_truss(g, 3)),
+                ("sssp", lambda: shortest_paths(g, ["0"])),
+                ("k-core", lambda: k_core(g, 2)),
+                ("closeness", lambda: landmark_closeness(g, lms)),
+                ("stress", lambda: landmark_stress(g, lms)),
+                ("scc", lambda: strongly_connected_components(edges)),
+                ("bow-tie", lambda: bowtie_decomposition(edges, scc)),
+                ("temporal",
+                 lambda: temporal_earliest_arrival(edges, seeds)),
+                # past depth 3 the untyped arms are cached in the scope
+                ("bfs", lambda: traverse(g, ["0", "3"], direction="out",
+                                         max_depth=4, include_paths=True)),
+                ("containment",
+                 lambda: containment_pairs(docs, threshold=0.6)),
+                ("top-k", lambda: cosine_topk_bruteforce(vecs, qs, 5)),
+                ("lsh tuning", lambda: lsh_band_tuning(docs)),
+                ("empty pagerank", lambda: pagerank(empty, max_iter=2)),
+                ("one-vertex pagerank",
+                 lambda: pagerank(single, max_iter=2))):
+            held_by(name, op)
+        assert len(held_by("pagerank", lambda: pagerank(
+            g, max_iter=3, tol=None))) == len(held_by(
+                "pagerank", lambda: pagerank(g, max_iter=10, tol=None)))
+        before = held()
+        with pytest.raises(RuntimeError):
+            min_label_fixpoint(chain, chain.selectExpr("src AS id",
+                                                       "src AS lab"),
+                               max_iter=1)
+        assert held() <= before
+
+
+def test_materialized_scopes_release_per_thread(spark):
+    """Threads sharing the context each release only their own scope's
+    checkpoints: every thread's kept frame still reads back after all
+    the other scopes have exited."""
+    import sys
+    import threading
+
+    n = 8
+    barrier = threading.Barrier(n, timeout=60)
+    outs, errors = [None] * n, []
+
+    def work(i):
+        try:
+            with util.materialized() as m:
+                kept, _ = m.checkpoint(spark.range(i + 1))
+                m.checkpoint(spark.range(100))
+                outs[i] = m.keep(kept.selectExpr("id * 2 AS x"))
+            barrier.wait()   # every scope has exited
+            assert (sorted(r.x for r in outs[i].collect())
+                    == [2 * k for k in range(i + 1)])
+        except Exception as ex:  # reported by the main thread
+            errors.append(ex)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=work, args=(i,))
+                   for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
 
 
 def test_common_neighbor_similarity(spark):

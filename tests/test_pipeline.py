@@ -208,7 +208,8 @@ def test_has_min_tokens_equals_shingle_nonempty(spark):
 
 
 def test_minhash_hot_bucket_star_cap(spark, docs):
-    """The max_bucket hot-bucket guard (tools/skew_probe.py's shape): a
+    """The max_bucket hot-bucket guard (the shape of SCALING.md's
+    "Round-7 SKEW probe"): a
     mass of identical docs forms one giant LSH bucket whose clique join
     is quadratic. With the cap, the over-cap bucket emits a star to its
     min id — LINEAR candidates — and the connectivity consumers
@@ -1936,8 +1937,10 @@ def test_shingle_pair_candidates_exact_and_schema(spark, docs):
     every doc pair sharing >= 1 shingle with exact intersection and set
     sizes — and keep sz_a/sz_b nullable in the schema (they were
     first()-aggregated before; the oracle pins schemas)."""
+    from vivace_graph_v3_spark import util
     from vivace_graph_v3_spark.pipeline.dedup import (
-        _shingle_pair_candidates, has_min_tokens, shingle_strings)
+        _shingle_base, _shingle_pair_candidates, has_min_tokens,
+        shingle_strings)
 
     sample = docs.limit(60)
     ref = {r["doc_id"]: set(r["sh"]) for r in
@@ -1951,12 +1954,57 @@ def test_shingle_pair_candidates_exact_and_schema(spark, docs):
             inter = len(ref[a] & ref[b])
             if inter:
                 want.add((a, b, inter, len(ref[a]), len(ref[b])))
-    out = _shingle_pair_candidates(sample)
+    with util.materialized() as m:
+        out = m.keep(_shingle_pair_candidates(_shingle_base(
+            m, sample, text_col="text", id_col="doc_id", n=3, strings=True)))
     got = {(r["id_a"], r["id_b"], r["inter"], r["sz_a"], r["sz_b"])
            for r in out.collect()}
     assert got == want and want
     fields = {f.name: f for f in out.schema.fields}
     assert fields["sz_a"].nullable and fields["sz_b"].nullable
+
+
+def test_band_tuning_truth_prefix_filter_on_boilerplate(spark):
+    """lsh_band_tuning's truth pairs come from a rarest-first prefix
+    filter over the shingle base. On 320 documents sharing one
+    boilerplate shingle (20 of them near-duplicates of others) it gives
+    the same pairs as the inverted-index formula (every pair sharing a
+    shingle, verified by exact Jaccard), while its prefix self-join
+    emits under 1% of that formula's join rows."""
+    from vivace_graph_v3_spark import util
+    from vivace_graph_v3_spark.pipeline.dedup import (
+        _prefix_jaccard_pairs, _prefix_postings, _shingle_base,
+        _shingle_pair_candidates, lsh_band_tuning)
+
+    words = "u{0}a u{0}b u{0}c u{0}d u{0}e".format
+    docs = ([(i, f"boiler plate header {words(i)} u{i}f")
+             for i in range(300)]
+            + [(1000 + i, f"boiler plate header {words(i)} x{i}")
+               for i in range(20)])
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    t_ppm = 500000
+
+    def pair_rows(postings):
+        # a shingle posted by c documents joins c(c-1)/2 pairs
+        return sum(c * (c - 1) // 2 for (c,) in
+                   postings.groupBy("shingle").count().select("count")
+                   .collect())
+
+    with util.materialized() as m:
+        base = _shingle_base(m, df, text_col="text", id_col="doc_id", n=3,
+                             strings=True)
+        want = {(r.id_a, r.id_b) for r in
+                _shingle_pair_candidates(base)
+                .filter(f"inter * 1000000L div (sz_a + sz_b - inter)"
+                        f" >= {t_ppm}").collect()}
+        got = {(r.id_a, r.id_b) for r in
+               _prefix_jaccard_pairs(base, t_ppm).collect()}
+        parent_rows = pair_rows(base.select(F.explode("sh")
+                                            .alias("shingle")))
+        prefix_rows = pair_rows(_prefix_postings(base, t_ppm))
+    assert got == want == {(i, 1000 + i) for i in range(20)}
+    assert prefix_rows < 0.01 * parent_rows, (prefix_rows, parent_rows)
+    assert {r.n_true_total for r in lsh_band_tuning(df).collect()} == {20}
 
 
 def test_hard_negatives_seed_scan_bit_identical(spark, embeds):

@@ -9,9 +9,9 @@ Each test fails on the pre-fix code:
   DuckDB oracle stayed exact in HUGEINT (pipeline/text.vmr_ppm_expr).
 - read_documents' CSV path tore newline-bearing quoted text into
   malformed records and masked them as "" (sources/formats.py).
-- checkpoint_rebased crashed with AttributeError when the private JVM
-  handles are absent (Spark Connect) instead of falling back to the
-  plain localCheckpoint (util.py).
+- the stats-reset (rebased) checkpoint crashed with AttributeError when
+  the private JVM handles are absent (Spark Connect) instead of falling
+  back to the plain localCheckpoint (util.materialized.checkpoint).
 """
 
 import pyspark.sql.functions as F
@@ -91,31 +91,44 @@ def test_csv_roundtrip_preserves_embedded_newlines(spark, tmp_path):
 
 
 def test_checkpoint_rebased_falls_back_without_jvm_handles(spark):
-    # Spark Connect has no _jdf/_jsparkSession: the helper must fall
-    # back to the plain eager localCheckpoint, not raise AttributeError
-    from vivace_graph_v3_spark.util import checkpoint_rebased
+    # Spark Connect has no _jdf/_jsparkSession: the owner's rebased
+    # checkpoint must fall back to the plain eager localCheckpoint, not
+    # raise AttributeError
+    from vivace_graph_v3_spark import util
 
     class NoJvmFrame:
-        """Mimics a Connect DataFrame: localCheckpoint works, private
-        JVM handles absent."""
+        """Mimics a Connect DataFrame: observe and localCheckpoint work,
+        private JVM handles absent."""
 
         def __init__(self, real):
             self._real = real
 
+        def observe(self, ob, *exprs):
+            return NoJvmFrame(self._real.observe(ob, *exprs))
+
         def localCheckpoint(self, eager=True):
+            self._real.collect()  # the eager materialization
             return self
 
         @property
         def sparkSession(self):
             return object()  # no _jsparkSession attribute
 
-    fake = NoJvmFrame(spark.range(3))
-    out = checkpoint_rebased(fake)
-    assert out is fake  # the fallback returns the checkpointed frame
+    def size(df):
+        return int(df._jdf.queryExecution().optimizedPlan().stats()
+                   .sizeInBytes())
 
-    # and the classic path still produces a usable, stats-reset frame
-    real = checkpoint_rebased(spark.range(5))
-    assert real.count() == 5
+    with util.materialized() as m:
+        out, n = m.checkpoint(NoJvmFrame(spark.range(3)), rebase=True)
+        # the fallback returns the checkpointed frame and its count
+        assert isinstance(out, NoJvmFrame) and n == 3
+
+        # and the classic path still produces a usable, stats-reset
+        # frame: default leaf statistics, not the inherited 5-row size
+        plain, _ = m.checkpoint(spark.range(5))
+        real, n = m.checkpoint(spark.range(5), rebase=True)
+        assert n == 5 and real.count() == 5
+        assert size(real) > size(plain)
 
 
 def test_word_burstiness_matches_oracle(spark, duck):

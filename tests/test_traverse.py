@@ -116,11 +116,12 @@ def test_bfs_broadcast_regime_differential(tpch):
         assert got == want and len(got) > 1
 
 
-def _typed_graph(spark):
+def _typed_graph(spark, typed=True):
     """Vertices ``a:0..5`` and ``b:0..3``; a typed arm ``ab`` (a -> b,
-    endpoint types declared, so arms prune per round), an untyped arm
-    ``ba`` (b -> a, one duplicate edge) and an untyped arm ``aa`` with
-    an edge to a missing vertex and one with a null ``dst``."""
+    endpoint types declared unless ``typed`` is False, so arms prune per
+    round), an untyped arm ``ba`` (b -> a, one duplicate edge) and an
+    untyped arm ``aa`` with an edge to a missing vertex and one with a
+    null ``dst``."""
     from vivace_graph_v3_spark.graph import GraphStore
     from vivace_graph_v3_spark.schema import SchemaRegistry
 
@@ -144,7 +145,7 @@ def _typed_graph(spark):
 
     g.add_edges("ab", edges("ab", [("a:0", "b:0"), ("a:0", "b:1"),
                                    ("a:2", "b:1"), ("a:3", "b:2")]),
-                src_type="a", dst_type="b")
+                **(dict(src_type="a", dst_type="b") if typed else {}))
     g.add_edges("ba", edges("ba", [("b:0", "a:1"), ("b:1", "a:1"),
                                    ("b:1", "a:1"), ("b:1", "a:4"),
                                    ("b:2", "a:0")]))
@@ -191,3 +192,18 @@ def test_bfs_local_matches_distributed(spark):
                          max_depth=4))
     assert (None, 3) in out and ("zz:0", 3) in out
     assert out.count(("a:0", 0)) == 2 and ("nope:1", 0) in out
+    # no typed arm: the Spark loop builds one static hop relation, which
+    # past depth 3 it caches per arm
+    flat = _typed_graph(spark, typed=False)
+    kw = dict(direction="both", max_depth=4, include_paths=True)
+    got = _rows(traverse(flat, ["a:0"], **kw))
+    with distributed_regime():
+        assert _rows(traverse(flat, ["a:0"], **kw)) == got
+    # without uniqueness every walk is reported: b:2 -> a:0 -> b:0 | b:1
+    # (b:1 -> a:1 twice) -> a:1 x3, a:4 -> (a:2, null) per a:1, a:2, zz:0
+    walks = _rows(traverse(flat, ["b:2"], direction="out", max_depth=4,
+                           uniqueness=False))
+    assert walks == sorted(
+        [("b:2", 0), ("a:0", 1), ("b:0", 2), ("b:1", 2)]
+        + [("a:1", 3)] * 3 + [("a:4", 3)]
+        + [("a:2", 4), (None, 4)] * 3 + [("a:2", 4), ("zz:0", 4)], key=repr)

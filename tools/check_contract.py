@@ -15,6 +15,12 @@ the driver canonicalizes BOTH sides through **pandas** — DuckDB results via
    ``TypeError: unhashable type: 'list'`` — the driver records an err row.
 
 So: pandas fetch, pandas sort, no list-friendly fallbacks.
+
+Scale caveat: ann_lsh_recall, ann_ivf_recall and ann_recall_curve can
+only be checked at sf0.01. Their oracles embed ANN hit counts measured
+at that scale (``_SQL_ANN_RECALL.format(hits=48)`` in entry_queries.py),
+so at any other SF they fail with the same hashes whatever the engine
+does.
 """
 
 from __future__ import annotations

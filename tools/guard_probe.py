@@ -14,8 +14,10 @@ each listed ENTRY both ways at a given SF —
 
 asserts the canonicalized results are IDENTICAL (the check_contract
 canonicalization: %.6f floats, order-insensitive hash), times both with
-the noop sink, and dumps the distributed plan to
-``plans/<dir>/<name>_distributed.txt``.
+the noop sink, counts the persisted RDDs each mode's run leaves held
+while its result frame is alive (``held``: new ids in
+``getPersistentRDDs`` after a forced ``gc``), and dumps the distributed
+plan to ``plans/<dir>/<name>_distributed.txt``.
 
 Usage:
     python tools/guard_probe.py SF_DIR [--reps N] [--plans DIR] [names...]
@@ -23,6 +25,7 @@ Usage:
 
 from __future__ import annotations
 
+import gc
 import os
 import statistics
 import sys
@@ -87,13 +90,19 @@ def main() -> int:
     qs = eq.queries()
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
 
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set:
+        gc.collect()
+        return set(jsc.getPersistentRDDs().keySet())
+
     rows = []
     failures = []
     for name in names:
         def run(mode: str):
             samples = []
-            plan = None
             result_hash = None
+            before = persisted()
             for rep in range(reps):
                 spark.sparkContext.setJobDescription(
                     f"guard-probe {name} {mode} rep{rep}")
@@ -103,32 +112,35 @@ def main() -> int:
                 samples.append(round(time.time() - t0, 3))
                 if rep == 0:
                     result_hash = canon_pdf(df.toPandas())
+                    held = len(persisted() - before)
                     if mode == "distributed" and plans_dir:
                         os.makedirs(plans_dir, exist_ok=True)
                         with open(f"{plans_dir}/{name}_distributed.txt",
                                   "w") as fh:
                             fh.write(formatted_plan(df))
             spark.sparkContext.setJobDescription(None)
-            return statistics.median(samples), result_hash
+            return statistics.median(samples), result_hash, held
 
-        t_local, h_local = run("declared")
+        t_local, h_local, held_local = run("declared")
         bound = (spark.read.parquet(f"{sf_dir}/{SEED_BOUND[name]}.parquet")
                  .count() if name in SEED_BOUND else 0)
         with mock.patch.object(util, "DRIVER_ROWS", bound):
-            t_dist, h_dist = run("distributed")
+            t_dist, h_dist, held_dist = run("distributed")
         same = h_local == h_dist
         status = "IDENTICAL" if same else "MISMATCH"
         if not same:
             failures.append(name)
-        rows.append((name, t_local, t_dist, status))
+        rows.append((name, t_local, t_dist, held_local, held_dist, status))
         print(f"{name}: declared={t_local}s distributed={t_dist}s "
+              f"held={held_local}/{held_dist} "
               f"{status} (hash {h_local[0]} vs {h_dist[0]}, "
               f"rows {h_local[1]} vs {h_dist[1]})", flush=True)
 
-    print("\n| entry | declared s | distributed s | results |")
-    print("|---|---|---|---|")
-    for name, tl, td, st in rows:
-        print(f"| {name} | {tl} | {td} | {st} |")
+    print("\n| entry | declared s | distributed s | held declared "
+          "| held distributed | results |")
+    print("|---|---|---|---|---|---|")
+    for row in rows:
+        print("| " + " | ".join(str(v) for v in row) + " |")
     print(f"\n{len(rows) - len(failures)}/{len(rows)} identical; "
           f"failures: {failures}")
     return 1 if failures else 0

@@ -27,14 +27,13 @@ from vivace_graph_v3_spark.views import def_view, invoke_graph_view, map_reduced
 from vivace_graph_v3_spark.operators.traverse import traverse
 from vivace_graph_v3_spark.operators.spatial import (
     with_geohash, find_nodes_near, find_nearest_k)
-from vivace_graph_v3_spark.functions.geometry import haversine_m
 from vivace_graph_v3_spark.pipeline.text import (
     with_token_count, with_quality_score, with_fingerprint, STOPWORDS)
 from vivace_graph_v3_spark.pipeline.dedup import (
     exact_dedup, ngram_jaccard_pairs, minhash_dedup_pairs, simhash_dup_pairs,
     embedding_dup_pairs)
-from vivace_graph_v3_spark.pipeline.similarity import (
-    cosine_topk_bruteforce, ivf_ann_topk)
+from vivace_graph_v3_spark.pipeline.similarity import cosine_topk_bruteforce
+from vivace_graph_v3_spark.util import materialized
 
 DEC = "decimal(38,6)"
 
@@ -720,7 +719,8 @@ def q_events_latest_per_user(spark, sf_dir):
     — identical to the oracle's row_number DESC — but it partial-
     aggregates map-side, so a power-law user holding half the corpus
     costs one combiner cell instead of one unsplittable window
-    partition (tools/skew_probe.py records the head-to-head)."""
+    partition (SCALING.md, "Round-7 SKEW probe", records the
+    head-to-head)."""
     ev = _events(spark, sf_dir)
     return (ev.groupBy("user_id")
             .agg(F.max(F.struct("ts", "event_id", "event_type"))
@@ -1185,18 +1185,20 @@ def q_dedup_embedding_recall(spark, sf_dir):
     # TWO consumers (its count + the recall semi-join); Spark does not
     # reuse subplans across join arms, so without the checkpoint it
     # executed twice (guide §5). Pair list is dup-bounded.
-    exact = (embedding_dup_pairs(emb, threshold=0.5, block_bits=0)
-             .select("id_a", "id_b").localCheckpoint(eager=True))
-    hits = exact.join(blocked, ["id_a", "id_b"], "left_semi")
-    # n_exact = 0 (no over-threshold pair exists, e.g. the sf0.001 smoke
-    # fixture): recall is vacuously full — guard the integer div, which
-    # raises under ANSI on both engines.
-    return (exact.agg(F.count(F.lit(1)).alias("n_exact"))
-            .crossJoin(hits.agg(F.count(F.lit(1)).alias("n_hits")))
-            .select("n_exact", "n_hits",
-                    F.expr("CASE WHEN n_exact = 0 THEN 1000000 "
-                           "ELSE n_hits * 1000000 div n_exact END")
-                    .cast("long").alias("recall_ppm")))
+    with materialized() as m:
+        exact, _ = m.checkpoint(
+            embedding_dup_pairs(emb, threshold=0.5, block_bits=0)
+            .select("id_a", "id_b"))
+        hits = exact.join(blocked, ["id_a", "id_b"], "left_semi")
+        # n_exact = 0 (no over-threshold pair exists, e.g. the sf0.001
+        # smoke fixture): recall is vacuously full — guard the integer
+        # div, which raises under ANSI on both engines.
+        return m.keep(exact.agg(F.count(F.lit(1)).alias("n_exact"))
+                      .crossJoin(hits.agg(F.count(F.lit(1)).alias("n_hits")))
+                      .select("n_exact", "n_hits",
+                              F.expr("CASE WHEN n_exact = 0 THEN 1000000 "
+                                     "ELSE n_hits * 1000000 div n_exact END")
+                              .cast("long").alias("recall_ppm")))
 
 
 SQL_DEDUP_EMBEDDING_RECALL = f"""
@@ -1253,22 +1255,22 @@ def _ann_recall_row(spark, sf_dir, ann_df, exact=None):
     Callers scoring SEVERAL ANN configurations against the same ground
     truth pass ``exact`` (this function's checkpointed brute-force frame)
     once instead of rebuilding it per configuration."""
-    if exact is None:
-        emb = _emb(spark, sf_dir)
-        queries = emb.filter(F.col("vec_id") < 10)
-        # exact feeds its count AND the semi-join: checkpoint once instead
-        # of running the brute-force scan twice (no subplan reuse across
-        # arms)
-        exact = (cosine_topk_bruteforce(emb, queries, k=5)
-                 .select("query_id", "neighbor_id")
-                 .localCheckpoint(eager=True))
-    hits = exact.join(ann_df.select("query_id", "neighbor_id"),
-                      ["query_id", "neighbor_id"], "left_semi")
-    return (exact.agg(F.count(F.lit(1)).alias("n_exact"))
-            .crossJoin(hits.agg(F.count(F.lit(1)).alias("n_hits")))
-            .select("n_exact", "n_hits",
-                    F.round(F.col("n_hits") / F.col("n_exact"), 4)
-                    .alias("recall")))
+    with materialized() as m:
+        if exact is None:
+            emb = _emb(spark, sf_dir)
+            queries = emb.filter(F.col("vec_id") < 10)
+            # exact feeds its count AND the semi-join: checkpoint once
+            # instead of running the brute-force scan twice (no subplan
+            # reuse across arms)
+            exact, _ = m.checkpoint(cosine_topk_bruteforce(emb, queries, k=5)
+                                    .select("query_id", "neighbor_id"))
+        hits = exact.join(ann_df.select("query_id", "neighbor_id"),
+                          ["query_id", "neighbor_id"], "left_semi")
+        return m.keep(exact.agg(F.count(F.lit(1)).alias("n_exact"))
+                      .crossJoin(hits.agg(F.count(F.lit(1)).alias("n_hits")))
+                      .select("n_exact", "n_hits",
+                              F.round(F.col("n_hits") / F.col("n_exact"), 4)
+                              .alias("recall")))
 
 
 def q_ann_ivf_recall(spark, sf_dir):
@@ -2747,12 +2749,12 @@ def q_q11_important_stock(spark, sf_dir):
     pv = (li.groupBy("l_partkey")
           .agg(_dsum(F.col("l_quantity") * F.col("l_extendedprice"))
                .alias("value")))
-    pv = pv.persist()
-    total = pv.agg(_dsum(F.col("value")).alias("grand"))
-    out = (pv.join(F.broadcast(total))
-           .filter(F.col("value") > 0.0006 * F.col("grand"))
-           .select("l_partkey", F.round("value", 4).alias("value")))
-    return out
+    with materialized() as m:
+        pv, _ = m.checkpoint(pv)
+        total = pv.agg(_dsum(F.col("value")).alias("grand"))
+        return m.keep(pv.join(F.broadcast(total))
+                      .filter(F.col("value") > 0.0006 * F.col("grand"))
+                      .select("l_partkey", F.round("value", 4).alias("value")))
 
 
 SQL_Q11_IMPORTANT_STOCK = """
@@ -2777,13 +2779,14 @@ def q_q15_top_supplier(spark, sf_dir):
     rev = (li.groupBy("l_suppkey")
            .agg(_dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
                 .alias("total_rev")))
-    rev = rev.persist()
-    mx = rev.agg(F.max("total_rev").alias("mx"))
-    return (rev.join(F.broadcast(mx))
-            .filter(F.col("total_rev") == F.col("mx"))
-            .join(supp, rev["l_suppkey"] == supp["s_suppkey"])
-            .select("s_suppkey", "s_name",
-                    F.round("total_rev", 4).alias("total_rev")))
+    with materialized() as m:
+        rev, _ = m.checkpoint(rev)
+        mx = rev.agg(F.max("total_rev").alias("mx"))
+        return m.keep(rev.join(F.broadcast(mx))
+                      .filter(F.col("total_rev") == F.col("mx"))
+                      .join(supp, rev["l_suppkey"] == supp["s_suppkey"])
+                      .select("s_suppkey", "s_name",
+                              F.round("total_rev", 4).alias("total_rev")))
 
 
 SQL_Q15_TOP_SUPPLIER = """
@@ -3089,15 +3092,16 @@ def q_corpus_curation(spark, sf_dir):
     # the curated corpus feeds TWO consumers (doc/token stats + chunk
     # count); without the checkpoint the whole dedup+decontaminate+mix
     # pipeline executed twice (no subplan reuse across join arms, §5)
-    mixed = training_mix(clean, {"src0": 1.0, "src1": 1.0, "src2": 0.5,
-                                 "src3": 0.5, "src4": 0.25, "src5": 0.25}
-                         ).localCheckpoint(eager=True)
-    chunks = chunk_tokens(mixed, chunk_size=32, stride=24)
-    stats = (with_token_count(mixed, bpe_col=None)
-             .agg(F.count(F.lit(1)).alias("n_docs"),
-                  F.sum("n_tokens").alias("n_tokens")))
-    return stats.crossJoin(
-        chunks.agg(F.count(F.lit(1)).alias("n_chunks")))
+    with materialized() as m:
+        mixed, _ = m.checkpoint(training_mix(
+            clean, {"src0": 1.0, "src1": 1.0, "src2": 0.5, "src3": 0.5,
+                    "src4": 0.25, "src5": 0.25}))
+        chunks = chunk_tokens(mixed, chunk_size=32, stride=24)
+        stats = (with_token_count(mixed, bpe_col=None)
+                 .agg(F.count(F.lit(1)).alias("n_docs"),
+                      F.sum("n_tokens").alias("n_tokens")))
+        return m.keep(stats.crossJoin(
+            chunks.agg(F.count(F.lit(1)).alias("n_chunks"))))
 
 
 SQL_CORPUS_CURATION = (
@@ -5048,23 +5052,25 @@ def q_graph_neighbor_features(spark, sf_dir):
     # aggregate by two — checkpoint both or the multi-type edge scan
     # replays once per reference (the plan audit showed 108 file scans
     # un-materialized; 12 after)
-    e = (_edge_pairs(g, None, undirected=True).select("src", "dst")
-         .localCheckpoint(eager=True))
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")) \
-        .localCheckpoint(eager=True)
-    h1 = (e.join(deg.withColumnRenamed("src", "dst")
-                 .withColumnRenamed("deg", "nd"), "dst")
-          .groupBy("src")
-          .agg((F.sum("nd").cast("double") / F.count(F.lit(1)))
-               .alias("h1")))
-    h2 = (e.join(h1.withColumnRenamed("src", "dst"), "dst")
-          .groupBy("src")
-          .agg((F.sum(F.col("h1").cast("decimal(38,12)")).cast("double")
-                / F.count(F.lit(1))).alias("h2")))
-    return (deg.join(h1, "src").join(h2, "src")
-            .select(F.col("src").alias("id"), F.col("deg").alias("h0"),
-                    F.round("h1", 6).alias("h1"),
-                    F.round("h2", 6).alias("h2")))
+    with materialized() as m:
+        e, _ = m.checkpoint(
+            _edge_pairs(g, None, undirected=True).select("src", "dst"))
+        deg, _ = m.checkpoint(
+            e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
+        h1 = (e.join(deg.withColumnRenamed("src", "dst")
+                     .withColumnRenamed("deg", "nd"), "dst")
+              .groupBy("src")
+              .agg((F.sum("nd").cast("double") / F.count(F.lit(1)))
+                   .alias("h1")))
+        h2 = (e.join(h1.withColumnRenamed("src", "dst"), "dst")
+              .groupBy("src")
+              .agg((F.sum(F.col("h1").cast("decimal(38,12)")).cast("double")
+                    / F.count(F.lit(1))).alias("h2")))
+        return m.keep(deg.join(h1, "src").join(h2, "src")
+                      .select(F.col("src").alias("id"),
+                              F.col("deg").alias("h0"),
+                              F.round("h1", 6).alias("h1"),
+                              F.round("h2", 6).alias("h2")))
 
 
 SQL_GRAPH_NEIGHBOR_FEATURES = (
@@ -5958,14 +5964,16 @@ def q_dedup_agreement(spark, sf_dir):
     # semi-join) and Spark does not reuse subplans across join arms —
     # without the checkpoints both full dedup pipelines executed twice
     # (guide §5; the k-truss union lesson). Pair lists are dup-bounded.
-    jac = (minhash_dedup_pairs(docs, threshold=0.5)
-           .select("id_a", "id_b").localCheckpoint(eager=True))
-    sim = (simhash_dup_pairs(docs, max_hamming=10, token_hash="md5")
-           .select("id_a", "id_b").localCheckpoint(eager=True))
-    both = jac.join(sim, ["id_a", "id_b"], "left_semi")
-    return (jac.agg(F.count(F.lit(1)).alias("n_jaccard"))
-            .crossJoin(sim.agg(F.count(F.lit(1)).alias("n_simhash")))
-            .crossJoin(both.agg(F.count(F.lit(1)).alias("n_both"))))
+    with materialized() as m:
+        jac, _ = m.checkpoint(minhash_dedup_pairs(docs, threshold=0.5)
+                              .select("id_a", "id_b"))
+        sim, _ = m.checkpoint(
+            simhash_dup_pairs(docs, max_hamming=10, token_hash="md5")
+            .select("id_a", "id_b"))
+        both = jac.join(sim, ["id_a", "id_b"], "left_semi")
+        return m.keep(jac.agg(F.count(F.lit(1)).alias("n_jaccard"))
+                      .crossJoin(sim.agg(F.count(F.lit(1)).alias("n_simhash")))
+                      .crossJoin(both.agg(F.count(F.lit(1)).alias("n_both"))))
 
 
 SQL_DEDUP_AGREEMENT = (
@@ -8862,17 +8870,17 @@ def q_ann_recall_curve(spark, sf_dir):
     # ONE exact ground truth for all four nprobe rows (the brute-force
     # frame is the expensive half and is nprobe-independent; it was
     # rebuilt per configuration before)
-    exact = (cosine_topk_bruteforce(emb, queries, k=5)
-             .select("query_id", "neighbor_id")
-             .localCheckpoint(eager=True))
-    out = None
-    for nprobe in (1, 2, 4, 8):
-        ann = ivf_probe(indexed, cents, queries, k=5, nprobe=nprobe)
-        row = (_ann_recall_row(spark, sf_dir, ann, exact=exact)
-               .select(F.lit(nprobe).cast("long").alias("nprobe"),
-                       "n_exact", "n_hits", "recall"))
-        out = row if out is None else out.unionAll(row)
-    return out
+    with materialized() as m:
+        exact, _ = m.checkpoint(cosine_topk_bruteforce(emb, queries, k=5)
+                                .select("query_id", "neighbor_id"))
+        out = None
+        for nprobe in (1, 2, 4, 8):
+            ann = ivf_probe(indexed, cents, queries, k=5, nprobe=nprobe)
+            row = (_ann_recall_row(spark, sf_dir, ann, exact=exact)
+                   .select(F.lit(nprobe).cast("long").alias("nprobe"),
+                           "n_exact", "n_hits", "recall"))
+            out = row if out is None else out.unionAll(row)
+        return m.keep(out)
 
 
 SQL_ANN_RECALL_CURVE = """
@@ -13970,18 +13978,19 @@ def q_dedup_edit_clusters(spark, sf_dir):
     from vivace_graph_v3_spark.pipeline.dedup import edit_distance_pairs
 
     # checkpointed once: the engine re-reads both orientations every round
-    pairs = (edit_distance_pairs(_docs(spark, sf_dir), k=4)
-             .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-             .localCheckpoint(eager=True))
-    edges = pairs.unionByName(pairs.select(F.col("dst").alias("src"),
-                                           F.col("src").alias("dst")))
-    cl = min_label_fixpoint(
-        edges, edges.select(F.col("src").alias("id")).dropDuplicates()
-        .withColumn("lab", F.col("id")), max_iter=15)
-    return (cl.groupBy("lab").agg(F.count(F.lit(1)).alias("sz"))
-            .groupBy(F.col("sz").alias("cluster_size"))
-            .agg(F.count(F.lit(1)).alias("n_clusters"))
-            .orderBy("cluster_size"))
+    with materialized() as m:
+        pairs, _ = m.checkpoint(
+            edit_distance_pairs(_docs(spark, sf_dir), k=4)
+            .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")))
+        edges = pairs.unionByName(pairs.select(F.col("dst").alias("src"),
+                                               F.col("src").alias("dst")))
+        cl = min_label_fixpoint(
+            edges, edges.select(F.col("src").alias("id")).dropDuplicates()
+            .withColumn("lab", F.col("id")), max_iter=15)
+        return m.keep(cl.groupBy("lab").agg(F.count(F.lit(1)).alias("sz"))
+                      .groupBy(F.col("sz").alias("cluster_size"))
+                      .agg(F.count(F.lit(1)).alias("n_clusters"))
+                      .orderBy("cluster_size"))
 
 
 SQL_DEDUP_EDIT_CLUSTERS = f"""

@@ -8,13 +8,15 @@ DataFrame loops so they inherit Catalyst + AQE:
 
 - messages = join(current state, edges) — shuffle on the edge key;
 - aggregate messages = groupBy(dst);
-- iterate with localCheckpoint per round (bounded lineage, accurate AQE
-  stats), stopping on convergence / frontier exhaustion.
+- iterate with an eager checkpoint per round (bounded lineage, accurate
+  AQE stats), stopping on convergence / frontier exhaustion.
 
 Scale notes: state is O(|V|) and every round shuffles O(|E|) messages — the
 same cost model as GraphX Pregel. Edges are persisted across rounds; for a
 1000-executor run, pre-bucket edges by src so the per-round join is
-shuffle-free on the edge side.
+shuffle-free on the edge side. Each loop materializes through one
+``util.materialized()`` scope: on return it releases every block the
+returned frame does not read.
 
 Most iterative operators choose their plan by graph size through the one
 driver bound (``util.DRIVER_ROWS``). PageRank, HITS and label propagation
@@ -44,8 +46,8 @@ from pyspark.sql import types as T
 
 from vivace_graph_v3_spark.graph import GraphStore
 from vivace_graph_v3_spark.util import (
-    checkpoint_counted, checkpoint_rebased, collect_bounded, finish_locally,
-    fits_driver, local_frame, union_find_min)
+    collect_bounded, finish_locally, fits_driver, local_frame, materialized,
+    union_find_min)
 
 
 def _edge_pairs(graph: GraphStore, edge_type: str | None,
@@ -239,126 +241,129 @@ def pagerank(graph: GraphStore, *, edge_type: str | None = None,
     if cg is not None:
         return _vertex_rows(graph, cg, rank=_local_pagerank(
             cg, damping, max_iter, tol, sources))
-    # materialize the vertex universe once — it joins into EVERY iteration,
-    # and recomputing the multi-type union scan per round would dominate
-    vertices = (graph.scan_vertices(columns=["id"]).select("id")
-                .dropDuplicates())
-    # partition the (static) edge list by join key ONCE, with the reciprocal
-    # out-degree folded in (one static join instead of one per round): every
-    # iteration's rank-contribution join then moves only the small rank
-    # frame, never the edges — at 100 TB the edge shuffle is the cost that
-    # matters
-    # one explicit shuffle on src; the out-degree aggregate and the
-    # degree-fold join both REUSE that partitioning (no further exchange —
-    # verify: a single Exchange below edges_w in .explain), and edges_w
-    # inherits it for every iteration's contribution join.
-    # AQE coalesces the dedup shuffle, so the checkpointed state frame is
-    # already right-sized; the edge partitioning is sized off the vertex
-    # count (~1M edge rows per task at avg degree ~10) — per-round stages
-    # stay dense instead of scheduling 32 near-empty tasks x 10 rounds at
-    # small SF, while the count grows unbounded with |V| (at 100 TB this
-    # lands at thousands of partitions, as it should).
-    vertices, n = checkpoint_counted(vertices)
-    nparts = max(4, min(int(graph.spark.conf.get(
-        "spark.sql.shuffle.partitions", "32")) * 4, n // 100_000 + 1))
-    # ``weighted``: contributions split by edge weight (w / Σw_out) instead
-    # of 1/out-degree — same plan shape, the weight-sum replaces the count.
-    # Weight sums are order-exact here in practice (integer-valued doubles
-    # sum exactly); the contract's 4-dp rank rounding absorbs any residue.
-    edges = (_edge_pairs(graph, edge_type, weighted=weighted)
-             .repartition(nparts, F.col("src")))
-    if weighted:
-        # a zero out-weight sum sends nothing (a null share, summed as
-        # absent), as in _local_pagerank; under ANSI mode the bare
-        # quotient would raise DIVIDE_BY_ZERO
-        out_deg = edges.groupBy("src").agg(F.sum("weight").alias("deg"))
-        edges_w = (edges.join(out_deg, "src")
-                   .select("src", "dst",
-                           F.when(F.col("deg") != 0,
-                                  F.col("weight") / F.col("deg"))
-                           .alias("inv")))
-    else:
-        out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        edges_w = (edges.join(out_deg, "src")
-                   .select("src", "dst",
-                           (F.lit(1.0) / F.col("deg")).alias("inv")))
-    # the dangling set is static (vertices with no out-edges). Instead of a
-    # per-round semi-join + separate aggregate job for the dangling mass,
-    # fold it into the SAME contribution shuffle: every dangling vertex
-    # gets one virtual edge to a reserved sink id, so the per-round
-    # aggregate emits the dangling mass as the sink's recv row — one
-    # exchange carries both, and both consumers reuse it (ReusedExchange).
-    _SINK = "\x00__pr_dangling_sink__"  # ids are typed strings, never NUL-led
-    dangling = (vertices.join(out_deg.withColumnRenamed("src", "id"),
-                              "id", "left_anti")
-                .select(F.col("id").alias("src"), F.lit(_SINK).alias("dst"),
-                        F.lit(1.0).alias("inv")))
-    edges_w = edges_w.unionByName(dangling).persist()
-    # rank state is O(|V|) doubles; when it fits comfortably in a broadcast,
-    # ship it to the static edge partitions instead of shuffling both sides —
-    # each round is then ONE shuffle (the contribution aggregate). Measured
-    # on local[32], broadcast still wins at 1.9M rank rows (~50 MB/round:
-    # 41 s vs 57 s for the shuffle join over 15M edges), so the bound
-    # (util.DRIVER_ROWS) sits at 2M. Past it, fall back to the shuffle
-    # join — the formulation that holds at 100 TB, where |V| dwarfs any
-    # broadcast budget.
-    bcast_state = fits_driver(n)
-    _b = (lambda df: F.broadcast(df)) if bcast_state else (lambda df: df)
-    # teleport vector (mass-|V| convention): uniform 1.0, or |V|/|S| on the
-    # personalization sources and 0 elsewhere. Built as a function of the
-    # keying column because the iteration below evaluates it on the edge
-    # frame's ``src`` (rank inlining) and the final assembly on ``id``.
-    if sources is None:
-        def tele_of(c):
-            return F.lit(1.0)
-    else:
-        # intersect with the vertex universe: a source absent from the
-        # graph would silently lose teleport mass (ranks no longer summing
-        # to |V|; with no valid source at all, every rank decays to 0).
-        # No str() coercion — values are compared in the id column's type.
-        matched = (vertices.filter(F.col("id").isin(*list(sources)))
-                   .count())
-        if matched == 0:
-            raise ValueError(
-                f"none of the {len(sources)} personalization sources "
-                "exist in the vertex set")
+    with materialized() as m:
+        # materialize the vertex universe once — it joins into EVERY iteration,
+        # and recomputing the multi-type union scan per round would dominate
+        vertices = (graph.scan_vertices(columns=["id"]).select("id")
+                    .dropDuplicates())
+        # partition the (static) edge list by join key ONCE, with the
+        # reciprocal out-degree folded in (one static join instead of one per
+        # round): every iteration's rank-contribution join then moves only the
+        # small rank frame, never the edges — at 100 TB the edge shuffle is the
+        # cost that matters one explicit shuffle on src; the out-degree
+        # aggregate and the degree-fold join both REUSE that partitioning (no
+        # further exchange — verify: a single Exchange below edges_w in
+        # .explain), and edges_w inherits it for every iteration's contribution
+        # join. AQE coalesces the dedup shuffle, so the checkpointed state
+        # frame is already right-sized; the edge partitioning is sized off the
+        # vertex count (~1M edge rows per task at avg degree ~10) — per-round
+        # stages stay dense instead of scheduling 32 near-empty tasks x 10
+        # rounds at small SF, while the count grows unbounded with |V| (at 100
+        # TB this lands at thousands of partitions, as it should).
+        vertices, n = m.checkpoint(vertices)
+        nparts = max(4, min(int(graph.spark.conf.get(
+            "spark.sql.shuffle.partitions", "32")) * 4, n // 100_000 + 1))
+        # ``weighted``: contributions split by edge weight (w / Σw_out) instead
+        # of 1/out-degree — same plan shape, the weight-sum replaces the count.
+        # Weight sums are order-exact here in practice (integer-valued doubles
+        # sum exactly); the contract's 4-dp rank rounding absorbs any residue.
+        edges = (_edge_pairs(graph, edge_type, weighted=weighted)
+                 .repartition(nparts, F.col("src")))
+        if weighted:
+            # a zero out-weight sum sends nothing (a null share, summed as
+            # absent), as in _local_pagerank; under ANSI mode the bare
+            # quotient would raise DIVIDE_BY_ZERO
+            out_deg = edges.groupBy("src").agg(F.sum("weight").alias("deg"))
+            edges_w = (edges.join(out_deg, "src")
+                       .select("src", "dst",
+                               F.when(F.col("deg") != 0,
+                                      F.col("weight") / F.col("deg"))
+                               .alias("inv")))
+        else:
+            out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+            edges_w = (edges.join(out_deg, "src")
+                       .select("src", "dst",
+                               (F.lit(1.0) / F.col("deg")).alias("inv")))
+        # the dangling set is static (vertices with no out-edges). Instead of a
+        # per-round semi-join + separate aggregate job for the dangling mass,
+        # fold it into the SAME contribution shuffle: every dangling vertex
+        # gets one virtual edge to a reserved sink id, so the per-round
+        # aggregate emits the dangling mass as the sink's recv row — one
+        # exchange carries both, and both consumers reuse it (ReusedExchange).
+        # ids are typed strings, never NUL-led
+        _SINK = "\x00__pr_dangling_sink__"
+        dangling = (vertices.join(out_deg.withColumnRenamed("src", "id"),
+                                  "id", "left_anti")
+                    .select(F.col("id").alias("src"),
+                            F.lit(_SINK).alias("dst"),
+                            F.lit(1.0).alias("inv")))
+        edges_w = m.persist(edges_w.unionByName(dangling))
+        # rank state is O(|V|) doubles; when it fits comfortably in a
+        # broadcast, ship it to the static edge partitions instead of shuffling
+        # both sides — each round is then ONE shuffle (the contribution
+        # aggregate). Measured on local[32], broadcast still wins at 1.9M rank
+        # rows (~50 MB/round: 41 s vs 57 s for the shuffle join over 15M
+        # edges), so the bound (util.DRIVER_ROWS) sits at 2M. Past it, fall
+        # back to the shuffle join — the formulation that holds at 100 TB,
+        # where |V| dwarfs any broadcast budget.
+        bcast_state = fits_driver(n)
+        _b = (lambda df: F.broadcast(df)) if bcast_state else (lambda df: df)
+        # teleport vector (mass-|V| convention): uniform 1.0, or |V|/|S| on the
+        # personalization sources and 0 elsewhere. Built as a function of the
+        # keying column because the iteration below evaluates it on the edge
+        # frame's ``src`` (rank inlining) and the final assembly on ``id``.
+        if sources is None:
+            def tele_of(c):
+                return F.lit(1.0)
+        else:
+            # intersect with the vertex universe: a source absent from the
+            # graph would silently lose teleport mass (ranks no longer summing
+            # to |V|; with no valid source at all, every rank decays to 0).
+            # No str() coercion — values are compared in the id column's type.
+            matched = (vertices.filter(F.col("id").isin(*list(sources)))
+                       .count())
+            if matched == 0:
+                raise ValueError(
+                    f"none of the {len(sources)} personalization sources "
+                    "exist in the vertex set")
 
-        def tele_of(c):
-            return F.when(c.isin(*list(sources)),
-                          F.lit(float(n) / matched)).otherwise(F.lit(0.0))
+            def tele_of(c):
+                return F.when(c.isin(*list(sources)),
+                              F.lit(float(n) / matched)).otherwise(F.lit(0.0))
 
-    def base_of(c, dang):
-        # same expression shape every round: identical IEEE double ops on
-        # the identical dangling-mass value, evaluated on column ``c``
-        return (F.lit(1.0 - damping)
-                + F.lit(damping) * F.lit(dang) / F.lit(float(n))) * tele_of(c)
+        def base_of(c, dang):
+            # same expression shape every round: identical IEEE double ops on
+            # the identical dangling-mass value, evaluated on column ``c``
+            return (F.lit(1.0 - damping)
+                    + F.lit(damping) * F.lit(dang) / F.lit(float(n))
+                    ) * tele_of(c)
 
-    def assemble(agg, base):
-        """Rank frame for state (agg, base): every vertex gets
-        base(id) + damping * recv (recv 0 when absent). Deliberately a
-        SHUFFLE join (no _b): |V| state rows move within the consuming
-        job instead of paying a broadcast-collect job."""
-        if agg is None:
-            return vertices.withColumn("rank", tele_of(F.col("id")))
-        return (vertices.join(agg.filter(F.col("id") != _SINK), "id", "left")
-                .select("id", (base + F.lit(damping) *
-                               F.coalesce(F.col("recv"), F.lit(0.0)))
-                        .alias("rank")))
+        def assemble(agg, base):
+            """Rank frame for state (agg, base): every vertex gets
+            base(id) + damping * recv (recv 0 when absent). Deliberately a
+            SHUFFLE join (no _b): |V| state rows move within the consuming
+            job instead of paying a broadcast-collect job."""
+            if agg is None:
+                return vertices.withColumn("rank", tele_of(F.col("id")))
+            return (vertices.join(agg.filter(F.col("id") != _SINK), "id",
+                                  "left")
+                    .select("id", (base + F.lit(damping) *
+                                   F.coalesce(F.col("recv"), F.lit(0.0)))
+                            .alias("rank")))
 
-    # Iteration state is the RECEIVED-MASS aggregate (agg, base-scalar),
-    # never an assembled rank frame: rank(src) = base(src) +
-    # damping * recv(src) is inlined into the contribution join, so the
-    # per-round |V|-sized assembly join (vertices x recv — which the old
-    # shape executed INSIDE every broadcast build, ~1/3 of each round)
-    # exists only at the very end, and for tol checks. Per round: ONE
-    # materialization (checkpoint of the contribution aggregate — the
-    # |E|-sized work, with the rank-state broadcast built in the same
-    # job) plus a 1-row probe of the checkpointed frame for the dangling
-    # mass, inlined as a literal into the next round's base expression.
-    agg = None          # (id, recv) after round t, checkpointed
-    base = None         # base expression over F.col("id") after round t
-    dang = 0.0
-    try:
+        # Iteration state is the RECEIVED-MASS aggregate (agg, base-scalar),
+        # never an assembled rank frame: rank(src) = base(src) +
+        # damping * recv(src) is inlined into the contribution join, so the
+        # per-round |V|-sized assembly join (vertices x recv — which the old
+        # shape executed INSIDE every broadcast build, ~1/3 of each round)
+        # exists only at the very end, and for tol checks. Per round: ONE
+        # materialization (checkpoint of the contribution aggregate — the
+        # |E|-sized work, with the rank-state broadcast built in the same
+        # job) plus a 1-row probe of the checkpointed frame for the dangling
+        # mass, inlined as a literal into the next round's base expression.
+        agg = None          # (id, recv) after round t, checkpointed
+        base = None         # base expression over F.col("id") after round t
+        dang = 0.0
         for it in range(max_iter):
             if agg is None:
                 r_src = tele_of(F.col("src"))
@@ -371,17 +376,17 @@ def pagerank(graph: GraphStore, *, edge_type: str | None = None,
                                                        F.lit(0.0)))
             prev_agg, prev_base = agg, base
             # the dangling mass rides the checkpoint materialization as an
-            # observation (fires on eager localCheckpoint) — zero extra
+            # observation (fires on the eager checkpoint) — zero extra
             # jobs; same value as the filter+sum probe (sum of when(..)
             # over all rows == sum over the filtered sink row, null -> 0)
             ob = Observation()
-            agg = (j.select(F.col("dst").alias("id"),
-                            (r_src * F.col("inv")).alias("c"))
-                   .groupBy("id").agg(F.sum("c").alias("recv"))
-                   .observe(ob, F.coalesce(
-                       F.sum(F.when(F.col("id") == _SINK, F.col("recv"))),
-                       F.lit(0.0)).alias("dang"))
-                   .localCheckpoint(eager=True))
+            agg, _ = m.checkpoint(
+                j.select(F.col("dst").alias("id"),
+                         (r_src * F.col("inv")).alias("c"))
+                .groupBy("id").agg(F.sum("c").alias("recv"))
+                .observe(ob, F.coalesce(
+                    F.sum(F.when(F.col("id") == _SINK, F.col("recv"))),
+                    F.lit(0.0)).alias("dang")))
             dang = ob.get["dang"]
             base = base_of(F.col("id"), dang)
             # L1-delta convergence probe, every round
@@ -393,9 +398,7 @@ def pagerank(graph: GraphStore, *, edge_type: str | None = None,
                          .first()[0])
                 if delta is not None and delta < tol * n:
                     break
-    finally:
-        edges_w.unpersist()
-    return assemble(agg, base)
+        return m.keep(assemble(agg, base))
 
 
 def min_label_fixpoint(edges: DataFrame, labels: DataFrame, *,
@@ -414,7 +417,8 @@ def min_label_fixpoint(edges: DataFrame, labels: DataFrame, *,
     lab <- least(lab, lab(lab)). The jump is sound because lab(v) is
     always a node v reaches and reach is transitive (R(lab(v)) ⊆ R(v)),
     so chains converge in O(log diameter) rounds. Both steps land in
-    stats-reset checkpoints (util.checkpoint_rebased), and the step is
+    stats-reset checkpoints (``rebase`` in util.materialized.checkpoint),
+    and the step is
     materialized BEFORE its self-join: self-joining the live plan can
     stall the broadcast-build thread until spark.sql.broadcastTimeout
     (the v_optimal_histogram lesson, SCALING.md), and a checkpointed
@@ -424,29 +428,33 @@ def min_label_fixpoint(edges: DataFrame, labels: DataFrame, *,
     rounds without convergence raise RuntimeError rather than return a
     partial answer. ``edges`` is re-read every round: pass it persisted
     or checkpointed."""
-    labels = labels.select("id", "lab").transform(checkpoint_rebased)
-    for _ in range(max_iter):
-        nbr = (edges.join(labels.select(F.col("id").alias("dst"),
-                                        F.col("lab").alias("nlab")), "dst")
-               .groupBy("src").agg(F.min("nlab").alias("nmin"))
-               .withColumnRenamed("src", "id"))
-        # the pre-round label travels along as ``old`` for the change count
-        stepped = (labels.join(nbr, "id", "left")
-                   .select("id", F.least("lab", F.coalesce("nmin", "lab"))
-                           .alias("lab"), F.col("lab").alias("old"))
-                   .transform(checkpoint_rebased))
-        ob = Observation()
-        labels = (stepped.join(stepped.select(F.col("id").alias("lab"),
-                                              F.col("lab").alias("lab2")),
-                               "lab", "left")
-                  .select("id", F.least("lab", F.coalesce("lab2", "lab"))
-                          .alias("lab"), "old")
-                  .observe(ob, F.count(F.when(F.col("lab") != F.col("old"),
-                                              1)).alias("chg"))
-                  .select("id", "lab")
-                  .transform(checkpoint_rebased))
-        if ob.get["chg"] == 0:
-            return labels
+    with materialized() as m:
+        labels, _ = m.checkpoint(labels.select("id", "lab"), rebase=True)
+        for _ in range(max_iter):
+            nbr = (edges.join(labels.select(F.col("id").alias("dst"),
+                                            F.col("lab").alias("nlab")),
+                              "dst")
+                   .groupBy("src").agg(F.min("nlab").alias("nmin"))
+                   .withColumnRenamed("src", "id"))
+            # the pre-round label travels along as ``old`` for the change
+            # count
+            stepped, _ = m.checkpoint(
+                labels.join(nbr, "id", "left")
+                .select("id", F.least("lab", F.coalesce("nmin", "lab"))
+                        .alias("lab"), F.col("lab").alias("old")),
+                rebase=True)
+            ob = Observation()
+            labels, _ = m.checkpoint(
+                stepped.join(stepped.select(F.col("id").alias("lab"),
+                                            F.col("lab").alias("lab2")),
+                             "lab", "left")
+                .select("id", F.least("lab", F.coalesce("lab2", "lab"))
+                        .alias("lab"), "old")
+                .observe(ob, F.count(F.when(F.col("lab") != F.col("old"),
+                                            1)).alias("chg"))
+                .select("id", "lab"), rebase=True)
+            if ob.get["chg"] == 0:
+                return m.keep(labels)
     raise RuntimeError(
         f"min_label_fixpoint did not converge in {max_iter} rounds")
 
@@ -503,13 +511,10 @@ def connected_components(graph: GraphStore, *, edge_type: str | None = None,
         return (labels.join(F.broadcast(lab_df), "id", "left")
                 .select("id", F.coalesce(F.col("c2"), F.col("comp"))
                         .alias("comp")))
-    edges = edges.persist()
-    try:
-        return min_label_fixpoint(
-            edges, labels.withColumnRenamed("comp", "lab"),
-            max_iter=max_iter).withColumnRenamed("lab", "comp")
-    finally:
-        edges.unpersist()
+    with materialized() as m:
+        return m.keep(min_label_fixpoint(
+            m.persist(edges), labels.withColumnRenamed("comp", "lab"),
+            max_iter=max_iter).withColumnRenamed("lab", "comp"))
 
 
 def cc_incremental(labels: DataFrame, new_edges: DataFrame, *,
@@ -797,39 +802,42 @@ def k_truss(graph: GraphStore, k: int, *, edge_type: str | None = None,
     local = finish_locally(e, peel, schema)
     if local is not None:
         return local
-    e, n_edges = checkpoint_counted(e)
-    # one local attempt: an edge set that fits was declined by the
-    # kernel's memory cap, and a peeled subset gets one try once it fits
-    local_tried = fits_driver(n_edges)
-    sup = None
-    converged = False
-    for _ in range(max_iter):
-        if not local_tried and fits_driver(n_edges):
-            local_tried = True
-            local = finish_locally(e, peel, schema)
-            if local is not None:
-                return local
-        sup = _edge_support(e)
-        kept, n_next = checkpoint_counted(
-            sup.filter(F.col("support") >= sup_min))
-        e = kept.select("src", "dst")
-        if n_next == n_edges:
-            converged = True   # kept == e, so sup describes the fixpoint
-            break
-        n_edges = n_next
-        if n_edges == 0:
-            converged = True
-            break
-    if not converged:
-        # max_iter exhausted pre-fixpoint: supports were counted against
-        # the pre-peel set; recompute once against the final edge set so
-        # the (src, dst, support) contract stays honest (edges that fell
-        # out of every triangle report 0)
-        return (e.join(_edge_support(e), ["src", "dst"], "left")
+    with materialized() as m:
+        e, n_edges = m.checkpoint(e)
+        # one local attempt: an edge set that fits was declined by the
+        # kernel's memory cap, and a peeled subset gets one try once it fits
+        local_tried = fits_driver(n_edges)
+        sup = None
+        converged = False
+        for _ in range(max_iter):
+            if not local_tried and fits_driver(n_edges):
+                local_tried = True
+                local = finish_locally(e, peel, schema)
+                if local is not None:
+                    return m.keep(local)
+            sup = _edge_support(e)
+            kept, n_next = m.checkpoint(
+                sup.filter(F.col("support") >= sup_min))
+            e = kept.select("src", "dst")
+            if n_next == n_edges:
+                converged = True   # kept == e, so sup describes the fixpoint
+                break
+            n_edges = n_next
+            if n_edges == 0:
+                converged = True
+                break
+        if not converged:
+            # max_iter exhausted pre-fixpoint: supports were counted against
+            # the pre-peel set; recompute once against the final edge set so
+            # the (src, dst, support) contract stays honest (edges that fell
+            # out of every triangle report 0)
+            return m.keep(
+                e.join(_edge_support(e), ["src", "dst"], "left")
                 .withColumn("support", F.coalesce(F.col("support"),
                                                   F.lit(0).cast("long"))))
-    return (sup.filter(F.col("support") >= sup_min) if sup is not None
-            else e.withColumn("support", F.lit(0).cast("long")))
+        return m.keep(sup.filter(F.col("support") >= sup_min)
+                      if sup is not None
+                      else e.withColumn("support", F.lit(0).cast("long")))
 
 
 def degree_assortativity(graph: GraphStore, *,
@@ -956,16 +964,16 @@ def shortest_paths(graph: GraphStore, roots, *, edge_type: str | None = None,
                       T.StructField("dist", T.DoubleType())]))
     if local is not None:
         return local
-    edges = edges.persist()
-    dist = dist.withColumn("dist", F.lit(0.0)).localCheckpoint(eager=True)
-    frontier = dist
-    try:
+    with materialized() as m:
+        edges = m.persist(edges)
+        dist, _ = m.checkpoint(dist.withColumn("dist", F.lit(0.0)))
+        frontier = dist
         for it in range(max_iter):
             cand = (frontier.join(edges, frontier["id"] == edges["src"])
                     .select(F.col("dst").alias("id"),
                             (F.col("dist") + F.col("w")).alias("nd"))
                     .groupBy("id").agg(F.min("nd").alias("nd")))
-            improved, n_imp = checkpoint_counted(
+            improved, n_imp = m.checkpoint(
                 cand.join(dist, "id", "left")
                 .filter(F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
                 .select("id", F.col("nd").alias("dist")))
@@ -978,11 +986,9 @@ def shortest_paths(graph: GraphStore, roots, *, edge_type: str | None = None,
             dist = (dist.join(improved.select("id"), "id", "left_anti")
                     .unionByName(improved))
             if (it + 1) % 3 == 0:
-                dist = dist.localCheckpoint(eager=True)
+                dist, _ = m.checkpoint(dist)
             frontier = improved
-    finally:
-        edges.unpersist()
-    return dist
+        return m.keep(dist)
 
 
 def _local_label_propagation(cg: _CodedGraph, max_iter: int) -> np.ndarray:
@@ -1033,11 +1039,11 @@ def label_propagation(graph: GraphStore, *, edge_type: str | None = None,
     if cg is not None:
         return _vertex_rows(
             graph, cg, label=cg.ids[_local_label_propagation(cg, max_iter)])
-    edges = _edge_pairs(graph, edge_type, undirected=True).persist()
-    labels = (graph.scan_vertices(columns=["id"]).select("id").dropDuplicates()
-              .withColumn("label", F.col("id"))
-              .localCheckpoint(eager=True))
-    try:
+    with materialized() as m:
+        edges = m.persist(_edge_pairs(graph, edge_type, undirected=True))
+        labels, _ = m.checkpoint(
+            graph.scan_vertices(columns=["id"]).select("id").dropDuplicates()
+            .withColumn("label", F.col("id")))
         for _ in range(max_iter):
             counts = (edges.join(labels.select(F.col("id").alias("dst"),
                                                F.col("label").alias("nlbl")),
@@ -1050,13 +1056,11 @@ def label_propagation(graph: GraphStore, *, edge_type: str | None = None,
                     .filter(F.col("rn") == 1)
                     .select(F.col("src").alias("id"),
                             F.col("nlbl").alias("new_label")))
-            labels = (labels.join(best, "id", "left")
-                      .select("id", F.coalesce("new_label", "label")
-                              .alias("label"))
-                      .localCheckpoint(eager=True))
-    finally:
-        edges.unpersist()
-    return labels
+            labels, _ = m.checkpoint(
+                labels.join(best, "id", "left")
+                .select("id", F.coalesce("new_label", "label")
+                        .alias("label")))
+        return m.keep(labels)
 
 
 def _local_kcore(pdf, k: int, max_iter: int):
@@ -1123,22 +1127,24 @@ def k_core(graph: GraphStore, k: int, *, edge_type: str | None = None,
                           T.StructField("degree", T.LongType())]))
         if local is not None:
             return local
-    edges = edges.persist()
-    alive, n_alive = checkpoint_counted(
-        graph.scan_vertices(columns=["id"]).select("id").dropDuplicates())
-    deg = None
-    converged = False
-    try:
+    def degrees(alive):
+        # (id, degree) over the edges with both ends alive
+        return (edges.join(alive.withColumnRenamed("id", "src"), "src",
+                           "left_semi")
+                .join(alive.withColumnRenamed("id", "dst"), "dst",
+                      "left_semi")
+                .groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
+                .withColumnRenamed("src", "id"))
+
+    with materialized() as m:
+        edges = m.persist(edges)
+        alive, n_alive = m.checkpoint(
+            graph.scan_vertices(columns=["id"]).select("id").dropDuplicates())
+        deg = None
+        converged = False
         for _ in range(max_iter):
-            live_edges = (edges
-                          .join(alive.withColumnRenamed("id", "src"), "src",
-                                "left_semi")
-                          .join(alive.withColumnRenamed("id", "dst"), "dst",
-                                "left_semi"))
-            deg = (live_edges.groupBy("src")
-                   .agg(F.count(F.lit(1)).alias("degree"))
-                   .withColumnRenamed("src", "id"))
-            survivors, n_next = checkpoint_counted(
+            deg = degrees(alive)
+            survivors, n_next = m.checkpoint(
                 deg.filter(F.col("degree") >= k).select("id"))
             alive = survivors
             if n_next == n_alive:
@@ -1154,19 +1160,10 @@ def k_core(graph: GraphStore, k: int, *, edge_type: str | None = None,
             # max_iter exhausted before the fixpoint: degrees were counted
             # against the pre-peel set, so recompute once against the final
             # alive set to keep the (id, degree) contract honest
-            live_edges = (edges
-                          .join(alive.withColumnRenamed("id", "src"), "src",
-                                "left_semi")
-                          .join(alive.withColumnRenamed("id", "dst"), "dst",
-                                "left_semi"))
-            deg = (live_edges.groupBy("src")
-                   .agg(F.count(F.lit(1)).alias("degree"))
-                   .withColumnRenamed("src", "id"))
-    finally:
-        edges.unpersist()
-    return (deg.join(alive, "id", "left_semi")
-            if deg is not None else
-            alive.withColumn("degree", F.lit(0)))
+            deg = degrees(alive)
+        return m.keep(deg.join(alive, "id", "left_semi")
+                      if deg is not None else
+                      alive.withColumn("degree", F.lit(0)))
 
 
 def _local_hits(cg: _CodedGraph,
@@ -1226,123 +1223,111 @@ def hits(graph: GraphStore, *, edge_type: str | None = None,
     if cg is not None:
         hub, auth = _local_hits(cg, max_iter)
         return _vertex_rows(graph, cg, hub=hub, auth=auth)
-    vertices, n_v = checkpoint_counted(
-        graph.scan_vertices(columns=["id"]).select("id").dropDuplicates())
-    # Partition count sized off the data (same ~1M-edge-rows-per-task rule
-    # as pagerank's edge frame, derived from |V| at avg degree ~10) rather
-    # than pinned to spark.sql.shuffle.partitions: each half-round's
-    # groupBy emits state hashed (id, nparts) and the next half-round
-    # joins it against the pre-hashed edge copy — co-location holds for
-    # ANY nparts as long as both sides agree, so the count should track
-    # volume (at sf0.1 the old conf-width layout ran ~12 sequential
-    # 32-partition stages of ~40k rows each, pure task overhead; at 100 TB
-    # the same formula lands at thousands of partitions, as it should).
-    nparts = max(4, min(int(graph.spark.conf.get(
-        "spark.sql.shuffle.partitions", "32")) * 4, n_v // 100_000 + 1))
-    # TWO persisted copies of the edge list, pre-hashed on each join key:
-    # the hub half-round joins on dst, the authority half-round on src —
-    # with one copy the other half-round reshuffles the FULL |E| edge list
-    # every iteration (3 |E|-sized exchanges per round); with both copies
-    # the join side is already co-located and only the |E| message groupBy
-    # plus the |V| state shuffle remain (2 per round). Same pre-partition
-    # trade pagerank makes; memory holds 2x edges, which on a cluster is
-    # storage-tier disk/memory, not driver.
-    ob_h, ob_a = Observation(), Observation()
+    with materialized() as m:
+        vertices, n_v = m.checkpoint(
+            graph.scan_vertices(columns=["id"]).select("id").dropDuplicates())
+        # Partition count sized off the data (same ~1M-edge-rows-per-task rule
+        # as pagerank's edge frame, derived from |V| at avg degree ~10) rather
+        # than pinned to spark.sql.shuffle.partitions: each half-round's
+        # groupBy emits state hashed (id, nparts) and the next half-round
+        # joins it against the pre-hashed edge copy — co-location holds for
+        # ANY nparts as long as both sides agree, so the count should track
+        # volume (at sf0.1 the old conf-width layout ran ~12 sequential
+        # 32-partition stages of ~40k rows each, pure task overhead; at 100 TB
+        # the same formula lands at thousands of partitions, as it should).
+        nparts = max(4, min(int(graph.spark.conf.get(
+            "spark.sql.shuffle.partitions", "32")) * 4, n_v // 100_000 + 1))
+        # TWO persisted copies of the edge list, pre-hashed on each join key:
+        # the hub half-round joins on dst, the authority half-round on src —
+        # with one copy the other half-round reshuffles the FULL |E| edge list
+        # every iteration (3 |E|-sized exchanges per round); with both copies
+        # the join side is already co-located and only the |E| message groupBy
+        # plus the |V| state shuffle remain (2 per round). Same pre-partition
+        # trade pagerank makes; memory holds 2x edges, which on a cluster is
+        # storage-tier disk/memory, not driver.
+        ob_h, ob_a = Observation(), Observation()
 
-    def _seed_hub(p):
-        # round 1's hub with auth_0 = 1.0 on every edge endpoint, vertex
-        # or not: the out-degree sum, the same double in every regime
-        return (p.groupBy("src").agg(F.sum(F.lit(1.0)).alias("score"))
-                .withColumnRenamed("src", "id"))
+        def _seed_hub(p):
+            # round 1's hub with auth_0 = 1.0 on every edge endpoint, vertex
+            # or not: the out-degree sum, the same double in every regime
+            return (p.groupBy("src").agg(F.sum(F.lit(1.0)).alias("score"))
+                    .withColumnRenamed("src", "id"))
 
-    if fits_driver(n_v):
-        # bounded-state regime (as in pagerank; measured same-window
-        # 7.46 -> 4.49 s at sf0.1, bit-identical output): the |V|-row
-        # score state is BROADCAST to each half-round's join, so the edge
-        # list is never co-partitioned at all — one checkpointed copy
-        # streams map-side through every half-round and the only
-        # exchange per half-round is the |V|-bounded message aggregate.
-        # Round 1's hub is seeded directly as the out-degree sum
-        # (``_seed_hub``), skipping one broadcast join. Past the bound
-        # the co-partitioned formulation below is the one that holds at
-        # 100 TB, where |V| dwarfs any broadcast budget.
-        pairs = (_edge_pairs(graph, edge_type).select("src", "dst")
-                 .localCheckpoint(eager=True))
+        bounded = fits_driver(n_v)
+        if bounded:
+            # bounded-state regime (as in pagerank; measured same-window
+            # 7.46 -> 4.49 s at sf0.1, bit-identical output): the |V|-row
+            # score state is BROADCAST to each half-round's join, so the edge
+            # list is never co-partitioned at all — one checkpointed copy
+            # streams map-side through every half-round and the only
+            # exchange per half-round is the |V|-bounded message aggregate.
+            # Round 1's hub is seeded directly as the out-degree sum
+            # (``_seed_hub``), skipping one broadcast join. Past the bound
+            # the co-partitioned formulation below is the one that holds at
+            # 100 TB, where |V| dwarfs any broadcast budget.
+            pairs, _ = m.checkpoint(
+                _edge_pairs(graph, edge_type).select("src", "dst"))
+            by_dst = by_src = pairs
+        else:
+            pairs = _edge_pairs(graph, edge_type)
+            by_dst = m.persist(pairs.repartition(nparts, F.col("dst")))
+            by_src = m.persist(pairs.repartition(nparts, F.col("src")))
+        _b = F.broadcast if bounded else (lambda df: df)
 
         def _hub_from(a):
-            return (pairs.join(F.broadcast(a), pairs["dst"] == a["id"])
+            return (by_dst.join(_b(a), by_dst["dst"] == a["id"])
                     .groupBy("src").agg(F.sum("score").alias("score"))
                     .withColumnRenamed("src", "id"))
 
         def _auth_from(h):
-            return (pairs.join(F.broadcast(h), pairs["src"] == h["id"])
+            return (by_src.join(_b(h), by_src["src"] == h["id"])
                     .groupBy("dst").agg(F.sum("score").alias("score"))
                     .withColumnRenamed("dst", "id"))
 
-        auth = None
-        for it in range(max_iter - 1):
-            # the loop's hub feeds exactly ONE consumer (this round's
-            # auth), so it stays lazy — its broadcast+aggregate runs
-            # inside the auth checkpoint's job and each full round is a
-            # single materialization (bit-identical, measured ~7% off
-            # the iteration chain at sf0.1; only the FINAL hub, read by
-            # two consumers, is checkpointed below)
-            hub = _seed_hub(pairs) if it == 0 else _hub_from(auth)
-            auth = _auth_from(hub).localCheckpoint(eager=True)
-        # final round (observations ride the checkpoints, as below)
-        hub = ((_seed_hub(pairs) if max_iter == 1 else _hub_from(auth))
-               .observe(ob_h, F.max("score").alias("m"))
-               .localCheckpoint(eager=True))
-        auth = (_auth_from(hub)
-                .observe(ob_a, F.max("score").alias("m"))
-                .localCheckpoint(eager=True))
-    else:
-        pairs = _edge_pairs(graph, edge_type)
-        e_by_dst = pairs.repartition(nparts, F.col("dst")).persist()
-        e_by_src = pairs.repartition(nparts, F.col("src")).persist()
-
-        def _hub_from(a):
-            return (e_by_dst.join(a, e_by_dst["dst"] == a["id"])
-                    .groupBy("src").agg(F.sum("score").alias("score"))
-                    .withColumnRenamed("src", "id"))
-
-        def _auth_from(h):
-            return (e_by_src.join(h, e_by_src["src"] == h["id"])
-                    .groupBy("dst").agg(F.sum("score").alias("score"))
-                    .withColumnRenamed("dst", "id"))
-
-        try:
+        if bounded:
+            auth = None
+            for it in range(max_iter - 1):
+                # the loop's hub feeds exactly ONE consumer (this round's
+                # auth), so it stays lazy — its broadcast+aggregate runs
+                # inside the auth checkpoint's job and each full round is a
+                # single materialization (bit-identical, measured ~7% off
+                # the iteration chain at sf0.1; only the FINAL hub, read by
+                # two consumers, is checkpointed below)
+                hub = _seed_hub(pairs) if it == 0 else _hub_from(auth)
+                auth, _ = m.checkpoint(_auth_from(hub))
+            # final round (observations ride the checkpoints, as below)
+            hub, _ = m.checkpoint(
+                (_seed_hub(pairs) if max_iter == 1 else _hub_from(auth))
+                .observe(ob_h, F.max("score").alias("m")))
+            auth, _ = m.checkpoint(
+                _auth_from(hub).observe(ob_a, F.max("score").alias("m")))
+        else:
             # the seed aggregates the src-hashed copy: no extra exchange
-            hub = _seed_hub(e_by_src)
+            hub = _seed_hub(by_src)
             for _ in range(max_iter - 1):
                 hub = _hub_from(_auth_from(hub))
             # final round: checkpoint hub FIRST, then derive auth from the
             # checkpointed hub — deriving both from the lazy chain would
             # execute the whole chain twice. The normalization constants
             # ride the two checkpoint materializations as observations
-            # (fire on eager localCheckpoint, same as pagerank's dangling
+            # (fire on the eager checkpoint, same as pagerank's dangling
             # probe): ZERO extra jobs instead of a separate 2x|V|-scan
             # collect.
-            hub = (hub
-                   .observe(ob_h, F.max("score").alias("m"))
-                   .localCheckpoint(eager=True))
-            auth = (_auth_from(hub)
-                    .observe(ob_a, F.max("score").alias("m"))
-                    .localCheckpoint(eager=True))
-        finally:
-            e_by_dst.unpersist()
-            e_by_src.unpersist()
-    # an edgeless graph yields empty hub/auth frames -> max over zero
-    # rows observes null; a max of 0.0 or null would divide by zero.
-    # Normalize by 1.0 then: every vertex gets the correct 0.0 score
-    # through the coalesce.
-    m_h = ob_h.get["m"] or 1.0
-    m_a = ob_a.get["m"] or 1.0
-    h = (vertices
-         .join(hub.withColumnRenamed("score", "h"), "id", "left")
-         .select("id", (F.coalesce(F.col("h"), F.lit(0.0))
-                        / F.lit(m_h)).alias("hub")))
-    return (h.join(auth.withColumnRenamed("score", "a"), "id", "left")
+            hub, _ = m.checkpoint(hub.observe(ob_h, F.max("score").alias("m")))
+            auth, _ = m.checkpoint(
+                _auth_from(hub).observe(ob_a, F.max("score").alias("m")))
+        # an edgeless graph yields empty hub/auth frames -> max over zero
+        # rows observes null; a max of 0.0 or null would divide by zero.
+        # Normalize by 1.0 then: every vertex gets the correct 0.0 score
+        # through the coalesce.
+        m_h = ob_h.get["m"] or 1.0
+        m_a = ob_a.get["m"] or 1.0
+        h = (vertices
+             .join(hub.withColumnRenamed("score", "h"), "id", "left")
+             .select("id", (F.coalesce(F.col("h"), F.lit(0.0))
+                            / F.lit(m_h)).alias("hub")))
+        return m.keep(
+            h.join(auth.withColumnRenamed("score", "a"), "id", "left")
             .select("id", "hub",
                     (F.coalesce(F.col("a"), F.lit(0.0))
                      / F.lit(m_a)).alias("auth")))
@@ -1372,8 +1357,8 @@ def common_neighbor_similarity(graph: GraphStore, *,
         fan = e.groupBy("src").agg(F.count(F.lit(1)).alias("fan"))
         e = (e.join(fan.filter(F.col("fan") <= degree_cap), "src",
                     "left_semi"))
-    e = e.persist()
-    try:
+    with materialized() as m:
+        e = m.persist(e)
         a, b = e.alias("a"), e.alias("b")
         common = (a.join(b, (F.col("a.src") == F.col("b.src"))
                          & (F.col("a.dst") < F.col("b.dst")))
@@ -1395,11 +1380,8 @@ def common_neighbor_similarity(graph: GraphStore, *,
                              F.col("id_b").asc()).limit(k)
         w = Window.orderBy(F.col("jaccard").desc(), F.col("id_a").asc(),
                            F.col("id_b").asc())
-        out = (top.withColumn("rank", F.row_number().over(w))
-               .localCheckpoint(eager=True))
-        return out
-    finally:
-        e.unpersist()
+        out, _ = m.checkpoint(top.withColumn("rank", F.row_number().over(w)))
+        return m.keep(out)
 
 
 def walk_census(graph: GraphStore, *, edge_type: str | None = None,
@@ -1511,15 +1493,14 @@ def _landmark_levels(graph: GraphStore, landmarks: list[str], *,
         scale=2 if undirected else 1)
     if local is not None:
         return local
-    edges = edges.persist()
-    visited = (local_frame(spark, [(l, l, 0) for l in landmarks],
-                           T.StructType.fromDDL(
-                               "lm string, id string, dist long"))
-               .localCheckpoint(eager=True))
-    frontier = visited
-    try:
+    with materialized() as m:
+        edges = m.persist(edges)
+        visited, _ = m.checkpoint(local_frame(
+            spark, [(l, l, 0) for l in landmarks],
+            T.StructType.fromDDL("lm string, id string, dist long")))
+        frontier = visited
         for depth in range(1, max_depth + 1):
-            nxt, n_nxt = checkpoint_counted(
+            nxt, n_nxt = m.checkpoint(
                 frontier.join(edges, frontier["id"] == edges["src"])
                 .select("lm", F.col("dst").alias("id"))
                 .dropDuplicates()
@@ -1528,12 +1509,10 @@ def _landmark_levels(graph: GraphStore, landmarks: list[str], *,
                 .withColumn("dist", F.lit(depth).cast("long")))
             if n_nxt == 0:
                 break
-            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+            visited, _ = m.checkpoint(visited.unionByName(nxt))
             frontier = nxt
-    finally:
-        edges.unpersist()
-    return (visited.groupBy("lm", "dist")
-            .agg(F.count(F.lit(1)).alias("n_vertices")))
+        return m.keep(visited.groupBy("lm", "dist")
+                      .agg(F.count(F.lit(1)).alias("n_vertices")))
 
 
 def landmark_closeness(graph: GraphStore, landmarks: list[str], *,
@@ -1820,17 +1799,16 @@ def landmark_stress(graph: GraphStore, landmarks: list[str], *,
         scale=2 if undirected else 1)
     if local is not None:
         return local
-    edges = edges.persist()
-    level0 = (local_frame(spark, [(l, l, 1) for l in landmarks],
-                          T.StructType.fromDDL(
-                              "lm string, id string, sigma long"))
-              .localCheckpoint(eager=True))
-    levels = [level0]
-    visited = level0.select("lm", "id")
-    try:
+    with materialized() as m:
+        edges = m.persist(edges)
+        level0, _ = m.checkpoint(local_frame(
+            spark, [(l, l, 1) for l in landmarks],
+            T.StructType.fromDDL("lm string, id string, sigma long")))
+        levels = [level0]
+        visited = level0.select("lm", "id")
         for depth in range(1, max_depth + 1):
             prev = levels[-1]
-            nxt, n_nxt = checkpoint_counted(
+            nxt, n_nxt = m.checkpoint(
                 prev.join(edges, prev["id"] == edges["src"])
                 .groupBy("lm", F.col("dst").alias("id"))
                 .agg(F.sum("sigma").alias("sigma"))
@@ -1838,8 +1816,8 @@ def landmark_stress(graph: GraphStore, landmarks: list[str], *,
             if n_nxt == 0:
                 break
             levels.append(nxt)
-            visited = (visited.unionByName(nxt.select("lm", "id"))
-                       .localCheckpoint(eager=True))
+            visited, _ = m.checkpoint(
+                visited.unionByName(nxt.select("lm", "id")))
         # backward: rho over the BFS DAG, deepest level first
         rho_next = levels[-1].select(
             "lm", "id", F.lit(1).cast("long").alias("rho"))
@@ -1857,13 +1835,12 @@ def landmark_stress(graph: GraphStore, landmarks: list[str], *,
                 & (F.col("succ") == F.col("succ2")))
                 .groupBy("lm", "id")
                 .agg(F.sum("succ_rho").alias("recv")))
-            rho_cur = (cur.select("lm", "id")
-                       .join(recv, ["lm", "id"], "left")
-                       .select("lm", "id",
-                               (F.lit(1) + F.coalesce(F.col("recv"),
-                                                      F.lit(0)))
-                               .cast("long").alias("rho"))
-                       .localCheckpoint(eager=True))
+            rho_cur, _ = m.checkpoint(
+                cur.select("lm", "id")
+                .join(recv, ["lm", "id"], "left")
+                .select("lm", "id",
+                        (F.lit(1) + F.coalesce(F.col("recv"), F.lit(0)))
+                        .cast("long").alias("rho")))
             out_levels.append(cur.join(rho_cur, ["lm", "id"])
                               .withColumn("dist", F.lit(d)))
             rho_next = rho_cur
@@ -1872,17 +1849,16 @@ def landmark_stress(graph: GraphStore, landmarks: list[str], *,
             allv = allv.unionByName(lv)
         stress = F.when(F.col("dist") == 0, F.lit(0).cast("long")) \
             .otherwise(F.col("sigma") * (F.col("rho") - 1))
-        return (allv.withColumn("stress", stress)
-                .groupBy("lm", "dist")
-                .agg(F.count(F.lit(1)).alias("n_vertices"),
-                     F.sum("sigma").cast("long").alias("sum_sigma"),
-                     F.sum("stress").cast("long").alias("sum_stress"),
-                     F.max("stress").cast("long").alias("max_stress"))
-                .select("lm", F.col("dist").cast("long").alias("dist"),
-                        F.col("n_vertices").cast("long").alias("n_vertices"),
-                        "sum_sigma", "sum_stress", "max_stress"))
-    finally:
-        edges.unpersist()
+        return m.keep(
+            allv.withColumn("stress", stress)
+            .groupBy("lm", "dist")
+            .agg(F.count(F.lit(1)).alias("n_vertices"),
+                 F.sum("sigma").cast("long").alias("sum_sigma"),
+                 F.sum("stress").cast("long").alias("sum_stress"),
+                 F.max("stress").cast("long").alias("max_stress"))
+            .select("lm", F.col("dist").cast("long").alias("dist"),
+                    F.col("n_vertices").cast("long").alias("n_vertices"),
+                    "sum_sigma", "sum_stress", "max_stress"))
 
 
 # -- strongly connected components / bow-tie ----------------------------------
@@ -2034,9 +2010,9 @@ def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
     lab_df = finish_locally(e0, tarjan, lab_schema)
     if lab_df is not None:
         return lab_df
-    e0 = e0.persist()
-    try:
-        active_n, active_e = nodes.transform(checkpoint_rebased), e0
+    with materialized() as m:
+        active_e = m.persist(e0)
+        active_n, _ = m.checkpoint(nodes, rebase=True)
         result = nodes.limit(0).withColumn("scc_id", F.col("id"))
         for _ in range(max_rounds):
             seed = active_n.withColumn("lab", F.col("id"))
@@ -2046,35 +2022,32 @@ def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
                                 F.col("src").alias("dst")),
                 seed, max_iter=max_iter).withColumnRenamed("lab", "blab"))
             lab = f.join(b, "id")
-            settled = (lab.filter(F.col("lab") == F.col("blab"))
-                       .select("id", F.col("lab").alias("scc_id"))
-                       .transform(checkpoint_rebased))
-            result = (result.unionByName(settled)
-                      .transform(checkpoint_rebased))
-            active_n, n_active = checkpoint_counted(
+            settled, _ = m.checkpoint(
+                lab.filter(F.col("lab") == F.col("blab"))
+                .select("id", F.col("lab").alias("scc_id")), rebase=True)
+            result, _ = m.checkpoint(result.unionByName(settled),
+                                     rebase=True)
+            active_n, n_active = m.checkpoint(
                 lab.filter(F.col("lab") != F.col("blab")).select("id"),
                 rebase=True)
             if n_active == 0:
-                return result
-            keep_src = active_n.withColumnRenamed("id", "src")
-            keep_dst = active_n.withColumnRenamed("id", "dst")
-            active_e, n_active_e = checkpoint_counted(
-                active_e.join(keep_src, "src").join(keep_dst, "dst"),
+                return m.keep(result)
+            active_e, n_active_e = m.checkpoint(
+                active_e.join(active_n.withColumnRenamed("id", "src"), "src")
+                .join(active_n.withColumnRenamed("id", "dst"), "dst"),
                 rebase=True)
             if fits_driver(n_active_e):
                 # exact Tarjan labels; every active node absent from the
                 # (deduped, self-loop-free) active edge list is its own
                 # singleton component
                 lab_df = finish_locally(active_e, tarjan, lab_schema)
-                return result.unionByName(
+                return m.keep(result.unionByName(
                     active_n.join(F.broadcast(lab_df), "id", "left")
                     .select("id", F.coalesce(F.col("scc_id"), F.col("id"))
-                            .alias("scc_id")))
-        raise RuntimeError(
-            f"strongly_connected_components: {max_rounds} peel rounds "
-            "exhausted before the condensation chain bottomed out")
-    finally:
-        e0.unpersist()
+                            .alias("scc_id"))))
+    raise RuntimeError(
+        f"strongly_connected_components: {max_rounds} peel rounds "
+        "exhausted before the condensation chain bottomed out")
 
 
 def bowtie_decomposition(edges: DataFrame, scc: DataFrame, *,
@@ -2128,42 +2101,44 @@ def bowtie_decomposition(edges: DataFrame, scc: DataFrame, *,
                 + [(v, "out") for v, l in bwd_lab.items()
                    if l == sent and v != sent])
 
-    sides = finish_locally(
-        ce, _sides,
-        T.StructType([T.StructField("id", scc.schema["id"].dataType),
-                      T.StructField("side", T.StringType())]))
-    if sides is not None:
-        reach_in = (sides.filter(F.col("side") == "in").select("id")
-                    .withColumn("in_side", F.lit(True)))
-        reach_out = (sides.filter(F.col("side") == "out").select("id")
-                     .withColumn("out_side", F.lit(True)))
-    else:
-        # materialize the collapsed edge list ONCE — the engine re-reads
-        # its edge side every iteration, and without this the whole
-        # upstream edge pipeline (joins, aggregates) would re-run per
-        # propagation round
-        ce = checkpoint_rebased(ce)
-        cnodes = (ce.select(F.col("src").alias("id"))
-                  .unionByName(ce.select(F.col("dst").alias("id")))
-                  .dropDuplicates().withColumn("lab", F.col("id"))
-                  .transform(checkpoint_rebased))
-        # forward: reaches the core? backward: reached from it?
-        fwd = min_label_fixpoint(ce, cnodes, max_iter=max_iter)
-        bwd = min_label_fixpoint(
-            ce.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            cnodes, max_iter=max_iter)
-        reach_in = fwd.filter((F.col("lab") == sent) & (F.col("id") != sent)) \
-            .select("id").withColumn("in_side", F.lit(True))
-        reach_out = bwd.filter((F.col("lab") == sent) & (F.col("id") != sent)) \
-            .select("id").withColumn("out_side", F.lit(True))
-    return (scc.select("id")
-            .join(core.select("id", "is_core"), "id", "left")
-            .join(reach_in, "id", "left")
-            .join(reach_out, "id", "left")
-            .select("id", F.when(F.col("is_core"), "core")
-                    .when(F.col("in_side"), "in")
-                    .when(F.col("out_side"), "out")
-                    .otherwise("other").alias("klass")))
+    with materialized() as m:
+        sides = finish_locally(
+            ce, _sides,
+            T.StructType([T.StructField("id", scc.schema["id"].dataType),
+                          T.StructField("side", T.StringType())]))
+        if sides is not None:
+            reach_in = (sides.filter(F.col("side") == "in").select("id")
+                        .withColumn("in_side", F.lit(True)))
+            reach_out = (sides.filter(F.col("side") == "out").select("id")
+                         .withColumn("out_side", F.lit(True)))
+        else:
+            # materialize the collapsed edge list ONCE — the engine re-reads
+            # its edge side every iteration, and without this the whole
+            # upstream edge pipeline (joins, aggregates) would re-run per
+            # propagation round
+            ce, _ = m.checkpoint(ce, rebase=True)
+            cnodes, _ = m.checkpoint(
+                ce.select(F.col("src").alias("id"))
+                .unionByName(ce.select(F.col("dst").alias("id")))
+                .dropDuplicates().withColumn("lab", F.col("id")),
+                rebase=True)
+            # forward: reaches the core? backward: reached from it?
+            fwd = min_label_fixpoint(ce, cnodes, max_iter=max_iter)
+            bwd = min_label_fixpoint(
+                ce.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+                cnodes, max_iter=max_iter)
+            reach_in = fwd.filter((F.col("lab") == sent) & (F.col("id") != sent)) \
+                .select("id").withColumn("in_side", F.lit(True))
+            reach_out = bwd.filter((F.col("lab") == sent) & (F.col("id") != sent)) \
+                .select("id").withColumn("out_side", F.lit(True))
+        return m.keep(scc.select("id")
+                      .join(core.select("id", "is_core"), "id", "left")
+                      .join(reach_in, "id", "left")
+                      .join(reach_out, "id", "left")
+                      .select("id", F.when(F.col("is_core"), "core")
+                              .when(F.col("in_side"), "in")
+                              .when(F.col("out_side"), "out")
+                              .otherwise("other").alias("klass")))
 
 
 def triad_mask_table() -> dict[int, str]:
@@ -2417,14 +2392,15 @@ def temporal_earliest_arrival(edges: DataFrame, seeds: DataFrame, *,
             T.StructField("arrival", T.LongType())]))
     if local is not None:
         return local
-    e = e.persist()
-    total = (seeds.select(F.col(seed_col).alias("seed"))
-             .select("seed", F.col("seed").alias("node"),
-                     F.lit(None).cast("long").alias("arrival"))
-             .transform(checkpoint_rebased))
-    frontier = total
-    improving = True
-    try:
+    with materialized() as m:
+        e = m.persist(e)
+        total, _ = m.checkpoint(
+            seeds.select(F.col(seed_col).alias("seed"))
+            .select("seed", F.col("seed").alias("node"),
+                    F.lit(None).cast("long").alias("arrival")),
+            rebase=True)
+        frontier = total
+        improving = True
         for _ in range(max_hops if max_hops is not None else max_iter):
             relaxed = (frontier.join(
                 e, frontier["node"] == e["u"])
@@ -2434,7 +2410,7 @@ def temporal_earliest_arrival(edges: DataFrame, seeds: DataFrame, *,
                 .agg(F.min("t").alias("arr2")))
             old = total.select("seed", F.col("node").alias("node2"),
                                F.col("arrival").alias("old_arr"))
-            imp, n_imp = checkpoint_counted(
+            imp, n_imp = m.checkpoint(
                 relaxed.join(old, ["seed", "node2"], "left")
                 .filter(F.col("old_arr").isNull()
                         & F.col("arr2").isNotNull()
@@ -2447,13 +2423,11 @@ def temporal_earliest_arrival(edges: DataFrame, seeds: DataFrame, *,
             keep = total.join(imp.select("seed",
                                          F.col("node").alias("node")),
                               ["seed", "node"], "left_anti")
-            total = keep.unionByName(imp).transform(checkpoint_rebased)
+            total, _ = m.checkpoint(keep.unionByName(imp), rebase=True)
             frontier = imp
         if max_hops is None and improving:
             raise RuntimeError(
                 f"temporal_earliest_arrival did not converge in "
                 f"{max_iter} rounds")
-        return (total.filter(F.col("arrival").isNotNull())
-                .select("seed", "node", "arrival"))
-    finally:
-        e.unpersist()
+        return m.keep(total.filter(F.col("arrival").isNotNull())
+                      .select("seed", "node", "arrival"))

@@ -23,6 +23,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
+from vivace_graph_v3_spark.util import materialized
+
 NANOS_PER_DAY = 86_400_000_000_000
 
 
@@ -930,25 +932,26 @@ def markov_steady_state(events: DataFrame, *, user_col: str = "user_id",
              .filter(F.col("from_s").isNotNull())
              .groupBy("from_s", "to_s").agg(F.count(F.lit(1)).alias("n")))
     na = pairs.groupBy("from_s").agg(F.sum("n").alias("na"))
-    trans = (pairs.join(na, "from_s")
-             .select("from_s", "to_s",
-                     F.expr("(n div na) * 1000000L"
-                            " + ((n % na) * 1000000L) div na").alias("p"))
-             .localCheckpoint(eager=True))
-    states = (events.select(F.col(type_col).alias("state")).dropDuplicates()
-              .localCheckpoint(eager=True))
-    n_states = states.count()
-    pi = states.select("state",
-                       F.lit(1000000000 // n_states).cast("long").alias("v"))
-    from vivace_graph_v3_spark.util import checkpoint_rebased
-    for _ in range(iters):
-        stepped = (trans.join(pi.select(F.col("state").alias("from_s"),
-                                        F.col("v").alias("pv")), "from_s")
-                   .groupBy(F.col("to_s").alias("state"))
-                   .agg(F.sum(F.expr("(pv * p) div 1000000L")).alias("v")))
-        pi = checkpoint_rebased(
-            states.join(stepped, "state", "left")
-            .select("state", F.coalesce("v", F.lit(0)).cast("long").alias("v")))
-    return (pi.select(F.col("state").alias("event_type"),
-                      F.expr("v div 1000L").alias("steady_ppm"))
-            .orderBy("event_type"))
+    with materialized() as m:
+        trans, _ = m.checkpoint(
+            pairs.join(na, "from_s")
+            .select("from_s", "to_s",
+                    F.expr("(n div na) * 1000000L"
+                           " + ((n % na) * 1000000L) div na").alias("p")))
+        states, n_states = m.checkpoint(
+            events.select(F.col(type_col).alias("state")).dropDuplicates())
+        pi = states.select("state",
+                           F.lit(1000000000 // n_states).cast("long").alias("v"))
+        for _ in range(iters):
+            stepped = (trans.join(pi.select(F.col("state").alias("from_s"),
+                                            F.col("v").alias("pv")), "from_s")
+                       .groupBy(F.col("to_s").alias("state"))
+                       .agg(F.sum(F.expr("(pv * p) div 1000000L")).alias("v")))
+            pi, _ = m.checkpoint(
+                states.join(stepped, "state", "left")
+                .select("state",
+                        F.coalesce("v", F.lit(0)).cast("long").alias("v")),
+                rebase=True)
+        return m.keep(pi.select(F.col("state").alias("event_type"),
+                                F.expr("v div 1000L").alias("steady_ppm"))
+                      .orderBy("event_type"))

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (DateType, NumericType, StringType,
                                TimestampNTZType, TimestampType)
 
+from vivace_graph_v3_spark.util import materialized
+
 
 def profile_table(df: DataFrame, columns: list[str] | None = None, *,
                   exact_distinct: bool = True) -> DataFrame:
@@ -746,72 +748,72 @@ def v_optimal_histogram(df: DataFrame, col: str, buckets: int = 6, *,
               F.sum((F.col("q") * F.col("q")).cast("decimal(38,0)"))
               .alias("sq"),
               F.min("q").alias("lo"), F.max("q").alias("hi")))
-    w = Window.orderBy("cell").rowsBetween(Window.unboundedPreceding, 0)
-    grid = (g.select(
-        F.row_number().over(Window.orderBy("cell")).alias("i"),
-        "cell", "c", "s", "sq", "lo", "hi")
-        .withColumn("pn", F.sum("c").over(Window.orderBy("i")
-                                          .rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("ps", F.sum("s").over(Window.orderBy("i")
-                                          .rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("pq", F.sum("sq").over(Window.orderBy("i")
-                                           .rowsBetween(Window.unboundedPreceding, 0)))
-        .coalesce(1).localCheckpoint(eager=True))
-    # the empty-prefix row is built JVM-side (range(1) + literals): a
-    # Python-backed local relation under the non-equi join below can
-    # stall the broadcast thread until spark.sql.broadcastTimeout
-    zero = grid.sparkSession.range(1).select(
-        F.lit(0).cast("int").alias("i"), F.lit(0).cast("long").alias("pn"),
-        F.lit(0).cast("long").alias("ps"),
-        F.lit(0).cast("decimal(38,0)").alias("pq"))
-    pref = grid.select("i", "pn", "ps", "pq").unionByName(zero)
-    # cost(j, i) over cells j+1..i, mirrored double expression
-    cost = ("(cast(pq_i - pq_j as double)"
-            " - (cast(ps_i - ps_j as double) * cast(ps_i - ps_j as double))"
-            " / cast(pn_i - pn_j as double))")
-    pj = pref.select(F.col("i").alias("j"), F.col("pn").alias("pn_j"),
-                     F.col("ps").alias("ps_j"), F.col("pq").alias("pq_j"))
-    pi = pref.filter(F.col("i") > 0).select(
-        F.col("i"), F.col("pn").alias("pn_i"), F.col("ps").alias("ps_i"),
-        F.col("pq").alias("pq_i"))
-    pairs = (pj.join(pi, F.col("j") < F.col("i"))
-             .filter(F.expr("pn_i > pn_j"))  # only splits with rows
-             .select("j", "i", F.expr(cost).alias("cost"))
-             .coalesce(1).localCheckpoint(eager=True))
-    dp = (pairs.filter(F.col("j") == 0)
-          .select("i", F.col("cost").alias("dp"),
-                  F.lit(0).alias("arg"))
-          .coalesce(1).localCheckpoint(eager=True))
-    levels = [dp]
-    for _b in range(2, buckets + 1):
-        prev = levels[-1].select(F.col("i").alias("j"),
-                                 F.col("dp").alias("dp_prev"))
-        nxt = (pairs.join(F.broadcast(prev), "j")
-               .groupBy("i")
-               .agg(F.min(F.struct((F.col("dp_prev") + F.col("cost"))
-                                   .alias("dp"), F.col("j").alias("arg")))
-                    .alias("m"))
-               .select("i", F.col("m.dp").alias("dp"),
-                       F.col("m.arg").alias("arg"))
-               .coalesce(1).localCheckpoint(eager=True))
-        levels.append(nxt)
-    g_count = grid.count()
-    # backtrack: walk argmins from (buckets, G) down — ``buckets`` tiny
-    # driver-side lookups over G-row frames (grid-bounded, not corpus)
-    bounds = [g_count]
-    i_cur = g_count
-    for b in range(buckets, 1, -1):
-        row = levels[b - 1].filter(F.col("i") == i_cur).collect()
-        if not row:  # fewer populated cells than buckets
-            break
-        i_cur = row[0]["arg"]
-        bounds.append(i_cur)
-    bounds = sorted(set(bounds) | {0})
-    spark = df.sparkSession
-    bdf = F.broadcast(spark.createDataFrame(
-        [(k, bounds[k], bounds[k + 1]) for k in range(len(bounds) - 1)],
-        "bucket int, lo_i int, hi_i int"))
-    return (grid.join(bdf, (F.col("i") > F.col("lo_i"))
+    with materialized() as m:
+        cum = Window.orderBy("i").rowsBetween(Window.unboundedPreceding, 0)
+        grid, g_count = m.checkpoint(
+            g.select(F.row_number().over(Window.orderBy("cell")).alias("i"),
+                     "cell", "c", "s", "sq", "lo", "hi")
+            .withColumn("pn", F.sum("c").over(cum))
+            .withColumn("ps", F.sum("s").over(cum))
+            .withColumn("pq", F.sum("sq").over(cum))
+            .coalesce(1))
+        # the empty-prefix row is built JVM-side (range(1) + literals): a
+        # Python-backed local relation under the non-equi join below can
+        # stall the broadcast thread until spark.sql.broadcastTimeout
+        zero = grid.sparkSession.range(1).select(
+            F.lit(0).cast("int").alias("i"), F.lit(0).cast("long").alias("pn"),
+            F.lit(0).cast("long").alias("ps"),
+            F.lit(0).cast("decimal(38,0)").alias("pq"))
+        pref = grid.select("i", "pn", "ps", "pq").unionByName(zero)
+        # cost(j, i) over cells j+1..i, mirrored double expression
+        cost = ("(cast(pq_i - pq_j as double)"
+                " - (cast(ps_i - ps_j as double) * cast(ps_i - ps_j as double))"
+                " / cast(pn_i - pn_j as double))")
+        pj = pref.select(F.col("i").alias("j"), F.col("pn").alias("pn_j"),
+                         F.col("ps").alias("ps_j"), F.col("pq").alias("pq_j"))
+        pi = pref.filter(F.col("i") > 0).select(
+            F.col("i"), F.col("pn").alias("pn_i"), F.col("ps").alias("ps_i"),
+            F.col("pq").alias("pq_i"))
+        pairs, _ = m.checkpoint(
+            pj.join(pi, F.col("j") < F.col("i"))
+            .filter(F.expr("pn_i > pn_j"))  # only splits with rows
+            .select("j", "i", F.expr(cost).alias("cost"))
+            .coalesce(1))
+        dp, _ = m.checkpoint(
+            pairs.filter(F.col("j") == 0)
+            .select("i", F.col("cost").alias("dp"), F.lit(0).alias("arg"))
+            .coalesce(1))
+        levels = [dp]
+        for _b in range(2, buckets + 1):
+            prev = levels[-1].select(F.col("i").alias("j"),
+                                     F.col("dp").alias("dp_prev"))
+            nxt, _ = m.checkpoint(
+                pairs.join(F.broadcast(prev), "j")
+                .groupBy("i")
+                .agg(F.min(F.struct((F.col("dp_prev") + F.col("cost"))
+                                    .alias("dp"), F.col("j").alias("arg")))
+                     .alias("m"))
+                .select("i", F.col("m.dp").alias("dp"),
+                        F.col("m.arg").alias("arg"))
+                .coalesce(1))
+            levels.append(nxt)
+        # backtrack: walk argmins from (buckets, G) down — ``buckets`` tiny
+        # driver-side lookups over G-row frames (grid-bounded, not corpus)
+        bounds = [g_count]
+        i_cur = g_count
+        for b in range(buckets, 1, -1):
+            row = levels[b - 1].filter(F.col("i") == i_cur).collect()
+            if not row:  # fewer populated cells than buckets
+                break
+            i_cur = row[0]["arg"]
+            bounds.append(i_cur)
+        bounds = sorted(set(bounds) | {0})
+        spark = df.sparkSession
+        bdf = F.broadcast(spark.createDataFrame(
+            [(k, bounds[k], bounds[k + 1]) for k in range(len(bounds) - 1)],
+            "bucket int, lo_i int, hi_i int"))
+        return m.keep(
+            grid.join(bdf, (F.col("i") > F.col("lo_i"))
                       & (F.col("i") <= F.col("hi_i")))
             .groupBy("bucket")
             .agg(F.min("cell").cast("long").alias("lo_cell"),

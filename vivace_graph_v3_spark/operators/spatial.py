@@ -31,7 +31,7 @@ from vivace_graph_v3_spark.functions.geohash import (
     covering_for_radius, geohash_covering, _pick_precision)
 from vivace_graph_v3_spark.functions.geometry import (
     haversine_m, point_in_polygon_udf, polygon_bbox)
-from vivace_graph_v3_spark.util import filter_keys
+from vivace_graph_v3_spark.util import filter_keys, materialized
 
 DEFAULT_PRECISION = 7  # ~150 m cells; the reference's spatial opt-in default
 
@@ -312,38 +312,38 @@ def grid_dbscan(df: DataFrame, *, eps: float, min_pts: int,
     dist2 = dx * dx + dy * dy
     # position pairs within eps, INCLUDING self (own multiplicity counts
     # toward |N incl self|); bounded by occupied positions x local density
-    pnbr = (probe.join(b, ["cx", "cy"])
-            .filter(dist2 <= eps2)
-            .select("pk", "pkb", "bmult")
-            .localCheckpoint(eager=True))
-    deg = pnbr.groupBy("pk").agg(F.sum("bmult").alias("n_in"))
-    core_pos = deg.filter(F.col("n_in") >= min_pts).select("pk")
-    core_edges = (pnbr.join(core_pos, "pk")
-                  .join(core_pos.withColumnRenamed("pk", "pkb"), "pkb")
-                  .select(F.col("pk").alias("id_a"),
-                          F.col("pkb").alias("id_b")))
-    plab = dedup_clusters(core_edges)
-    # cluster label = min POINT id over the cluster's core positions
-    # (the label a point-level union-find would produce)
-    pmin = pos.select("pk", "min_id")
-    clab = (plab.join(pmin, plab["id"] == pmin["pk"])
-            .groupBy("cluster").agg(F.min("min_id").alias("lbl")))
-    core_lab = (core_pos.join(plab, core_pos["pk"] == plab["id"], "left")
-                .join(clab, "cluster", "left")
-                .join(pmin, "pk")
-                .select(core_pos["pk"].alias("pk"),
-                        F.coalesce("lbl", F.col("min_id"))
-                        .alias("cluster")))
-    border = (pnbr.join(core_lab.withColumnRenamed("pk", "pkb")
-                        .withColumnRenamed("cluster", "bc"), "pkb")
-              .join(core_pos, "pk", "left_anti")
-              .groupBy("pk").agg(F.min("bc").alias("cluster")))
-    poslab = (core_lab.withColumn("role", F.lit("core"))
-              .unionByName(border.withColumn("role", F.lit("border"))))
-    out = (pts.withColumn("pk", F.struct("x", "y"))
-           .join(poslab, "pk", "left")
-           .select("id",
-                   F.col("cluster").cast(dict(pts.dtypes)["id"])
-                   .alias("cluster"),
-                   F.coalesce("role", F.lit("noise")).alias("role")))
-    return out
+    with materialized() as m:
+        pnbr, _ = m.checkpoint(probe.join(b, ["cx", "cy"])
+                               .filter(dist2 <= eps2)
+                               .select("pk", "pkb", "bmult"))
+        deg = pnbr.groupBy("pk").agg(F.sum("bmult").alias("n_in"))
+        core_pos = deg.filter(F.col("n_in") >= min_pts).select("pk")
+        core_edges = (pnbr.join(core_pos, "pk")
+                      .join(core_pos.withColumnRenamed("pk", "pkb"), "pkb")
+                      .select(F.col("pk").alias("id_a"),
+                              F.col("pkb").alias("id_b")))
+        plab = dedup_clusters(core_edges)
+        # cluster label = min POINT id over the cluster's core positions
+        # (the label a point-level union-find would produce)
+        pmin = pos.select("pk", "min_id")
+        clab = (plab.join(pmin, plab["id"] == pmin["pk"])
+                .groupBy("cluster").agg(F.min("min_id").alias("lbl")))
+        core_lab = (core_pos.join(plab, core_pos["pk"] == plab["id"], "left")
+                    .join(clab, "cluster", "left")
+                    .join(pmin, "pk")
+                    .select(core_pos["pk"].alias("pk"),
+                            F.coalesce("lbl", F.col("min_id"))
+                            .alias("cluster")))
+        border = (pnbr.join(core_lab.withColumnRenamed("pk", "pkb")
+                            .withColumnRenamed("cluster", "bc"), "pkb")
+                  .join(core_pos, "pk", "left_anti")
+                  .groupBy("pk").agg(F.min("bc").alias("cluster")))
+        poslab = (core_lab.withColumn("role", F.lit("core"))
+                  .unionByName(border.withColumn("role", F.lit("border"))))
+        out = (pts.withColumn("pk", F.struct("x", "y"))
+               .join(poslab, "pk", "left")
+               .select("id",
+                       F.col("cluster").cast(dict(pts.dtypes)["id"])
+                       .alias("cluster"),
+                       F.coalesce("role", F.lit("noise")).alias("role")))
+        return m.keep(out)

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from vivace_graph_v3_spark.util import materialized
+
 __all__ = [
     "kaplan_meier",
     "anova_oneway",
@@ -457,26 +459,28 @@ def ipf_raking(df: DataFrame, row_col: str, col_col: str, *,
     tot = grid.agg(F.sum("n").alias("NT"),
                    F.countDistinct("r").alias("KR"),
                    F.countDistinct("c").alias("KC"))
-    g = grid.withColumn("w", F.col("n").cast("double"))
-    for _ in range(iterations):
-        for dim, k in (("r", "KR"), ("c", "KC")):
-            sums = (g.groupBy(dim)
-                    .agg(F.sum(F.col("w").cast("decimal(38,12)"))
-                         .alias("S")))
-            g = (g.join(F.broadcast(sums), dim)
-                 .crossJoin(F.broadcast(tot))
-                 .withColumn(
-                     "w",
-                     F.round(F.col("w")
-                             * ((F.col("NT").cast("double")
-                                 / F.col(k).cast("double"))
-                                / F.col("S").cast("double")), 6))
-                 .select("r", "c", "n", "w"))
-        # each step references g twice (marginal sums + join), doubling
-        # the plan; checkpoint per round like every iterative operator
-        g = g.localCheckpoint(eager=True)
-    return g.select(F.col("r").alias(row_col), F.col("c").alias(col_col),
-                    "n", F.col("w").alias("weight"))
+    with materialized() as m:
+        g = grid.withColumn("w", F.col("n").cast("double"))
+        for _ in range(iterations):
+            for dim, k in (("r", "KR"), ("c", "KC")):
+                sums = (g.groupBy(dim)
+                        .agg(F.sum(F.col("w").cast("decimal(38,12)"))
+                             .alias("S")))
+                g = (g.join(F.broadcast(sums), dim)
+                     .crossJoin(F.broadcast(tot))
+                     .withColumn(
+                         "w",
+                         F.round(F.col("w")
+                                 * ((F.col("NT").cast("double")
+                                     / F.col(k).cast("double"))
+                                    / F.col("S").cast("double")), 6))
+                     .select("r", "c", "n", "w"))
+            # each step references g twice (marginal sums + join), doubling
+            # the plan; checkpoint per round like every iterative operator
+            g, _ = m.checkpoint(g)
+        return m.keep(g.select(F.col("r").alias(row_col),
+                               F.col("c").alias(col_col),
+                               "n", F.col("w").alias("weight")))
 
 
 def mantel_haenszel_or(df: DataFrame, *, stratum_col: str,

@@ -16,8 +16,8 @@ Past the bound (a round's hop rows or the visited set), and for
 Spark — each round joins the frontier against the (pre-filtered) edge
 relation, anti-joins the visited set, and unions into the result. This is the
 standard distributed BFS (Pregel-style); depth is bounded, each frontier is
-materialized once with an eager localCheckpoint, which also truncates lineage
-so 20-deep traversals don't build 20-deep plans.
+materialized once with an eager checkpoint (``util.materialized``), which
+also truncates lineage so 20-deep traversals don't build 20-deep plans.
 
 At 100 TB the edges DataFrame should be bucketed by the join side (src for
 :out) so each round's join is shuffle-free on the edge side; the frontier is
@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from vivace_graph_v3_spark.graph import GraphStore
 from vivace_graph_v3_spark.util import (
-    collect_bounded, filter_keys, fits_driver, local_frame)
+    collect_bounded, filter_keys, fits_driver, local_frame, materialized)
 
 
 def traverse(graph: GraphStore, roots, *, direction: str = "out",
@@ -74,7 +74,7 @@ def traverse(graph: GraphStore, roots, *, direction: str = "out",
         if persist_hop:  # deep traversal: each used arm scanned once
             key = (n, a)
             if key not in _arm_cache:
-                _arm_cache[key] = df.persist()
+                _arm_cache[key] = m.persist(df)
             df = _arm_cache[key]
         return df
 
@@ -125,23 +125,22 @@ def traverse(graph: GraphStore, roots, *, direction: str = "out",
     # pruning the hop union changes per round, so the cache is per-ARM.
     persist_hop = max_depth > 3
     _arm_cache: dict = {}
-    hop_static = None if prunable else hop_for(None)
+
     def ckpt_counted_typed(df):
         """Eager checkpoint; row count (and frontier type set, when arms
         are prunable) observed on the materialization — one job."""
+        if not prunable:
+            return (*m.checkpoint(df), None)
         ob = Observation()
-        metrics = [F.count(F.lit(1)).alias("n")]
-        if prunable:
-            metrics.append(F.collect_set(
-                F.substring_index(F.col("id"), ":", 1)).alias("t"))
-        df = df.observe(ob, *metrics).localCheckpoint(eager=True)
-        got = ob.get
-        return df, got["n"], (set(got["t"]) if prunable else None)
+        df, n = m.checkpoint(df.observe(ob, F.collect_set(
+            F.substring_index(F.col("id"), ":", 1)).alias("t")))
+        return df, n, set(ob.get["t"])
 
-    frontier, frontier_n, ftypes = ckpt_counted_typed(frontier)
-    visited_n = frontier_n
-    result = frontier
-    try:
+    with materialized() as m:
+        hop_static = None if prunable else hop_for(None)
+        frontier, frontier_n, ftypes = ckpt_counted_typed(frontier)
+        visited_n = frontier_n
+        result = frontier
         for depth in range(1, max_depth + 1):
             hop = hop_static if hop_static is not None else hop_for(ftypes)
             if hop is None:
@@ -179,10 +178,7 @@ def traverse(graph: GraphStore, roots, *, direction: str = "out",
             visited_n += frontier_n
             result = result.unionByName(nxt)
             frontier = nxt
-    finally:
-        for cached in _arm_cache.values():
-            cached.unpersist()
-    return result
+        return m.keep(result)
 
 
 def _bfs_local(spark, roots, hop_for, prunable: bool, max_depth: int,

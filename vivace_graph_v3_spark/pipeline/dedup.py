@@ -27,12 +27,12 @@ element), which made the folds the dominant cost of every consumer
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from vivace_graph_v3_spark import util
 from vivace_graph_v3_spark.pipeline.text import tokens
 from vivace_graph_v3_spark.util import (
-    checkpoint_counted, ensure_parallelism, fits_driver, local_frame,
+    ensure_parallelism, fits_driver, local_frame, materialized,
     union_find_min)
 
 # -- exact ---------------------------------------------------------------------
@@ -130,23 +130,19 @@ def ngram_jaccard_pairs(df: DataFrame, *, text_col: str = "text",
                         id_col: str = "doc_id", n: int = 3,
                         threshold: float = 0.8) -> DataFrame:
     """All pairs (a < b) with Jaccard(shingles_a, shingles_b) >= threshold,
-    via an inverted index: explode shingles, self-join on shingle, count
-    common, |A∪B| = |A|+|B|-common. Exact; intended for candidate sets or
-    blocked inputs (at raw 100 TB use minhash_dedup_pairs instead). The
-    shingle base is checkpointed so the self-join's two arms share one
-    shingle build (see _shingle_base)."""
-    base = _shingle_base(df, text_col=text_col, id_col=id_col, n=n)
-    inv = base.select("id", "sz", F.explode("sh").alias("shingle"))
-    a, b = inv.alias("a"), inv.alias("b")
-    common = (a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-                     & (F.col("a.id") < F.col("b.id")))
-              .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                       F.col("a.sz").alias("sz_a"), F.col("b.sz").alias("sz_b"))
-              .agg(F.count(F.lit(1)).alias("common")))
-    jac = F.col("common") / (F.col("sz_a") + F.col("sz_b") - F.col("common"))
-    return (common.withColumn("jaccard", F.round(jac, 6))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard"))
+    via the inverted index (:func:`_shingle_pair_candidates`): |A∪B| =
+    |A|+|B|-common. Exact; intended for candidate sets or blocked inputs
+    (at raw 100 TB use minhash_dedup_pairs instead). Eager: the call
+    runs one job checkpointing the shingle base (see _shingle_base),
+    which the returned frame reads and holds until it is collected."""
+    with materialized() as m:
+        pairs = _shingle_pair_candidates(
+            _shingle_base(m, df, text_col=text_col, id_col=id_col, n=n))
+        jac = (F.col("inter")
+               / (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
+        return m.keep(pairs.withColumn("jaccard", F.round(jac, 6))
+                      .filter(F.col("jaccard") >= threshold)
+                      .select("id_a", "id_b", "jaccard"))
 
 
 def containment_pairs(df: DataFrame, *, text_col: str = "text",
@@ -193,26 +189,11 @@ def containment_pairs(df: DataFrame, *, text_col: str = "text",
     local = _containment_local(base, threshold)
     if local is not None:
         return local
-    base = base.withColumn("sz", F.size("sh")).persist()
-    try:
+    with materialized() as m:
+        base = m.persist(base.withColumn("sz", F.size("sh")))
         inv = base.select("id", "sz", F.explode("sh").alias("shingle"))
-        # global rarity order: document frequency, ties by shingle hash
-        dfreq = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        ranked = inv.join(dfreq, "shingle")
-        # window-free prefix selection (guide §2.4): the old per-doc
-        # row_number window sorted the ENTIRE ranked shingle stream under
-        # its exchange; the same rarest-k set falls out of one hash
-        # aggregate + a per-doc array_sort + slice. Identical prefix:
-        # (df, shingle) pairs are unique within a doc (shingles are
-        # per-doc distinct), so lexicographic struct order == the
-        # window's (df asc, shingle asc) order, rows 1..k.
-        k_len = (F.floor((1.0 - threshold) * F.first("sz")) + 2).cast("int")
-        prefix = (ranked.groupBy("id")
-                  .agg(F.slice(F.array_sort(F.collect_list(
-                      F.struct("df", "shingle"))), F.lit(1), k_len)
-                      .alias("__pre"))
-                  .select("id", F.explode("__pre").alias("__s"))
-                  .select("id", F.col("__s.shingle").alias("shingle")))
+        prefix = _rarest_prefix(inv, F.floor((1.0 - threshold)
+                                             * F.first("sz")) + 2)
         a, b = prefix.alias("a"), inv.alias("b")
         cand = (a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
                        & (F.col("a.id") != F.col("b.id")))
@@ -238,9 +219,19 @@ def containment_pairs(df: DataFrame, *, text_col: str = "text",
         out = (common.withColumn("containment", cont)
                .filter(F.col("containment") >= threshold)
                .select("inner_id", "outer_id", "containment"))
-        return out.localCheckpoint(eager=True)
-    finally:
-        base.unpersist()
+        return m.keep(m.checkpoint(out)[0])
+
+
+def _rarest_prefix(inv: DataFrame, k_len) -> DataFrame:
+    """(id, shingle): each document's ``k_len`` rarest shingles of ``inv``
+    (id, sz, shingle) by (df, shingle). Window-free (guide §2.4): a per-doc
+    array_sort and slice, not a row_number window over the whole stream."""
+    dfreq = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    return (inv.join(dfreq, "shingle").groupBy("id")
+            .agg(F.slice(F.array_sort(F.collect_list(
+                F.struct("df", "shingle"))), F.lit(1), k_len.cast("int"))
+                .alias("__pre"))
+            .select("id", F.explode("__pre.shingle").alias("shingle")))
 
 
 def _containment_local(base: DataFrame, threshold: float) -> DataFrame | None:
@@ -258,7 +249,6 @@ def _containment_local(base: DataFrame, threshold: float) -> DataFrame | None:
     as the Spark plan's ``!=`` and equi-joins have it."""
     import numpy as np
     import pyarrow as pa
-    from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
     # Arrow, not pandas: a nullable long id stays an integer. The outer
@@ -499,8 +489,8 @@ def minhash_lsh_candidates(sigs: DataFrame, *, bands: int = 16,
     band bucket are candidates. Emits distinct (id_a < id_b).
 
     ``max_bucket`` is the HOT-BUCKET guard for power-law corpora
-    (tools/skew_probe.py records the motivating shape): the within-
-    bucket clique join is quadratic in bucket width, so one bucket
+    (SCALING.md, "Round-7 SKEW probe", records the motivating shape):
+    the within-bucket clique join is quadratic in bucket width, so one bucket
     holding k docs — in practice a mass of byte-identical or boilerplate
     pages whose r band hashes all collide — emits k(k-1)/2 pairs.
     With a cap, an over-cap bucket emits a STAR to its min id (k-1
@@ -551,37 +541,39 @@ def minhash_dedup_pairs(df: DataFrame, *, text_col: str = "text",
     free jaccard estimate already encoded in the signatures (matching
     positions / k), with a generous margin so no true pair above the
     threshold is lost before exact verification."""
-    sigs = minhash_signatures(df, text_col=text_col, id_col=id_col, n=n,
-                              num_hashes=num_hashes).persist()
-    try:
+    with materialized() as m:
+        sigs = m.persist(minhash_signatures(df, text_col=text_col,
+                                            id_col=id_col, n=n,
+                                            num_hashes=num_hashes))
         cands = minhash_lsh_candidates(sigs, bands=bands,
                                        rows_per_band=num_hashes // bands,
                                        max_bucket=max_bucket)
-        side = sigs.select("id", F.col("__sh").alias("sh"),
-                           F.size("__sh").alias("sz"), "minhash")
-        joined = (cands
-                  .join(side.select(F.col("id").alias("id_a"),
-                                    F.col("sh").alias("sh_a"),
-                                    F.col("sz").alias("sz_a"),
-                                    F.col("minhash").alias("mh_a")), "id_a")
-                  .join(side.select(F.col("id").alias("id_b"),
-                                    F.col("sh").alias("sh_b"),
-                                    F.col("sz").alias("sz_b"),
-                                    F.col("minhash").alias("mh_b")), "id_b"))
-        est = (F.size(F.filter(F.zip_with("mh_a", "mh_b", lambda a, b: a == b),
-                               lambda x: x)) / F.lit(num_hashes))
-        # 3-sigma margin on the k-sample estimate keeps recall ~1
-        margin = 3.0 * (0.25 / num_hashes) ** 0.5
-        joined = joined.filter(est >= threshold - margin)
-        common = F.size(F.array_intersect("sh_a", "sh_b"))
-        jac = common / (F.col("sz_a") + F.col("sz_b") - common)
-        out = (joined.withColumn("jaccard", F.round(jac, 6))
-               .filter(F.col("jaccard") >= threshold)
-               .select("id_a", "id_b", "jaccard"))
-        out = out.localCheckpoint(eager=True)
-        return out
-    finally:
-        sigs.unpersist()
+        joined = (cands.join(_minhash_side(sigs, "id_a", "a"), "id_a")
+                  .join(_minhash_side(sigs, "id_b", "b"), "id_b"))
+        return m.keep(_minhash_verified(m, joined, num_hashes, threshold,
+                                        "id_a", "id_b"))
+
+
+def _minhash_side(sigs: DataFrame, id_name: str, s: str) -> DataFrame:
+    """One MinHash verification arm: (``id_name``, sh_s, sz_s, mh_s)."""
+    return sigs.selectExpr(f"id AS {id_name}", f"__sh AS sh_{s}",
+                           f"size(__sh) AS sz_{s}", f"minhash AS mh_{s}")
+
+
+def _minhash_verified(m, joined: DataFrame, num_hashes: int,
+                      threshold: float, *ids: str) -> DataFrame:
+    """The ``joined`` pairs (two :func:`_minhash_side` arms) whose exact
+    Jaccard clears ``threshold``, as (``ids``..., jaccard), checkpointed
+    in ``m``, after a free MinHash-estimate prefilter (3 sigma)."""
+    est = (F.size(F.filter(F.zip_with("mh_a", "mh_b", lambda a, b: a == b),
+                           lambda x: x)) / F.lit(num_hashes))
+    margin = 3.0 * (0.25 / num_hashes) ** 0.5
+    common = F.size(F.array_intersect("sh_a", "sh_b"))
+    jac = common / (F.col("sz_a") + F.col("sz_b") - common)
+    return m.checkpoint(joined.filter(est >= threshold - margin)
+                        .withColumn("jaccard", F.round(jac, 6))
+                        .filter(F.col("jaccard") >= threshold)
+                        .select(*ids, "jaccard"))[0]
 
 
 # -- simhash -----------------------------------------------------------------------
@@ -902,28 +894,24 @@ def dedup_clusters(pairs: DataFrame, *, id_a: str = "id_a",
     # (MinHash banding, shingle joins), so materialize the pair list ONCE
     # and build both branches from the checkpointed rows — without this the
     # whole upstream dedup pipeline executes twice before iteration starts
-    pairs, n_pairs = checkpoint_counted(
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")))
-    if fits_driver(n_pairs):
-        comp = union_find_min((r["src"], r["dst"])
-                              for r in pairs.toLocalIterator())
-        id_type = pairs.schema["src"].dataType
-        from pyspark.sql import types as T
-        schema = T.StructType([T.StructField("id", id_type),
-                               T.StructField("cluster", id_type)])
-        return pairs.sparkSession.createDataFrame(list(comp.items()), schema)
-    edges = (pairs
-             .unionByName(pairs.select(F.col("dst").alias("src"),
-                                       F.col("src").alias("dst")))
-             .dropDuplicates()
-             .persist())
-    try:
-        return min_label_fixpoint(
+    with materialized() as m:
+        pairs, n_pairs = m.checkpoint(
+            pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")))
+        if fits_driver(n_pairs):
+            comp = union_find_min((r["src"], r["dst"])
+                                  for r in pairs.toLocalIterator())
+            id_type = pairs.schema["src"].dataType
+            schema = T.StructType([T.StructField("id", id_type),
+                                   T.StructField("cluster", id_type)])
+            return local_frame(pairs.sparkSession, list(comp.items()), schema)
+        edges = m.persist(
+            pairs.unionByName(pairs.select(F.col("dst").alias("src"),
+                                           F.col("src").alias("dst")))
+            .dropDuplicates())
+        return m.keep(min_label_fixpoint(
             edges, edges.select(F.col("src").alias("id")).dropDuplicates()
             .withColumn("lab", F.col("id")),
-            max_iter=max_iter).withColumnRenamed("lab", "cluster")
-    finally:
-        edges.unpersist()
+            max_iter=max_iter).withColumnRenamed("lab", "cluster"))
 
 
 def dedup_survivors(docs: DataFrame, pairs: DataFrame, *,
@@ -983,9 +971,10 @@ def minhash_dedup_incremental(new_docs: DataFrame, index: MinhashIndex, *,
     a co-located join that never shuffles the corpus; the estimate
     prefilter (free from the signatures) then bounds the exact-verify
     join to surviving candidates only."""
-    sigs = minhash_signatures(new_docs, text_col=text_col, id_col=id_col,
-                              n=n, num_hashes=num_hashes).persist()
-    try:
+    with materialized() as m:
+        sigs = m.persist(minhash_signatures(new_docs, text_col=text_col,
+                                            id_col=id_col, n=n,
+                                            num_hashes=num_hashes))
         bnew = band_rows(sigs, bands=bands,
                          rows_per_band=num_hashes // bands)
         cands = (bnew.alias("a")
@@ -996,29 +985,12 @@ def minhash_dedup_incremental(new_docs: DataFrame, index: MinhashIndex, *,
                  .select(F.col("a.id").alias("new_id"),
                          F.col("b.id").alias("dup_of"))
                  .dropDuplicates())
-        new_side = sigs.select(F.col("id").alias("new_id"),
-                               F.col("__sh").alias("sh_a"),
-                               F.size("__sh").alias("sz_a"),
-                               F.col("minhash").alias("mh_a"))
-        old_side = index.side.select(F.col("id").alias("dup_of"),
-                                     F.col("sh").alias("sh_b"),
-                                     F.col("sz").alias("sz_b"),
-                                     F.col("minhash").alias("mh_b"))
-        joined = cands.join(new_side, "new_id").join(old_side, "dup_of")
-        est = (F.size(F.filter(F.zip_with("mh_a", "mh_b",
-                                          lambda a, b: a == b),
-                               lambda x: x)) / F.lit(num_hashes))
-        margin = 3.0 * (0.25 / num_hashes) ** 0.5
-        joined = joined.filter(est >= threshold - margin)
-        common = F.size(F.array_intersect("sh_a", "sh_b"))
-        jac = common / (F.col("sz_a") + F.col("sz_b") - common)
-        out = (joined.withColumn("jaccard", F.round(jac, 6))
-               .filter(F.col("jaccard") >= threshold)
-               .select("new_id", "dup_of", "jaccard")
-               .localCheckpoint(eager=True))
-        return out
-    finally:
-        sigs.unpersist()
+        old_side = index.side.selectExpr("id AS dup_of", "sh AS sh_b",
+                                         "sz AS sz_b", "minhash AS mh_b")
+        joined = (cands.join(_minhash_side(sigs, "new_id", "a"), "new_id")
+                  .join(old_side, "dup_of"))
+        return m.keep(_minhash_verified(m, joined, num_hashes, threshold,
+                                        "new_id", "dup_of"))
 
 
 # -- intra-corpus duplicated-text rate ----------------------------------------
@@ -1043,20 +1015,23 @@ def duplicate_span_stats(df: DataFrame, *, text_col: str = "text",
     Because shingles are distinct per document (shingle_hashes
     dedupes), the shingle count per key IS the document frequency; a
     shingle shared by k docs costs k join rows, bounded by the
-    duplication it measures. The shingle base is checkpointed: the
-    exploded frame feeds BOTH the frequency aggregate and the join back
-    (see _shingle_base)."""
-    base = _shingle_base(df, text_col=text_col, id_col=id_col, n=n)
-    inv = base.select("id", "sz", F.explode("sh").alias("shingle"))
-    dfreq = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    per_doc = (inv.join(dfreq, "shingle")
-               .groupBy("id")
-               .agg(F.any_value("sz").alias("n_spans"),
-                    F.sum(F.when(F.col("df") >= 2, 1).otherwise(0))
-                    .alias("n_dup")))
-    rate = (F.expr("(n_dup * 2000000 + n_spans) div (n_spans * 2)")
-            .cast("double") / 1e6)
-    return per_doc.select("id", "n_spans", "n_dup", rate.alias("dup_rate"))
+    duplication it measures. Eager: the call runs one job checkpointing
+    the shingle base, which feeds BOTH the frequency aggregate and the
+    join back (see _shingle_base); the returned frame reads it and holds
+    it until the frame is collected."""
+    with materialized() as m:
+        base = _shingle_base(m, df, text_col=text_col, id_col=id_col, n=n)
+        inv = base.select("id", "sz", F.explode("sh").alias("shingle"))
+        dfreq = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+        per_doc = (inv.join(dfreq, "shingle")
+                   .groupBy("id")
+                   .agg(F.any_value("sz").alias("n_spans"),
+                        F.sum(F.when(F.col("df") >= 2, 1).otherwise(0))
+                        .alias("n_dup")))
+        rate = (F.expr("(n_dup * 2000000 + n_spans) div (n_spans * 2)")
+                .cast("double") / 1e6)
+        return m.keep(per_doc.select("id", "n_spans", "n_dup",
+                                     rate.alias("dup_rate")))
 
 
 def dedup_cluster_sizes(df: DataFrame, text_col: str = "text",
@@ -1108,10 +1083,10 @@ def dedup_sampling_weights(df: DataFrame, *, text_col: str = "text",
                            " div (cluster_size * 2)").alias("weight_ppm")))
 
 
-def _shingle_base(df: DataFrame, *, text_col: str, id_col: str, n: int,
+def _shingle_base(m, df: DataFrame, *, text_col: str, id_col: str, n: int,
                   strings: bool = False) -> DataFrame:
-    """(id, sh, sz) with the shingle array MATERIALIZED (localCheckpoint,
-    eager) — the shared input frame for every shingle consumer below.
+    """(id, sh, sz) with the shingle array MATERIALIZED (checkpointed in
+    scope ``m``) — the shared input frame for every shingle consumer.
 
     Why eager: each consumer explodes ``sh`` and/or feeds it to 2+ join
     arms. Left lazy, (a) the optimizer infers ``size(sh) > 0`` from the
@@ -1124,11 +1099,10 @@ def _shingle_base(df: DataFrame, *, text_col: str, id_col: str, n: int,
     same footprint any single consumer materializes anyway."""
     sh = (shingle_strings(F.col(text_col), n=n) if strings
           else shingle_hashes(F.col(text_col), n))
-    return (ensure_parallelism(df)
-            .filter(has_min_tokens(F.col(text_col), n))
-            .select(F.col(id_col).alias("id"), sh.alias("sh"))
-            .withColumn("sz", F.size("sh"))
-            .localCheckpoint(eager=True))
+    return m.checkpoint(ensure_parallelism(df)
+                        .filter(has_min_tokens(F.col(text_col), n))
+                        .select(F.col(id_col).alias("id"), sh.alias("sh"))
+                        .withColumn("sz", F.size("sh")))[0]
 
 
 def _minhash_md5_sigs(base: DataFrame, num_hashes: int) -> DataFrame:
@@ -1167,28 +1141,22 @@ def minhash_signatures_md5(df: DataFrame, *, text_col: str = "text",
 
     Returns (id, n_shingles, sig array<long>[num_hashes]); documents with
     zero shingles are dropped (no meaningful signature). Eager: building
-    the frame materializes the shared shingle checkpoint."""
-    base = _shingle_base(df, text_col=text_col, id_col=id_col, n=shingle,
-                         strings=True)
-    return _minhash_md5_sigs(base, num_hashes)
-
-
-def _shingle_pair_candidates(df: DataFrame, *, text_col: str = "text",
-                             id_col: str = "doc_id", shingle: int = 3,
-                             base: DataFrame | None = None) -> DataFrame:
-    """All document pairs sharing >= 1 shingle, with exact intersection /
-    union sizes — the inverted-index pair generator every exact-Jaccard
-    verification here rides on (never an all-pairs join; bucket width is
-    per-shingle document frequency, independent of corpus volume).
-    Returns (id_a, id_b, inter, sz_a, sz_b). Pass ``base`` (a
-    ``_shingle_base(strings=True)`` frame) to share one shingle
-    checkpoint across consumers; sizes ride the group keys (sz is
-    functionally determined by id — identical values, none of the
-    ``first()`` valueSet machinery) and are re-wrapped nullable so the
-    output schema is unchanged."""
-    if base is None:
-        base = _shingle_base(df, text_col=text_col, id_col=id_col,
+    the frame materializes the shingle checkpoint the frame holds."""
+    with materialized() as m:
+        base = _shingle_base(m, df, text_col=text_col, id_col=id_col,
                              n=shingle, strings=True)
+        return m.keep(_minhash_md5_sigs(base, num_hashes))
+
+
+def _shingle_pair_candidates(base: DataFrame) -> DataFrame:
+    """All pairs of ``base`` documents (a :func:`_shingle_base` frame)
+    sharing >= 1 shingle, with exact intersection / union sizes — the
+    inverted-index pair generator of :func:`minhash_estimate_audit`
+    (never an all-pairs join; a shingle in df documents costs df² join
+    rows). Returns (id_a, id_b, inter, sz_a, sz_b). Sizes ride the group
+    keys (sz is functionally determined by id — identical values, none
+    of the ``first()`` valueSet machinery) and are re-wrapped nullable
+    so the output schema is unchanged."""
     inv = base.select("id", "sz", F.explode("sh").alias("shingle"))
     a, b = inv.alias("a"), inv.alias("b")
     return (a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
@@ -1221,20 +1189,21 @@ def minhash_estimate_audit(df: DataFrame, *, text_col: str = "text",
     # one shingle checkpoint feeds the pair generator's two self-join
     # arms AND the signature aggregate (guide §5: materialize the shared
     # frame once instead of three subtree rebuilds)
-    base = _shingle_base(df, text_col=text_col, id_col=id_col, n=shingle,
-                         strings=True)
-    pairs = _shingle_pair_candidates(df, text_col=text_col, id_col=id_col,
-                                     shingle=shingle, base=base)
-    pairs = (pairs.withColumn(
-        "exact_ppm", F.expr("inter * 1000000L div (sz_a + sz_b - inter)"))
-        .filter(F.col("exact_ppm") >= int(min_exact_ppm)))
-    # the signature frame feeds BOTH join arms (sa, sb) and Spark does
-    # not reuse subplans across arms — without the checkpoint the
-    # k x |shingles| md5 aggregate executed twice
-    sigs = _minhash_md5_sigs(base, num_hashes).localCheckpoint(eager=True)
-    sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    return (pairs.join(sa, "id_a").join(sb, "id_b")
+    with materialized() as m:
+        base = _shingle_base(m, df, text_col=text_col, id_col=id_col,
+                             n=shingle, strings=True)
+        pairs = _shingle_pair_candidates(base)
+        pairs = (pairs.withColumn(
+            "exact_ppm", F.expr("inter * 1000000L div (sz_a + sz_b - inter)"))
+            .filter(F.col("exact_ppm") >= int(min_exact_ppm)))
+        # the signature frame feeds BOTH join arms (sa, sb) and Spark does
+        # not reuse subplans across arms — without the checkpoint the
+        # k x |shingles| md5 aggregate executed twice
+        sigs, _ = m.checkpoint(_minhash_md5_sigs(base, num_hashes))
+        sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
+        sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
+        return m.keep(
+            pairs.join(sa, "id_a").join(sb, "id_b")
             .withColumn("n_matches",
                         F.expr("size(filter(zip_with(sig_a, sig_b,"
                                " (x, y) -> x = y), b -> b))").cast("long"))
@@ -1260,77 +1229,104 @@ def lsh_band_tuning(df: DataFrame, *, text_col: str = "text",
     bands at once (a cfg column in the band key; one shuffle and one job
     where a per-config loop ran four), so candidate generation is
     output-bounded, never an all-pairs or pair-superset scan. The
-    ground-truth pair set rides the exact inverted-shingle-index pair
-    aggregate (_shingle_pair_candidates) filtered by exact Jaccard >= t
-    — identical to any complete candidate generator's truth set, since
-    J(A,B) >= t > 0 implies A and B share a shingle, so the inverted
-    index misses nothing and the filter IS the definition. Caught
+    ground-truth pair set comes from a rarest-first prefix filter over
+    the shingle base (:func:`_prefix_jaccard_pairs`), verified by exact
+    Jaccard >= t: complete by the prefix lemma, so it equals the truth
+    set of any complete candidate generator, while a boilerplate
+    shingle shared by most documents stays out of every prefix instead
+    of costing df² join rows. Caught
     counts for all configs ride one aggregate over the (small) truth
     set. Band equality implies a shared min-shingle (64-bit md5
     collisions aside), so the bucket-join candidates equal the
     superset-defined candidate sets an oracle computes. Returns one row
     per config: (bands, rows_per_band, n_candidates, n_true_total,
     n_caught, precision_ppm, recall_ppm)."""
-    # one shingle checkpoint feeds the pair truth (two self-join arms)
-    # and the signature aggregate; the signature checkpoint feeds the
-    # band frame and both tj join arms (guide §5)
-    base = _shingle_base(df, text_col=text_col, id_col=id_col, n=shingle,
-                         strings=True)
-    sigs = _minhash_md5_sigs(base, num_hashes).select("id", "sig") \
-        .localCheckpoint(eager=True)
-    truth = (_shingle_pair_candidates(df, text_col=text_col, id_col=id_col,
-                                      shingle=shingle, base=base)
-             .filter(F.expr(f"inter * 1000000L div (sz_a + sz_b - inter)"
-                            f" >= {int(true_threshold_ppm)}"))
-             .select("id_a", "id_b")
-             .localCheckpoint(eager=True))
-    n_true = truth.count()
-    sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    tj = truth.join(sa, "id_a").join(sb, "id_b")
-    # candidates: ONE bucket self-join across all configs' bands
-    band_structs = []
-    for cfg_b in bands_options:
-        r = num_hashes // cfg_b
-        for j in range(cfg_b):
-            band_structs.append(F.struct(
+    # one shingle checkpoint feeds the pair truth and the signature
+    # aggregate; the signature checkpoint feeds the band frame and both
+    # tj join arms (guide §5). The table is built on the driver, so the
+    # scope releases every checkpoint on return.
+    with materialized() as m:
+        base = _shingle_base(m, df, text_col=text_col, id_col=id_col,
+                             n=shingle, strings=True)
+        sigs, _ = m.checkpoint(
+            _minhash_md5_sigs(base, num_hashes).select("id", "sig"))
+        truth, n_true = m.checkpoint(
+            _prefix_jaccard_pairs(base, int(true_threshold_ppm)))
+        tj = (truth
+              .join(sigs.selectExpr("id AS id_a", "sig AS sig_a"), "id_a")
+              .join(sigs.selectExpr("id AS id_b", "sig AS sig_b"), "id_b"))
+        # candidates: ONE bucket self-join across all configs' bands;
+        # caught: every config's band predicate in ONE aggregate over tj
+        band_structs, caught_aggs = [], []
+        for cfg_b in bands_options:
+            r = num_hashes // cfg_b
+            band_structs += [F.struct(
                 F.lit(cfg_b).alias("cfg"), F.lit(j).alias("j"),
-                F.slice("sig", j * r + 1, r).alias("bs")))
-    bands = sigs.select("id", F.explode(F.array(*band_structs)).alias("band"))
-    x, y = bands.alias("x"), bands.alias("y")
-    cand_counts = {row["cfg"]: row["n"] for row in
-                   (x.join(y, (F.col("x.band.cfg") == F.col("y.band.cfg"))
-                           & (F.col("x.band.j") == F.col("y.band.j"))
-                           & (F.col("x.band.bs") == F.col("y.band.bs"))
-                           & (F.col("x.id") < F.col("y.id")))
-                    .select(F.col("x.band.cfg").alias("cfg"),
-                            F.col("x.id"), F.col("y.id"))
-                    .dropDuplicates()
-                    .groupBy("cfg").agg(F.count(F.lit(1)).alias("n"))
-                    .collect())}
-    # caught: every config's band predicate in ONE aggregate over tj
-    caught_aggs = []
-    for cfg_b in bands_options:
-        r = num_hashes // cfg_b
-        caught_aggs.append(F.coalesce(F.sum(F.when(F.expr(
-            f"exists(sequence(0, {cfg_b - 1}), j -> "
-            f"slice(sig_a, j * {r} + 1, {r})"
-            f" = slice(sig_b, j * {r} + 1, {r}))"), 1).otherwise(0)),
-            F.lit(0)).alias(f"c{cfg_b}"))
-    caught_row = tj.agg(*caught_aggs).first()
-    rows = []
-    for cfg_b in bands_options:
-        r = num_hashes // cfg_b
-        n_cand = cand_counts.get(cfg_b, 0)
-        n_caught = int(caught_row[f"c{cfg_b}"])
-        rows.append((cfg_b, r, n_cand, n_true, n_caught,
-                     n_caught * 1000000 // n_cand if n_cand else None,
-                     n_caught * 1000000 // n_true if n_true else None))
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        rows, "bands long, rows_per_band long, n_candidates long, "
-              "n_true_total long, n_caught long, precision_ppm long, "
-              "recall_ppm long")
+                F.slice("sig", j * r + 1, r).alias("bs"))
+                for j in range(cfg_b)]
+            caught_aggs.append(F.coalesce(F.sum(F.when(F.expr(
+                f"exists(sequence(0, {cfg_b - 1}), j -> "
+                f"slice(sig_a, j * {r} + 1, {r})"
+                f" = slice(sig_b, j * {r} + 1, {r}))"), 1).otherwise(0)),
+                F.lit(0)).alias(f"c{cfg_b}"))
+        bands = sigs.select("id",
+                            F.explode(F.array(*band_structs)).alias("band"))
+        x, y = bands.alias("x"), bands.alias("y")
+        cand_counts = {
+            row["cfg"]: row["n"] for row in
+            (x.join(y, (F.col("x.band.cfg") == F.col("y.band.cfg"))
+                    & (F.col("x.band.j") == F.col("y.band.j"))
+                    & (F.col("x.band.bs") == F.col("y.band.bs"))
+                    & (F.col("x.id") < F.col("y.id")))
+             .select(F.col("x.band.cfg").alias("cfg"),
+                     F.col("x.id"), F.col("y.id"))
+             .dropDuplicates()
+             .groupBy("cfg").agg(F.count(F.lit(1)).alias("n"))
+             .collect())}
+        caught_row = tj.agg(*caught_aggs).first()
+        rows = []
+        for cfg_b in bands_options:
+            r = num_hashes // cfg_b
+            n_cand = cand_counts.get(cfg_b, 0)
+            n_caught = int(caught_row[f"c{cfg_b}"])
+            rows.append((cfg_b, r, n_cand, n_true, n_caught,
+                         n_caught * 1000000 // n_cand if n_cand else None,
+                         n_caught * 1000000 // n_true if n_true else None))
+        return local_frame(df.sparkSession, rows, T.StructType.fromDDL(
+            "bands long, rows_per_band long, n_candidates long, "
+            "n_true_total long, n_caught long, precision_ppm long, "
+            "recall_ppm long"))
+
+
+def _prefix_postings(base: DataFrame, t_ppm: int) -> DataFrame:
+    """(id, shingle): each ``base`` document's ``|A| - ceil(t·|A|) + 1``
+    rarest shingles, t = ``t_ppm`` / 10^6. By the prefix lemma (SSJoin,
+    Chaudhuri et al. 2006), J(A, B) >= t puts the rarest shared shingle
+    in both prefixes; the ceiling is exact in integers."""
+    return _rarest_prefix(
+        base.select("id", "sz", F.explode("sh").alias("shingle")),
+        F.greatest(F.first("sz") + 1 - F.expr(
+            f"({int(t_ppm)} * first(sz) + 999999) div 1000000"), F.lit(0)))
+
+
+def _prefix_jaccard_pairs(base: DataFrame, t_ppm: int) -> DataFrame:
+    """Pairs (id_a < id_b) of ``base`` documents with ``inter * 10^6 div
+    |A ∪ B| >= t_ppm``: prefix candidates, verified exactly."""
+    pre = _prefix_postings(base, t_ppm)
+    a, b = pre.alias("a"), pre.alias("b")
+    cand = (a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
+                   & (F.col("a.id") < F.col("b.id")))
+            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .dropDuplicates())
+    return (cand
+            .join(base.selectExpr("id AS id_a", "sh AS sh_a", "sz AS sz_a"),
+                  "id_a")
+            .join(base.selectExpr("id AS id_b", "sh AS sh_b", "sz AS sz_b"),
+                  "id_b")
+            .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
+            .filter(F.expr(f"inter * 1000000L div (sz_a + sz_b - inter)"
+                           f" >= {int(t_ppm)}"))
+            .select("id_a", "id_b"))
 
 
 # -- edit-distance (PassJoin) --------------------------------------------------

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from vivace_graph_v3_spark.pipeline.dedup import cosine
 from vivace_graph_v3_spark.pipeline.text import bm25_topk
+from vivace_graph_v3_spark.util import materialized
 
 
 def dense_topk(emb: DataFrame, query_vec: list[float], k: int, *,
@@ -106,39 +107,40 @@ def mmr_topk(emb: DataFrame, query_vec: list[float], *, k: int = 5,
     the identical k CTE stages (which is exactly how the contract oracle
     verifies it). Ties break by id; cosines are 6-dp rounded so the
     trade-off arithmetic is bit-identical across engines."""
-    cand = (dense_topk(emb, query_vec, pool, vec_col=vec_col,
-                       id_col=id_col)
-            .select("id", "cosine").localCheckpoint(eager=True))
-    vecs = (emb.join(F.broadcast(cand.select("id")),
-                     emb[id_col] == cand["id"], "left_semi")
-            .select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")))
-    a, b = vecs.alias("a"), vecs.alias("b")
-    pairs = (a.join(b, F.col("a.id") != F.col("b.id"))
-             .select(F.col("a.id").alias("id"), F.col("b.id").alias("other"),
-                     F.round(cosine(F.col("a.v"), F.col("b.v")), 6)
-                     .alias("sim"))
-             .localCheckpoint(eager=True))
-    sel = (cand.orderBy(F.col("cosine").desc(), F.col("id").asc()).limit(1)
-           .select("id", "cosine", F.lit(1).alias("rank")))
-    for step in range(2, k + 1):
-        pen = (pairs.join(F.broadcast(sel.select(F.col("id").alias("other"))),
-                          "other")
-               .groupBy("id").agg(F.max("sim").alias("maxsim")))
-        remaining = cand.join(sel.select("id"), "id", "left_anti")
-        scored = (remaining.join(pen, "id", "left")
-                  .select("id", "cosine",
-                          (F.lit(lam) * F.col("cosine")
-                           - F.lit(1.0 - lam)
-                           * F.coalesce(F.col("maxsim"), F.lit(0.0)))
-                          .alias("mmr")))
-        nxt = (scored.orderBy(F.col("mmr").desc(), F.col("id").asc())
-               .limit(1)
-               .select("id", "cosine", F.lit(step).alias("rank")))
-        # checkpoint the (<= step)-row selection: each step reads `sel`
-        # twice (penalty join + anti join), so a lazy chain doubles the
-        # plan subtree per step — k tiny jobs beat a 2^k plan
-        sel = sel.unionByName(nxt).localCheckpoint(eager=True)
-    return sel.select("id", "cosine", "rank")
+    with materialized() as m:
+        cand, _ = m.checkpoint(dense_topk(emb, query_vec, pool,
+                                          vec_col=vec_col, id_col=id_col)
+                               .select("id", "cosine"))
+        vecs = (emb.join(F.broadcast(cand.select("id")),
+                         emb[id_col] == cand["id"], "left_semi")
+                .select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")))
+        a, b = vecs.alias("a"), vecs.alias("b")
+        pairs, _ = m.checkpoint(
+            a.join(b, F.col("a.id") != F.col("b.id"))
+            .select(F.col("a.id").alias("id"), F.col("b.id").alias("other"),
+                    F.round(cosine(F.col("a.v"), F.col("b.v")), 6)
+                    .alias("sim")))
+        sel = (cand.orderBy(F.col("cosine").desc(), F.col("id").asc()).limit(1)
+               .select("id", "cosine", F.lit(1).alias("rank")))
+        for step in range(2, k + 1):
+            pen = (pairs.join(F.broadcast(sel.select(F.col("id").alias("other"))),
+                              "other")
+                   .groupBy("id").agg(F.max("sim").alias("maxsim")))
+            remaining = cand.join(sel.select("id"), "id", "left_anti")
+            scored = (remaining.join(pen, "id", "left")
+                      .select("id", "cosine",
+                              (F.lit(lam) * F.col("cosine")
+                               - F.lit(1.0 - lam)
+                               * F.coalesce(F.col("maxsim"), F.lit(0.0)))
+                              .alias("mmr")))
+            nxt = (scored.orderBy(F.col("mmr").desc(), F.col("id").asc())
+                   .limit(1)
+                   .select("id", "cosine", F.lit(step).alias("rank")))
+            # checkpoint the (<= step)-row selection: each step reads `sel`
+            # twice (penalty join + anti join), so a lazy chain doubles the
+            # plan subtree per step — k tiny jobs beat a 2^k plan
+            sel, _ = m.checkpoint(sel.unionByName(nxt))
+        return m.keep(sel.select("id", "cosine", "rank"))
 
 
 # 1/log2(rank+1) discounts for ranks 1..10, fixed as integer ppm literals so

@@ -1323,44 +1323,46 @@ def facility_location_select(emb: DataFrame, *, vec_col: str = "embedding",
     # guide §4.2): the old aggregate(zip_with()) dot/norm folds here were
     # CodegenFallback, interpreted per element over ground^2 * dim terms —
     # the dominant cost of the whole selection at any dim
-    sims = (a.crossJoin(b)
-            .select("cid", "tid",
-                    cosine(F.col("cv"), F.col("tv")).alias("sim"))
-            .coalesce(1).localCheckpoint(eager=True))
-    best = (g.select(F.col("id").alias("tid"),
-                     F.lit(0.0).alias("best"))
-            .coalesce(1).localCheckpoint(eager=True))
-    picked: list = []
-    out_rows = []
-    spark = emb.sparkSession
-    for rnd in range(1, int(k) + 1):
-        cand = sims
-        if picked:
-            sel = spark.createDataFrame([(p,) for p in picked],
-                                        "cid long")
-            cand = sims.join(F.broadcast(sel), "cid", "left_anti")
-        gains = (cand.join(F.broadcast(best), "tid")
-                 .select("cid",
-                         F.greatest(F.col("sim") - F.col("best"),
-                                    F.lit(0.0))
-                         .cast("decimal(38,12)").alias("t"))
-                 .groupBy("cid").agg(F.sum("t").alias("gain")))
-        top = (gains.orderBy(F.col("gain").desc(), F.col("cid").asc())
-               .limit(1)
-               .select("cid", "gain",
-                       F.round(F.col("gain").cast("double"), 6)
-                       .alias("gain_r"))
-               .collect()[0])
-        picked.append(top["cid"])
-        upd = (sims.filter(F.col("cid") == top["cid"])
-               .select("tid", F.col("sim").alias("new")))
-        # the coverage sum rides the best-update checkpoint as an
-        # observation (fires on the eager localCheckpoint — same value:
-        # the DECIMAL(38,12) sum is order-independent over the same rows),
-        # replacing the separate per-round aggregate job: 2 jobs per
-        # greedy round instead of 3 (guide §1.2 step 1 / §5)
-        ob = Observation()
-        best = (best.join(upd, "tid", "left")
+    with util.materialized() as m:
+        sims, _ = m.checkpoint(
+            a.crossJoin(b)
+            .select("cid", "tid", cosine(F.col("cv"), F.col("tv")).alias("sim"))
+            .coalesce(1))
+        best, _ = m.checkpoint(
+            g.select(F.col("id").alias("tid"), F.lit(0.0).alias("best"))
+            .coalesce(1))
+        picked: list = []
+        out_rows = []
+        spark = emb.sparkSession
+        for rnd in range(1, int(k) + 1):
+            cand = sims
+            if picked:
+                sel = spark.createDataFrame([(p,) for p in picked],
+                                            "cid long")
+                cand = sims.join(F.broadcast(sel), "cid", "left_anti")
+            gains = (cand.join(F.broadcast(best), "tid")
+                     .select("cid",
+                             F.greatest(F.col("sim") - F.col("best"),
+                                        F.lit(0.0))
+                             .cast("decimal(38,12)").alias("t"))
+                     .groupBy("cid").agg(F.sum("t").alias("gain")))
+            top = (gains.orderBy(F.col("gain").desc(), F.col("cid").asc())
+                   .limit(1)
+                   .select("cid", "gain",
+                           F.round(F.col("gain").cast("double"), 6)
+                           .alias("gain_r"))
+                   .collect()[0])
+            picked.append(top["cid"])
+            upd = (sims.filter(F.col("cid") == top["cid"])
+                   .select("tid", F.col("sim").alias("new")))
+            # the coverage sum rides the best-update checkpoint as an
+            # observation (fires on the eager checkpoint — same value:
+            # the DECIMAL(38,12) sum is order-independent over the same rows),
+            # replacing the separate per-round aggregate job: 2 jobs per
+            # greedy round instead of 3 (guide §1.2 step 1 / §5)
+            ob = Observation()
+            best, _ = m.checkpoint(
+                best.join(upd, "tid", "left")
                 .select("tid",
                         F.greatest(F.col("best"),
                                    F.coalesce(F.col("new"), F.lit(0.0)))
@@ -1368,13 +1370,12 @@ def facility_location_select(emb: DataFrame, *, vec_col: str = "embedding",
                 .coalesce(1)
                 .observe(ob, F.round(F.sum(F.col("best")
                                            .cast("decimal(38,12)"))
-                                     .cast("double"), 6).alias("cov"))
-                .localCheckpoint(eager=True))
-        cov = ob.get["cov"]
-        out_rows.append((rnd, int(top["cid"]), float(top["gain_r"]),
-                         float(cov)))
-    return spark.createDataFrame(
-        out_rows, "round long, vec_id long, gain double, coverage double")
+                                     .cast("double"), 6).alias("cov")))
+            cov = ob.get["cov"]
+            out_rows.append((rnd, int(top["cid"]), float(top["gain_r"]),
+                             float(cov)))
+        return spark.createDataFrame(
+            out_rows, "round long, vec_id long, gain double, coverage double")
 
 
 def binary_signatures(df: DataFrame, *, vec_col: str = "embedding",

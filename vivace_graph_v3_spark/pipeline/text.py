@@ -15,9 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType
 
-from vivace_graph_v3_spark.util import ensure_parallelism
+from vivace_graph_v3_spark.util import ensure_parallelism, materialized
 
 # -- tokenization -------------------------------------------------------------
 
@@ -1485,40 +1484,41 @@ def train_logreg(df: DataFrame, *, text_col: str = "text",
     bias = df.select(F.col(id_col).alias("id"),
                      F.col(label_col).cast("int").alias("y"),
                      F.lit(-1).alias("b"), F.lit(1).alias("tf"))
-    x = tf.unionByName(bias).localCheckpoint(eager=True)
-    n = df.count()
-    all_b = [-1] + list(range(buckets))
-    w = {b: 0.0 for b in all_b}
-    spark = df.sparkSession
-    for _ in range(steps):
-        wmap = F.create_map(*[F.lit(v) for b_ in all_b
-                              for v in (b_, w[b_])])
-        z = (x.groupBy("id", "y")
-             .agg(F.sum((F.col("tf") * F.element_at(wmap, F.col("b")))
-                        .cast("decimal(38,12)")).alias("zd")))
-        p = z.select("id", "y",
-                     F.round(F.lit(1.0) / (F.lit(1.0)
-                             + F.exp(-F.col("zd").cast("double"))), 6)
-                     .alias("p"))
-        grad = (x.join(p.select("id", "p"), "id")
-                .groupBy("b")
-                .agg(F.sum(((F.col("p") - F.col("y")) * F.col("tf"))
-                           .cast("decimal(38,12)")).alias("s")))
-        upd = grad.select(
-            "b",
-            F.round(F.element_at(wmap, F.col("b"))
-                    - F.lit(lr) * (F.col("s").cast("double") / F.lit(n)),
-                    6).alias("w"))
-        rows = upd.collect()
-        hit = {r["b"]: (r["w"] or 0.0) for r in rows}
-        # buckets never hit by any token keep their previous weight in
-        # the working vector (needed for element_at next step) ...
-        w = {b_: hit.get(b_, w[b_]) for b_ in all_b}
-    # ... but only TRAINED buckets (ones that received gradient — i.e.
-    # appeared in the feature frame) are emitted: an absent feature has
-    # no learned weight, and scoring treats missing buckets as 0
-    return spark.createDataFrame(
-        sorted(hit.items()), "bucket int, w double")
+    with materialized() as m:
+        x, _ = m.checkpoint(tf.unionByName(bias))
+        n = df.count()
+        all_b = [-1] + list(range(buckets))
+        w = {b: 0.0 for b in all_b}
+        spark = df.sparkSession
+        for _ in range(steps):
+            wmap = F.create_map(*[F.lit(v) for b_ in all_b
+                                  for v in (b_, w[b_])])
+            z = (x.groupBy("id", "y")
+                 .agg(F.sum((F.col("tf") * F.element_at(wmap, F.col("b")))
+                            .cast("decimal(38,12)")).alias("zd")))
+            p = z.select("id", "y",
+                         F.round(F.lit(1.0) / (F.lit(1.0)
+                                 + F.exp(-F.col("zd").cast("double"))), 6)
+                         .alias("p"))
+            grad = (x.join(p.select("id", "p"), "id")
+                    .groupBy("b")
+                    .agg(F.sum(((F.col("p") - F.col("y")) * F.col("tf"))
+                               .cast("decimal(38,12)")).alias("s")))
+            upd = grad.select(
+                "b",
+                F.round(F.element_at(wmap, F.col("b"))
+                        - F.lit(lr) * (F.col("s").cast("double") / F.lit(n)),
+                        6).alias("w"))
+            rows = upd.collect()
+            hit = {r["b"]: (r["w"] or 0.0) for r in rows}
+            # buckets never hit by any token keep their previous weight in
+            # the working vector (needed for element_at next step) ...
+            w = {b_: hit.get(b_, w[b_]) for b_ in all_b}
+        # ... but only TRAINED buckets (ones that received gradient — i.e.
+        # appeared in the feature frame) are emitted: an absent feature has
+        # no learned weight, and scoring treats missing buckets as 0
+        return spark.createDataFrame(
+            sorted(hit.items()), "bucket int, w double")
 
 
 def dataset_card(df: DataFrame, *, text_col: str = "text",

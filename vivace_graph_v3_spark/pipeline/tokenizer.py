@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from vivace_graph_v3_spark.util import ensure_parallelism
+from vivace_graph_v3_spark.util import ensure_parallelism, materialized
 
 # lowercase alphabetic runs: the word universe for pair statistics (digits
 # and punctuation are single symbols in a real byte-level BPE and never
@@ -91,23 +91,23 @@ def bpe_learn_merges(df: DataFrame, *, n_merges: int = 3,
     vocab-sized aggregate with a 1-row collect. Production trainers
     update pair counts incrementally instead of recounting; at
     |vocab| ~ 1e6 rows the recount is noise next to the corpus pass.
-    The char-segmented vocabulary is materialized ONCE (localCheckpoint)
+    The char-segmented vocabulary is materialized ONCE (a checkpoint)
     before the loop — each merge step's aggregate used to re-derive it
     from the corpus, paying one full corpus scan per merge (optimization
     round 9, guide §1.2 step 1)."""
-    base = _bpe_char_base(df, text_col=text_col)
-    return _learn_merges_from_base(base, n_merges)
+    with materialized() as m:
+        return _learn_merges_from_base(
+            _bpe_char_base(m, df, text_col=text_col), n_merges)
 
 
-def _bpe_char_base(df: DataFrame, *, text_col: str) -> DataFrame:
+def _bpe_char_base(m, df: DataFrame, *, text_col: str) -> DataFrame:
     """(f, w, seg) — the frequency-weighted vocabulary with its char-level
-    segmentation, materialized so the corpus is scanned exactly once no
+    segmentation, checkpointed in ``m`` so the corpus is scanned once no
     matter how many merge steps (or a downstream apply pass) consume it."""
     wf = word_frequencies(df, text_col=text_col)
     seg = F.expr("array_join(transform(sequence(1, length(w)), "
                  f"i -> substring(w, i, 1)), '{BPE_SEP}')")
-    return (wf.select("f", "w", seg.alias("seg"))
-            .localCheckpoint(eager=True))
+    return m.checkpoint(wf.select("f", "w", seg.alias("seg")))[0]
 
 
 def _learn_merges_from_base(base: DataFrame, n_merges: int) -> list[dict]:
@@ -151,26 +151,27 @@ def bpe_compression(df: DataFrame, *, n_merges: int = 3,
     Heaps-bounded vocabulary (which learn and apply now SHARE: one
     corpus scan total, where the old shape paid one per merge step in
     the learner plus another for the apply aggregate)."""
-    base = _bpe_char_base(df, text_col=text_col)
-    merges = _learn_merges_from_base(base, n_merges)
-    # apply: the same replace chain the learner used, nested expressions
-    col = F.col("seg")
-    for m in merges:
-        col = F.replace(col, F.lit(m["lhs"] + BPE_SEP + m["rhs"]),
-                        F.lit(m["lhs"] + m["rhs"]))
-    toks_after = F.size(F.split(col, BPE_SEP))
-    agg = base.agg(
-        F.count(F.lit(1)).cast("long").alias("n_word_types"),
-        F.sum("f").cast("long").alias("n_word_occurrences"),
-        F.sum(F.col("f") * F.length("w")).cast("long")
-        .alias("chars_total"),
-        F.sum(F.col("f") * toks_after).cast("long").alias("tokens_after"))
-    saved = F.expr("((chars_total - tokens_after) * 2000000 + chars_total)"
-                   " div (chars_total * 2)")
-    return agg.select(
-        F.lit(len(merges)).cast("long").alias("n_merges"),
-        "n_word_types", "n_word_occurrences", "chars_total",
-        "tokens_after", saved.cast("long").alias("saved_ppm"))
+    with materialized() as m:
+        base = _bpe_char_base(m, df, text_col=text_col)
+        merges = _learn_merges_from_base(base, n_merges)
+        # apply: the same replace chain the learner used, nested expressions
+        col = F.col("seg")
+        for mg in merges:
+            col = F.replace(col, F.lit(mg["lhs"] + BPE_SEP + mg["rhs"]),
+                            F.lit(mg["lhs"] + mg["rhs"]))
+        toks_after = F.size(F.split(col, BPE_SEP))
+        agg = base.agg(
+            F.count(F.lit(1)).cast("long").alias("n_word_types"),
+            F.sum("f").cast("long").alias("n_word_occurrences"),
+            F.sum(F.col("f") * F.length("w")).cast("long")
+            .alias("chars_total"),
+            F.sum(F.col("f") * toks_after).cast("long").alias("tokens_after"))
+        saved = F.expr("((chars_total - tokens_after) * 2000000 + chars_total)"
+                       " div (chars_total * 2)")
+        return m.keep(agg.select(
+            F.lit(len(merges)).cast("long").alias("n_merges"),
+            "n_word_types", "n_word_occurrences", "chars_total",
+            "tokens_after", saved.cast("long").alias("saved_ppm")))
 
 
 def viterbi_vocab(df: DataFrame, *, text_col: str = "text",
@@ -188,11 +189,11 @@ def viterbi_vocab(df: DataFrame, *, text_col: str = "text",
     All frames are vocabulary-bounded (chars + top bigrams), weighted by
     word frequency so the corpus is scanned exactly once
     (word_frequencies' shuffle). Returns (piece, plen, cost_milli)."""
-    wf = (word_frequencies(df, text_col=text_col)
-          .filter(F.length("w") <= max_word_len).persist())
-    out = _viterbi_vocab_from_wf(wf, top_bigrams)
-    wf.unpersist()
-    return out
+    # the frame is lazy, so a persist released on return would never be
+    # read
+    return _viterbi_vocab_from_wf(
+        word_frequencies(df, text_col=text_col)
+        .filter(F.length("w") <= max_word_len), top_bigrams)
 
 
 def _viterbi_vocab_from_wf(wf: DataFrame, top_bigrams: int) -> DataFrame:
@@ -248,7 +249,7 @@ def viterbi_segment_stats(df: DataFrame, *, text_col: str = "text",
     Arrow-vectorized kernel over the DISTINCT word frame (int64
     numpy arithmetic, identical lexicographic (cost, np) struct min),
     replacing the former 16-round broadcast-join + min-aggregate +
-    localCheckpoint loop: 17 sequential vocab-bounded Spark jobs and a
+    checkpoint loop: 17 sequential vocab-bounded Spark jobs and a
     16-way union (which overflowed the 64 KB whole-stage-codegen method
     limit and fell back to interpreted execution) become one map-only
     stage. The piece vocabulary is collected to the driver — bounded at
@@ -257,78 +258,79 @@ def viterbi_segment_stats(df: DataFrame, *, text_col: str = "text",
     # ONE corpus scan: per-(group, word) counts of length-capped words.
     # Checkpointed because three consumers read it (word frequencies ->
     # vocab, the DP's distinct-word frame, and the final weighted join).
-    lw = (ensure_parallelism(df)
-          .select(F.col(group_col).alias("group"),
-                  F.explode(F.regexp_extract_all(
-                      F.lower(F.col(text_col)), F.lit(WORD_RE), F.lit(0)))
-                  .alias("w"))
-          .filter(F.length("w") <= max_word_len)
-          .groupBy("group", "w").agg(F.count(F.lit(1)).alias("c"))
-          .localCheckpoint(eager=True))
-    # same (w, f) table word_frequencies(df) yields after the length cap:
-    # summing exact per-group counts == counting over the corpus
-    wf = lw.groupBy("w").agg(F.sum("c").cast("long").alias("f"))
-    pieces = _viterbi_vocab_from_wf(wf, top_bigrams).collect()
-    cost1 = {r["piece"]: r["cost_milli"] for r in pieces if r["plen"] == 1}
-    cost2 = {r["piece"]: r["cost_milli"] for r in pieces if r["plen"] == 2}
-    mwl = int(max_word_len)
+    with materialized() as m:
+        lw, _ = m.checkpoint(
+            ensure_parallelism(df)
+            .select(F.col(group_col).alias("group"),
+                    F.explode(F.regexp_extract_all(
+                        F.lower(F.col(text_col)), F.lit(WORD_RE), F.lit(0)))
+                    .alias("w"))
+            .filter(F.length("w") <= max_word_len)
+            .groupBy("group", "w").agg(F.count(F.lit(1)).alias("c")))
+        # same (w, f) table word_frequencies(df) yields after the length cap:
+        # summing exact per-group counts == counting over the corpus
+        wf = lw.groupBy("w").agg(F.sum("c").cast("long").alias("f"))
+        pieces = _viterbi_vocab_from_wf(wf, top_bigrams).collect()
+        cost1 = {r["piece"]: r["cost_milli"] for r in pieces if r["plen"] == 1}
+        cost2 = {r["piece"]: r["cost_milli"] for r in pieces if r["plen"] == 2}
+        mwl = int(max_word_len)
 
-    def dp(batches):
-        import numpy as np
-        import pandas as pd
+        def dp(batches):
+            import numpy as np
+            import pandas as pd
 
-        # sentinel: larger than any reachable path cost (cost_milli <=
-        # total*1000 and paths have <= mwl pieces), small enough that
-        # INF + INF never wraps int64
-        inf = np.int64(1) << 61
-        c1 = np.full(256, inf, dtype=np.int64)
-        for p, c in cost1.items():
-            c1[ord(p)] = c
-        c2 = np.full(65536, inf, dtype=np.int64)
-        for p, c in cost2.items():
-            c2[ord(p[0]) * 256 + ord(p[1])] = c
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            # sentinel: larger than any reachable path cost (cost_milli <=
+            # total*1000 and paths have <= mwl pieces), small enough that
+            # INF + INF never wraps int64
+            inf = np.int64(1) << 61
+            c1 = np.full(256, inf, dtype=np.int64)
+            for p, c in cost1.items():
+                c1[ord(p)] = c
+            c2 = np.full(65536, inf, dtype=np.int64)
+            for p, c in cost2.items():
+                c2[ord(p[0]) * 256 + ord(p[1])] = c
+            for pdf in batches:
+                n = len(pdf)
+                if n == 0:
+                    yield pd.DataFrame({"w": pdf["w"],
+                                        "cost": np.empty(0, dtype=np.int64),
+                                        "np": np.empty(0, dtype=np.int64)})
+                    continue
+                # fixed-width ASCII matrix, NUL-padded (words are [a-z]+)
+                ch = (np.array(pdf["w"].to_numpy(), dtype=f"S{mwl}")
+                      .view(np.uint8).reshape(n, mwl).astype(np.int32))
+                wl = pdf["w"].str.len().to_numpy()
+                bc = np.empty((mwl + 1, n), dtype=np.int64)
+                bn = np.empty((mwl + 1, n), dtype=np.int64)
+                bc[0] = 0
+                bn[0] = 0
+                for i in range(1, mwl + 1):
+                    cc = bc[i - 1] + c1[ch[:, i - 1]]
+                    cn = bn[i - 1] + 1
+                    if i >= 2:
+                        gc = bc[i - 2] + c2[ch[:, i - 2] * 256 + ch[:, i - 1]]
+                        gn = bn[i - 2] + 1
+                        take2 = (gc < cc) | ((gc == cc) & (gn < cn))
+                        cc = np.where(take2, gc, cc)
+                        cn = np.where(take2, gn, cn)
+                    # clamp the past-end-of-word lanes (NUL chars hit the inf
+                    # cost every level) so repeated inf additions cannot wrap;
+                    # real lanes are far below inf and unaffected
+                    bc[i] = np.minimum(cc, inf)
+                    bn[i] = cn
+                idx = np.arange(n)
                 yield pd.DataFrame({"w": pdf["w"],
-                                    "cost": np.empty(0, dtype=np.int64),
-                                    "np": np.empty(0, dtype=np.int64)})
-                continue
-            # fixed-width ASCII matrix, NUL-padded (words are [a-z]+)
-            ch = (np.array(pdf["w"].to_numpy(), dtype=f"S{mwl}")
-                  .view(np.uint8).reshape(n, mwl).astype(np.int32))
-            wl = pdf["w"].str.len().to_numpy()
-            bc = np.empty((mwl + 1, n), dtype=np.int64)
-            bn = np.empty((mwl + 1, n), dtype=np.int64)
-            bc[0] = 0
-            bn[0] = 0
-            for i in range(1, mwl + 1):
-                cc = bc[i - 1] + c1[ch[:, i - 1]]
-                cn = bn[i - 1] + 1
-                if i >= 2:
-                    gc = bc[i - 2] + c2[ch[:, i - 2] * 256 + ch[:, i - 1]]
-                    gn = bn[i - 2] + 1
-                    take2 = (gc < cc) | ((gc == cc) & (gn < cn))
-                    cc = np.where(take2, gc, cc)
-                    cn = np.where(take2, gn, cn)
-                # clamp the past-end-of-word lanes (NUL chars hit the inf
-                # cost every level) so repeated inf additions cannot wrap;
-                # real lanes are far below inf and unaffected
-                bc[i] = np.minimum(cc, inf)
-                bn[i] = cn
-            idx = np.arange(n)
-            yield pd.DataFrame({"w": pdf["w"],
-                                "cost": bc[wl, idx], "np": bn[wl, idx]})
+                                    "cost": bc[wl, idx], "np": bn[wl, idx]})
 
-    final = (lw.select("w").dropDuplicates()
-             .mapInPandas(dp, "w string, cost long, np long"))
-    return (lw.join(final, "w")
-            .groupBy("group")
-            .agg(F.sum("c").cast("long").alias("n_tokens"),
-                 F.count(F.lit(1)).cast("long").alias("n_distinct_words"),
-                 F.sum(F.col("c") * F.col("np")).cast("long")
-                 .alias("total_pieces"),
-                 F.sum(F.col("c") * F.col("cost")).cast("long")
-                 .alias("total_cost_milli"))
-            .withColumn("pieces_per_token_milli",
-                        F.expr("total_pieces * 1000 div n_tokens")))
+        final = (lw.select("w").dropDuplicates()
+                 .mapInPandas(dp, "w string, cost long, np long"))
+        return m.keep(lw.join(final, "w")
+                .groupBy("group")
+                .agg(F.sum("c").cast("long").alias("n_tokens"),
+                     F.count(F.lit(1)).cast("long").alias("n_distinct_words"),
+                     F.sum(F.col("c") * F.col("np")).cast("long")
+                     .alias("total_pieces"),
+                     F.sum(F.col("c") * F.col("cost")).cast("long")
+                     .alias("total_cost_milli"))
+                .withColumn("pieces_per_token_milli",
+                            F.expr("total_pieces * 1000 div n_tokens")))

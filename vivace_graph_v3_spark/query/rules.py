@@ -21,9 +21,9 @@ semi-naive fixpoint loop** over DataFrames (SURVEY.md §4.2 #1):
   budget (the ``*inference-budget*`` analog) is exhausted.
 
 Mutually recursive rules are solved simultaneously as one strongly-connected
-component. Every iteration's frontier is ``localCheckpoint``-ed: it feeds the
-emptiness check, the union, and the next iteration's joins, and the plan tree
-would otherwise grow exponentially with depth.
+component. Every iteration's frontier is checkpointed (``util.materialized``):
+it feeds the emptiness check, the union, and the next iteration's joins, and
+the plan tree would otherwise grow exponentially with depth.
 
 Cut semantics: the reference compiles ``!`` as return-from the functor
 (prologc.lisp:709-714) — it commits within its clause AND prunes the
@@ -43,7 +43,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from vivace_graph_v3_spark.graph import GraphStore
 from vivace_graph_v3_spark import util
-from vivace_graph_v3_spark.util import checkpoint_counted
 from vivace_graph_v3_spark.query.builder import (
     Plan, QueryError, Select, is_var, var_col,
 )
@@ -162,29 +161,33 @@ class RuleEvaluator:
         """The full relation of a rule, columns ``__a0..__a{k-1}``."""
         if name in self._solved:
             return self._solved[name]
-        scc = _scc_of(name)
-        if not scc:
-            # non-recursive: union of clause evaluations IN CLAUSE ORDER
-            # with cut pruning — the reference compiles '!' as
-            # return-from the whole functor (prologc.lisp:709-714), so a
-            # clause whose committed cut prefix is non-empty also prunes
-            # the predicate's UNTRIED later clauses (the guarded-clause
-            # idiom ``p :- guard, !, a.  p :- b.``). The prefix — not
-            # the full clause — gates the prune, so the cut-fail idiom
-            # ``p :- guard, !, fail.`` correctly fails the predicate.
-            # Emptiness is probed on the checkpointed <=1-row commit.
-            rule = _RULES[name]
-            frames = []
-            for body in rule.clauses:
-                commits: list[DataFrame] = []
-                frames.append(self._eval_clause(rule, body, {}, {},
-                                                cut_commits=commits))
-                if any(not c.isEmpty() for c in commits):
-                    break
-            df = self._union(frames, arity=rule.arity)
-            self._solved[name] = df
-            return df
-        self._solve_scc(scc)
+        # the memoized relations are what later plans read, so the scope
+        # keeps every checkpoint they read (nested solves included)
+        with util.materialized() as m:
+            scc = _scc_of(name)
+            if not scc:
+                # non-recursive: union of clause evaluations IN CLAUSE ORDER
+                # with cut pruning — the reference compiles '!' as
+                # return-from the whole functor (prologc.lisp:709-714), so a
+                # clause whose committed cut prefix is non-empty also prunes
+                # the predicate's UNTRIED later clauses (the guarded-clause
+                # idiom ``p :- guard, !, a.  p :- b.``). The prefix — not
+                # the full clause — gates the prune, so the cut-fail idiom
+                # ``p :- guard, !, fail.`` correctly fails the predicate.
+                # Emptiness is probed on the checkpointed <=1-row commit.
+                rule = _RULES[name]
+                frames = []
+                for body in rule.clauses:
+                    commits: list[DataFrame] = []
+                    frames.append(self._eval_clause(m, rule, body, {}, {},
+                                                    cut_commits=commits))
+                    if any(not c.isEmpty() for c in commits):
+                        break
+                self._solved[name] = self._union(frames, arity=rule.arity)
+            else:
+                self._solve_scc(m, scc)
+            for df in self._solved.values():
+                m.keep(df)
         return self._solved[name]
 
     # totals are kept as LISTS of already-checkpointed delta arms and
@@ -196,7 +199,7 @@ class RuleEvaluator:
     # per-iteration join plans stay bounded for deep fixpoints.
     _TOTAL_COLLAPSE_ARMS = 8
 
-    def _solve_scc(self, scc: set[str]) -> None:
+    def _solve_scc(self, m, scc: set[str]) -> None:
         arms: dict[str, list[DataFrame]] = {}
         arm_rows: dict[str, int] = {}
         deltas: dict[str, DataFrame] = {}
@@ -204,9 +207,9 @@ class RuleEvaluator:
         for n in scc:
             rule = _RULES[n]
             base = [b for b in rule.clauses if not (_referenced_rules(b) & scc)]
-            df = self._union([self._eval_clause(rule, b, {}, {}) for b in base],
-                             arity=rule.arity)
-            df, n_base = checkpoint_counted(df.dropDuplicates())
+            df = self._union([self._eval_clause(m, rule, b, {}, {})
+                              for b in base], arity=rule.arity)
+            df, n_base = m.checkpoint(df.dropDuplicates())
             arms[n] = [df]
             arm_rows[n] = n_base  # arms are disjoint: the sum IS the total
             deltas[n] = df
@@ -219,7 +222,7 @@ class RuleEvaluator:
             totals = totals_view()
             new_deltas: dict[str, DataFrame] = {}
             # delta sizes ride the delta checkpoints as observations
-            # (util.checkpoint_counted): the emptiness decisions below
+            # (util.materialized.checkpoint): the emptiness decisions below
             # cost zero extra jobs instead of up to two isEmpty probes
             # per rule per iteration
             new_counts: dict[str, int] = {}
@@ -233,7 +236,7 @@ class RuleEvaluator:
                     # occurrence sees delta, the others see total
                     for i in range(occs):
                         frames.append(self._eval_clause(
-                            rule, body, totals, deltas, delta_occurrence=i,
+                            m, rule, body, totals, deltas, delta_occurrence=i,
                             totals_rows=arm_rows, deltas_rows=delta_rows))
                 if not frames:
                     new_deltas[n] = self._empty(rule.arity)
@@ -243,7 +246,7 @@ class RuleEvaluator:
                 tot = totals[n]
                 if self._broadcastable(arm_rows[n]):
                     tot = F.broadcast(tot)
-                fresh, n_fresh = checkpoint_counted(
+                fresh, n_fresh = m.checkpoint(
                     cand.join(tot, on=list(cand.columns),
                               how="left_anti"))
                 new_deltas[n] = fresh
@@ -257,8 +260,7 @@ class RuleEvaluator:
                     arms[n].append(new_deltas[n])
                     arm_rows[n] += new_counts[n]  # disjoint by construction
                     if len(arms[n]) >= self._TOTAL_COLLAPSE_ARMS:
-                        arms[n] = [self._union(arms[n])
-                                   .localCheckpoint(eager=True)]
+                        arms[n] = [m.checkpoint(self._union(arms[n]))[0]]
                 deltas[n] = new_deltas[n]
                 delta_rows[n] = new_counts[n]
         raise BudgetExceeded(
@@ -267,7 +269,7 @@ class RuleEvaluator:
 
     # -- clause -> DataFrame ----------------------------------------------------
 
-    def _eval_clause(self, rule: Rule, body: list[tuple],
+    def _eval_clause(self, m, rule: Rule, body: list[tuple],
                      totals: dict[str, DataFrame], deltas: dict[str, DataFrame],
                      delta_occurrence: int | None = None,
                      cut_commits: list | None = None,
@@ -293,8 +295,8 @@ class RuleEvaluator:
                 # the caller's clause-pruning emptiness check.
                 if plan.df is not None:
                     cols = sorted(plan.df.columns)
-                    committed = (plan.df.orderBy(*cols).limit(1)
-                                 .localCheckpoint(eager=True))
+                    committed, _ = m.checkpoint(
+                        plan.df.orderBy(*cols).limit(1))
                     if cut_commits is not None:
                         cut_commits.append(committed)
                     plan = Plan(committed)

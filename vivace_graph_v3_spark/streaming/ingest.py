@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from vivace_graph_v3_spark.mvcc import VersionedGraph
+from vivace_graph_v3_spark.util import materialized
 
 
 def upsert_batch(graph: VersionedGraph, type_name: str, rows: DataFrame) -> int:
@@ -33,28 +34,22 @@ def upsert_batch(graph: VersionedGraph, type_name: str, rows: DataFrame) -> int:
     # creates/saves emptiness separately and then re-executed the
     # merge-on-read join once per consumed branch at commit. The branch
     # counts ride the checkpoint as observations.
-    ob = Observation()
-    joined = (rows.join(cur, "id", "left")
-              .observe(ob,
-                       F.coalesce(F.sum(F.when(F.col("__rev").isNull(), 1)
-                                        .otherwise(0)),
-                                  F.lit(0)).alias("n_creates"),
-                       F.coalesce(F.sum(F.when(F.col("__rev").isNotNull(), 1)
-                                        .otherwise(0)),
-                                  F.lit(0)).alias("n_saves"))
-              .localCheckpoint(eager=True))
-    counts = ob.get
-    creates = joined.filter(F.col("__rev").isNull()).drop("__rev")
-    saves = (joined.filter(F.col("__rev").isNotNull())
-             .withColumn("revision", F.col("__rev")).drop("__rev"))
-    tx = graph.begin()
-    if int(counts["n_creates"]):
-        tx.create(type_name, creates)
-    if int(counts["n_saves"]):
-        tx.save(type_name, saves)
-    if tx.ops:
-        return graph.commit(tx)
-    return graph.current_epoch()
+    with materialized() as m:
+        ob = Observation()
+        joined, n = m.checkpoint(rows.join(cur, "id", "left").observe(
+            ob, F.count("__rev").alias("n_saves")))
+        n_saves = int(ob.get["n_saves"])
+        creates = joined.filter(F.col("__rev").isNull()).drop("__rev")
+        saves = (joined.filter(F.col("__rev").isNotNull())
+                 .withColumn("revision", F.col("__rev")).drop("__rev"))
+        tx = graph.begin()
+        if n > n_saves:
+            tx.create(type_name, creates)
+        if n_saves:
+            tx.save(type_name, saves)
+        if tx.ops:
+            return graph.commit(tx)
+        return graph.current_epoch()
 
 
 def upsert_stream(stream: DataFrame, graph: VersionedGraph, type_name: str,
@@ -113,31 +108,30 @@ def dedup_ingest_batch(batch: DataFrame, index_dir: str, corpus_dir: str, *,
         minhash_signatures)
 
     spark = batch.sparkSession
-    batch = batch.dropDuplicates([id_col]).localCheckpoint(eager=True)
-    n_in = batch.count()
-    pairs = minhash_dedup_pairs(batch, text_col=text_col, id_col=id_col,
-                                n=n, num_hashes=num_hashes, bands=bands,
-                                threshold=threshold)
-    losers = pairs.select(F.col("id_b").alias(id_col)).dropDuplicates()
-    kept = batch.join(losers, id_col, "left_anti")
-    idx = _index_frames(spark, index_dir)
-    if idx is not None:
-        dups = minhash_dedup_incremental(
-            kept, idx, text_col=text_col, id_col=id_col, n=n,
-            num_hashes=num_hashes, bands=bands, threshold=threshold)
-        dup_ids = dups.select(F.col("new_id").alias(id_col)).dropDuplicates()
-        kept = kept.join(dup_ids, id_col, "left_anti")
-    kept = kept.localCheckpoint(eager=True)
-    n_kept = kept.count()
-    n_batch_dups = n_in - batch.join(losers, id_col, "left_anti").count()
-    sigs = minhash_signatures(kept, text_col=text_col, id_col=id_col, n=n,
-                              num_hashes=num_hashes)
-    (band_rows(sigs, bands=bands, rows_per_band=num_hashes // bands)
-     .write.mode("append").parquet(f"{index_dir}/postings"))
-    (sigs.select("id", F.col("__sh").alias("sh"),
-                 F.size("__sh").alias("sz"), "minhash")
-     .write.mode("append").parquet(f"{index_dir}/side"))
-    kept.write.mode("append").parquet(corpus_dir)
+    with materialized() as m:
+        batch, n_in = m.checkpoint(batch.dropDuplicates([id_col]))
+        pairs = minhash_dedup_pairs(batch, text_col=text_col, id_col=id_col,
+                                    n=n, num_hashes=num_hashes, bands=bands,
+                                    threshold=threshold)
+        losers = pairs.select(F.col("id_b").alias(id_col)).dropDuplicates()
+        kept = batch.join(losers, id_col, "left_anti")
+        idx = _index_frames(spark, index_dir)
+        if idx is not None:
+            dups = minhash_dedup_incremental(
+                kept, idx, text_col=text_col, id_col=id_col, n=n,
+                num_hashes=num_hashes, bands=bands, threshold=threshold)
+            dup_ids = dups.select(F.col("new_id").alias(id_col)).dropDuplicates()
+            kept = kept.join(dup_ids, id_col, "left_anti")
+        kept, n_kept = m.checkpoint(kept)
+        n_batch_dups = n_in - batch.join(losers, id_col, "left_anti").count()
+        sigs = minhash_signatures(kept, text_col=text_col, id_col=id_col, n=n,
+                                  num_hashes=num_hashes)
+        (band_rows(sigs, bands=bands, rows_per_band=num_hashes // bands)
+         .write.mode("append").parquet(f"{index_dir}/postings"))
+        (sigs.select("id", F.col("__sh").alias("sh"),
+                     F.size("__sh").alias("sz"), "minhash")
+         .write.mode("append").parquet(f"{index_dir}/side"))
+        kept.write.mode("append").parquet(corpus_dir)
     return {"n_in": n_in, "n_batch_dups": n_batch_dups,
             "n_index_dups": n_in - n_batch_dups - n_kept, "n_kept": n_kept}
 
@@ -275,17 +269,18 @@ def bloom_dedup_batch(batch: DataFrame, bits_dir: str, *,
     # materialize BEFORE the state swap: the tagged frame's lineage reads
     # the current bits parquet, which the swap below replaces — a lazy
     # return would hit FILE_NOT_EXIST when the caller finally writes it
-    out = out.localCheckpoint(eager=True)
-    new_bits = bloom_build(
-        out.filter(F.col("status") == "new").select(key_col),
-        key_col, k=k, m_bits=m_bits)
-    merged = bits.unionByName(new_bits).distinct()
-    merged.write.mode("overwrite").parquet(f"{bits_dir}/bits_next")
-    # atomic-enough swap for the local test harness; a deployment uses a
-    # transactional table (the txn-log pattern of mvcc.py) for the state
-    spark.read.parquet(f"{bits_dir}/bits_next").write \
-        .mode("overwrite").parquet(path)
-    return out
+    with materialized() as m:
+        out, _ = m.checkpoint(out)
+        new_bits = bloom_build(
+            out.filter(F.col("status") == "new").select(key_col),
+            key_col, k=k, m_bits=m_bits)
+        merged = bits.unionByName(new_bits).distinct()
+        merged.write.mode("overwrite").parquet(f"{bits_dir}/bits_next")
+        # atomic-enough swap for the local test harness; a deployment uses a
+        # transactional table (the txn-log pattern of mvcc.py) for the state
+        spark.read.parquet(f"{bits_dir}/bits_next").write \
+            .mode("overwrite").parquet(path)
+        return m.keep(out)
 
 
 def bloom_dedup_stream(stream: DataFrame, bits_dir: str, out_dir: str, *,

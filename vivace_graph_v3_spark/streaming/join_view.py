@@ -39,7 +39,7 @@ import shutil
 from pyspark.sql import DataFrame, functions as F
 
 from vivace_graph_v3_spark.mvcc import LOG_SCHEMA, VersionedGraph
-from vivace_graph_v3_spark.util import checkpoint_counted
+from vivace_graph_v3_spark.util import materialized
 
 
 class JoinViewMaintainer:
@@ -140,33 +140,35 @@ class JoinViewMaintainer:
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         self._recover_asides()
         # checkpoint + emptiness in one job: the count rides the
-        # materialization as an observation (util.checkpoint_counted)
-        touched, n_touched = checkpoint_counted(self._touched_keys(batch))
-        if n_touched == 0:
-            return
-        buckets = [r["b"] for r in touched
-                   .select(self._bucket(F.col("id")).alias("b"))
-                   .distinct().collect()]  # bounded by n_buckets (tiny)
-        spark = self.graph.spark
-        # existing rows of ONLY the touched buckets
-        live_dirs = [f"{self.table_path}/bucket={b}" for b in buckets
-                     if os.path.exists(f"{self.table_path}/bucket={b}")]
-        if live_dirs:
-            existing = (spark.read.option("basePath", self.table_path)
-                        .parquet(*live_dirs))
-        else:
-            existing = self.table().filter(F.lit(False))
-        keep = existing.join(
-            F.broadcast(touched.withColumnRenamed("id", "src")),
-            "src", "left_anti")
-        fresh = self._join_rows(keys=touched)
-        merged = keep.select("id", "src", "dst", "weight", self.slot,
-                             "bucket") \
-            .unionByName(fresh.select("id", "src", "dst", "weight",
-                                      self.slot, "bucket"))
-        # stage only the touched buckets, then swap their dirs
-        tmp = self.table_path + f".staging-{batch_id}"
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
+        # materialization as an observation (util.materialized.checkpoint);
+        # the scope releases the checkpoint once the staged write is done
+        with materialized() as m:
+            touched, n_touched = m.checkpoint(self._touched_keys(batch))
+            if n_touched == 0:
+                return
+            buckets = [r["b"] for r in touched
+                       .select(self._bucket(F.col("id")).alias("b"))
+                       .distinct().collect()]  # bounded by n_buckets (tiny)
+            spark = self.graph.spark
+            # existing rows of ONLY the touched buckets
+            live_dirs = [f"{self.table_path}/bucket={b}" for b in buckets
+                         if os.path.exists(f"{self.table_path}/bucket={b}")]
+            if live_dirs:
+                existing = (spark.read.option("basePath", self.table_path)
+                            .parquet(*live_dirs))
+            else:
+                existing = self.table().filter(F.lit(False))
+            keep = existing.join(
+                F.broadcast(touched.withColumnRenamed("id", "src")),
+                "src", "left_anti")
+            fresh = self._join_rows(keys=touched)
+            merged = keep.select("id", "src", "dst", "weight", self.slot,
+                                 "bucket") \
+                .unionByName(fresh.select("id", "src", "dst", "weight",
+                                          self.slot, "bucket"))
+            # stage only the touched buckets, then swap their dirs
+            tmp = self.table_path + f".staging-{batch_id}"
+            merged.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
         os.makedirs(self.table_path, exist_ok=True)
         for b in buckets:
             live = f"{self.table_path}/bucket={b}"

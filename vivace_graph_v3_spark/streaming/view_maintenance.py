@@ -34,7 +34,7 @@ import shutil
 from pyspark.sql import DataFrame, functions as F
 
 from vivace_graph_v3_spark.mvcc import LOG_SCHEMA, VersionedGraph
-from vivace_graph_v3_spark.util import checkpoint_counted
+from vivace_graph_v3_spark.util import materialized
 from vivace_graph_v3_spark.views import View
 
 
@@ -99,20 +99,21 @@ class ViewMaintainer:
         # checkpoint as an observation — the old shape ran the
         # _touched_ids plan twice (isEmpty probe, then again inside the
         # broadcast build below)
-        touched, n_touched = checkpoint_counted(self._touched_ids(batch))
-        if n_touched == 0:
-            return
-        # re-emit from CURRENT state, restricted to touched ids (deleted /
-        # inactive nodes simply emit nothing -> their rows are retired)
-        scan = (self.view.base_scan(self.graph.store())
-                .join(F.broadcast(touched), "id", "left_semi"))
-        fresh = self.view.map_fn(scan)
-        if "value" not in fresh.columns:
-            fresh = fresh.withColumn("value", F.lit(None))
-        fresh = fresh.select("id", "key", "value")
-        merged = (self.table().join(F.broadcast(touched), "id", "left_anti")
-                  .unionByName(fresh))
-        self._swap(merged)
+        with materialized() as m:
+            touched, n_touched = m.checkpoint(self._touched_ids(batch))
+            if n_touched == 0:
+                return
+            # re-emit from CURRENT state, restricted to touched ids (deleted /
+            # inactive nodes simply emit nothing -> their rows are retired)
+            scan = (self.view.base_scan(self.graph.store())
+                    .join(F.broadcast(touched), "id", "left_semi"))
+            fresh = self.view.map_fn(scan)
+            if "value" not in fresh.columns:
+                fresh = fresh.withColumn("value", F.lit(None))
+            fresh = fresh.select("id", "key", "value")
+            merged = (self.table().join(F.broadcast(touched), "id", "left_anti")
+                      .unionByName(fresh))
+            self._swap(merged)
 
     def _swap(self, df: DataFrame) -> None:
         tmp = self.table_path + ".staging"

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 
 
@@ -17,23 +19,92 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
-def checkpoint_counted(df: DataFrame, *,
-                       rebase: bool = False) -> tuple[DataFrame, int]:
-    """Eager local checkpoint with the row count riding the materialization
-    as a DataFrame observation: checkpoint + count/emptiness probe in ONE
-    Spark job instead of two. Iterative fixpoint loops that previously ran
-    ``.count()`` / ``.isEmpty()`` over a frame they had just checkpointed
-    pay one fewer driver round-trip per round. With ``rebase`` the
-    checkpoint goes through :func:`checkpoint_rebased` (stats reset for
-    frames re-joined every round); the observation fires on the eager
-    materialization inside it, before the rewrap."""
-    from pyspark.sql import Observation, functions as F
+_scopes = threading.local()   # each thread's stack of open scopes
 
-    ob = Observation()
-    observed = df.observe(ob, F.count(F.lit(1)).alias("n"))
-    out = (checkpoint_rebased(observed) if rebase
-           else observed.localCheckpoint(eager=True))
-    return out, int(ob.get["n"])
+
+class materialized:
+    """The one owner of intermediate state: ``with materialized() as m:``,
+    ``m.persist`` / ``m.checkpoint``, then ``return m.keep(result)``. On
+    exit it unpersists what it persisted and releases, by each one's own
+    RDD handle (threads share the context), the checkpoints no kept
+    frame reads; all of them on an exception. A nested scope hands its
+    kept checkpoints to the enclosing one; the outermost leaves them to
+    Spark's context cleaner. Without materializing, a scope costs no
+    Spark job and no JVM call."""
+
+    def __enter__(self) -> "materialized":
+        self._frames, self._rdds, self._kept = [], [], []
+        _scopes.__dict__.setdefault("stack", []).append(self)
+        return self
+
+    def __exit__(self, exc_type, *_) -> None:
+        _scopes.stack.pop()
+        for df in self._frames:
+            df.unpersist()
+        read = () if exc_type or not self._rdds else _rdds_read_by(self._kept)
+        for rdd in self._rdds:
+            if rdd.id() not in read:
+                # the context's call: RDD.unpersist logs a warning for
+                # every local checkpoint it releases
+                rdd.context().unpersistRDD(rdd.id(), False)
+            elif _scopes.stack:
+                _scopes.stack[-1]._rdds.append(rdd)
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        self._frames.append(df.persist())
+        return df
+
+    def checkpoint(self, df: DataFrame, *,
+                   rebase: bool = False) -> tuple[DataFrame, int]:
+        """Eager local checkpoint of ``df`` and its row count, observed in
+        the same job. ``rebase`` drops the inherited size estimate, which
+        Catalyst multiplies across the joins of a loop until planning
+        stalls (graph_bowtie hung past the broadcast timeout): private
+        JVM handles rewrap the rows as a fresh ``LogicalRDD``; without
+        them (Spark Connect) the plain checkpoint is returned."""
+        from pyspark.sql import Observation, functions as F
+
+        ob = Observation()
+        ck = (df.observe(ob, F.count(F.lit(1)).alias("n"))
+              .localCheckpoint(eager=True))
+        n = int(ob.get["n"])
+        jdf = getattr(ck, "_jdf", None)
+        if jdf is None:
+            return ck, n
+        self._rdds.append(jdf.queryExecution().logical().rdd())
+        jspark = getattr(ck.sparkSession, "_jsparkSession", None)
+        if rebase and hasattr(jspark, "internalCreateDataFrame"):
+            try:
+                return DataFrame(jspark.internalCreateDataFrame(
+                    jdf.queryExecution().toRdd(), jdf.schema(), False),
+                    ck.sparkSession), n
+            except Exception:  # future-Spark signature drift: stay correct
+                pass
+        return ck, n
+
+    def keep(self, df):
+        self._kept.append(df)
+        return df
+
+
+def _rdds_read_by(frames) -> set:
+    """Ids of the RDDs the plans of ``frames`` read: each ``LogicalRDD``
+    leaf's RDD (subqueries included) and its dependencies."""
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    rdds, ids = [], set()
+    for df in frames:
+        plan = df._jdf.queryExecution().logical()
+        for p in [plan] + seq(plan.subqueriesAll()):
+            rdds += [leaf.rdd() for leaf in seq(p.collectLeaves())
+                     if leaf.nodeName() == "LogicalRDD"]
+    while rdds:
+        r = rdds.pop()
+        if r.id() not in ids:
+            ids.add(r.id())
+            rdds += [d.rdd() for d in seq(r.dependencies())]
+    return ids
 
 
 # The one driver bound: how many rows the driver may collect (a bounded
@@ -229,48 +300,3 @@ def normalize_event_ts(df: DataFrame, *, col: str = "ts") -> DataFrame:
         return df.withColumn(
             col, F.unix_micros(F.col(col).cast("timestamp")) * F.lit(1000))
     return df
-
-
-def checkpoint_rebased(df: DataFrame) -> DataFrame:
-    """Eager local checkpoint that ALSO resets Catalyst's size statistics.
-
-    ``localCheckpoint`` truncates lineage but the new ``LogicalRDD``
-    INHERITS the child plan's estimated statistics. Catalyst's
-    size-only estimator multiplies child sizeInBytes across a join, so in
-    an iterative algorithm that checkpoints a join (worse: a self-join —
-    squaring) every round, the inherited sizeInBytes BigInt grows its
-    DIGIT COUNT linearly (self-join: doubles it) per iteration. After a
-    few dozen rounds the planner spends minutes inside
-    ``BigInteger.multiplyToomCook3`` computing astronomically large join
-    estimates for 30-row frames — observed as a full planner stall (the
-    graph_bowtie entry hung past spark.sql.broadcastTimeout; stage-level
-    profiling showed 100% driver CPU in BigInt multiply under
-    SizeInBytesOnlyStatsPlanVisitor.visitJoin).
-
-    Fix: after materializing the checkpoint, rewrap its InternalRow RDD
-    with ``internalCreateDataFrame`` — a brand-new LogicalRDD carrying
-    default leaf statistics. JVM-only (no Python round trip, no
-    recompute: ``toRdd`` on a checkpointed plan is the checkpoint RDD),
-    so it is scale-safe wherever localCheckpoint is. Use this instead of
-    bare ``localCheckpoint(eager=True)`` in any loop whose body joins the
-    checkpointed frame.
-
-    Classic-PySpark-only (ADVICE r7): the rewrap reaches through private
-    JVM handles (``_jdf``, ``internalCreateDataFrame``) that do not exist
-    under Spark Connect and carry no compatibility guarantee, so it is
-    capability-guarded — when the handles are missing the helper falls
-    back to the plain eager localCheckpoint (correct, merely exposed to
-    the stats-explosion slowdown this works around)."""
-    ck = df.localCheckpoint(eager=True)
-    jdf = getattr(ck, "_jdf", None)
-    spark = ck.sparkSession
-    jspark = getattr(spark, "_jsparkSession", None)
-    if jdf is None or jspark is None or \
-            not hasattr(jspark, "internalCreateDataFrame"):
-        return ck
-    try:
-        jreset = jspark.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False)
-    except Exception:  # future-Spark signature drift: stay correct
-        return ck
-    return DataFrame(jreset, spark)
